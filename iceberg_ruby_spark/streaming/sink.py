@@ -48,8 +48,6 @@ from pyspark.sql.datasource import (
 )
 
 from iceberg_ruby_spark.errors import InvalidDataError
-from iceberg_ruby_spark.streaming._trace import trace as _trace, traced as _traced
-_trace('module-import:sink')
 
 SINK_ID_KEY = "streaming-sink-id"
 BATCH_ID_KEY = "streaming-batch-id"
@@ -66,7 +64,6 @@ class _FileMsg(WriterCommitMessage):
 
 
 class EngineTableStreamWriter(DataSourceStreamArrowWriter):
-    @_traced
     def __init__(self, options: dict, schema, overwrite: bool):
         self.location = options.get("location") or options.get("path")
         if not self.location:
@@ -378,7 +375,6 @@ class EngineTableStreamWriter(DataSourceStreamArrowWriter):
             "nulls": nulls,
         }
 
-    @_traced
     def write(self, iterator: Iterator) -> _FileMsg:
         """Arrow-native executor write (DataSourceStreamArrowWriter):
         Spark ships this task's rows as RecordBatches — no per-row pickle
@@ -535,7 +531,6 @@ class EngineTableStreamWriter(DataSourceStreamArrowWriter):
         self._last_batch_cache = last
         return last
 
-    @_traced
     def commit(self, messages: List[Optional[_FileMsg]], batchId: int) -> None:
         # session-less driver worker: the commit is pure metadata — build
         # manifest entries from the executor-computed stats and run the

@@ -3770,9 +3770,9 @@ class Table:
                 if declared is not None:
                     if os.environ.get("SPARK_GRAFT_SCHEMA_XCHECK"):
                         _xcheck_declared_schema(
-                            lambda r=reader, ps=paths: r.option(
-                                "mergeSchema", "true"
-                            ).parquet(*ps),
+                            lambda cd=cdir, ps=paths: self.spark.read.option(
+                                "basePath", cd
+                            ).option("mergeSchema", "true").parquet(*ps),
                             declared,
                             f"lineage:{paths[0]}",
                             paths,
@@ -3933,14 +3933,15 @@ class Table:
             #    recorded sequence predate seq stamping (strictly older
             #    than any seq-scoped delete): -1.
             # 2. All such deletes sharing a key-column set MERGE into ONE
-            #    broadcast anti-condition: union the key files, keep
-            #    MAX(delete sequence) per key, and a row is dead iff that
-            #    max exceeds its file's sequence (k dead in file at seq s
-            #    ⟺ ∃ delete D ∋ k with D.seq > s ⟺ max_seq(k) > s).
-            #    One join however deep the chain — N chained joins blew
-            #    the JVM stack at plan time past ~100 micro-batches, and
-            #    Iceberg readers likewise merge all equality deletes into
-            #    one pass per file.
+            #    broadcast anti-join: union the key files, each key row
+            #    tagged with its delete's sequence, and a row is dead iff
+            #    some key row matches it with a HIGHER sequence than its
+            #    file's (the same rule as max_seq(k) > s, without the
+            #    per-key aggregation's shuffle).  One join however deep
+            #    the chain — N chained joins blew the JVM stack at plan
+            #    time past ~100 micro-batches, and Iceberg readers
+            #    likewise merge all equality deletes into one pass per
+            #    file.
             import pyspark.sql.types as _T
 
             seq_pairs = []
@@ -3993,13 +3994,19 @@ class Table:
                     _T.StructType(
                         [
                             _T.StructField("__eqsf", _T.StringType()),
-                            _T.StructField("__eq_seq", _T.LongType()),
+                            _T.StructField(f"__eqs{gi}", _T.LongType()),
                         ]
                     ),
                 )
                 keys_df = (
                     _memo_read_parquet(self.spark, [p for p, _ in fseq])
-                    .select(*cols_key, _file_path_col().alias("__eqf"))
+                    .select(
+                        *[
+                            F.col(c).alias(f"__eqsk{gi}_{j}")
+                            for j, c in enumerate(cols_key)
+                        ],
+                        _file_path_col().alias("__eqf"),
+                    )
                     .join(
                         F.broadcast(fseq_df),
                         F.col("__eqf") == F.col("__eqsf"),
@@ -4007,55 +4014,28 @@ class Table:
                     )
                     .drop("__eqf", "__eqsf")
                 )
-                keys_df = keys_df.groupBy(*cols_key).agg(
-                    F.max("__eq_seq").alias(f"__eqs{gi}")
-                )
-                keys_df = keys_df.select(
-                    *[
-                        F.col(c).alias(f"__eqsk{gi}_{j}")
-                        for j, c in enumerate(cols_key)
-                    ],
-                    f"__eqs{gi}",
-                )
-                join_cond = None
+                dead = keys_df[f"__eqs{gi}"] > row_seq
                 for j, c in enumerate(cols_key):
-                    this = out[c].eqNullSafe(keys_df[f"__eqsk{gi}_{j}"])
-                    join_cond = this if join_cond is None else (join_cond & this)
-                out = out.join(F.broadcast(keys_df), join_cond, "left")
-                dead = F.col(f"__eqs{gi}").isNotNull() & (
-                    F.col(f"__eqs{gi}") > row_seq
-                )
-                out = out.filter(~dead).drop(
-                    f"__eqs{gi}",
-                    *[f"__eqsk{gi}_{j}" for j in range(len(cols_key))],
-                )
+                    dead = dead & out[c].eqNullSafe(keys_df[f"__eqsk{gi}_{j}"])
+                out = out.join(F.broadcast(keys_df), dead, "left_anti")
         for i, e in enumerate(eq_files):
             if e.get("seq-scoped"):
                 continue  # merged into the grouped pass above
             # equality delete: a row dies when its key tuple appears in the
             # delete file (null-safe equality, Iceberg's semantics), scoped
-            # to the files live at delete time
+            # to the files live at delete time — one broadcast anti-join,
+            # duplicate key rows are harmless to it
             eq_cols = e["equality-cols"]
-            dels = (
-                _memo_read_parquet(self.spark, [self.ops._abs(e["delete-file"])])
-                .select(
-                    *[F.col(c).alias(f"__eqk{i}_{j}") for j, c in enumerate(eq_cols)]
-                )
-                .distinct()
-                .withColumn(f"__eqd{i}", F.lit(True))
-            )
-            join_cond = None
-            for j, c in enumerate(eq_cols):
-                this = out[c].eqNullSafe(dels[f"__eqk{i}_{j}"])
-                join_cond = this if join_cond is None else (join_cond & this)
-            out = out.join(F.broadcast(dels), join_cond, "left")
-            dead = F.coalesce(F.col(f"__eqd{i}"), F.lit(False))
+            dels = _memo_read_parquet(
+                self.spark, [self.ops._abs(e["delete-file"])]
+            ).select(*[F.col(c).alias(f"__eqk{i}_{j}") for j, c in enumerate(eq_cols)])
             applies = e.get("applies-to")
-            if applies is not None:
-                dead = dead & F.col(path_name).isin(list(applies))
-            out = out.filter(~dead).drop(
-                f"__eqd{i}", *[f"__eqk{i}_{j}" for j in range(len(eq_cols))]
+            dead = (
+                F.lit(True) if applies is None else F.col(path_name).isin(list(applies))
             )
+            for j, c in enumerate(eq_cols):
+                dead = dead & out[c].eqNullSafe(dels[f"__eqk{i}_{j}"])
+            out = out.join(F.broadcast(dels), dead, "left_anti")
         if "__mor_seq" in out.columns:
             out = out.drop("__mor_seq")
         if pos_col is None and "__mor_pos" in out.columns:
@@ -5711,21 +5691,21 @@ class Table:
         # driver).
         del_dir = os.path.join(self.ops.data_dir, f"deletes-{uuid_mod.uuid4().hex[:12]}")
         keys_df.sortWithinPartitions(*cols).write.parquet(del_dir)
-        written = _read_back_parquet(self.spark, del_dir, keys_df.schema)
-        # size/cleanup through the table's FileIO (r14 review): the key
-        # files live under the TABLE location, which need not be local
-        size_bytes = sum(
-            self.ops.io.size(p) or 0
-            for p in self.ops.io.list(del_dir)
-            if p.endswith(".parquet")
-        )
-        match_cond = [live[c].eqNullSafe(written[c]) for c in cols]
-        keys_side = (
-            F.broadcast(written)
-            if size_bytes <= _BROADCAST_KEYS_MAX_BYTES // 4
-            else written
-        )
         try:
+            written = _read_back_parquet(self.spark, del_dir, keys_df.schema)
+            # size/cleanup through the table's FileIO (r14 review): the key
+            # files live under the TABLE location, which need not be local
+            size_bytes = sum(
+                self.ops.io.size(p) or 0
+                for p in self.ops.io.list(del_dir)
+                if p.endswith(".parquet")
+            )
+            match_cond = [live[c].eqNullSafe(written[c]) for c in cols]
+            keys_side = (
+                F.broadcast(written)
+                if size_bytes <= _BROADCAST_KEYS_MAX_BYTES // 4
+                else written
+            )
             hit_rows = (
                 live.join(keys_side, match_cond, "left_semi")
                 .groupBy("__f")
@@ -5734,8 +5714,8 @@ class Table:
             )
         except Exception:
             # the key files are written BEFORE verification (one keys
-            # evaluation instead of two); a failed hit-count must not
-            # leak the uncommitted delete dir
+            # evaluation instead of two); a failed read-back, listing or
+            # hit-count must not leak the uncommitted delete dir
             try:
                 self.ops.io.delete_prefix(del_dir)
             except OSError:
@@ -5828,6 +5808,26 @@ class Table:
                 }
             )
         return out
+
+    def _write_key_deletes(
+        self, rows: DataFrame, keys: list[str], applies: Iterable[str]
+    ) -> list[dict[str, Any]]:
+        """Write the distinct ``keys`` tuples of ``rows`` as a fresh
+        equality-delete directory (key columns stamped with their field
+        ids) scoped to the data files ``applies``; its spec entries."""
+        schema = self.current_schema()
+        field_ids = [schema.field_by_name(k).field_id for k in keys]
+        self.spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
+        del_dir = os.path.join(
+            self.ops.data_dir, f"deletes-{uuid_mod.uuid4().hex[:12]}"
+        )
+        rows.select(
+            *[
+                F.col(k).alias(k, metadata={"parquet.field.id": fid})
+                for k, fid in zip(keys, field_ids)
+            ]
+        ).distinct().sortWithinPartitions(*keys).write.parquet(del_dir)
+        return self._equality_delete_entries(del_dir, sorted(applies), field_ids, keys)
 
     def _delete_part_counts(self, del_dir: str) -> list:
         """``(path, rows)`` per parquet part file of a freshly written
@@ -6251,64 +6251,57 @@ class Table:
         """merge_into(mode='merge-on-read'): equality-delete the matched
         keys, append their updated versions plus inserts — single commit,
         zero rewrites of existing files."""
-        schema = self.current_schema()
+        from pyspark.sql import Observation
+
         entries = self._current_entries(branch)
         live = self._read_entries(entries, file_col="__f")
         marked = source.withColumn("__s_matched", F.lit(True))
-        joined = live.alias("t").join(marked.alias("s"), keys, "inner")
         new_parts: list[DataFrame] = []
         eq_entries: list[dict[str, Any]] = []
-        if when_matched_update or when_matched_delete is not None:
-            # matched rows: which files they live in (delete scope) and
-            # their distinct key tuples (the equality delete content)
-            hit_rows = (
-                joined.groupBy("__f").agg(F.count(F.lit(1)).alias("n")).collect()
+        matched_n = 0
+        if (
+            when_matched_update
+            or when_matched_delete is not None
+            or when_not_matched_insert
+        ):
+            # ONE live-table scan serves the matched clauses AND the
+            # inserts: the live rows whose key the source carries,
+            # checkpointed (O(changed rows)) with their file set and
+            # count observed in the same job.  The checkpoint holds the
+            # live side only and re-joins the source, so update
+            # expressions keep the using-join's `k`, `t.*` and `s.*`
+            # resolution (a checkpointed join drops the hidden `s.<key>`
+            # columns).
+            obs = Observation()
+            hit = (
+                live.join(source.select(*keys), keys, "left_semi")
+                .observe(
+                    obs,
+                    F.count(F.lit(1)).alias("n"),
+                    F.collect_set("__f").alias("files"),
+                )
+                .localCheckpoint()
             )
-            matched_n = sum(r["n"] for r in hit_rows)
-            if matched_n:
-                self.spark.conf.set(
-                    "spark.sql.parquet.fieldId.write.enabled", "true"
+            matched_n = obs.get["n"] or 0
+        if matched_n and (when_matched_update or when_matched_delete is not None):
+            eq_entries = self._write_key_deletes(hit, keys, obs.get["files"])
+            survivors = hit.alias("t").join(marked.alias("s"), keys, "inner")
+            if when_matched_delete is not None:
+                # delete-matched rows fall to the equality delete and
+                # are NOT re-inserted; others re-insert (updated)
+                dcond = (
+                    F.lit(True)
+                    if when_matched_delete is True
+                    else F.expr(str(when_matched_delete))
                 )
-                matched_keys = joined.select(
-                    *[
-                        F.col(f"t.{k}").alias(
-                            k,
-                            metadata={
-                                "parquet.field.id": schema.field_by_name(k).field_id
-                            },
-                        )
-                        for k in keys
-                    ]
-                ).distinct()
-                del_dir = os.path.join(
-                    self.ops.data_dir, f"deletes-{uuid_mod.uuid4().hex[:12]}"
-                )
-                matched_keys.sortWithinPartitions(*keys).write.parquet(del_dir)
-                eq_entries = self._equality_delete_entries(
-                    del_dir,
-                    sorted(r["__f"] for r in hit_rows),
-                    [schema.field_by_name(k).field_id for k in keys],
-                    keys,
-                )
-                survivors = joined
-                if when_matched_delete is not None:
-                    # delete-matched rows fall to the equality delete and
-                    # are NOT re-inserted; others re-insert (updated)
-                    dcond = (
-                        F.lit(True)
-                        if when_matched_delete is True
-                        else F.expr(str(when_matched_delete))
-                    )
-                    survivors = joined.filter(
-                        ~F.coalesce(dcond, F.lit(False))
-                    )
-                out_cols = []
-                for c in cols:
-                    if when_matched_update and c in when_matched_update:
-                        out_cols.append(F.expr(when_matched_update[c]).alias(c))
-                    else:
-                        out_cols.append(F.col(f"t.{c}").alias(c))
-                new_parts.append(survivors.select(*out_cols))
+                survivors = survivors.filter(~F.coalesce(dcond, F.lit(False)))
+            out_cols = []
+            for c in cols:
+                if when_matched_update and c in when_matched_update:
+                    out_cols.append(F.expr(when_matched_update[c]).alias(c))
+                else:
+                    out_cols.append(F.col(f"t.{c}").alias(c))
+            new_parts.append(survivors.select(*out_cols))
         if when_not_matched_by_source_delete is not None:
             # WHEN NOT MATCHED BY SOURCE [AND cond] THEN DELETE, MoR form:
             # the loser keys (target keys the source no longer carries)
@@ -6325,29 +6318,8 @@ class Table:
                 losers.groupBy("__f").agg(F.count(F.lit(1)).alias("n")).collect()
             )
             if lose_rows:
-                self.spark.conf.set(
-                    "spark.sql.parquet.fieldId.write.enabled", "true"
-                )
-                loser_keys = losers.select(
-                    *[
-                        F.col(f"t.{k}").alias(
-                            k,
-                            metadata={
-                                "parquet.field.id": schema.field_by_name(k).field_id
-                            },
-                        )
-                        for k in keys
-                    ]
-                ).distinct()
-                lose_dir = os.path.join(
-                    self.ops.data_dir, f"deletes-{uuid_mod.uuid4().hex[:12]}"
-                )
-                loser_keys.sortWithinPartitions(*keys).write.parquet(lose_dir)
-                eq_entries += self._equality_delete_entries(
-                    lose_dir,
-                    sorted(r["__f"] for r in lose_rows),
-                    [schema.field_by_name(k).field_id for k in keys],
-                    keys,
+                eq_entries += self._write_key_deletes(
+                    losers, keys, (r["__f"] for r in lose_rows)
                 )
         if when_not_matched_by_source_update:
             # WHEN NOT MATCHED BY SOURCE [AND cond] THEN UPDATE, MoR form:
@@ -6374,29 +6346,8 @@ class Table:
                 upd_losers.groupBy("__f").agg(F.count(F.lit(1)).alias("n")).collect()
             )
             if upd_rows:
-                self.spark.conf.set(
-                    "spark.sql.parquet.fieldId.write.enabled", "true"
-                )
-                upd_keys = upd_losers.select(
-                    *[
-                        F.col(f"t.{k}").alias(
-                            k,
-                            metadata={
-                                "parquet.field.id": schema.field_by_name(k).field_id
-                            },
-                        )
-                        for k in keys
-                    ]
-                ).distinct()
-                upd_dir = os.path.join(
-                    self.ops.data_dir, f"deletes-{uuid_mod.uuid4().hex[:12]}"
-                )
-                upd_keys.sortWithinPartitions(*keys).write.parquet(upd_dir)
-                eq_entries += self._equality_delete_entries(
-                    upd_dir,
-                    sorted(r["__f"] for r in upd_rows),
-                    [schema.field_by_name(k).field_id for k in keys],
-                    keys,
+                eq_entries += self._write_key_deletes(
+                    upd_losers, keys, (r["__f"] for r in upd_rows)
                 )
                 out_cols = []
                 for c in cols:
@@ -6408,7 +6359,7 @@ class Table:
                         out_cols.append(F.col(f"t.{c}").alias(c))
                 new_parts.append(upd_losers.select(*out_cols))
         if when_not_matched_insert:
-            inserts = source.join(live.select(*keys), keys, "left_anti")
+            inserts = source.join(hit.select(*keys), keys, "left_anti")
             for c in cols:
                 if c not in inserts.columns:
                     inserts = inserts.withColumn(c, F.lit(None))

@@ -367,6 +367,164 @@ def test_equality_delete_does_not_hit_later_appends(catalog):
     assert sorted(r["k"] for r in t.to_a()) == [1, 2]
 
 
+def _external_equality_delete(t, cols, rows, applies):
+    """Commit a hand-written (pyarrow) equality-delete file whose
+    entry applies to the data files ``applies``."""
+    import os
+    import uuid
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    schema = t.current_schema()
+    del_dir = os.path.join(t.ops.data_dir, f"deletes-{uuid.uuid4().hex[:12]}")
+    os.makedirs(del_dir)
+    pq.write_table(
+        pa.Table.from_pylist([dict(zip(cols, r)) for r in rows]),
+        os.path.join(del_dir, "part-00000.parquet"),
+    )
+    entries = t._equality_delete_entries(
+        del_dir,
+        sorted(t.ops._abs(p) for p in applies),
+        [schema.field_by_name(c).field_id for c in cols],
+        cols,
+    )
+    t._commit_snapshot(
+        "delete",
+        t._current_entries() + entries,
+        {"mode": "merge-on-read-equality"},
+        base_snapshot_id=t.current_snapshot_id,
+    )
+    return t.refresh()
+
+
+def test_equality_delete_file_duplicate_and_null_keys(catalog):
+    """A delete file with repeated key tuples and NULL key cells: each
+    key tuple kills every row it matches under IS NOT DISTINCT FROM,
+    once, and NULL matches only NULL."""
+    t = catalog.create_table("eqdupnull", schema={"k": "int", "g": "string", "v": "int"})
+    t.append(
+        [
+            {"k": 1, "g": "a", "v": 1},
+            {"k": 1, "g": "a", "v": 2},
+            {"k": 1, "g": None, "v": 3},
+            {"k": None, "g": "b", "v": 4},
+            {"k": None, "g": None, "v": 5},
+            {"k": 2, "g": None, "v": 6},
+            {"k": 2, "g": "x", "v": 7},
+            {"k": 3, "g": "a", "v": 8},
+        ]
+    )
+    t = _external_equality_delete(
+        t,
+        ["k", "g"],
+        [(1, "a"), (1, "a"), (None, "b"), (2, None), (2, None), (None, "b")],
+        _live_files(t),
+    )
+    assert sorted(r["v"] for r in t.to_a()) == [3, 5, 7, 8]
+    assert t.scan().count() == 4
+
+
+def test_equality_delete_applies_to_scope(catalog):
+    """An equality delete kills matching rows only in the files its
+    entry applies to: a same-key row in a file outside the scope, older
+    or appended later, survives."""
+    t = catalog.create_table("eqapplies", schema={"k": "int", "v": "string"})
+    t.append([{"k": 1, "v": "a1"}, {"k": 2, "v": "a2"}])
+    scoped = _live_files(t)
+    t.append([{"k": 1, "v": "b1"}])  # older than the delete, out of scope
+    t = _external_equality_delete(t, ["k"], [(1,), (2,)], scoped)
+    t.append([{"k": 1, "v": "c1"}, {"k": 2, "v": "c2"}])  # after the delete
+    assert sorted(r["v"] for r in t.refresh().to_a()) == ["b1", "c1", "c2"]
+
+
+def test_seq_scoped_deletes_at_two_sequences(catalog):
+    """Two blind (sequence-scoped) deletes of one key at different
+    sequences: a row dies iff SOME delete holding its key has a higher
+    sequence than the row's file — files before, between and after the
+    two deletes each see the right subset."""
+    t = catalog.create_table("eqseq2", schema={"k": "int", "v": "string"})
+    t.append([{"k": k, "v": "f1"} for k in (1, 2, 3)])  # seq 1
+    t.delete_by_keys([(1,), (2,)], on="k", verify_hits=False)  # seq 2
+    t.append([{"k": k, "v": "f3"} for k in (1, 2, 3)])  # seq 3
+    t.delete_by_keys([(1,)], on="k", verify_hits=False)  # seq 4
+    t.append([{"k": k, "v": "f5"} for k in (1, 2)])  # seq 5
+    t = t.refresh()
+    seqs = sorted(
+        e["data-sequence-number"]
+        for e in t._current_entries()
+        if e.get("seq-scoped")
+    )
+    assert len(seqs) == 2 and seqs[0] < seqs[1]
+    rows = sorted((r["k"], r["v"]) for r in t.to_a())
+    assert rows == [(1, "f5"), (2, "f3"), (2, "f5"), (3, "f1"), (3, "f3")]
+    assert t.scan().filter("k = 1").count() == 1
+
+
+def test_merge_into_mor_qualified_expressions_and_delete(catalog, spark):
+    """merge-on-read MERGE whose update expressions read the target
+    (``t.*``), the source (``s.*``, key included) and the unqualified
+    key, with a conditional WHEN MATCHED DELETE, over a table that
+    already carries an equality delete."""
+    t = catalog.create_table(
+        "mmor_expr", schema={"k": "int", "v": "int", "tag": "string"}
+    )
+    t.append([{"k": i, "v": i * 10, "tag": f"t{i}"} for i in range(1, 6)])
+    t.delete_by_keys([(5,)], on="k")
+    src = spark.createDataFrame(
+        [(2, 1, "s2"), (3, 2, "s3"), (4, 3, "drop"), (5, 4, "s5"), (9, 5, "s9")],
+        "k int, v int, tag string",
+    )
+    t.merge_into(
+        src,
+        on="k",
+        when_matched_update={
+            "v": "t.v + s.v + k - t.k",
+            "tag": "concat(t.tag, '/', s.tag, '/', cast(s.k AS string))",
+        },
+        when_matched_delete="s.tag = 'drop'",
+        mode="merge-on-read",
+    )
+    rows = sorted((r["k"], r["v"], r["tag"]) for r in t.refresh().to_a())
+    assert rows == [
+        (1, 10, "t1"),
+        (2, 21, "t2/s2/2"),
+        (3, 32, "t3/s3/3"),
+        (5, 4, "s5"),
+        (9, 5, "s9"),
+    ]
+
+
+def test_delete_by_keys_listing_failure_leaks_no_key_dir(catalog, monkeypatch):
+    """The key files are written before the hit count; a FileIO listing
+    failure right after the write must remove them and commit nothing."""
+    import os
+
+    t = catalog.create_table("eqleak", schema={"k": "int", "v": "string"})
+    t.append([{"k": i, "v": f"v{i}"} for i in range(10)])
+    t = t.refresh()
+    before = t.current_snapshot_id
+    io_cls = type(t.ops.io)
+    orig_list = io_cls.list
+    failed = []
+
+    def list_failing_once(self, prefix):
+        if "deletes-" in prefix and not failed:
+            failed.append(prefix)
+            raise OSError("injected listing failure")
+        return orig_list(self, prefix)
+
+    monkeypatch.setattr(io_cls, "list", list_failing_once)
+    with pytest.raises(OSError, match="injected listing failure"):
+        t.delete_by_keys([(2,), (5,)], on="k")
+    monkeypatch.undo()
+    assert failed
+    assert not [d for d in os.listdir(t.ops.data_dir) if d.startswith("deletes-")]
+    t = t.refresh()
+    assert t.current_snapshot_id == before
+    assert sorted(r["k"] for r in t.to_a()) == list(range(10))
+
+
 def test_merge_into_mor_upsert(catalog, spark):
     t = catalog.create_table("mmor", schema={"k": "int", "v": "string"})
     t.append([{"k": 1, "v": "one"}, {"k": 2, "v": "two"}, {"k": 3, "v": "three"}])

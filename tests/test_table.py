@@ -530,14 +530,25 @@ def test_inspect_entries_and_metadata_log(catalog):
     assert all(r["file"] for r in log)
 
 
-def test_inspect_position_deletes(catalog):
+def test_inspect_position_deletes(catalog, spark):
+    from pyspark.sql import functions as F
+
     t = catalog.create_table("insp_pd", schema={"k": "int"})
     t.append([{"k": i} for i in range(8)])
     t.delete_where("k in (2, 5)", mode="merge-on-read-positional")
     pd = t.inspect.position_deletes().collect()
     assert len(pd) == 2
     assert all(r["delete_file_path"].endswith(".parquet") for r in pd)
-    assert all(r["pos"] == 0 for r in pd)  # single-row local files
+    # each (file_path, pos) names the physical row that was deleted: the
+    # row at that row_index of that data file carries a deleted key (the
+    # file layout, and so the positions, depend on the core count)
+    hit = sorted(
+        spark.read.parquet(r["file_path"])
+        .filter(F.col("_metadata.row_index") == r["pos"])
+        .first()["k"]
+        for r in pd
+    )
+    assert hit == [2, 5]
     # SQL metadata-table syntax routes all three new tables
     assert t.to_a(snapshot_id=None) is not None  # table loads fine
     c = catalog
