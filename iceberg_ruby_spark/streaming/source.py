@@ -666,7 +666,7 @@ class EngineTableStreamReader(DataSourceStreamReader):
             # fast-append structural delta: micro-batch planning opens only
             # the manifests ADDED in the window — O(new files), independent
             # of table history (the 100 TB tail-read property).  None ⇒ a
-            # replace commit or segment merge inside the window; fall back
+            # replace commit or manifest merge inside the window; fall back
             # to the full set diff below.
             delta = ops.read_manifest_delta(
                 end_snap.manifest_list, cur.manifest_list
@@ -749,11 +749,11 @@ class EngineTableStreamReader(DataSourceStreamReader):
             # independent of table size (same property as append-mode
             # micro-batches).  Structurally-derivable DELETE commits also
             # plan from the delta: added delete entries come from the new
-            # segments, and the prior-delete mask is served by the
+            # manifests, and the prior-delete mask is served by the
             # incremental delete-view cache — so an MoR delete commit's
             # planning cost is O(changed entries + live deletes), flat in
             # live FILE count.  Full manifests are read only for commits
-            # the delta can't describe (CoW rewrites, segment merges,
+            # the delta can't describe (CoW rewrites, manifest merges,
             # predicate deletes, prior-predicate masks).
             delta = ops.read_manifest_delta(
                 snap.manifest_list, prev.manifest_list
@@ -881,7 +881,7 @@ class EngineTableStreamReader(DataSourceStreamReader):
     # (SCALE.md r9: 1.9 → 7.0 ms across a 200-commit chain).  The cache
     # holds exactly the mask inputs: the parent state's delete entries plus
     # the base-location set for positional rebasing.  It's built by ONE
-    # full read (first delete commit of a drain, or after a segment merge)
+    # full read (first delete commit of a drain, or after a manifest merge)
     # and then advanced per commit from the structural delta alone, so a
     # long CDC drain's per-commit planning cost is O(changed entries +
     # standing deletes), flat in table size.

@@ -11,7 +11,8 @@ Storage model (Iceberg-shaped, Spark-native — no Iceberg runtime jar):
     metadata/
         v1.json, v2.json, ...     # full table metadata per committed version
         version-hint.text         # current version number (atomic rename)
-        snap-<id>.json            # per-snapshot manifest: list of data dirs
+        snap-<id>-<uuid>.avro     # per-snapshot spec Avro manifest list
+        <uuid>-m<N>.avro          # spec Avro manifests (manifests.py)
     data/
         <commit-uuid>/part-*.parquet   (optionally partitionBy'd subdirs)
 ```
@@ -59,6 +60,15 @@ from iceberg_ruby_spark.errors import (
 from iceberg_ruby_spark.result import Result
 from iceberg_ruby_spark._localdf import small_local_df
 from iceberg_ruby_spark import types as ice_t
+from iceberg_ruby_spark.avro_file import read_ocf
+from iceberg_ruby_spark.manifests import (
+    MANIFEST_FORMAT_PROPERTY,
+    ManifestContext,
+    manifest_paths,
+    read_avro_manifest_delta,
+    read_avro_manifest_list,
+    write_avro_manifests,
+)
 from iceberg_ruby_spark.transforms import (
     PartitionSpec,
     SortOrder,
@@ -81,7 +91,7 @@ class Snapshot:
     parent_snapshot_id: Optional[int]
     sequence_number: int
     timestamp_ms: int
-    manifest_list: str  # path to snap-<id>.json
+    manifest_list: str  # path to the snapshot's Avro manifest list
     schema_id: int
     summary: dict[str, Any]
 
@@ -442,242 +452,68 @@ class FsTableOps:
             return _local_path(p)
         return p if os.path.isabs(p) else os.path.join(self.location, p)
 
-    def _map_entry_paths(self, e: dict[str, Any], fn) -> dict[str, Any]:
-        out = dict(e)
-        if "path" in out:
-            out["path"] = fn(out["path"])
-        if "delete-file" in out:
-            out["delete-file"] = fn(out["delete-file"])
-        if "applies-to" in out:
-            out["applies-to"] = [fn(p) for p in out["applies-to"]]
-        return out
+    # The four manifest methods are this ops' whole manifest plane; they
+    # stay defined here (not inherited from a mixin) so wrappers that
+    # patch ``FsTableOps`` by attribute name see every call.
 
     def write_manifest(
         self,
         snapshot_id: int,
         entries: list[dict[str, Any]],
-        ctx: Any = None,
+        ctx: ManifestContext,
         base_list: Optional[str] = None,
     ) -> str:
-        """``ctx`` (a :class:`manifests.ManifestContext`) switches the commit
-        to Iceberg-spec Avro manifests + manifest lists; without it the
-        internal JSON manifest is written.
+        """Write ``entries`` as Iceberg-spec Avro manifests plus a manifest
+        list (:func:`manifests.write_avro_manifests`; ``ctx`` carries the
+        schemas, specs and sequence number) and return the list's path
+        relative to the table location.
 
         ``base_list`` enables FAST APPEND: ``entries`` is this commit's
         delta only, and the new manifest list reuses the base snapshot's
         manifest files instead of rewriting the table's full entry set —
         commit metadata cost is O(new files), not O(table files) (Iceberg's
         fast-append snapshot semantics).  Small manifests are merged once
-        the list exceeds :data:`manifests.MANIFEST_SEGMENT_CAP` entries, so
-        scan planning never opens an unbounded number of metadata files.
-        If the base list's format doesn't match the target format (table
-        switched ``write.metadata.manifest-format`` mid-history), the base
-        is read back and the commit falls back to a full rewrite."""
-        if ctx is not None:
-            from iceberg_ruby_spark.manifests import write_avro_manifests
-
-            if base_list is not None and not base_list.endswith(".avro"):
-                entries = self.read_manifest(base_list) + entries
-                base_list = None
-            return write_avro_manifests(
-                self, snapshot_id, entries, ctx, base_list=base_list
-            )
-        if base_list is not None and base_list.endswith(".avro"):
-            entries = self.read_manifest(base_list) + entries
-            base_list = None
-        # entries live OUT-OF-LINE in a segment file; the list document
-        # itself holds only the segment pointer table, so chaining the
-        # next append reads a tiny document no matter how large the table
-        # is — the JSON twin of an Avro manifest list.  (Docs written by
-        # earlier versions carry inline ``entries``; readers treat those
-        # as one implicit trailing segment.)
-        path = os.path.join(self.metadata_dir, f"snap-{snapshot_id}.json")
-        stored = [self._map_entry_paths(e, self._rel) for e in entries]
-        seg_path = os.path.join(
-            self.metadata_dir, f"seg-{snapshot_id}-{uuid_mod.uuid4().hex}.json"
+        the list reaches :data:`manifests.MANIFEST_SEGMENT_CAP` entries, so
+        scan planning never opens an unbounded number of metadata files."""
+        return write_avro_manifests(
+            self, snapshot_id, entries, ctx, base_list=base_list
         )
-        self.io.write_atomic(
-            seg_path, json.dumps({"entries": stored}), overwrite=True
-        )
-        segs = (
-            self._base_segments(base_list) if base_list is not None else []
-        )
-        # "s": the segment's conservative column summary — what lets the
-        # metadata layer SKIP whole segments a filter provably misses
-        # (read_manifest_filtered) without opening them
-        segs.append(
-            {
-                "path": self._rel(seg_path),
-                "n": len(stored),
-                "s": _segment_summary(stored),
-            }
-        )
-        segs = self._maybe_merge_segments(snapshot_id, segs)
-        doc: dict[str, Any] = {"snapshot-id": snapshot_id, "segments": segs}
-        self.io.write_atomic(path, json.dumps(doc), overwrite=True)
-        return self._rel(path)
-
-    def _base_segments(self, base_list: str) -> list[dict[str, Any]]:
-        """The parent list's segments, carried forward.  A legacy document
-        with inline entries becomes one more segment (pointing at the
-        document itself — its ``entries`` key is what segment reads
-        take)."""
-        base_doc = json.loads(self.io.read(self._abs(base_list)))
-        segs = list(base_doc.get("segments", []))
-        if base_doc.get("entries"):
-            segs.append(
-                {
-                    "path": self._rel(self._abs(base_list)),
-                    "n": len(base_doc["entries"]),
-                }
-            )
-        return segs
-
-    def _maybe_merge_segments(
-        self, snapshot_id: int, segs: list[dict[str, Any]]
-    ) -> list[dict[str, Any]]:
-        """When the segment count exceeds the cap, the smallest segments
-        merge into one consolidation file — size-tiered, so large segments
-        are almost never rewritten and per-commit metadata write cost
-        stays proportional to recent deltas, not table size."""
-        from iceberg_ruby_spark import manifests as _m
-
-        cap = _m.MANIFEST_SEGMENT_CAP
-        if len(segs) <= cap:
-            return segs
-        keep_n = max(cap // 2, 1)
-        order = sorted(range(len(segs)), key=lambda i: segs[i]["n"])
-        victims = set(order[: len(segs) - keep_n + 1])
-        merged: list[dict[str, Any]] = []
-        for i in sorted(victims):
-            sdoc = json.loads(self.io.read(self._abs(segs[i]["path"])))
-            # stored (location-relative) forms copy verbatim — no abs/rel
-            # round trip, so a merge never perturbs path mapping
-            merged.extend(sdoc.get("entries", []))
-        mpath = os.path.join(
-            self.metadata_dir, f"seg-{snapshot_id}-{uuid_mod.uuid4().hex}.json"
-        )
-        self.io.write_atomic(
-            mpath, json.dumps({"entries": merged}), overwrite=True
-        )
-        out: list[dict[str, Any]] = []
-        first_victim = min(victims)
-        for i, s in enumerate(segs):
-            if i == first_victim:
-                out.append(
-                    {
-                        "path": self._rel(mpath),
-                        "n": len(merged),
-                        "s": _segment_summary(merged),
-                    }
-                )
-            if i not in victims:
-                out.append(s)
-        return out
 
     def read_manifest(self, manifest_list: str) -> list[dict[str, Any]]:
-        if manifest_list.endswith(".avro"):
-            from iceberg_ruby_spark.manifests import read_avro_manifest_list
-
-            return read_avro_manifest_list(self, manifest_list)
-        doc = json.loads(self.io.read(self._abs(manifest_list)))
-        stored: list[dict[str, Any]] = []
-        for seg in doc.get("segments", []):
-            sdoc = json.loads(self.io.read(self._abs(seg["path"])))
-            stored.extend(sdoc.get("entries", []))
-        stored.extend(doc.get("entries", []))
-        return [self._map_entry_paths(e, self._abs) for e in stored]
+        return read_avro_manifest_list(self, manifest_list)[0]
 
     def read_manifest_filtered(
         self, manifest_list: str, trees, allow_mor: bool = False
     ) -> tuple[list[dict[str, Any]], int]:
-        """:meth:`read_manifest`, but segments whose stored summary PROVES
-        every file full-misses the filter ``trees`` are skipped without
-        being opened — filtered metadata-aggregate planning cost scales
-        with MATCHING segments, not total entries (r13, VERDICT r12 #3).
+        """:meth:`read_manifest`, but data manifests whose stored column
+        summary PROVES every file full-misses the filter ``trees`` are
+        skipped without being opened — filtered metadata-aggregate planning
+        cost scales with MATCHING manifests, not total entries.
 
-        Returns ``(entries, skipped_segments)``.  With the default
-        ``allow_mor=False``, pruning engages only when every segment
-        carries a summary that proves the snapshot has ZERO merge-on-read
-        entries: a delete could reference a file in a skipped segment,
-        and the DV-exact COUNT proof needs the full matched-file map.
-        ``allow_mor=True`` (the executed-scan/plan_files callers) prunes
-        data-pure segments even on MoR tables — sound for READING because
-        a pruned file's rows are never materialized, so a delete scoped
-        to it is a no-op, and every delete ENTRY still rides along
-        (mor-bearing segments are always read).  Summary-less segments
-        are always read in both modes."""
-        if trees is None:
-            return self.read_manifest(manifest_list), 0
-        if manifest_list.endswith(".avro"):
-            from iceberg_ruby_spark.manifests import (
-                read_avro_manifest_list_filtered,
-            )
-
-            return read_avro_manifest_list_filtered(
-                self, manifest_list, trees, allow_mor=allow_mor
-            )
-        doc = json.loads(self.io.read(self._abs(manifest_list)))
-        segs = doc.get("segments", [])
-        has_mor = doc.get("entries") or any(
-            "s" not in seg or seg["s"].get("mor") for seg in segs
-        )
-        if has_mor and not allow_mor:
-            return self.read_manifest(manifest_list), 0
-        stored: list[dict[str, Any]] = []
-        skipped = 0
-        for seg in segs:
-            s = seg.get("s")
-            if (
-                s is not None
-                and not s.get("mor")
-                and _summary_excludes(s, trees)
-            ):
-                skipped += 1
-                continue
-            sdoc = json.loads(self.io.read(self._abs(seg["path"])))
-            stored.extend(sdoc.get("entries", []))
-        stored.extend(doc.get("entries", []))
-        return [self._map_entry_paths(e, self._abs) for e in stored], skipped
+        Returns ``(entries, skipped_manifests)``.  With the default
+        ``allow_mor=False``, pruning engages only when the snapshot has
+        ZERO merge-on-read entries: a delete could reference a file in a
+        skipped manifest, and the DV-exact COUNT proof needs the full
+        matched-file map.  ``allow_mor=True`` (the executed-scan/plan_files
+        callers) prunes data manifests even on MoR tables — sound for
+        READING because a pruned file's rows are never materialized, so a
+        delete scoped to it is a no-op, and every delete ENTRY still rides
+        along (delete manifests are always read).  Summary-less manifests
+        are always read in both modes, and ``trees=None`` reads every
+        manifest."""
+        return read_avro_manifest_list(self, manifest_list, trees, allow_mor)
 
     def read_manifest_delta(
         self, end_list: str, start_list: str
     ) -> Optional[list[dict[str, Any]]]:
-        """Entries in ``end_list``'s manifest tree that are NOT in
-        ``start_list``'s, derived STRUCTURALLY — only the two list
-        documents plus the delta segments are read, never the full table's
-        metadata.  Returns ``None`` when the delta isn't structurally
-        derivable (a replace commit or a segment merge inside the window);
-        callers fall back to a full set diff.  This is what makes
-        incremental / streaming planning O(new files) at 100 TB."""
-        if self._rel(self._abs(end_list)) == self._rel(self._abs(start_list)):
-            return []
-        if end_list.endswith(".avro") != start_list.endswith(".avro"):
-            return None
-        if end_list.endswith(".avro"):
-            from iceberg_ruby_spark.manifests import read_avro_manifest_delta
-
-            return read_avro_manifest_delta(self, end_list, start_list)
-        end_doc = json.loads(self.io.read(self._abs(end_list)))
-        start_doc = json.loads(self.io.read(self._abs(start_list)))
-        end_segs = [s["path"] for s in end_doc.get("segments", [])]
-        start_set = {s["path"] for s in start_doc.get("segments", [])}
-        if start_doc.get("entries"):
-            # legacy inline document: its own entries ride as the implicit
-            # trailing segment, keyed by the document's path
-            start_set.add(self._rel(self._abs(start_list)))
-        # append-only + un-merged window ⇔ start's whole tree survives as
-        # segments of end; anything else (replace reset, merge rewrote a
-        # segment) breaks containment and we refuse rather than guess
-        if not start_set or not start_set <= set(end_segs):
-            return None
-        stored: list[dict[str, Any]] = []
-        for p in end_segs:
-            if p not in start_set:
-                sdoc = json.loads(self.io.read(self._abs(p)))
-                stored.extend(sdoc.get("entries", []))
-        stored.extend(end_doc.get("entries", []))
-        return [self._map_entry_paths(e, self._abs) for e in stored]
+        """Entries in ``end_list``'s snapshot that are NOT in
+        ``start_list``'s, derived STRUCTURALLY — only the two lists plus
+        the delta manifests are read, never the full table's metadata.
+        Returns ``None`` when the delta isn't structurally derivable (a
+        replace commit or a manifest merge inside the window); callers
+        fall back to a full set diff.  This is what makes incremental /
+        streaming planning O(new files) at 100 TB."""
+        return read_avro_manifest_delta(self, end_list, start_list)
 
 
 class StaticTableOps(FsTableOps):
@@ -1165,8 +1001,8 @@ def _theta_hash_udf(ice_type: ice_t.Type):
 
 
 def _entry_key(e: dict[str, Any]) -> str:
-    """Stable identity for pathless manifest entries (delete predicates,
-    legacy data-dir entries) so replace-mode rebases can diff them by value."""
+    """Stable identity for pathless manifest entries (delete predicates) so
+    replace-mode rebases can diff them by value."""
     return json.dumps(e, sort_keys=True, default=str)
 
 
@@ -2191,7 +2027,7 @@ class Table:
             # predicate entries are scoped by ``applies-to`` to files that
             # existed at their commit, so excluding them can't change the
             # window's rows.)  Falls back to the full set diff when the
-            # window crosses a segment merge.
+            # window crosses a manifest merge.
             delta = self.ops.read_manifest_delta(
                 to_snap.manifest_list, from_snap.manifest_list
             )
@@ -2833,18 +2669,14 @@ class Table:
         except (TypeError, ValueError):
             return 20
 
-    def _avro_manifest_ctx(self, meta: TableMetadata, parent: Optional[int]):
-        """Non-None when ``write.metadata.manifest-format=avro``: commits
-        then write Iceberg-spec Avro manifests + manifest lists (see
-        :mod:`iceberg_ruby_spark.manifests`) instead of internal JSON."""
-        from iceberg_ruby_spark.manifests import (
-            MANIFEST_FORMAT_PROPERTY,
-            ManifestContext,
-        )
-
-        fmt = meta.raw.get("properties", {}).get(MANIFEST_FORMAT_PROPERTY, "json")
-        if fmt == "json":
-            return None
+    def _manifest_ctx(
+        self, meta: TableMetadata, parent: Optional[int]
+    ) -> ManifestContext:
+        """What a commit's manifest write needs from the table metadata.
+        ``write.metadata.manifest-format`` has one legal value, ``avro``
+        (also the default); any other value is rejected rather than
+        silently written as Avro."""
+        fmt = meta.raw.get("properties", {}).get(MANIFEST_FORMAT_PROPERTY, "avro")
         if fmt != "avro":
             raise InvalidDataError(f"unknown {MANIFEST_FORMAT_PROPERTY}: {fmt!r}")
         spec_id = meta.raw.get("default-spec-id", 0)
@@ -3656,18 +3488,10 @@ class Table:
     def _entries_rowcount(entries: list[dict[str, Any]]) -> int:
         return sum(e.get("record-count") or 0 for e in entries)
 
-    def _entry_files(self, entries: Iterable[dict[str, Any]]) -> list[str]:
-        """Expand manifest entries to data-file paths.  Supports current
-        per-file entries and round-1 legacy ``data-dir`` entries."""
-        files: list[str] = []
-        for e in entries:
-            if "path" in e:
-                files.append(e["path"])
-            elif "data-dir" in e:  # legacy dir-level entry
-                files.extend(
-                    f for f in self.ops.io.list(e["data-dir"]) if f.endswith(".parquet")
-                )
-        return files
+    @staticmethod
+    def _entry_files(entries: Iterable[dict[str, Any]]) -> list[str]:
+        """Data-file paths of the manifest entries."""
+        return [e["path"] for e in entries if "path" in e]
 
     def _read_entries(
         self,
@@ -4259,8 +4083,8 @@ class Table:
                         for e in cur_entries
                         if "path" in e and e["path"] not in base_paths
                     ]
-                    # Pathless entries (merge-on-read delete predicates, legacy
-                    # data-dir entries) rebase by value: one committed since the
+                    # Pathless entries (merge-on-read delete predicates)
+                    # rebase by value: one committed since the
                     # base snapshot must be carried into the new manifest, and
                     # if its file scope intersects files this mutation rewrote
                     # the delete cannot be replayed onto the rewritten files —
@@ -4356,7 +4180,7 @@ class Table:
             # SUPERSET CHAINING: a replace-mode commit whose entry multiset
             # CONTAINS the parent's (merge-on-read deletes/merges: nothing
             # removed, only delete/data entries added) writes just the
-            # delta chained onto the parent's manifest segments — the same
+            # delta chained onto the parent's manifests — the same
             # O(changed) commit metadata as fast append, instead of
             # rewriting the table's full entry set.  This is also what
             # makes the commit structurally delta-derivable for streaming/
@@ -4395,7 +4219,7 @@ class Table:
             manifest = self.ops.write_manifest(
                 snapshot_id,
                 chain_delta if chain_delta is not None else all_entries,
-                ctx=self._avro_manifest_ctx(meta, head),
+                ctx=self._manifest_ctx(meta, head),
                 base_list=(
                     parent_snap.manifest_list
                     if fast_append
@@ -4564,58 +4388,15 @@ class Table:
         """Manifest-list rows for the current snapshot (or ``snap`` when
         given — backs ``inspect.all_manifests()`` too) — the manifest
         list alone is read, never the manifests (backs
-        ``inspect.manifests()``).  Avro tables yield the spec's
-        manifest_file records; JSON-manifest tables yield one synthetic
-        descriptor for their single flattened manifest document."""
+        ``inspect.manifests()``): the spec's manifest_file records."""
         if snap is None:
             snap = self.current_snapshot()
         if snap is None:
             return []
-        ml = snap.manifest_list
-        if ml.endswith(".avro"):
-            from iceberg_ruby_spark.manifests import read_ocf
-
-            _, records, _ = read_ocf(self.ops.io.read_bytes(self.ops._abs(ml)))
-            return records
-        raw = self.ops.io.read(self.ops._abs(ml))
-        doc = json.loads(raw)
-        out = []
-        # fast-append segment chain: one descriptor per reused segment,
-        # then the head document's own delta entries
-        for seg in doc.get("segments", []):
-            sraw = self.ops.io.read(self.ops._abs(seg["path"]))
-            sentries = json.loads(sraw).get("entries", [])
-            n_data = sum(1 for e in sentries if "path" in e)
-            out.append(
-                {
-                    "manifest_path": self.ops._abs(seg["path"]),
-                    "manifest_length": len(
-                        sraw.encode() if isinstance(sraw, str) else sraw
-                    ),
-                    "partition_spec_id": 0,
-                    "content": 0,
-                    "existing_files_count": n_data,
-                    "deleted_files_count": len(sentries) - n_data,
-                }
-            )
-        entries = doc.get("entries", [])
-        if entries or not out:
-            # legacy inline documents carry their own entries; current
-            # documents are pure pointer tables and add no descriptor
-            n_data = sum(1 for e in entries if "path" in e)
-            out.append(
-                {
-                    "manifest_path": self.ops._abs(ml),
-                    "manifest_length": len(
-                        raw.encode() if isinstance(raw, str) else raw
-                    ),
-                    "partition_spec_id": 0,
-                    "content": 0,
-                    "existing_files_count": n_data,
-                    "deleted_files_count": len(entries) - n_data,
-                }
-            )
-        return out
+        _, records, _ = read_ocf(
+            self.ops.io.read_bytes(self.ops._abs(snap.manifest_list))
+        )
+        return records
 
     def _branch_head_id(self, branch: Optional[str]) -> Optional[int]:
         """The optimistic-commit base for a mutation: main's head, or the
@@ -5179,8 +4960,8 @@ class Table:
         deleted = sum(hits.values())
         if not hits:
             return 0
-        hit_entries = [e for e in data if e.get("path") in hits or "data-dir" in e]
-        keep_entries = [e for e in data if e.get("path") not in hits and "data-dir" not in e]
+        hit_entries = [e for e in data if e.get("path") in hits]
+        keep_entries = [e for e in data if e.get("path") not in hits]
         # outstanding MoR predicates apply while reading hit files so their
         # deleted rows are not resurrected into the rewrite; survivors keep
         # their row lineage (id AND sequence — a delete doesn't update them)
@@ -5951,8 +5732,8 @@ class Table:
         updated = sum(hits.values())
         if not hits:
             return 0
-        hit_entries = [e for e in data if e.get("path") in hits or "data-dir" in e]
-        keep_entries = [e for e in data if e.get("path") not in hits and "data-dir" not in e]
+        hit_entries = [e for e in data if e.get("path") in hits]
+        keep_entries = [e for e in data if e.get("path") not in hits]
         # v3 row lineage through the rewrite: every row keeps its _row_id;
         # rows the UPDATE touches get a NULL materialized sequence cell,
         # which the read path inherits as the rewrite commit's sequence —
@@ -6135,12 +5916,8 @@ class Table:
             # row whose key is absent from the source) — every file rewrites
             hit_entries, keep_entries = list(data), []
         else:
-            hit_entries = [
-                e for e in data if e.get("path") in hits or "data-dir" in e
-            ]
-            keep_entries = [
-                e for e in data if e.get("path") not in hits and "data-dir" not in e
-            ]
+            hit_entries = [e for e in data if e.get("path") in hits]
+            keep_entries = [e for e in data if e.get("path") not in hits]
         # lineage through the rewrite: existing rows keep _row_id; rows the
         # UPDATE clause touches write a NULL sequence cell (inherit the
         # commit's sequence); inserted rows write NULL id AND seq cells,
@@ -6550,7 +6327,7 @@ class Table:
         consolidate the current snapshot's manifest METADATA into the
         minimal fresh set without touching a single data file.  After a
         long run of fast appends the manifest list holds one
-        segment/manifest per commit (bounded by the cap); this folds them
+        manifest per commit (bounded by the cap); this folds them
         into one consolidated set in a metadata-only replace commit, so
         subsequent scan planning opens the minimum number of metadata
         files.  The entry set is committed byte-identical — rows, deletes,
@@ -6740,7 +6517,7 @@ class Table:
           :meth:`rewrite_position_deletes` when positional delete files
           reach N.
         - ``maintenance.rewrite-manifests.min-manifests=N``:
-          :meth:`rewrite_manifests` when manifest segments reach N.
+          :meth:`rewrite_manifests` when manifests reach N.
         - ``maintenance.expire.enabled=true``: argument-less
           :meth:`expire_snapshots` (the ``history.expire.*`` retention
           properties supply the policy).
@@ -6869,7 +6646,7 @@ class Table:
 
         ``clean_metadata`` (default on, Iceberg's ``cleanExpiredFiles``
         behavior) also deletes the expired snapshots' metadata files —
-        manifest lists, manifests/segments, and their statistics files —
+        manifest lists, manifests, and their statistics files —
         but ONLY those not referenced by any retained snapshot.  With
         fast-append manifest sharing this is reference-counted by
         construction: candidates come from the EXPIRED snapshots' own
@@ -6996,36 +6773,18 @@ class Table:
 
     def _manifest_metadata_files(self, manifest_list: str) -> set[str]:
         """Every metadata file a snapshot's manifest list references: the
-        list document itself plus its manifests (Avro) or chained segments
-        (JSON).  Metadata-sized reads only — no data files touched."""
-        out: set[str] = set()
+        list itself plus its manifests.  Metadata-sized reads only — no
+        data files touched."""
+        out = {self.ops._abs(manifest_list)}
         try:
-            abs_list = self.ops._abs(manifest_list)
-            out.add(abs_list)
-            if manifest_list.endswith(".avro"):
-                from iceberg_ruby_spark.manifests import (
-                    _EXTRAS_KEY,
-                    _manifest_abs_path,
-                    read_ocf,
-                )
-
-                _, recs, meta = read_ocf(self.ops.io.read_bytes(abs_list))
-                rels = json.loads(meta.get(_EXTRAS_KEY, b"{}").decode()).get(
-                    "manifests"
-                )
-                for i, mf in enumerate(recs):
-                    out.add(_manifest_abs_path(self.ops, rels, i, mf))
-            else:
-                doc = json.loads(self.ops.io.read(abs_list))
-                for seg in doc.get("segments", []):
-                    out.add(self.ops._abs(seg["path"]))
+            out.update(manifest_paths(self.ops, manifest_list))
         except (OSError, FileNotFoundError, ValueError, KeyError):
             pass  # unreadable list: reference nothing rather than guess
         return out
 
     def _snapshot_data_files(self, manifest_list: str) -> set[str]:
         """Every DATA-layer file a snapshot references, as absolute paths:
-        data files (including legacy dir-level entries), positional /
+        data files, positional /
         equality delete files, and DV puffins.  Metadata-sized reads only."""
         out: set[str] = set()
         try:
@@ -7579,83 +7338,6 @@ def _typed_bound(v: Any, t: ice_t.Type) -> Any:
     return None
 
 
-def _segment_summary(entries: list[dict[str, Any]]) -> dict[str, Any]:
-    """Conservative per-segment COLUMN summary for manifest-level segment
-    pruning (the engine twin of the Iceberg manifest-list rows' partition
-    field summaries, generalized to column bounds so non-partition
-    predicates prune too): ``{"mor": bool, "rows": int|None,
-    "cols": {col: {"lo","hi","nulls"?}}}``.
-
-    Soundness: a column appears ONLY when every data entry in the segment
-    records both bounds for it (a bound-less file could hold anything);
-    ``lo``/``hi`` are min/max over the files' conservative bounds, so the
-    segment range is conservative too; ``nulls`` (summed) appears only
-    when every file records a null count; ``rows`` only when every file
-    records a row count; a legacy data-dir entry empties the summary.
-    Values are the entries' stored JSON-stat forms — min/max on mixed
-    non-comparable types drops the column."""
-    data = [e for e in entries if "path" in e]
-    mor = any("delete-file" in e or "delete-predicate" in e for e in entries)
-    if any("data-dir" in e for e in entries) or not data:
-        return {"mor": mor, "rows": None, "cols": {}}
-    rows: Optional[int] = 0
-    for e in data:
-        rc = e.get("record-count")
-        if rc is None:
-            rows = None
-            break
-        rows += rc
-    cols: dict[str, dict[str, Any]] = {}
-    first = data[0]
-    cand = set((first.get("lower-bounds") or {})) & set(
-        (first.get("upper-bounds") or {})
-    )
-    for c in cand:
-        los, his, nulls = [], [], 0
-        ok, have_nulls = True, True
-        for e in data:
-            lo = (e.get("lower-bounds") or {}).get(c)
-            hi = (e.get("upper-bounds") or {}).get(c)
-            if lo is None or hi is None:
-                ok = False
-                break
-            los.append(lo)
-            his.append(hi)
-            nc = (e.get("null-counts") or {}).get(c)
-            if nc is None:
-                have_nulls = False
-            else:
-                nulls += nc
-        if not ok:
-            continue
-        try:
-            entry = {"lo": min(los), "hi": max(his)}
-        except TypeError:
-            continue  # mixed bound types: not comparable, skip the column
-        if have_nulls:
-            entry["nulls"] = nulls
-        cols[c] = entry
-    return {"mor": mor, "rows": rows, "cols": cols}
-
-
-def _summary_excludes(summary: Optional[dict[str, Any]], trees) -> bool:
-    """True when a segment summary PROVES no file in the segment can
-    contain a row matching every filter tree — the whole segment is then
-    full-miss and its manifest need not be opened."""
-    if not summary or trees is None:
-        return False
-    cols = summary.get("cols") or {}
-    pseudo = {
-        "lower-bounds": {c: v["lo"] for c, v in cols.items()},
-        "upper-bounds": {c: v["hi"] for c, v in cols.items()},
-        "null-counts": {
-            c: v["nulls"] for c, v in cols.items() if "nulls" in v
-        },
-        "record-count": summary.get("rows"),
-    }
-    return any(not _bounds_may_match(pseudo, t) for t in trees)
-
-
 def _key_bounds_tree(delete_entry: dict[str, Any]):
     """Predicate tree from an equality delete's optional per-entry
     ``key-bounds`` hint ({"lower": {col: v}, "upper": {col: v}}, values in
@@ -7973,24 +7655,20 @@ class TableInspect:
         )
 
     def manifests(self) -> DataFrame:
-        """One row per manifest of the current snapshot (path, length,
-        entry counts, partition-spec id) — read from the manifest list
-        only, like iceberg-spark's `manifests` metadata table."""
-        def pick(m: dict, *keys: str) -> Any:
-            for k in keys:
-                if m.get(k) is not None:
-                    return m[k]
-            return None
-
+        """One row per spec Avro manifest of the current snapshot (path,
+        length, entry counts, partition-spec id) — read from the manifest
+        list's ``manifest_file`` records only, like iceberg-spark's
+        `manifests` metadata table.  Counts absent from an externally
+        written list (other writers name them differently) are null."""
         rows = [
             {
-                "path": pick(m, "manifest_path", "path"),
-                "length": pick(m, "manifest_length", "length"),
-                "partition_spec_id": m.get("partition_spec_id", 0),
-                "content": int(m.get("content", 0)),
-                "added_data_files_count": pick(m, "added_files_count"),
-                "existing_data_files_count": pick(m, "existing_files_count"),
-                "deleted_data_files_count": pick(m, "deleted_files_count"),
+                "path": m["manifest_path"],
+                "length": m["manifest_length"],
+                "partition_spec_id": m["partition_spec_id"],
+                "content": m.get("content", 0),
+                "added_data_files_count": m.get("added_files_count"),
+                "existing_data_files_count": m.get("existing_files_count"),
+                "deleted_data_files_count": m.get("deleted_files_count"),
             }
             for m in self.table._current_manifest_descriptors()
         ]
@@ -8767,9 +8445,9 @@ class TableScan:
             trees = self._provable_filter_trees()
             if trees is None:
                 return None
-        # segment pruning: manifests whose stored summary proves every
+        # manifest pruning: manifests whose stored summary proves every
         # file full-misses the filter never open — filtered metadata
-        # planning scales with MATCHING segments, not table history
+        # planning scales with MATCHING manifests, not table history
         entries, _ = self.table.ops.read_manifest_filtered(
             snap.manifest_list, trees
         )
@@ -8839,8 +8517,6 @@ class TableScan:
         matched: dict[str, bool] = {}  # abs data path → counted?
         total = 0
         for e in data:
-            if "path" not in e:
-                return U  # pathless legacy entry: can't key DV references
             m = _classify_entry(e, trees)
             if m is None:
                 return U  # the predicate splits this file
@@ -9031,8 +8707,6 @@ class TableScan:
             return accs[key]
 
         for e in data:
-            if "path" not in e:
-                return None  # pathless legacy entry: can't key DV refs
             m = _classify_entry(e, trees)
             if m is None:
                 return None  # the predicate splits this file
@@ -9304,18 +8978,6 @@ class TableScan:
                         "delete_files": deletes_for(e),
                     }
                 )
-            elif "data-dir" in e:  # legacy dir-level entry
-                io = self.table.ops.io
-                for full in io.list(e["data-dir"]):
-                    if full.endswith(".parquet"):
-                        tasks.append(
-                            {
-                                "data_file_path": full,
-                                "file_size_in_bytes": io.size(full),
-                                "record_count": None,
-                                "delete_files": [],
-                            }
-                        )
         return tasks
 
     def to_df(self) -> DataFrame:

@@ -15,6 +15,7 @@ import os
 
 import pytest
 
+from iceberg_ruby_spark.avro_file import read_ocf
 from iceberg_ruby_spark.errors import InvalidDataError
 
 
@@ -559,11 +560,20 @@ def _spy_segment_reads(t):
                             setattr(io, "read_bytes", orig_rb))
 
 
+def _manifests(opened):
+    """The manifest files among the opened metadata paths (manifest
+    lists are ``snap-*.avro``, manifests ``<uuid>-m<N>.avro``)."""
+    return [
+        p for p in opened
+        if p.endswith(".avro") and not os.path.basename(p).startswith("snap-")
+    ]
+
+
 def test_segment_pruning_skips_unopened_segments(catalog):
     """r13 (VERDICT r12 #3): a filtered metadata COUNT opens ONLY the
-    manifest segments whose stored column summary may match the filter —
-    a summary-excluded segment file is never read.  Six disjoint-range
-    commits, a filter hitting one range: exactly one segment opens."""
+    manifests whose stored column summary may match the filter — a
+    summary-excluded manifest file is never read.  Six disjoint-range
+    commits, a filter hitting one range: exactly one manifest opens."""
     t = catalog.create_table("segprune", schema={"k": "long", "v": "long"})
     for c in range(6):
         t.append([{"k": c * 100 + i, "v": i} for i in range(10)])
@@ -574,28 +584,24 @@ def test_segment_pruning_skips_unopened_segments(catalog):
     finally:
         restore()
     assert n == 10
-    segs = [p for p in opened if "/seg-" in p]
-    assert len(segs) == 1, f"expected 1 segment opened, got {segs}"
+    segs = _manifests(opened)
+    assert len(segs) == 1, f"expected 1 manifest opened, got {segs}"
     # unfiltered COUNT still reads nothing extra (pure fast-path totals)
-    # and a WIDE filter opens every segment
+    # and a WIDE filter opens every manifest
     opened2, restore = _spy_segment_reads(t)
     try:
         n_all = t.scan().filter("k >= 0").count()
     finally:
         restore()
     assert n_all == 60
-    assert len([p for p in opened2 if "/seg-" in p]) == 6
+    assert len(_manifests(opened2)) == 6
 
 
 def test_segment_pruning_avro_and_mor_fallback(catalog):
     """Avro manifest lists prune via the extras summaries; ANY
     merge-on-read entry disables pruning (the DV-exact COUNT proof needs
     the full matched-file map) but answers stay exact."""
-    t = catalog.create_table(
-        "segprune_av",
-        schema={"k": "long", "v": "long"},
-        properties={"write.metadata.manifest-format": "avro"},
-    )
+    t = catalog.create_table("segprune_av", schema={"k": "long", "v": "long"})
     for c in range(4):
         t.append([{"k": c * 100 + i, "v": i} for i in range(10)])
     t = t.refresh()
@@ -605,9 +611,7 @@ def test_segment_pruning_avro_and_mor_fallback(catalog):
     finally:
         restore()
     assert n == 10
-    manifests = [
-        p for p in opened if p.endswith(".avro") and "-m" in os.path.basename(p)
-    ]
+    manifests = _manifests(opened)
     assert len(manifests) == 1, f"expected 1 manifest opened, got {manifests}"
     # a DV delete lands → pruning disengages, result stays exact
     t.delete_where("k = 305", mode="merge-on-read-dv")
@@ -634,7 +638,7 @@ def test_segment_pruning_group_counts_and_scan(catalog, spark):
     finally:
         restore()
     assert len(rows) == 8
-    assert len([p for p in opened if "/seg-" in p]) == 1
+    assert len(_manifests(opened)) == 1
     # force a merge below the cap and re-check
     old = _m.MANIFEST_SEGMENT_CAP
     _m.MANIFEST_SEGMENT_CAP = 3
@@ -770,13 +774,13 @@ def test_segment_pruning_scan_on_mor_table(catalog, spark):
     finally:
         restore()
     assert rows == [100, 101, 102, 103, 104] + list(range(106, 110))
-    segs = [p for p in opened if "/seg-" in p]
-    # fewer segments than the table holds: the disjoint-range data
-    # segments were pruned (delete-bearing segments always read)
-    doc_segs = __import__("json").loads(
-        t.ops.io.read(t.ops._abs(t.current_snapshot().manifest_list))
-    )["segments"]
-    assert len(segs) < len(doc_segs)
+    segs = _manifests(opened)
+    # fewer manifests than the table holds: the disjoint-range data
+    # manifests were pruned (delete manifests always read)
+    _, list_recs, _ = read_ocf(
+        t.ops.io.read_bytes(t.ops._abs(t.current_snapshot().manifest_list))
+    )
+    assert len(segs) < len(list_recs)
     # the deleted-key range still reads exactly
     assert sorted(
         r["k"] for r in t.scan().filter("k >= 200 AND k < 220").to_df().collect()

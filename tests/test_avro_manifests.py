@@ -1,9 +1,9 @@
-"""Iceberg-spec Avro manifests (``write.metadata.manifest-format=avro``).
+"""Iceberg-spec Avro manifests, the engine's only manifest format.
 
 The reference's metadata interop comes from iceberg-rust's Avro writers
-(``ext/iceberg/src/table.rs:62-125``); these tests hold the repo's Avro
-mode to the same behaviors the JSON mode passes — appends, CoW and MoR
-mutations, schema evolution, time travel, rename survival — and then
+(``ext/iceberg/src/table.rs:62-125``); these tests hold the Avro
+manifests to the engine's behaviors — appends, CoW and MoR mutations,
+schema evolution, time travel, rename survival — and then
 decode every written manifest with the JVM's own ``org.apache.avro``
 DataFileReader (an independent decoder from Spark's classpath), checking
 spec structure: record/field names, field counts, bound byte values."""
@@ -19,6 +19,7 @@ import pytest
 
 from iceberg_ruby_spark import types as ice_t
 from iceberg_ruby_spark.avro_file import read_ocf
+from iceberg_ruby_spark.errors import InvalidDataError
 from iceberg_ruby_spark.manifests import bound_from_bytes, bound_to_bytes
 
 AVRO_PROPS = {"write.metadata.manifest-format": "avro"}
@@ -322,27 +323,22 @@ def test_bound_binary_roundtrip(t, value):
     assert bound_from_bytes(b, t) == value
 
 
-def test_switch_format_mid_life(catalog):
-    """A table can opt into Avro manifests after it already has JSON
-    history: the read path sniffs each manifest list's extension, so
-    mixed-format snapshot chains scan, time-travel, and mutate."""
-    t = catalog.create_table("avmix", schema={"k": "int"})
-    t.append([{"k": 1}, {"k": 2}])
-    s1 = t.current_snapshot().snapshot_id
-    assert not t.current_snapshot().manifest_list.endswith(".avro")
-    t.update_properties({"write.metadata.manifest-format": "avro"})
-    t.append([{"k": 3}])
-    assert t.current_snapshot().manifest_list.endswith(".avro")
-    assert sorted(r["k"] for r in t.to_a()) == [1, 2, 3]
-    # JSON-era snapshot still time-travels; mutations span both formats
-    assert sorted(r["k"] for r in t.scan(snapshot_id=s1).to_a()) == [1, 2]
-    assert t.delete_where("k = 1") == 1
-    assert sorted(r["k"] for r in t.to_a()) == [2, 3]
-    # and back to JSON
-    t.update_properties({"write.metadata.manifest-format": "json"})
-    t.append([{"k": 4}])
-    assert not t.current_snapshot().manifest_list.endswith(".avro")
-    assert sorted(r["k"] for r in t.to_a()) == [2, 3, 4]
+@pytest.mark.parametrize("fmt", [None, "avro", "json", "bogus"])
+def test_manifest_format_property_contract(catalog, fmt):
+    """Spec Avro is the only manifest format: an unset property or
+    ``avro`` commits an Avro manifest list, any other value — the retired
+    ``json`` included — fails the commit naming the property instead of
+    silently writing a format the table did not ask for."""
+    props = {"write.metadata.manifest-format": fmt} if fmt else None
+    t = catalog.create_table(f"avfmt_{fmt}", schema={"k": "int"}, properties=props)
+    if fmt in (None, "avro"):
+        t.append([{"k": 1}])
+        assert t.current_snapshot().manifest_list.endswith(".avro")
+        assert [r["k"] for r in t.to_a()] == [1]
+    else:
+        with pytest.raises(InvalidDataError, match="write.metadata.manifest-format"):
+            t.append([{"k": 1}])
+        assert t.refresh().current_snapshot() is None
 
 
 def test_temporal_partition_values_are_spec_epoch_relative(catalog, spark):

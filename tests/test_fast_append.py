@@ -2,72 +2,63 @@
 
 An append commit must not rewrite the table's existing manifests: the new
 manifest list carries the parent's manifests forward and adds one delta
-manifest (segment), so commit metadata cost is O(new files) — the property
+manifest, so commit metadata cost is O(new files) — the property
 that keeps frequent small appends viable on a 100 TB table.  Reference
 behavior being matched: iceberg-rust's fast-append snapshot production
 (the reference commits through it, ``ext/iceberg/src/table.rs:62-125``);
 the list-length bound mirrors Iceberg's merge-manifests behavior.
 
-Covers: chain shape (JSON segments / Avro carried manifest records),
-read-back equivalence, the structural delta read (``read_manifest_delta``),
-segment merging at the cap, chain reset on replace commits, row lineage
+Covers: chain shape (carried manifest-list records), read-back
+equivalence, the structural delta read (``read_manifest_delta``),
+manifest merging at the cap, chain reset on replace commits, row lineage
 across chained appends, rename survival, and the O(new) guarantee itself
 (the commit never reads the parent's manifests)."""
 
 from __future__ import annotations
-
-import json
-
-import pytest
 
 from iceberg_ruby_spark import manifests as man
 from iceberg_ruby_spark.avro_file import read_ocf
 from iceberg_ruby_spark.table import FsTableOps
 
 
-def _mk(catalog, name, fmt, **kw):
-    props = dict(kw.pop("properties", {}) or {})
-    if fmt == "avro":
-        props["write.metadata.manifest-format"] = "avro"
-    return catalog.create_table(
-        name, schema={"k": "int", "v": "string"}, properties=props or None, **kw
-    )
+def _mk(catalog, name, **kw):
+    return catalog.create_table(name, schema={"k": "int", "v": "string"}, **kw)
+
+
+def _list_records(t, snap=None):
+    """The manifest_file records of a snapshot's manifest list."""
+    snap = snap or t.current_snapshot()
+    return read_ocf(t.ops.io.read_bytes(t.ops._abs(snap.manifest_list)))[1]
 
 
 def _rows(t, **scan_kw):
     return sorted(r[0] for r in t.scan(**scan_kw).select("k").collect().rows)
 
 
-@pytest.mark.parametrize("fmt", ["json", "avro"])
-def test_append_chains_delta_only(catalog, fmt):
-    t = _mk(catalog, f"fa_{fmt}", fmt)
+def test_append_chains_delta_only(catalog):
+    t = _mk(catalog, "fa")
     for i in range(4):
         t.append([{"k": i * 10 + j, "v": f"c{i}"} for j in range(3)])
     assert _rows(t) == sorted(i * 10 + j for i in range(4) for j in range(3))
     s = t.current_snapshot()
     assert s.summary["total-data-files"] == "12"
     assert s.summary["total-records"] == "12"
-    ml = t.ops._abs(s.manifest_list)
-    if fmt == "json":
-        doc = json.loads(t.ops.io.read(ml))
-        # the list document is a pure pointer table: one segment per
-        # commit, entries out-of-line (tiny doc at any table size)
-        assert not doc.get("entries")
-        assert [s["n"] for s in doc["segments"]] == [3, 3, 3, 3]
-    else:
-        _, recs, _ = read_ocf(t.ops.io.read_bytes(ml))
-        assert len(recs) == 4  # one manifest per append, carried verbatim
-        # carried records keep their ORIGINAL snapshot ids — only the last
-        # manifest belongs to the newest commit
-        sids = [r["added_snapshot_id"] for r in recs]
-        assert len(set(sids)) == 4 and sids[-1] == s.snapshot_id
+    recs = _list_records(t)
+    # one manifest per append, carried verbatim, each holding only its
+    # own commit's files (entries live in the manifests, not the list)
+    assert [r["added_files_count"] + r["existing_files_count"] for r in recs] == [
+        3, 3, 3, 3
+    ]
+    # carried records keep their ORIGINAL snapshot ids — only the last
+    # manifest belongs to the newest commit
+    sids = [r["added_snapshot_id"] for r in recs]
+    assert len(set(sids)) == 4 and sids[-1] == s.snapshot_id
 
 
-@pytest.mark.parametrize("fmt", ["json", "avro"])
-def test_append_never_reads_parent_manifests(catalog, fmt, monkeypatch):
+def test_append_never_reads_parent_manifests(catalog, monkeypatch):
     """The O(new files) guarantee: a fast append commits without reading
     a single existing manifest (only the parent's LIST document)."""
-    t = _mk(catalog, f"fa_oread_{fmt}", fmt)
+    t = _mk(catalog, "fa_oread")
     t.append([{"k": 1, "v": "a"}])
     t.append([{"k": 2, "v": "b"}])
     calls = []
@@ -83,9 +74,8 @@ def test_append_never_reads_parent_manifests(catalog, fmt, monkeypatch):
     assert _rows(t) == [1, 2, 3]
 
 
-@pytest.mark.parametrize("fmt", ["json", "avro"])
-def test_read_manifest_delta_append_window(catalog, fmt):
-    t = _mk(catalog, f"fa_delta_{fmt}", fmt)
+def test_read_manifest_delta_append_window(catalog):
+    t = _mk(catalog, "fa_delta")
     for i in range(5):
         t.append([{"k": i, "v": str(i)}])
     snaps = t.snapshots
@@ -102,9 +92,8 @@ def test_read_manifest_delta_append_window(catalog, fmt):
     ) == []
 
 
-@pytest.mark.parametrize("fmt", ["json", "avro"])
-def test_read_manifest_delta_refuses_replace_window(catalog, fmt):
-    t = _mk(catalog, f"fa_rp_{fmt}", fmt)
+def test_read_manifest_delta_refuses_replace_window(catalog):
+    t = _mk(catalog, "fa_rp")
     t.append([{"k": i, "v": "x"} for i in range(10)])
     start = t.current_snapshot()
     t.delete_where("k < 3")  # copy-on-write replace: chain resets
@@ -114,23 +103,16 @@ def test_read_manifest_delta_refuses_replace_window(catalog, fmt):
     assert _rows(t) == [3, 4, 5, 6, 7, 8, 9, 100]
 
 
-@pytest.mark.parametrize("fmt", ["json", "avro"])
-def test_segment_merge_at_cap(catalog, fmt, monkeypatch):
+def test_segment_merge_at_cap(catalog, monkeypatch):
     monkeypatch.setattr(man, "MANIFEST_SEGMENT_CAP", 6)
-    t = _mk(catalog, f"fa_cap_{fmt}", fmt)
+    t = _mk(catalog, "fa_cap")
     n = 20
     for i in range(n):
         t.append([{"k": i, "v": str(i)}])
     assert _rows(t) == list(range(n))
     s = t.current_snapshot()
     assert s.summary["total-records"] == str(n)
-    ml = t.ops._abs(s.manifest_list)
-    if fmt == "json":
-        doc = json.loads(t.ops.io.read(ml))
-        assert len(doc["segments"]) <= 6
-    else:
-        _, recs, _ = read_ocf(t.ops.io.read_bytes(ml))
-        assert len(recs) <= 6
+    assert len(_list_records(t)) <= 6
     # delta across a merge boundary refuses rather than guessing
     snaps = t.snapshots
     d = t.ops.read_manifest_delta(snaps[-1].manifest_list, snaps[0].manifest_list)
@@ -140,29 +122,35 @@ def test_segment_merge_at_cap(catalog, fmt, monkeypatch):
         assert {e["path"] for e in d} == full_end - full_start
 
 
-@pytest.mark.parametrize("fmt", ["json", "avro"])
-def test_replace_resets_then_chain_resumes(catalog, fmt):
-    t = _mk(catalog, f"fa_reset_{fmt}", fmt)
+def test_replace_resets_then_chain_resumes(catalog):
+    t = _mk(catalog, "fa_reset")
     for i in range(3):
         t.append([{"k": i, "v": "a"}])
-    t.compact()  # replace commit: ONE fresh consolidated segment
-    ml = t.ops._abs(t.current_snapshot().manifest_list)
-    if fmt == "json":
-        assert len(json.loads(t.ops.io.read(ml))["segments"]) == 1
+    t.compact()  # replace commit: ONE fresh consolidated manifest
+    assert len(_list_records(t)) == 1
     t.append([{"k": 50, "v": "b"}])
     t.append([{"k": 51, "v": "b"}])
     assert _rows(t) == [0, 1, 2, 50, 51]
-    if fmt == "json":
-        doc = json.loads(t.ops.io.read(t.ops._abs(t.current_snapshot().manifest_list)))
-        assert len(doc["segments"]) == 3  # compacted foot + 2 deltas
+    assert len(_list_records(t)) == 3  # compacted foot + 2 deltas
 
 
-def test_mor_delete_interplay_json(catalog):
-    t = _mk(catalog, "fa_mor", "json")
+def test_mor_delete_interplay(catalog):
+    """A merge-on-read delete chains onto the fast-append list: the data
+    manifests are carried, the delete predicate rides the list's extras,
+    and the next append carries both forward."""
+    t = _mk(catalog, "fa_mor")
     t.append([{"k": i, "v": "a"} for i in range(10)])
     t.append([{"k": i, "v": "b"} for i in range(10, 20)])
+    data_manifests = [r["manifest_path"] for r in _list_records(t)]
     t.delete_where("k = 5", mode="merge-on-read")
+    assert [r["manifest_path"] for r in _list_records(t)] == data_manifests
     t.append([{"k": 100, "v": "c"}])
+    recs = _list_records(t)
+    assert [r["manifest_path"] for r in recs[:2]] == data_manifests
+    assert len(recs) == 3
+    preds = [e for e in t.ops.read_manifest(t.current_snapshot().manifest_list)
+             if "delete-predicate" in e]
+    assert len(preds) == 1
     assert _rows(t) == [k for k in range(20) if k != 5] + [100]
 
 
@@ -180,7 +168,7 @@ def test_row_lineage_across_chain(catalog):
 
 
 def test_rename_survives_chain(catalog):
-    t = _mk(catalog, "fa_mv", "json")
+    t = _mk(catalog, "fa_mv")
     for i in range(4):
         t.append([{"k": i, "v": "x"}])
     catalog.rename_table("fa_mv", "fa_mv2")
@@ -194,7 +182,7 @@ def test_avro_chain_spec_reader_parity(catalog, spark):
     a fast-append chained manifest list, merged manifests included."""
     from tests.support.spec_reader import read_spec_rows
 
-    t = _mk(catalog, "fa_spec", "avro")
+    t = _mk(catalog, "fa_spec")
     for i in range(5):
         t.append([{"k": i * 10 + j, "v": f"c{i}"} for j in range(2)])
     got = sorted(r["k"] for r in read_spec_rows(spark, t.ops._abs(t.current_snapshot().manifest_list)))
@@ -205,13 +193,10 @@ def test_avro_merged_manifests_spec_reader_parity(catalog, spark, monkeypatch):
     monkeypatch.setattr(man, "MANIFEST_SEGMENT_CAP", 4)
     from tests.support.spec_reader import read_spec_rows
 
-    t = _mk(catalog, "fa_spec_m", "avro")
+    t = _mk(catalog, "fa_spec_m")
     for i in range(10):
         t.append([{"k": i, "v": str(i)}])
-    _, recs, _ = read_ocf(
-        t.ops.io.read_bytes(t.ops._abs(t.current_snapshot().manifest_list))
-    )
-    assert len(recs) <= 4
+    assert len(_list_records(t)) <= 4
     got = sorted(
         r["k"]
         for r in read_spec_rows(spark, t.ops._abs(t.current_snapshot().manifest_list))
@@ -220,16 +205,15 @@ def test_avro_merged_manifests_spec_reader_parity(catalog, spark, monkeypatch):
 
 
 def test_inspect_manifests_shows_segments(catalog):
-    t = _mk(catalog, "fa_insp", "json")
+    t = _mk(catalog, "fa_insp")
     t.append([{"k": 1, "v": "a"}])
     t.append([{"k": 2, "v": "b"}])
     mans = t.inspect.manifests().collect()
-    assert len(mans) == 2  # one per chained segment + head delta
+    assert len(mans) == 2  # the carried manifest + the head delta
 
 
-@pytest.mark.parametrize("fmt", ["json", "avro"])
-def test_rewrite_manifests_consolidates(catalog, fmt):
-    t = _mk(catalog, f"rwm_{fmt}", fmt)
+def test_rewrite_manifests_consolidates(catalog):
+    t = _mk(catalog, "rwm")
     for i in range(6):
         t.append([{"k": i, "v": str(i)}])
     files_before = sorted(
@@ -243,16 +227,11 @@ def test_rewrite_manifests_consolidates(catalog, fmt):
     )
     assert files_after == files_before  # data files untouched
     assert _rows(t) == list(range(6))
-    ml = t.ops._abs(t.current_snapshot().manifest_list)
-    if fmt == "json":
-        assert len(json.loads(t.ops.io.read(ml))["segments"]) == 1
-    else:
-        _, recs, _ = read_ocf(t.ops.io.read_bytes(ml))
-        assert len(recs) == 1
+    assert len(_list_records(t)) == 1
 
 
 def test_rewrite_manifests_preserves_mor_deletes(catalog):
-    t = _mk(catalog, "rwm_mor", "json")
+    t = _mk(catalog, "rwm_mor")
     t.append([{"k": i, "v": "a"} for i in range(10)])
     t.delete_where("k < 3", mode="merge-on-read")
     t.append([{"k": 100, "v": "b"}])
@@ -261,7 +240,7 @@ def test_rewrite_manifests_preserves_mor_deletes(catalog):
 
 
 def test_rewrite_manifests_call_procedure(catalog):
-    t = _mk(catalog, "rwm_call", "json")
+    t = _mk(catalog, "rwm_call")
     for i in range(4):
         t.append([{"k": i, "v": "x"}])
     rows = catalog.sql(

@@ -1,23 +1,16 @@
 """expire_snapshots metadata cleanup (Iceberg's cleanExpiredFiles).
 
 With fast-append manifest sharing, deletion must be reference-counted:
-a manifest/segment referenced by BOTH an expired and a retained snapshot
+a manifest referenced by BOTH an expired and a retained snapshot
 must survive.  Candidates come from the expired snapshots' own reference
 sets (never a directory listing), so an in-flight concurrent commit's
 freshly-written files can never be collected."""
 
 from __future__ import annotations
 
-import pytest
 
-
-def _mk(catalog, name, fmt):
-    props = (
-        {"write.metadata.manifest-format": "avro"} if fmt == "avro" else None
-    )
-    return catalog.create_table(
-        name, schema={"k": "int", "v": "string"}, properties=props
-    )
+def _mk(catalog, name):
+    return catalog.create_table(name, schema={"k": "int", "v": "string"})
 
 
 def _rows(t):
@@ -28,11 +21,10 @@ def _list_files(t, snap):
     return t._manifest_metadata_files(snap.manifest_list)
 
 
-@pytest.mark.parametrize("fmt", ["json", "avro"])
-def test_append_chain_shares_metadata_nothing_deleted(catalog, fmt):
+def test_append_chain_shares_metadata_nothing_deleted(catalog):
     """On a pure append chain the expired snapshots' list documents ARE
-    the head's segments/manifests — all shared, so expire deletes none."""
-    t = _mk(catalog, f"gc_share_{fmt}", fmt)
+    the head's manifests — all shared, so expire deletes none."""
+    t = _mk(catalog, "gc_share")
     for i in range(4):
         t.append([{"k": i, "v": "a"}])
     old_files = set()
@@ -46,12 +38,11 @@ def test_append_chain_shares_metadata_nothing_deleted(catalog, fmt):
     assert _rows(t) == [0, 1, 2, 3]
 
 
-@pytest.mark.parametrize("fmt", ["json", "avro"])
-def test_replace_orphans_old_chain_files(catalog, fmt):
+def test_replace_orphans_old_chain_files(catalog):
     """append×3 → compact (replace) → append: expiring everything but the
     head deletes the pre-compact chain's metadata files, keeps the
     compacted foot the head still chains onto."""
-    t = _mk(catalog, f"gc_rp_{fmt}", fmt)
+    t = _mk(catalog, "gc_rp")
     for i in range(3):
         t.append([{"k": i, "v": "a"}])
     pre_compact = set()
@@ -70,7 +61,7 @@ def test_replace_orphans_old_chain_files(catalog, fmt):
 
 
 def test_clean_metadata_off_keeps_files(catalog):
-    t = _mk(catalog, "gc_off", "json")
+    t = _mk(catalog, "gc_off")
     for i in range(3):
         t.append([{"k": i, "v": "a"}])
     t.compact()
@@ -82,7 +73,7 @@ def test_clean_metadata_off_keeps_files(catalog):
 
 
 def test_statistics_of_expired_snapshot_dropped_and_deleted(catalog):
-    t = _mk(catalog, "gc_stats", "json")
+    t = _mk(catalog, "gc_stats")
     t.append([{"k": 1, "v": "a"}])
     t.compute_statistics()
     stats_path = t.ops._abs(t.statistics[0]["statistics-path"])
@@ -96,7 +87,7 @@ def test_statistics_of_expired_snapshot_dropped_and_deleted(catalog):
 
 
 def test_branch_protected_snapshot_files_survive(catalog):
-    t = _mk(catalog, "gc_branch", "json")
+    t = _mk(catalog, "gc_branch")
     t.append([{"k": 1, "v": "a"}])
     t.create_branch("keepme")
     keep_files = _list_files(t, t.current_snapshot())
@@ -117,7 +108,7 @@ def test_expired_avro_manifests_unreferenced_after_merge(catalog, monkeypatch):
     from iceberg_ruby_spark import manifests as man
 
     monkeypatch.setattr(man, "MANIFEST_SEGMENT_CAP", 4)
-    t = _mk(catalog, "gc_merge", "avro")
+    t = _mk(catalog, "gc_merge")
     for i in range(10):
         t.append([{"k": i, "v": str(i)}])
     all_files = set()

@@ -841,6 +841,36 @@ def test_apply_dedup_quality_fn_members_only(spark):
     assert seen["ids"] == [1, 2, 3]  # members only — never the corpus
 
 
+def test_apply_dedup_broadcast_follows_closure_path(spark, monkeypatch):
+    """The member-quality frame is broadcast only when the driver
+    union-find built the components (its edge gate bounds the member
+    set).  A distributed closure gets no hint even though its input
+    pairs and quality frame are literal (LocalRelation) frames."""
+    from pyspark.sql import functions as F
+
+    from iceberg_ruby_spark.operators.dedup import apply_dedup
+
+    corpus = spark.createDataFrame(
+        [(1, 50), (2, 80), (3, 60), (4, 10)], "doc_id long, n_chars long"
+    )
+    pairs = spark.createDataFrame([(1, 2), (2, 3)], "id_a long, id_b long")
+
+    def qfn(member_ids):
+        return member_ids.join(corpus, "doc_id").select(
+            "doc_id", F.col("n_chars").alias("__mq")
+        )
+
+    def run():
+        out = apply_dedup(corpus, pairs, quality_col="__mq", quality_fn=qfn)
+        hinted = "strategy=broadcast" in out._jdf.queryExecution().analyzed().toString()
+        return sorted(r["doc_id"] for r in out.collect()), hinted
+
+    monkeypatch.setenv("SPARK_GRAFT_CC_LOCAL_MAX_EDGES", "0")
+    assert run() == ([2, 4], False)
+    monkeypatch.setenv("SPARK_GRAFT_CC_LOCAL_MAX_EDGES", "500000")
+    assert run() == ([2, 4], True)
+
+
 def test_leakage_safe_split_never_splits_neardups(spark):
     from iceberg_ruby_spark.operators.dedup import leakage_safe_split
 

@@ -100,17 +100,33 @@ def test_fs_table_ops_metadata_protocol_on_s3(io):
     assert ops.current_version() == 2
 
     # manifest paths relativize against the URI location and round-trip
+    from iceberg_ruby_spark import types as ice_t
+    from iceberg_ruby_spark.avro_file import read_ocf
+    from iceberg_ruby_spark.manifests import ManifestContext
+
+    schema = ice_t.Schema([ice_t.NestedField(1, "a", ice_t.LongType())])
+    ctx = ManifestContext(
+        schemas_by_id={0: schema}, current_schema_id=0, spec_fields=[],
+        spec_id=0, sequence_number=1, parent_snapshot_id=None,
+    )
+    paths = ["s3://b/wh/ns/t/data/c1/f.parquet", "s3://elsewhere/external.parquet"]
     entries = [
-        {"path": "s3://b/wh/ns/t/data/c1/f.parquet", "rows": 10},
-        {"path": "s3://elsewhere/external.parquet", "rows": 1},
+        {"path": p, "record-count": 10 - 9 * i, "file-size-bytes": 100}
+        for i, p in enumerate(paths)
     ]
-    mpath = ops.write_manifest(123, entries)
-    doc = json.loads(io.read("s3://b/wh/ns/t/" + mpath))
-    [seg] = doc["segments"]  # entries live out-of-line (fast-append layout)
-    stored = json.loads(io.read("s3://b/wh/ns/t/" + seg["path"]))["entries"]
-    assert stored[0]["path"] == "data/c1/f.parquet"
-    assert stored[1]["path"] == "s3://elsewhere/external.parquet"
-    assert ops.read_manifest(mpath) == entries
+    mpath = ops.write_manifest(123, entries, ctx)
+    assert mpath.startswith("metadata/snap-123-") and mpath.endswith(".avro")
+    _, list_recs, list_meta = read_ocf(io.read_bytes("s3://b/wh/ns/t/" + mpath))
+    [mf] = list_recs  # entries live in the manifest, not in the list
+    assert mf["manifest_path"].startswith("s3://b/wh/ns/t/metadata/")
+    assert json.loads(list_meta["x-irs"])["manifests"][0].startswith("metadata/")
+    _, _, mmeta = read_ocf(io.read_bytes(mf["manifest_path"]))
+    stored = json.loads(mmeta["x-irs"])["entries"]
+    assert stored[0]["rel"] == "data/c1/f.parquet"
+    assert stored[1]["rel"] == "s3://elsewhere/external.parquet"
+    back = ops.read_manifest(mpath)
+    assert [e["path"] for e in back] == paths
+    assert [e["record-count"] for e in back] == [10, 1]
 
 
 def test_concurrent_commit_single_winner(io):

@@ -420,11 +420,14 @@ def test_inspect_manifests_and_ref_retention(catalog):
     mans = t.inspect.manifests().collect()
     assert len(mans) >= 1
     assert all(m["path"].endswith(".avro") and m["length"] > 0 for m in mans)
-    # JSON-manifest tables expose their single flattened manifest document
+    # a table without the property writes the same spec manifests: one
+    # manifest per append, its file counted as ADDED by that commit
     tj = catalog.create_table("insp3", schema={"a": "int"})
     tj.append([{"a": 1}])
     mj = tj.inspect.manifests().collect()
-    assert len(mj) == 1 and mj[0]["existing_data_files_count"] == 1
+    assert len(mj) == 1 and mj[0]["path"].endswith(".avro")
+    assert mj[0]["added_data_files_count"] == 1
+    assert mj[0]["existing_data_files_count"] == 0
 
 
 def test_sql_metadata_tables(catalog):
