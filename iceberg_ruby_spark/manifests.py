@@ -60,9 +60,6 @@ engine is honest about what stays internal):
   field-ids — ``parquet.field.id`` written via Spark's fieldId support,
   tests/test_parquet_field_ids.py — so spec readers column-map renamed
   tables without the extras.)
-- Predicate-style merge-on-read deletes (``delete-predicate`` entries)
-  have no spec representation at all; they are carried only in the
-  manifest list's ``x-irs`` metadata.
 - The table metadata pointer file stays JSON (``v<N>.json``), as in the
   Iceberg spec itself.
 
@@ -624,7 +621,6 @@ def write_avro_manifests(
 
     list_records: list[dict[str, Any]] = []
     list_rels: list[str] = []
-    base_carried: list[dict[str, Any]] = []
     # rel manifest path → engine column summary (manifest pruning,
     # read_avro_manifest_list); carried manifests keep theirs
     summaries: dict[str, Any] = {}
@@ -632,7 +628,6 @@ def write_avro_manifests(
     if base_list is not None:
         base_records, base_extras, base_rels = _read_list(ops, base_list)
         base_summaries = base_extras.get("summaries") or {}
-        base_carried = [_carried_abs(ops, e) for e in base_extras.get("carried", [])]
         keep = list(range(len(base_records)))
         if len(base_records) >= MANIFEST_SEGMENT_CAP:
             order = sorted(
@@ -656,9 +651,6 @@ def write_avro_manifests(
                 summaries[rel] = base_summaries[rel]
 
     data_entries = [e for e in merged + entries if "path" in e]
-    carried = base_carried + [
-        e for e in entries if "path" not in e and "delete-file" not in e
-    ]  # delete-predicate entries have no spec slot: list extras
 
     uid = _uuid.uuid4().hex
     used_schema_ids = sorted(
@@ -949,28 +941,11 @@ def write_avro_manifests(
         )
         list_rels.append(ops._rel(ops._abs(mpath)))
 
-    carried_rel = [
-        {
-            **({k: v for k, v in e.items() if k != "applies-to"}),
-            **(
-                {"applies-to": [ops._rel(ops._abs(p)) for p in e["applies-to"]]}
-                if e.get("applies-to") is not None
-                else {}
-            ),
-        }
-        for e in carried
-    ]
     list_meta = {
         "snapshot-id": str(snapshot_id),
         "sequence-number": str(seq),
         "format-version": str(ctx.format_version),
-        _EXTRAS_KEY: json.dumps(
-            {
-                "manifests": list_rels,
-                "carried": carried_rel,
-                "summaries": summaries,
-            }
-        ),
+        _EXTRAS_KEY: json.dumps({"manifests": list_rels, "summaries": summaries}),
     }
     if ctx.parent_snapshot_id is not None:
         list_meta["parent-snapshot-id"] = str(ctx.parent_snapshot_id)
@@ -1087,9 +1062,20 @@ def _read_list(
     which ``ops._abs`` resolves, so the table tree survives
     :meth:`Catalog.rename_table`'s physical move; externally written
     lists have no extras, so their keys come from the spec's absolute
-    ``manifest_path``."""
+    ``manifest_path``.
+
+    Lists written by older engine versions may hold predicate deletes
+    under ``carried``; this engine no longer reads them, and skipping
+    them would bring deleted rows back, so such a list raises."""
     _, records, meta = read_ocf(ops.io.read_bytes(ops._abs(list_path)))
     extras = json.loads(meta.get(_EXTRAS_KEY, b"{}").decode())
+    if extras.get("carried"):
+        raise InvalidDataError(
+            f"table at {ops.location}: manifest list {list_path} holds "
+            "merge-on-read predicate deletes, which this engine no longer "
+            "reads; compact() the table with an engine version that still "
+            "reads them before opening it here"
+        )
     rels = extras.get("manifests") or []
     keys = [
         rels[i] if i < len(rels) else ops._rel(mf["manifest_path"])
@@ -1110,13 +1096,13 @@ def read_avro_manifest_list(
     manifests skipped).  With filter ``trees``, DATA manifests whose
     stored column summary proves every file full-misses the filter are
     skipped without being opened.  By default that engages only on a
-    provably merge-on-read-free snapshot (no delete manifests, no carried
-    pathless entries); ``allow_mor=True`` prunes data manifests even then
-    (delete manifests and carried entries are always read) — see
+    provably merge-on-read-free snapshot (no delete manifests);
+    ``allow_mor=True`` prunes data manifests even then (delete manifests
+    are always read) — see
     ``FsTableOps.read_manifest_filtered`` for the soundness argument."""
     records, extras, keys = _read_list(ops, list_path)
     summaries = extras.get("summaries") or {}
-    has_mor = extras.get("carried") or any(mf["content"] == 1 for mf in records)
+    has_mor = any(mf["content"] == 1 for mf in records)
     prune = trees is not None and (allow_mor or not has_mor)
     entries: list[dict[str, Any]] = []
     skipped = 0
@@ -1126,17 +1112,7 @@ def read_avro_manifest_list(
             skipped += 1
             continue
         entries.extend(read_one_avro_manifest(ops, ops._abs(key)))
-    entries.extend(_carried_abs(ops, e) for e in extras.get("carried", []))
     return entries, skipped
-
-
-def _carried_abs(ops: Any, e: dict[str, Any]) -> dict[str, Any]:
-    """A pathless carried entry (delete predicate) from its stored
-    location-relative form to the engine's absolute form."""
-    out = dict(e)
-    if out.get("applies-to") is not None:
-        out["applies-to"] = [ops._abs(p) for p in out["applies-to"]]
-    return out
 
 
 def read_one_avro_manifest(ops: Any, mpath: str) -> list[dict[str, Any]]:
@@ -1250,19 +1226,12 @@ def read_avro_manifest_delta(
     when start's manifests aren't a subset of end's (a replace commit or a
     manifest merge inside the window) — the caller falls back to a full
     set diff.  O(new files) incremental/streaming planning at scale."""
-    _, end_extras, end_keys = _read_list(ops, end_list)
-    _, start_extras, start_keys = _read_list(ops, start_list)
-    start_set = set(start_keys)
+    end_keys = _read_list(ops, end_list)[2]
+    start_set = set(_read_list(ops, start_list)[2])
     if not start_set <= set(end_keys):
-        return None
-    # carried (pathless) entries must also be append-only across the window
-    start_carried = {json.dumps(e, sort_keys=True) for e in start_extras.get("carried", [])}
-    end_carried = [(json.dumps(e, sort_keys=True), e) for e in end_extras.get("carried", [])]
-    if not start_carried <= {k for k, _ in end_carried}:
         return None
     entries: list[dict[str, Any]] = []
     for key in end_keys:
         if key not in start_set:
             entries.extend(read_one_avro_manifest(ops, ops._abs(key)))
-    entries.extend(_carried_abs(ops, e) for k, e in end_carried if k not in start_carried)
     return entries

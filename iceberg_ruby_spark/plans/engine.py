@@ -325,8 +325,10 @@ def engine_branch_tag(spark, sf_dir):
     """,
 )
 def engine_delete_mor(spark, sf_dir):
-    """Merge-on-read DELETE: a predicate entry, zero files rewritten;
-    the read path applies it (materialized later by compact())."""
+    """Merge-on-read DELETE by the spec mode name: ``merge-on-read``
+    resolves to positional delete files on this v2 table (deletion
+    vectors on v3), zero data files rewritten; the read path anti-joins
+    the positions (materialized later by compact())."""
     cat = _temp_catalog(spark)
     t = cat.create_table("orders_mor", schema=_orders_schema())
     t.append(load(spark, sf_dir, "orders").filter(F.col("o_orderkey") < 2000))
@@ -1000,7 +1002,7 @@ def engine_materialized_agg(spark, sf_dir):
 )
 def engine_materialized_changelog(spark, sf_dir):
     """CHANGELOG-maintained materialized aggregate (materialized.py
-    mode='changelog', r9): source appends, a merge-on-read predicate
+    mode='changelog', r9): source appends, a merge-on-read (positional)
     DELETE, a copy-on-write DELETE of a whole group, and a COMPACTION —
     each followed by a refresh folding the changelog window's signed
     deltas (insert +1 / delete −1) in one merge; deletes RETRACT, the
@@ -1065,7 +1067,7 @@ def engine_materialized_changelog(spark, sf_dir):
 def engine_materialized_minmax(spark, sf_dir):
     """min/max under CHANGELOG maintenance via hybrid IVM (materialized.py,
     r10 — r9 refused non-invertible aggregates).  The mutation sequence is
-    chosen to hit every recompute path: a merge-on-read predicate delete
+    chosen to hit every recompute path: a merge-on-read delete
     of the price TOP TAIL (kills the stored MAX of every group →
     endangered-group recompute), a delete of scattered mid-values (misses
     most extremes → plain fold, recompute only where a group minimum

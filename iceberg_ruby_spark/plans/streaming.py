@@ -252,13 +252,14 @@ def stream_changelog_tail(spark, sf_dir):
     """,
 )
 def stream_changelog_cow(spark, sf_dir):
-    """Changelog streaming over commits with NO structural row form (r9,
-    streaming/source.py ``_content_diff_slices``): a copy-on-write
-    UPDATE and a merge-on-read PREDICATE delete stream as row-level
-    change events through the per-commit content-diff fallback.  The
-    CoW rewrite emits delete(old)+insert(new) for exactly the updated
-    rows — rows the rewrite merely copied cancel in the multiset diff —
-    and the predicate delete emits exactly the rows it killed.  The
+    """Changelog streaming over a copy-on-write commit, which has NO
+    structural row form (r9, streaming/source.py
+    ``_content_diff_slices``), followed by a merge-on-read delete: the
+    CoW UPDATE streams through the per-commit content-diff fallback and
+    emits delete(old)+insert(new) for exactly the updated rows — rows
+    the rewrite merely copied cancel in the multiset diff — and the
+    positional delete's structural slices emit exactly the rows it
+    killed.  The
     oracle reconstructs the full expected event set in closed form
     (updated rows' new text is 'X', char_len 1), so hash equality proves
     event rows AND commit ordinals."""
@@ -274,7 +275,7 @@ def stream_changelog_cow(spark, sf_dir):
     )
     t.append(docs.filter("doc_id < 80"))
     t.update_where({"text": "'X'"}, "doc_id < 10")              # CoW rewrite
-    t.delete_where("doc_id >= 70", mode="merge-on-read")        # predicate
+    t.delete_where("doc_id >= 70", mode="merge-on-read")        # positional
     register_stream_source(spark)
     q = (
         spark.readStream.format("iceberg_table")

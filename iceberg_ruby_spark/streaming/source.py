@@ -59,13 +59,13 @@ Delete candidates come from each delete entry's own ``applies-to`` /
 masked against ALL prior deletes on its file (prior key sets, prior
 positions, the replaced DV), so a row dies in the changelog exactly
 once.  ``replace`` commits (compaction) emit nothing — physical churn
-cancels logically.  Copy-on-write rewrites, predicate deletes, and
-prior-predicate masking — the commit kinds with no structural row form —
-fall back PER COMMIT to a content-diff slice (r9): the executor reads
-the commit's before/after file states under their delete views and
-emits the multiset difference, the same comparison the batch
-``changelog_scan`` makes.  Correct-if-slower: one task per such commit,
-O(changed files' rows); merge-on-read pipelines never hit it.
+cancels logically.  Copy-on-write rewrites — the commit kind with no
+structural row form — fall back PER COMMIT to a content-diff slice
+(r9): the executor reads the commit's before/after file states under
+their delete views and emits the multiset difference, the same
+comparison the batch ``changelog_scan`` makes.  Correct-if-slower:
+one task per such commit, O(changed files' rows); merge-on-read
+pipelines never hit it.
 ``skip_rewrite_commits=true`` still passes over rewrite commits
 entirely for consumers that only want the streamable kinds.  Iceberg
 itself has no
@@ -75,7 +75,6 @@ non-append commits), so this exceeds the upstream surface."""
 
 from __future__ import annotations
 
-import json
 import os
 from typing import Any, Iterator, Optional
 
@@ -85,14 +84,11 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
-from iceberg_ruby_spark.errors import InvalidDataError
-
-_MOR_DELETE_MODES = {
-    "merge-on-read",
-    "merge-on-read-positional",
-    "merge-on-read-equality",
-    "merge-on-read-dv",
-}
+# the snapshot-summary ``mode`` of every merge-on-read DELETE commit
+# (Table.delete_where, Table.delete_by_keys): no data file is added
+MOR_DELETE_MODES = frozenset(
+    {"merge-on-read-positional", "merge-on-read-equality", "merge-on-read-dv"}
+)
 
 
 def _ops(location: str):
@@ -121,7 +117,7 @@ def _touched_files(e: dict[str, Any]) -> list[str]:
 
 
 def _is_delete_entry(e: dict[str, Any]) -> bool:
-    return "delete-file" in e or "delete-predicate" in e
+    return "delete-file" in e
 
 
 def _overlap_groups(
@@ -221,8 +217,8 @@ class _ChangeSlice(InputPartition):
 class _ContentDiffSlice(InputPartition):
     """Whole-commit CONTENT-DIFF work unit — the correct-if-slower
     fallback for commits whose row changes are not structurally
-    derivable (copy-on-write rewrites, predicate deletes, prior
-    predicate-delete masking).  Carries per-file read specs for the
+    derivable (copy-on-write rewrites, or a prior sequence-scoped delete
+    whose file scope is unresolvable).  Carries per-file read specs for the
     commit's BEFORE and AFTER states (quiet common files already
     excluded at planning); the executor reads both sides under their
     delete views and emits the multiset difference, mirroring the batch
@@ -319,7 +315,7 @@ class EngineTableStreamReader(DataSourceStreamReader):
         # what sizes a CDC backfill's batches.
         self._last: Optional[dict] = None
         self._floor: Optional[dict] = None
-        # content-diff distribution: split a CoW/predicate commit's diff
+        # content-diff distribution: split a CoW commit's diff
         # into bounds-disjoint file groups so it plans >1 task (r9 VERDICT
         # item 1).  Off-switch kept for A/B probes and as a safety valve.
         self._split_diffs = (
@@ -432,7 +428,7 @@ class EngineTableStreamReader(DataSourceStreamReader):
         skip_rewrites."""
         safe = snap.operation == "append" or (
             snap.operation == "delete"
-            and snap.summary.get("mode") in _MOR_DELETE_MODES
+            and snap.summary.get("mode") in MOR_DELETE_MODES
         )
         if not safe and self.skip_rewrites:
             return []
@@ -647,7 +643,7 @@ class EngineTableStreamReader(DataSourceStreamReader):
         while cur is not None and cur.snapshot_id != start_id:
             safe = cur.operation == "append" or (
                 cur.operation == "delete"
-                and cur.summary.get("mode") in _MOR_DELETE_MODES
+                and cur.summary.get("mode") in MOR_DELETE_MODES
             )
             if not safe and not self.skip_rewrites:
                 raise ValueError(
@@ -687,7 +683,7 @@ class EngineTableStreamReader(DataSourceStreamReader):
             while walk is not None and walk.snapshot_id != start_id:
                 safe = walk.operation == "append" or (
                     walk.operation == "delete"
-                    and walk.summary.get("mode") in _MOR_DELETE_MODES
+                    and walk.summary.get("mode") in MOR_DELETE_MODES
                 )
                 if not safe:
                     rewritten |= set(
@@ -712,11 +708,12 @@ class EngineTableStreamReader(DataSourceStreamReader):
         commits emit inserts; merge-on-read EQUALITY-delete commits emit
         the dead rows (candidates come from the entry's own ``applies-to``
         scope, masked against prior equality deletes so already-dead rows
-        are not re-emitted); ``replace`` commits (compaction) emit nothing
-        — physical churn without logical change; copy-on-write rewrites,
-        predicate deletes, and prior-predicate masking fall back to one
-        content-diff slice per commit (``_content_diff_slices``) unless
-        ``skip_rewrite_commits=true`` skips them."""
+        are not re-emitted); positional and DV commits emit the rows at
+        their coordinates the same way; ``replace`` commits (compaction)
+        emit nothing — physical churn without logical change;
+        copy-on-write rewrites fall back to one content-diff slice per
+        commit (``_content_diff_slices``) unless ``skip_rewrite_commits=
+        true`` skips them."""
         chain = []
         cur = end_snap
         while cur is not None and cur.snapshot_id != start_id:
@@ -753,8 +750,7 @@ class EngineTableStreamReader(DataSourceStreamReader):
             # incremental delete-view cache — so an MoR delete commit's
             # planning cost is O(changed entries + live deletes), flat in
             # live FILE count.  Full manifests are read only for commits
-            # the delta can't describe (CoW rewrites, manifest merges,
-            # predicate deletes, prior-predicate masks).
+            # the delta can't describe (CoW rewrites, manifest merges).
             delta = ops.read_manifest_delta(
                 snap.manifest_list, prev.manifest_list
             )
@@ -789,34 +785,20 @@ class EngineTableStreamReader(DataSourceStreamReader):
             )
 
         def _del_id(e):
-            if "delete-predicate" in e:
-                # the FULL canonical entry, not just the predicate text:
-                # the same predicate re-issued later carries a different
-                # applies-to scope and MUST read as a new delete (a
-                # text-only key made the second delete invisible to the
-                # stream — r9 review finding)
-                return "pred:" + json.dumps(
-                    {k: sorted(v) if isinstance(v, (list, set)) else v
-                     for k, v in e.items() if k != "schema-id"},
-                    sort_keys=True, default=str,
-                )
             # two DVs can share one puffin file at different offsets
             return (e.get("delete-file"), e.get("content-offset"))
 
         from collections import Counter as _Counter
 
-        prev_del_counts = _Counter(
-            _del_id(e)
-            for e in prev_entries
-            if "delete-file" in e or "delete-predicate" in e
-        )
+        prior_dels = [e for e in prev_entries if _is_delete_entry(e)]
+        prev_del_counts = _Counter(_del_id(e) for e in prior_dels)
         # multiset diff: an entry is ADDED when its occurrence index in
         # the current manifest exceeds the parent's count of the same
         # canonical key — a byte-identical re-issued delete still streams
         seen: dict = {}
         added_deletes = []
         for e in cur_entries:
-            if "delete-file" not in e and "delete-predicate" not in e:
+            if not _is_delete_entry(e):
                 continue
             k = _del_id(e)
             seen[k] = seen.get(k, 0) + 1
@@ -827,38 +809,6 @@ class EngineTableStreamReader(DataSourceStreamReader):
             for e in cur_entries
             if "path" in e and e["path"] not in prev_paths
         ]
-        prior_dels = [
-            e
-            for e in prev_entries
-            if "delete-file" in e or "delete-predicate" in e
-        ]
-        if any("delete-predicate" in e for e in added_deletes):
-            if self.skip_rewrites:
-                # documented skip semantics: pass over the unstreamable
-                # predicate delete — but still stream the commit's inserts
-                # AND any equality/positional/DV deletes added in the SAME
-                # commit (inserts-only under-emitted mixed-delete commits,
-                # r9 ADVICE)
-                non_pred = [
-                    e for e in added_deletes if "delete-predicate" not in e
-                ]
-                bases = self._entry_bases(ops, prev_entries, non_pred)
-                try:
-                    return self._delete_slices(
-                        ops, non_pred, prior_dels, inserts, sid, ordinal,
-                        bases,
-                        prior_data=[e for e in prev_entries if "path" in e],
-                    )
-                except _NeedsContentDiff:
-                    # a prior predicate masks a touched file: the delete
-                    # side has no structural form either — the skip keeps
-                    # inserts only
-                    return [s for s in inserts if s.kind == "insert"]
-            # predicate deletes have no executor-evaluable structural form
-            # in the slice model — whole-commit content diff instead
-            return self._content_diff_slices(
-                ops, prev_entries, cur_entries, sid, ordinal
-            )
         bases = self._entry_bases(ops, prev_entries, added_deletes)
         try:
             return self._delete_slices(
@@ -866,9 +816,9 @@ class EngineTableStreamReader(DataSourceStreamReader):
                 prior_data=[e for e in prev_entries if "path" in e],
             )
         except _NeedsContentDiff:
-            # a prior predicate delete masks a touched file — the partial
-            # structural slices are discarded and the whole commit diffs
-            # by content instead
+            # a prior delete's scope on a touched file is unresolvable —
+            # the partial structural slices are discarded and the whole
+            # commit diffs by content instead
             return self._content_diff_slices(
                 ops, prev_entries, cur_entries, sid, ordinal
             )
@@ -942,13 +892,11 @@ class EngineTableStreamReader(DataSourceStreamReader):
     ) -> Optional[list[InputPartition]]:
         """Structural planning for a delete commit from its manifest DELTA
         plus the delete-view cache — no full manifest read.  Returns None
-        when the commit needs the full path (predicate deletes, unknown
-        kinds under skip, prior-predicate masks): the caller re-plans with
-        full entries."""
+        when the commit needs the full path (a prior delete whose scope
+        the cache cannot resolve): the caller re-plans with full
+        entries."""
         sid = snap.snapshot_id
         added_deletes = [e for e in delta if _is_delete_entry(e)]
-        if any("delete-predicate" in e for e in added_deletes):
-            return None  # content diff (or skip semantics) needs full entries
         cache = self._delete_view_cache(ops, prev)
         inserts: list[InputPartition] = [
             _ChangeSlice("insert", e["path"], self._columns, sid, ordinal)
@@ -989,13 +937,13 @@ class EngineTableStreamReader(DataSourceStreamReader):
     def _make_priors_for(self, ops, prior_del_entries, prior_data=None):
         """Closure computing the deletes already applied to one data file
         in the PARENT state — the mask that keeps already-dead rows out of
-        a commit's delete events.  Prior PREDICATE deletes cannot be
-        masked structurally → :class:`_NeedsContentDiff`.  ``prior_data``
-        (the parent state's DATA entries) resolves SEQUENCE-scoped prior
-        equality deletes (streaming-upsert commits): whether one applies
-        to a file depends on the file's data sequence number, which only
-        its manifest entry knows; without it such priors force the
-        content-diff fallback."""
+        a commit's delete events: prior equality key files, positional
+        files and the replaced DV.  ``prior_data`` (the parent state's
+        DATA entries) resolves SEQUENCE-scoped prior equality deletes
+        (streaming-upsert commits): whether one applies to a file depends
+        on the file's data sequence number, which only its manifest entry
+        knows; a file it cannot resolve raises :class:`_NeedsContentDiff`,
+        the content-diff fallback."""
         from iceberg_ruby_spark.table import (
             _compile_seq_scope,
             _seq_scope_applies,
@@ -1010,18 +958,7 @@ class EngineTableStreamReader(DataSourceStreamReader):
         # chain's planning quadratic in commit count
         pre: list[tuple[str, dict, Any]] = []
         for pe in prior_del_entries:
-            if "delete-predicate" in pe:
-                ap = pe.get("applies-to")
-                pre.append(
-                    (
-                        "pred",
-                        pe,
-                        None if ap is None else {ops._abs(p) for p in ap},
-                    )
-                )
-            elif "delete-file" not in pe:
-                continue
-            elif pe.get("seq-scoped"):
+            if pe.get("seq-scoped"):
                 pre.append(("seq", pe, _compile_seq_scope(pe)))
             else:
                 pre.append(
@@ -1033,13 +970,6 @@ class EngineTableStreamReader(DataSourceStreamReader):
             pos: list[str] = []
             dv: Optional[tuple[str, int, int]] = None
             for kind, pe, aux in pre:
-                if kind == "pred":
-                    if aux is None or data_abs in aux:
-                        # already-dead rows under a PRIOR predicate delete
-                        # cannot be masked structurally — route the whole
-                        # commit through the content-diff fallback
-                        raise _NeedsContentDiff(data_abs)
-                    continue
                 if kind == "seq":
                     de = entry_by_path.get(data_abs)
                     if de is None:
@@ -1091,9 +1021,9 @@ class EngineTableStreamReader(DataSourceStreamReader):
                 raise ValueError(
                     f"changelog streaming crossed an unknown delete kind "
                     f"{content!r} in commit {sid}; equality/positional/DV "
-                    "deletes stream structurally, predicate deletes and "
-                    "rewrites fall back to the content diff — set "
-                    "skip_rewrite_commits=true to pass over this commit"
+                    "deletes stream structurally and rewrites fall back to "
+                    "the content diff — set skip_rewrite_commits=true to "
+                    "pass over this commit"
                 )
             key_cols = list(e.get("equality-cols") or [])
             if content == "equality-deletes" and not key_cols:
@@ -1156,7 +1086,7 @@ class EngineTableStreamReader(DataSourceStreamReader):
     ) -> list[InputPartition]:
         """One whole-commit content-diff slice — planning half of the
         correct-if-slower fallback for commits the structural paths can't
-        derive (CoW rewrites, predicate deletes, prior predicate masks).
+        derive (CoW rewrites, unresolvable prior delete scopes).
 
         Mirrors the batch ``Table._changelog_commit_diff`` exclusion: a
         data file common to both states whose delete scope didn't change
@@ -1235,14 +1165,8 @@ class EngineTableStreamReader(DataSourceStreamReader):
             }
             specs = []
             for path_abs in sorted(set(data) - quiet):
-                eq, pos, dvs, preds = [], [], [], []
+                eq, pos, dvs = [], [], []
                 for e in mor.values():
-                    if "delete-predicate" in e:
-                        ap = ap_abs[id(e)]
-                        if ap is None or path_abs in ap:
-                            self._check_diff_predicate(e["delete-predicate"])
-                            preds.append(e["delete-predicate"])
-                        continue
                     content = e.get("content")
                     if content == "deletion-vector":
                         if ops._abs(e["referenced-data-file"]) == path_abs:
@@ -1273,12 +1197,7 @@ class EngineTableStreamReader(DataSourceStreamReader):
                         )
                     elif content == "position-deletes":
                         pos.append(ops._abs(e["delete-file"]))
-                specs.append(
-                    {
-                        "path": path_abs, "eq": eq, "pos": pos,
-                        "dvs": dvs, "preds": preds,
-                    }
-                )
+                specs.append({"path": path_abs, "eq": eq, "pos": pos, "dvs": dvs})
             return specs
 
         prev_specs = side_specs(prev_data, prev_mor)
@@ -1311,30 +1230,6 @@ class EngineTableStreamReader(DataSourceStreamReader):
                     )
                 )
         return slices
-
-    def _check_diff_predicate(self, pred: str) -> None:
-        """The content-diff executor evaluates stored merge-on-read delete
-        predicates in DuckDB over the file's Arrow columns, while the batch
-        read path evaluates the same text with Spark ``F.expr`` —
-        identical semantics ONLY within the shared ANSI subset (``col op
-        literal`` / AND / OR / parens / IS [NOT] NULL / [NOT] IN).  A
-        predicate
-        outside that subset (rlike, <=>, backticks, Spark-only functions)
-        would either crash the stream or silently select different rows —
-        replica divergence with no error (r9 ADVICE, medium).  Refuse at
-        PLANNING time with a typed error instead."""
-        from iceberg_ruby_spark.table import _parse_predicate
-
-        if _parse_predicate(pred) is None:
-            raise InvalidDataError(
-                f"changelog streaming cannot evaluate stored delete "
-                f"predicate {pred!r}: only the shared-ANSI subset "
-                "(column op literal, AND/OR, IS [NOT] NULL, [NOT] IN) is portable "
-                "between the stream's executor and the table read path — "
-                "consume this window with the batch changelog_scan() "
-                "(Spark evaluates the predicate natively) or set "
-                "skip_rewrite_commits=true to pass over the commit"
-            )
 
     def _diff_groups(
         self, entry_for: dict[str, dict], paths: list[str]
@@ -1375,7 +1270,7 @@ class EngineTableStreamReader(DataSourceStreamReader):
         while cur is not None and cur.snapshot_id != start_id:
             safe = cur.operation == "append" or (
                 cur.operation == "delete"
-                and cur.summary.get("mode") in _MOR_DELETE_MODES
+                and cur.summary.get("mode") in MOR_DELETE_MODES
             )
             if not safe and not self.skip_rewrites:
                 raise ValueError(
@@ -1599,11 +1494,9 @@ class EngineTableStreamReader(DataSourceStreamReader):
         specs, each under its delete view) as DuckDB relations and return
         a UNION ALL query selecting them.  All masking is vectorized:
         positional/DV dead positions anti-join a positions relation,
-        equality deletes anti-join their key files null-safely
+        and equality deletes anti-join their key files null-safely
         (``IS NOT DISTINCT FROM`` — NaN equals NaN under DuckDB's total
-        ordering, same as exceptAll), and predicate deletes evaluate as
-        ``NOT COALESCE(pred, FALSE)`` (plain ANSI comparisons both
-        engines parse identically).  No Python row loop anywhere."""
+        ordering, same as exceptAll).  No Python row loop anywhere."""
         import pyarrow as pa
         import pyarrow.parquet as pq
 
@@ -1650,10 +1543,6 @@ class EngineTableStreamReader(DataSourceStreamReader):
                 conds.append(
                     f"NOT EXISTS (SELECT 1 FROM {name}_eq{k} e WHERE {match})"
                 )
-            for pred in spec["preds"]:
-                # DELETE semantics: a row dies only when the predicate is
-                # TRUE (matches table.py's COALESCE(pred, FALSE))
-                conds.append(f"NOT COALESCE(({pred}), FALSE)")
             where = f" WHERE {' AND '.join(conds)}" if conds else ""
             parts.append(f"SELECT {collist} FROM {name} t{where}")
         if not parts:

@@ -1001,7 +1001,7 @@ def _theta_hash_udf(ice_type: ice_t.Type):
 
 
 def _entry_key(e: dict[str, Any]) -> str:
-    """Stable identity for pathless manifest entries (delete predicates) so
+    """Stable identity for pathless manifest entries (delete files) so
     replace-mode rebases can diff them by value."""
     return json.dumps(e, sort_keys=True, default=str)
 
@@ -1981,7 +1981,10 @@ class Table:
         if to_snap is None:
             raise InvalidDataError(f"no snapshot with id {to_snapshot_id}")
         base_paths: set[str] = set()
+        entries: Optional[list[dict[str, Any]]] = None
         if from_snapshot_id is not None:
+            from iceberg_ruby_spark.streaming.source import MOR_DELETE_MODES
+
             from_snap = self.snapshot_by_id(from_snapshot_id)
             if from_snap is None:
                 raise InvalidDataError(f"no snapshot with id {from_snapshot_id}")
@@ -1992,18 +1995,12 @@ class Table:
             cur = to_snap
             while cur is not None and cur.snapshot_id != from_snap.snapshot_id:
                 incremental_safe = cur.operation == "append" or (
-                    # merge-on-read deletes (predicate, positional file,
-                    # equality file, or deletion vector) add no data
-                    # files; copy-on-write deletes REWRITE survivors into
-                    # new files a manifest diff would misreport as appends
+                    # merge-on-read deletes (positional file, equality
+                    # file, or deletion vector) add no data files;
+                    # copy-on-write deletes REWRITE survivors into new
+                    # files a manifest diff would misreport as appends
                     cur.operation == "delete"
-                    and cur.summary.get("mode")
-                    in (
-                        "merge-on-read",
-                        "merge-on-read-positional",
-                        "merge-on-read-equality",
-                        "merge-on-read-dv",
-                    )
+                    and cur.summary.get("mode") in MOR_DELETE_MODES
                 )
                 if not incremental_safe:
                     raise InvalidDataError(
@@ -2024,39 +2021,30 @@ class Table:
                 )
             # fast-append structural delta: O(new files) planning — only
             # the window's own manifests are opened.  (Pre-window MoR
-            # predicate entries are scoped by ``applies-to`` to files that
-            # existed at their commit, so excluding them can't change the
-            # window's rows.)  Falls back to the full set diff when the
-            # window crosses a manifest merge.
-            delta = self.ops.read_manifest_delta(
+            # delete entries are scoped to files that existed at their
+            # commit, so excluding them can't change the window's rows.)
+            # Falls back to the full set diff when the window crosses a
+            # manifest merge.
+            entries = self.ops.read_manifest_delta(
                 to_snap.manifest_list, from_snap.manifest_list
             )
-            if delta is not None:
-                new_entries = [e for e in delta if "delete-predicate" not in e]
-                preds = [e for e in delta if "delete-predicate" in e]
-                schema = self.schema_by_id(to_snap.schema_id) or self.current_schema()
-                if row_lineage:
-                    return self._read_entries_with_lineage(
-                        new_entries + preds, schema=schema
-                    )
-                return self._read_entries(new_entries + preds, schema=schema)
-            base_paths = set(
-                self._entry_files(self.ops.read_manifest(from_snap.manifest_list))
-            )
-        to_entries = self.ops.read_manifest(to_snap.manifest_list)
-        new_entries = [
-            e
-            for e in to_entries
-            if "delete-predicate" not in e
-            and all(p not in base_paths for p in self._entry_files([e]))
-        ]
-        preds = [e for e in to_entries if "delete-predicate" in e]
+            if entries is None:
+                base_paths = set(
+                    self._entry_files(self.ops.read_manifest(from_snap.manifest_list))
+                )
+        if entries is None:
+            # delete entries have no data path, so every one of them applies
+            entries = [
+                e
+                for e in self.ops.read_manifest(to_snap.manifest_list)
+                if all(p not in base_paths for p in self._entry_files([e]))
+            ]
         schema = self.schema_by_id(to_snap.schema_id) or self.current_schema()
         if row_lineage:
             # consumers keying downstream state on rows want the stable
             # _row_id / _last_updated_sequence_number alongside the data
-            return self._read_entries_with_lineage(new_entries + preds, schema=schema)
-        return self._read_entries(new_entries + preds, schema=schema)
+            return self._read_entries_with_lineage(entries, schema=schema)
+        return self._read_entries(entries, schema=schema)
 
     def changelog_scan(
         self,
@@ -2090,8 +2078,8 @@ class Table:
         adjacent snapshot pair reads only changed files under both delete
         views and cancels through ``exceptAll``.  It remains the fallback
         the slices planner drops to automatically when it refuses a
-        window (e.g. a stored MoR delete predicate outside the shared-ANSI
-        subset — the diff path evaluates predicates in Spark itself).
+        window (e.g. a delete entry of an unknown kind, or one that
+        records no key columns).
         Long diff windows are CHUNKED: every ``chunk_commits`` diff-bearing
         commits the accumulated sub-plan is local-checkpointed, so a
         200-commit window plans as ~13 bounded jobs instead of the union
@@ -2271,8 +2259,8 @@ class Table:
                 {"snapshot_id": from_id}, {"snapshot_id": to_id}
             )
         except (ValueError, InvalidDataError, OSError):
-            # the planner's REFUSALS (non-ANSI stored predicate, foreign
-            # ops layout) — intentional fallbacks to the relational diff.
+            # the planner's REFUSALS (unknown delete kind, foreign ops
+            # layout) — intentional fallbacks to the relational diff.
             # Anything else is a planner bug and must surface, not
             # silently demote every changelog read to the 300×-slower
             # diff path (r10 review finding).
@@ -3513,10 +3501,9 @@ class Table:
         — then unioned.  No data rewrite on evolution, ever."""
         schema = schema or self.current_schema()
         # merge-on-read deletes, scoped to the files they matched at delete
-        # time (rewritten files get new paths and fall outside): predicate
-        # entries filter by expression; delete-file entries anti-join the
-        # spec's positional (file_path, pos) pairs
-        preds = [e for e in entries if "delete-predicate" in e]
+        # time (rewritten files get new paths and fall outside): positional
+        # and DV entries anti-join the spec's (file_path, pos) pairs,
+        # equality entries anti-join their key tuples
         dfiles = [e for e in entries if "delete-file" in e]
         dv_files = [e for e in dfiles if e.get("content") == "deletion-vector"]
         pos_files = [
@@ -3549,7 +3536,7 @@ class Table:
 
         groups: dict[tuple, list[str]] = {}
         for e in entries:
-            if "delete-predicate" in e or "delete-file" in e:
+            if "delete-file" in e:
                 continue
             sid = e.get("schema-id", schema.schema_id)
             for p in self._entry_files([e]):
@@ -3640,7 +3627,7 @@ class Table:
                     else F.col("_metadata.row_index")
                 )
                 cols = [pos_expr.alias(pos_col or "__mor_pos")] + cols
-            if preds or dfiles or file_col:
+            if dfiles or file_col:
                 path_col = _file_path_col()
                 cols = [path_col.alias(file_col or "__mor_file")] + cols
             parts.append(df.select(*cols))
@@ -3649,14 +3636,6 @@ class Table:
             out = out.unionByName(p)
         path_name = file_col or "__mor_file"
         pos_name = pos_col or "__mor_pos"
-        for e in preds:
-            # DELETE semantics: a row dies only when the predicate is TRUE
-            # (null-valued predicates keep the row)
-            dead = F.coalesce(F.expr(e["delete-predicate"]), F.lit(False))
-            applies = e.get("applies-to")
-            if applies is not None:
-                dead = dead & F.col(path_name).isin(list(applies))
-            out = out.filter(~dead)
         if pos_files or dv_files:
             # anti-join the (file_path, pos) pairs; delete sets are small
             # next to the data they delete from, so broadcast them — the
@@ -3770,7 +3749,7 @@ class Table:
 
             seq_pairs = []
             for de in entries:
-                if "delete-predicate" in de or "delete-file" in de:
+                if "delete-file" in de:
                     continue
                 seqv = de.get("data-sequence-number")
                 seqv = -1 if seqv is None else int(seqv)
@@ -3864,7 +3843,7 @@ class Table:
             out = out.drop("__mor_seq")
         if pos_col is None and "__mor_pos" in out.columns:
             out = out.drop("__mor_pos")
-        if (preds or dfiles) and not file_col:
+        if dfiles and not file_col:
             out = out.drop("__mor_file")
         return out
 
@@ -3872,21 +3851,18 @@ class Table:
     def _split_entries(
         entries: list[dict[str, Any]]
     ) -> tuple[list[dict[str, Any]], list[dict[str, Any]]]:
-        """(data entries, merge-on-read delete entries) — the latter covers
-        both predicate entries and positional delete-file entries."""
-        data = [
-            e for e in entries if "delete-predicate" not in e and "delete-file" not in e
-        ]
-        mor = [e for e in entries if "delete-predicate" in e or "delete-file" in e]
+        """(data entries, merge-on-read delete entries)."""
+        data = [e for e in entries if "delete-file" not in e]
+        mor = [e for e in entries if "delete-file" in e]
         return data, mor
 
     @staticmethod
-    def _live_preds(
-        preds: list[dict[str, Any]],
+    def _live_deletes(
+        dels: list[dict[str, Any]],
         kept_paths: set[str],
         kept_entries: Optional[list[dict[str, Any]]] = None,
     ) -> list[dict[str, Any]]:
-        """Predicate entries still needed after a rewrite: scope each to the
+        """Delete entries still needed after a rewrite: scope each to the
         files that remain; drop it once no scoped file survives.  A
         sequence-scoped equality delete survives as long as any kept data
         file's sequence is still below its own (rewritten files take the
@@ -3894,7 +3870,7 @@ class Table:
         them — the rewrite already materialized it)."""
         out = []
         kept_data = [e for e in (kept_entries or []) if "path" in e]
-        for e in preds:
+        for e in dels:
             if e.get("seq-scoped"):
                 if kept_entries is None or _seq_scope_touched(e, kept_data):
                     out.append(e)
@@ -3958,10 +3934,7 @@ class Table:
         mutations file-local instead of full-table rewrites.  When the
         condition is a parseable string, manifest bounds pre-prune the scan
         input so non-overlapping files are never even opened."""
-        if cond_str is not None:
-            tree = _parse_predicate(cond_str)
-            if tree is not None:
-                entries = self._prune_by_stats(entries, tree)
+        entries = self._prune_by_condition(entries, cond_str)
         if not self._entry_files(entries):
             return {}
         # schema-evolution-aware read (old files projected by field id) with
@@ -4083,14 +4056,15 @@ class Table:
                         for e in cur_entries
                         if "path" in e and e["path"] not in base_paths
                     ]
-                    # Pathless entries (merge-on-read delete predicates)
-                    # rebase by value: one committed since the
-                    # base snapshot must be carried into the new manifest, and
-                    # if its file scope intersects files this mutation rewrote
-                    # the delete cannot be replayed onto the rewritten files —
-                    # that's a validation failure, like Iceberg's conflicting-
-                    # delete check (round-2 advisory: racing replace commits
-                    # silently dropped concurrent MoR delete predicates).
+                    # Pathless entries (merge-on-read delete files) rebase
+                    # by value: one committed since the base snapshot must
+                    # be carried into the new manifest, and if its file
+                    # scope intersects files this mutation rewrote the
+                    # delete cannot be replayed onto the rewritten files —
+                    # that's a validation failure, like Iceberg's
+                    # conflicting-delete check (round-2 advisory: racing
+                    # replace commits silently dropped concurrent MoR
+                    # deletes).
                     base_keys = {_entry_key(e) for e in base_entries if "path" not in e}
                     concurrent_pathless = [
                         e
@@ -4120,8 +4094,7 @@ class Table:
                                 )
                             continue
                         ap = e.get("applies-to")
-                        scope_open = "delete-predicate" in e and ap is None
-                        if scope_open or (ap is not None and set(ap) & removed_here):
+                        if ap is not None and set(ap) & removed_here:
                             raise InvalidDataError(
                                 "commit conflict: a concurrent merge-on-read "
                                 "delete applies to files this operation "
@@ -4160,8 +4133,8 @@ class Table:
             commit_seq = meta.last_sequence_number + 1
             next_rid = meta.next_row_id
             for e in all_entries:
-                # every entry — data AND delete (positional/equality/DV/
-                # predicate) — gets its committing sequence; the entries
+                # every entry — data AND delete (positional/equality/DV)
+                # — gets its committing sequence; the entries
                 # metadata table reconstructs adder snapshots from it
                 if e.get("data-sequence-number") is None:
                     e["data-sequence-number"] = commit_seq
@@ -4544,26 +4517,25 @@ class Table:
         )
         return self
 
-    def _resolve_write_mode(self, prop: str) -> str:
-        """Map a ``write.*.mode`` table property to an internal mode name
+    def _resolve_write_mode(self, prop: str, mode: Optional[str] = None) -> str:
+        """Map a write mode — the ``mode=`` argument, or when it is None the
+        ``write.*.mode`` table property ``prop`` — to an internal mode name
         (Iceberg's TableProperties contract: engines pick CoW vs MoR per
         these properties; default ``copy-on-write`` per spec).
 
-        The spec value ``merge-on-read`` resolves by format version for
-        row-level position deletes: deletion vectors on v3 (the spec makes
-        position delete *files* illegal there), positional delete files on
-        v2.  The extended values ``merge-on-read-positional`` /
-        ``merge-on-read-dv`` / ``merge-on-read-predicate`` select a
-        specific flavor explicitly."""
-        val = self.properties.get(prop, "copy-on-write")
+        For DELETE and UPDATE the spec value ``merge-on-read`` resolves by
+        format version to row-level position deletes: deletion vectors on
+        v3 (the spec makes position delete *files* illegal there),
+        positional delete files on v2.  The extended values
+        ``merge-on-read-positional`` / ``merge-on-read-dv`` select one
+        explicitly.  MERGE keeps ``merge-on-read`` (equality deletes)."""
+        val = mode if mode is not None else self.properties.get(prop, "copy-on-write")
         if val == "merge-on-read" and prop in ("write.delete.mode", "write.update.mode"):
             return (
                 "merge-on-read-dv"
                 if self.format_version >= 3
                 else "merge-on-read-positional"
             )
-        if val == "merge-on-read-predicate":
-            return "merge-on-read"
         return val
 
     @staticmethod
@@ -4581,18 +4553,32 @@ class Table:
                 "to rewrite the ORC imports as parquet first"
             )
 
+    def _prune_by_condition(
+        self, entries: list[dict[str, Any]], cond_str: Optional[str]
+    ) -> list[dict[str, Any]]:
+        """``entries`` minus the data files whose manifest bounds prove they
+        hold no row matching ``cond_str`` (kept whole when the condition is
+        not a string :func:`_parse_predicate` can parse).  Delete entries
+        always pass through."""
+        tree = _parse_predicate(cond_str) if cond_str is not None else None
+        return entries if tree is None else self._prune_by_stats(entries, tree)
+
     def _positional_delete_build(
-        self, cur_entries: list[dict[str, Any]], cond
+        self, cur_entries: list[dict[str, Any]], cond, cond_str: Optional[str] = None
     ) -> tuple[list[dict[str, Any]], int]:
         """Write spec-shaped positional delete files for live rows matching
         ``cond`` and return ``(delete_entries, deleted_count)`` WITHOUT
         committing — delete_where commits them alone, MoR UPDATE commits
-        them together with the new row versions."""
+        them together with the new row versions.  A parseable ``cond_str``
+        pre-prunes the files read by manifest bounds."""
         self._refuse_positional_over_orc(cur_entries)
+        read_entries = self._prune_by_condition(cur_entries, cond_str)
+        if not self._entry_files(read_entries):
+            return [], 0
         # positions of rows matching NOW, with all prior MoR deletes
         # applied so already-dead rows are not re-deleted (keeps the
         # returned count an honest delta)
-        live = self._read_entries(cur_entries, file_col="__f", pos_col="__p")
+        live = self._read_entries(read_entries, file_col="__f", pos_col="__p")
         # store file_path RELATIVE to the table location (like every
         # manifest path) so positional deletes survive rename_table /
         # register_table moving the table tree; absolutized on read
@@ -4676,7 +4662,7 @@ class Table:
         return del_entries, deleted
 
     def _dv_delete_build(
-        self, cur_entries: list[dict[str, Any]], cond
+        self, cur_entries: list[dict[str, Any]], cond, cond_str: Optional[str] = None
     ) -> tuple[list[dict[str, Any]], list[dict[str, Any]], int, Optional[str]]:
         """Build Iceberg v3 deletion vectors for live rows matching
         ``cond``: ONE roaring bitmap of deleted positions per referenced
@@ -4687,7 +4673,9 @@ class Table:
         deleted_count, puffin_path)`` WITHOUT committing — delete_where
         commits the vectors alone, MoR UPDATE commits them together with
         the new row versions; callers drop ``puffin_path`` and rebuild
-        from fresh state if the optimistic commit loses a race."""
+        from fresh state if the optimistic commit loses a race.  A
+        parseable ``cond_str`` pre-prunes the files read by manifest
+        bounds; every entry outside the replaced vectors is carried."""
         from iceberg_ruby_spark.deletion_vectors import (
             decode_dv_blob,
             encode_dv_blob,
@@ -4695,7 +4683,10 @@ class Table:
         from iceberg_ruby_spark.puffin import read_puffin, write_puffin
 
         self._refuse_positional_over_orc(cur_entries)
-        live = self._read_entries(cur_entries, file_col="__f", pos_col="__p")
+        read_entries = self._prune_by_condition(cur_entries, cond_str)
+        if not self._entry_files(read_entries):
+            return cur_entries, [], 0, None
+        live = self._read_entries(read_entries, file_col="__f", pos_col="__p")
         loc_prefixes = sorted(
             {
                 os.path.abspath(self.ops.location) + os.sep,
@@ -4836,21 +4827,19 @@ class Table:
         mode: Optional[str] = None,
         branch: Optional[str] = None,
     ) -> int:
-        """DELETE in one of four modes.  ``mode=None`` (default) resolves
-        the table's ``write.delete.mode`` property — ``copy-on-write``
-        unless set; ``merge-on-read`` picks deletion vectors on v3 tables
-        and positional delete files on v2 (the spec's engine contract).
+        """DELETE, copy-on-write or merge-on-read.  ``mode=None`` (default)
+        resolves the table's ``write.delete.mode`` property —
+        ``copy-on-write`` unless set.  ``merge-on-read``, as the argument
+        or the property, picks deletion vectors on v3 tables and
+        positional delete files on v2 (the spec's engine contract).
         ``branch`` scopes the delete to a branch head (write-audit-publish:
         audit deletes are visible via ``scan(ref=branch)`` and move main
-        only when ``fast_forward`` publishes them).
+        only when ``fast_forward`` publishes them).  Returns the deleted
+        row count.  A string condition the manifest bounds can evaluate
+        prunes the files read, in every mode.
 
         - ``copy-on-write``: rewrite only the files that contain
           matching rows; carry all other files forward by reference.
-          Returns the deleted row count.
-        - ``merge-on-read``: commit a predicate delete entry — O(metadata)
-          regardless of table size; reads apply the predicate, ``compact()``
-          materializes it.  Requires a string condition.  Returns the
-          matched row count (one counting job, no rewrite).
         - ``merge-on-read-positional``: write spec-style positional delete
           FILES — parquet of (file_path, pos) — and commit a delete-file
           entry; reads anti-join the positions, ``plan_files`` lists the
@@ -4861,27 +4850,15 @@ class Table:
           bitmap per referenced data file in one Puffin file per commit.
         """
         self._check_writable()
-        if mode is None:
-            mode = self._resolve_write_mode("write.delete.mode")
-        if (
-            mode == "merge-on-read"
-            and self.format_version >= 3
-            and self.properties.get(
-                "write.delete.materialize-predicates", "false"
-            ).lower() == "true"
-        ):
-            # Opt-in: predicate delete entries have no spec representation
-            # (they ride only the x-irs manifest-list extension).  On v3
-            # tables this property materializes the predicate as DELETION
-            # VECTORS at commit time instead — O(matched rows) rather than
-            # O(metadata), but the table's delete surface becomes 100%
-            # spec-readable (tests/test_spec_reader.py round-trips it).
-            mode = "merge-on-read-dv"
+        mode = self._resolve_write_mode("write.delete.mode", mode)
         cond = F.expr(condition) if isinstance(condition, str) else condition
+        cond_str = condition if isinstance(condition, str) else None
         target = branch or MAIN_BRANCH
         entries = self._current_entries(branch)
         if mode == "merge-on-read-positional":
-            del_entries, deleted = self._positional_delete_build(entries, cond)
+            del_entries, deleted = self._positional_delete_build(
+                entries, cond, cond_str
+            )
             if not deleted:
                 return 0
             self._commit_snapshot(
@@ -4904,7 +4881,7 @@ class Table:
                     entries if attempt == 0 else self._current_entries(branch)
                 )
                 carried, del_entries, deleted, dv_path = self._dv_delete_build(
-                    cur_entries, cond
+                    cur_entries, cond, cond_str
                 )
                 if not deleted:
                     return 0
@@ -4928,45 +4905,24 @@ class Table:
             raise InvalidDataError(
                 "deletion-vector commit conflict: too many retries"
             )
-        if mode == "merge-on-read":
-            if not isinstance(condition, str):
-                raise InvalidDataError(
-                    "merge-on-read delete requires a string condition"
-                )
-            hits = self._matching_files(entries, cond, cond_str=condition)
-            deleted = sum(hits.values())
-            if not deleted:
-                return 0
-            # file-scoped predicate: applies only to the files that matched
-            # at delete time, so later rewrites (new paths) are unaffected
-            self._commit_snapshot(
-                "delete",
-                entries + [{"delete-predicate": condition, "applies-to": sorted(hits)}],
-                {"deleted-records": deleted, "mode": "merge-on-read"},
-                base_snapshot_id=self._branch_head_id(branch),
-                branch=target,
-            )
-            return deleted
         if mode != "copy-on-write":
             raise InvalidDataError(f"unknown delete mode: {mode}")
-        data, preds = self._split_entries(entries)
+        data, dels = self._split_entries(entries)
         # match against the FULL entry list so prior MoR deletes apply:
         # the returned count stays an honest delta (rows already dead via
-        # a DV/positional/equality/predicate entry are not re-counted) and
-        # files whose matches are all dead are not needlessly rewritten
-        hits = self._matching_files(
-            entries, cond, cond_str=condition if isinstance(condition, str) else None
-        )
+        # a DV/positional/equality entry are not re-counted) and files
+        # whose matches are all dead are not needlessly rewritten
+        hits = self._matching_files(entries, cond, cond_str=cond_str)
         deleted = sum(hits.values())
         if not hits:
             return 0
         hit_entries = [e for e in data if e.get("path") in hits]
         keep_entries = [e for e in data if e.get("path") not in hits]
-        # outstanding MoR predicates apply while reading hit files so their
+        # outstanding MoR deletes apply while reading hit files so their
         # deleted rows are not resurrected into the rewrite; survivors keep
         # their row lineage (id AND sequence — a delete doesn't update them)
         # via materialized reserved columns in the rewritten files
-        survivors = self._read_entries_with_lineage(hit_entries + preds).filter(
+        survivors = self._read_entries_with_lineage(hit_entries + dels).filter(
             ~cond | cond.isNull()
         )
         new_entries = self._write_data_dir(survivors, lineage_cols=True)
@@ -4975,7 +4931,7 @@ class Table:
         kept_paths = {e["path"] for e in keep_entries if "path" in e}
         self._commit_snapshot(
             "delete",
-            keep_entries + new_entries + self._live_preds(preds, kept_paths, keep_entries),
+            keep_entries + new_entries + self._live_deletes(dels, kept_paths, keep_entries),
             {"deleted-records": deleted},
             base_snapshot_id=self._branch_head_id(branch),
             branch=target,
@@ -5641,7 +5597,7 @@ class Table:
 
     def _update_where_mor(
         self, assignments: dict[str, Any], cond, mode: str,
-        branch: Optional[str] = None,
+        branch: Optional[str] = None, cond_str: Optional[str] = None,
     ) -> int:
         """Merge-on-read UPDATE: ONE commit that (a) marks the current
         versions of matching rows dead — deletion vectors on v3, positional
@@ -5656,12 +5612,12 @@ class Table:
             cur_entries = self._current_entries(branch)
             if mode == "merge-on-read-dv":
                 carried, del_entries, deleted, dv_path = self._dv_delete_build(
-                    cur_entries, cond
+                    cur_entries, cond, cond_str
                 )
                 base_entries = carried
             else:
                 del_entries, deleted = self._positional_delete_build(
-                    cur_entries, cond
+                    cur_entries, cond, cond_str
                 )
                 base_entries, dv_path = cur_entries, None
             if not deleted:
@@ -5710,25 +5666,26 @@ class Table:
     ) -> int:
         """UPDATE.  ``mode=None`` (default) resolves the table's
         ``write.update.mode`` property — ``copy-on-write`` unless set;
-        ``merge-on-read`` resolves to deletion vectors on v3 tables and
-        positional delete files on v2 (see ``_update_where_mor``).
+        ``merge-on-read``, as the argument or the property, resolves to
+        deletion vectors on v3 tables and positional delete files on v2
+        (see ``_update_where_mor``).
         Copy-on-write is file-pruned: rewrite only files containing
         matching rows."""
         self._check_writable()
-        if mode is None:
-            mode = self._resolve_write_mode("write.update.mode")
+        mode = self._resolve_write_mode("write.update.mode", mode)
         cond = F.expr(condition) if isinstance(condition, str) else condition
+        cond_str = condition if isinstance(condition, str) else None
         if mode in ("merge-on-read-positional", "merge-on-read-dv"):
-            return self._update_where_mor(assignments, cond, mode, branch=branch)
+            return self._update_where_mor(
+                assignments, cond, mode, branch=branch, cond_str=cond_str
+            )
         if mode != "copy-on-write":
             raise InvalidDataError(f"unknown update mode: {mode}")
         entries = self._current_entries(branch)
-        data, preds = self._split_entries(entries)
+        data, dels = self._split_entries(entries)
         # full entry list: prior MoR deletes apply, so the count is an
         # honest delta and all-dead files skip the rewrite (see delete_where)
-        hits = self._matching_files(
-            entries, cond, cond_str=condition if isinstance(condition, str) else None
-        )
+        hits = self._matching_files(entries, cond, cond_str=cond_str)
         updated = sum(hits.values())
         if not hits:
             return 0
@@ -5739,7 +5696,7 @@ class Table:
         # which the read path inherits as the rewrite commit's sequence —
         # exactly the spec's "updated rows bump _last_updated_sequence_
         # number, untouched rows keep theirs" semantics
-        out = self._read_entries_with_lineage(hit_entries + preds)
+        out = self._read_entries_with_lineage(hit_entries + dels)
         for col, val in assignments.items():
             expr = F.expr(val) if isinstance(val, str) else F.lit(val)
             out = out.withColumn(col, F.when(cond, expr).otherwise(F.col(col)))
@@ -5762,7 +5719,7 @@ class Table:
         kept_paths = {e["path"] for e in keep_entries if "path" in e}
         self._commit_snapshot(
             "overwrite",
-            keep_entries + new_entries + self._live_preds(preds, kept_paths, keep_entries),
+            keep_entries + new_entries + self._live_deletes(dels, kept_paths, keep_entries),
             {"updated-records": updated},
             base_snapshot_id=self._branch_head_id(branch),
             branch=branch or MAIN_BRANCH,
@@ -5863,8 +5820,7 @@ class Table:
                 "when_not_matched_by_source_update (the DELETE clause "
                 "carries its condition as its value)"
             )
-        if mode is None:
-            mode = self._resolve_write_mode("write.merge.mode")
+        mode = self._resolve_write_mode("write.merge.mode", mode)
         keys = [on] if isinstance(on, str) else list(on)
         cols = [f.name for f in self.current_schema().fields]
         dup = (
@@ -5891,7 +5847,7 @@ class Table:
         if mode != "copy-on-write":
             raise InvalidDataError(f"unknown merge mode: {mode}")
         entries = self._current_entries(branch)
-        data, preds = self._split_entries(entries)
+        data, dels = self._split_entries(entries)
         # files containing rows whose keys appear in the source (semi-join
         # against distinct source keys; AQE broadcasts when small);
         # schema-evolution-aware read with the file path carried alongside
@@ -5923,7 +5879,7 @@ class Table:
         # commit's sequence); inserted rows write NULL id AND seq cells,
         # inheriting first-row-id + position / commit sequence — all three
         # cases are exactly spec v3's materialization rules
-        target = self._read_entries_with_lineage(hit_entries + preds)
+        target = self._read_entries_with_lineage(hit_entries + dels)
         marked = source.withColumn("__s_matched", F.lit(True))
         matched = target.alias("t").join(marked.alias("s"), keys, "left")
         is_matched = F.col("__s_matched").isNotNull()
@@ -6004,7 +5960,7 @@ class Table:
         kept_paths = {e["path"] for e in keep_entries if "path" in e}
         self._commit_snapshot(
             "overwrite",
-            keep_entries + new_entries + self._live_preds(preds, kept_paths, keep_entries),
+            keep_entries + new_entries + self._live_deletes(dels, kept_paths, keep_entries),
             {"operation-detail": "merge", **(summary_extra or {})},
             base_snapshot_id=self._branch_head_id(branch),
             branch=branch or MAIN_BRANCH,
@@ -6246,9 +6202,9 @@ class Table:
         self._check_writable()
         entries = self._current_entries()
         keep_entries: list[dict[str, Any]] = []
-        preds: list[dict[str, Any]] = []
+        dels: list[dict[str, Any]] = []
         if where is not None:
-            data, preds = self._split_entries(entries)
+            data, dels = self._split_entries(entries)
             tree = _parse_predicate(where)
             if tree is None:
                 raise InvalidDataError(
@@ -6268,7 +6224,7 @@ class Table:
         # files carry them as physical reserved-id columns (v3 semantics —
         # inheritance can't survive a rewrite, materialization does)
         if where is not None:
-            df = self._read_entries_with_lineage(entries + preds)
+            df = self._read_entries_with_lineage(entries + dels)
         else:
             df = TableScan(self).with_row_lineage().to_df()
         sort = self.default_sort_order()
@@ -6304,7 +6260,7 @@ class Table:
         if where is not None:
             kept_paths = {e["path"] for e in keep_entries if "path" in e}
             commit_entries = (
-                keep_entries + new_entries + self._live_preds(preds, kept_paths, keep_entries)
+                keep_entries + new_entries + self._live_deletes(dels, kept_paths, keep_entries)
             )
         self._commit_snapshot(
             "replace",
@@ -7708,15 +7664,7 @@ class TableInspect:
         entries = self.table._current_entries()
         rows = []
         for e in entries:
-            if "delete-predicate" in e:
-                rows.append(
-                    {
-                        "kind": "predicate",
-                        "detail": e["delete-predicate"],
-                        "scope_files": len(e.get("applies-to") or []),
-                    }
-                )
-            elif "delete-file" in e:
+            if "delete-file" in e:
                 rows.append(
                     {
                         "kind": e.get("content") or "position-deletes",
@@ -7782,12 +7730,10 @@ class TableInspect:
             if "path" in e:
                 content, fpath = 0, e["path"]
                 rec, size = e.get("record-count"), e.get("file-size-bytes")
-            elif "delete-file" in e:
+            else:
                 content = 2 if e.get("content") == "equality-deletes" else 1
                 fpath = e["delete-file"]
                 rec, size = e.get("deleted-records"), None
-            else:  # predicate delete (engine extension): no backing file
-                content, fpath, rec, size = 1, None, e.get("deleted-records"), None
             seq = cur_seq if seq is None else seq
             rows.append(
                 {
@@ -7938,8 +7884,7 @@ class TableInspect:
         delete_file_path) from spec positional delete FILES (read
         distributed, tagged by input file) and v3 deletion vectors
         (each blob decoded from its ranged Puffin slice — deleted-rows-
-        sized, the same posture as the scan path).  Predicate delete
-        entries have no positions until materialized and do not appear."""
+        sized, the same posture as the scan path)."""
         import pyspark.sql.types as T
 
         t = self.table
@@ -8117,28 +8062,6 @@ class UpdateSchema:
         pinned = {pf["source"] for pf in spec.get("fields", [])} | {
             sf["source"] for sf in order.get("fields", [])
         }
-        # outstanding merge-on-read delete predicates reference columns by
-        # name; renaming or dropping one would break every subsequent read.
-        # Parseable predicates pin exactly their columns; an unparseable one
-        # conservatively pins everything (compact() first to materialize).
-        for e in self.table._current_entries():
-            pred = e.get("delete-predicate")
-            if pred is None:
-                continue
-            tree = _parse_predicate(pred)
-            if tree is None:
-                pinned |= {f.name for f in self.table.current_schema().fields}
-                break
-
-            def cols_of(node, acc):
-                if node[0] == "cmp":
-                    acc.add(node[1])
-                else:
-                    cols_of(node[1], acc)
-                    cols_of(node[2], acc)
-                return acc
-
-            pinned |= cols_of(tree, set())
 
         def mutate(raw: dict[str, Any]) -> None:
             schemas_json = raw.get("schemas", [])
@@ -8177,9 +8100,8 @@ class UpdateSchema:
                     _, name = op
                     if name in pinned:
                         raise InvalidDataError(
-                            f"column {name} is pinned by a partition/sort spec or an "
-                            "outstanding merge-on-read delete predicate; evolve "
-                            "the spec or compact() first"
+                            f"column {name} is pinned by a partition/sort spec; "
+                            "evolve the spec first"
                         )
                     f = fields[idx(name)]
                     if f.field_id in cur.identifier_field_ids and not any(
@@ -8194,9 +8116,8 @@ class UpdateSchema:
                     _, name, new_name = op
                     if name in pinned:
                         raise InvalidDataError(
-                            f"column {name} is pinned by a partition/sort spec or an "
-                            "outstanding merge-on-read delete predicate; evolve "
-                            "the spec or compact() first"
+                            f"column {name} is pinned by a partition/sort spec; "
+                            "evolve the spec first"
                         )
                     if any(f.name == new_name for f in fields):
                         raise InvalidDataError(f"column already exists: {new_name}")
@@ -8352,8 +8273,8 @@ class TableScan:
         (replacement merges the prior positions), its recorded cardinality
         is the file's dead-row count, and DV entries are dropped with
         their file on rewrite — so ``sum(record-count) − sum(dv
-        cardinality)`` is exact, never an estimate.  Equality / positional
-        / predicate deletes have no such disjointness guarantee and fall
+        cardinality)`` is exact, never an estimate.  Equality and
+        positional deletes have no such disjointness guarantee and fall
         back to executing the scan.
 
         ``count(col)`` is SQL ``COUNT(col)`` — non-NULL rows only.  It
@@ -8929,7 +8850,6 @@ class TableScan:
             snap.manifest_list, self._parsed_filter_trees(), allow_mor=True
         )
         entries = self._prune_entries(entries)
-        preds = [e for e in entries if "delete-predicate" in e]
         dfile_entries = [e for e in entries if "delete-file" in e]
         io = self.table.ops.io
         # expand each delete entry to its files once, not per task
@@ -8949,11 +8869,7 @@ class TableScan:
 
         def deletes_for(de: dict[str, Any]) -> list[str]:
             path = de["path"]
-            out = [
-                e["delete-predicate"]
-                for e in preds
-                if e.get("applies-to") is None or path in e["applies-to"]
-            ]
+            out = []
             for e in dfile_entries:
                 scope = dfile_scopes[id(e)]
                 if scope is not None:

@@ -58,7 +58,7 @@ def test_count_falls_back_for_other_delete_kinds(catalog):
     assert t.scan().count() == 8
     t2 = catalog.create_table("agg3b", schema={"a": "int"})
     t2.append([{"a": i} for i in range(10)])
-    t2.delete_where("a >= 8", mode="merge-on-read")        # predicate
+    t2.delete_where("a >= 8", mode="merge-on-read")        # positional on v2
     assert t2.scan().count() == 8
 
 

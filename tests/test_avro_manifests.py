@@ -247,16 +247,46 @@ def test_mor_deletes_under_avro(catalog, spark):
     assert eq["data_file"]["equality_ids"] == [k_id]
 
 
-def test_predicate_mor_delete_carried_json_only(catalog):
+def test_mor_delete_carried_through_avro(catalog):
     t = catalog.create_table(
         "av8", schema={"k": "int"}, properties=AVRO_PROPS
     )
     t.append([{"k": i} for i in range(6)])
     assert t.delete_where("k >= 4", mode="merge-on-read") == 2
     assert sorted(r["k"] for r in t.to_a()) == [0, 1, 2, 3]
-    # a second commit carries the predicate entry forward through avro
+    dels = [e for e in t._current_entries() if "path" not in e]
+    assert [e["content"] for e in dels] == ["position-deletes"]
+    # a second commit carries the delete entry forward through avro
     t.append([{"k": 100}])
+    assert [e for e in t.refresh()._current_entries() if "path" not in e] == dels
     assert sorted(r["k"] for r in t.to_a()) == [0, 1, 2, 3, 100]
+
+
+def test_legacy_list_with_predicate_deletes_raises(catalog):
+    """A manifest list written by an older engine version whose ``x-irs``
+    extras still carry predicate delete entries must raise when read —
+    naming the table — instead of silently dropping the deletes, which
+    would bring the deleted rows back.  A fast append onto such a list
+    raises too, so no new list forgets them either."""
+    from iceberg_ruby_spark.avro_file import write_ocf
+
+    t = catalog.create_table("av_legacy", schema={"k": "int"})
+    t.append([{"k": i} for i in range(4)])
+    path = t.ops._abs(t.current_snapshot().manifest_list)
+    schema, records, meta = read_ocf(t.ops.io.read_bytes(path))
+    extras = json.loads(meta["x-irs"].decode())
+    data_paths = [t.ops._rel(p) for p in t._entry_files(t._current_entries())]
+    extras["carried"] = [{"delete-predicate": "k >= 2", "applies-to": data_paths}]
+    user_meta = {k: v for k, v in meta.items() if not k.startswith("avro.")}
+    user_meta["x-irs"] = json.dumps(extras).encode()
+    t.ops.io.write_bytes_atomic(
+        path, write_ocf(schema, records, metadata=user_meta), overwrite=True
+    )
+    for action in (lambda: t.refresh().to_a(), lambda: t.append([{"k": 9}])):
+        with pytest.raises(InvalidDataError, match="no longer reads") as err:
+            action()
+        assert t.ops.location in str(err.value)
+        assert "predicate deletes" in str(err.value)
 
 
 def test_schema_evolution_under_avro(catalog):

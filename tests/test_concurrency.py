@@ -93,7 +93,7 @@ def test_concurrent_compact_and_append_not_lost(catalog):
 
 
 def test_concurrent_mor_delete_carried_by_replace(catalog):
-    """A merge-on-read delete predicate committed between a replace-mode
+    """A merge-on-read delete file committed between a replace-mode
     mutation's planning and its commit must ride the rebase into the new
     manifest (round-2 advisory: it was silently dropped, resurrecting the
     deleted rows)."""

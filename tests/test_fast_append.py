@@ -136,21 +136,24 @@ def test_replace_resets_then_chain_resumes(catalog):
 
 def test_mor_delete_interplay(catalog):
     """A merge-on-read delete chains onto the fast-append list: the data
-    manifests are carried, the delete predicate rides the list's extras,
-    and the next append carries both forward."""
+    manifests are carried, the position delete file lands in one new
+    delete manifest, and the next append carries all three forward."""
     t = _mk(catalog, "fa_mor")
     t.append([{"k": i, "v": "a"} for i in range(10)])
     t.append([{"k": i, "v": "b"} for i in range(10, 20)])
     data_manifests = [r["manifest_path"] for r in _list_records(t)]
     t.delete_where("k = 5", mode="merge-on-read")
-    assert [r["manifest_path"] for r in _list_records(t)] == data_manifests
-    t.append([{"k": 100, "v": "c"}])
     recs = _list_records(t)
     assert [r["manifest_path"] for r in recs[:2]] == data_manifests
-    assert len(recs) == 3
-    preds = [e for e in t.ops.read_manifest(t.current_snapshot().manifest_list)
-             if "delete-predicate" in e]
-    assert len(preds) == 1
+    assert [r["content"] for r in recs] == [0, 0, 1]
+    t.append([{"k": 100, "v": "c"}])
+    carried = [r["manifest_path"] for r in recs]
+    recs = _list_records(t)
+    assert [r["manifest_path"] for r in recs[:3]] == carried
+    assert len(recs) == 4
+    dels = [e for e in t.ops.read_manifest(t.current_snapshot().manifest_list)
+            if "delete-file" in e]
+    assert [e["content"] for e in dels] == ["position-deletes"]
     assert _rows(t) == [k for k in range(20) if k != 5] + [100]
 
 
@@ -235,7 +238,9 @@ def test_rewrite_manifests_preserves_mor_deletes(catalog):
     t.append([{"k": i, "v": "a"} for i in range(10)])
     t.delete_where("k < 3", mode="merge-on-read")
     t.append([{"k": 100, "v": "b"}])
-    assert t.rewrite_manifests()["added_manifests_count"] == 1
+    # one data manifest plus the position deletes' own delete manifest
+    assert t.rewrite_manifests()["added_manifests_count"] == 2
+    assert sorted(r["content"] for r in _list_records(t)) == [0, 1]
     assert _rows(t) == [3, 4, 5, 6, 7, 8, 9, 100]
 
 

@@ -1,13 +1,13 @@
 """Model-based mutation testing: random interleavings of every mutation
 kind against a plain-Python dict model of the table.
 
-Each step picks an operation (append / delete in any of the four modes /
+Each step picks an operation (append / delete in CoW or any MoR mode /
 update in CoW or either MoR flavor / compact / snapshot expiry) with
 randomized predicates, applies it to BOTH the engine and the model, and
 asserts the engine's visible rows equal the model exactly.  Three seeds
 × a dozen steps cover interleavings no hand-written scenario does —
 especially MoR artifacts stacking on each other (a DV on top of
-positional deletes on top of a predicate entry, then compacted away).
+positional deletes on top of equality deletes, then compacted away).
 """
 
 from __future__ import annotations
@@ -16,7 +16,7 @@ import random
 
 DELETE_MODES = [
     "copy-on-write",
-    "merge-on-read",             # predicate entry
+    "merge-on-read",             # spec mode name: DVs on the v3 model tables
     "merge-on-read-positional",
     "merge-on-read-dv",
 ]

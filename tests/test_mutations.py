@@ -115,9 +115,49 @@ def test_mor_delete_no_rewrite(catalog):
     assert n == 5
     assert _live_files(t) == files_before  # zero data files rewritten
     assert sorted(r["a"] for r in t.to_a()) == list(range(15))
-    # plan_files reports the predicate as a delete file
+    # plan_files reports the positional delete file
     tasks = t.scan().plan_files()
     assert any(task["delete_files"] for task in tasks)
+
+
+@pytest.mark.parametrize("fv", ["2", "3"])
+def test_mor_delete_reads_only_overlapping_files(catalog, monkeypatch, fv):
+    """A merge-on-read delete on a parseable string condition prunes the
+    files it reads by manifest bounds, as copy-on-write does: on three
+    bounds-disjoint files each delete reads only the file its condition
+    overlaps, while every outstanding delete entry still applies (the
+    second delete's count leaves out the row the first one killed)."""
+    from iceberg_ruby_spark.table import Table
+
+    t = catalog.create_table(
+        f"morprune_v{fv}", schema={"a": "int"}, properties={"format-version": fv}
+    )
+    for lo in (0, 100, 200):
+        t.append(
+            catalog.spark.createDataFrame(
+                [(lo + i,) for i in range(10)], "a int"
+            ).coalesce(1)
+        )
+    by_lo = {
+        e["lower-bounds"]["a"]: e["path"] for e in t._current_entries()
+    }
+    assert sorted(by_lo) == [0, 100, 200]
+    read = []
+    orig = Table._read_entries
+
+    def counting(self, entries, *args, **kwargs):
+        read.append(sorted(e["path"] for e in entries if "path" in e))
+        return orig(self, entries, *args, **kwargs)
+
+    monkeypatch.setattr(Table, "_read_entries", counting)
+    assert t.delete_where("a = 5", mode="merge-on-read") == 1
+    assert t.delete_where("a <= 6", mode="merge-on-read") == 6
+    assert t.delete_where("a >= 205", mode="merge-on-read") == 5
+    monkeypatch.undo()
+    assert read == [[by_lo[0]], [by_lo[0]], [by_lo[200]]]
+    assert sorted(r["a"] for r in t.to_a()) == (
+        [7, 8, 9] + list(range(100, 110)) + list(range(200, 205))
+    )
 
 
 def test_mor_delete_materialized_by_compact(catalog):
@@ -126,7 +166,7 @@ def test_mor_delete_materialized_by_compact(catalog):
     t.delete_where("a = 3", mode="merge-on-read")
     t.compact()
     assert sorted(r["a"] for r in t.to_a()) == [0, 1, 2] + list(range(4, 10))
-    # predicate gone after materialization
+    # delete file gone after materialization
     assert all(not task["delete_files"] for task in t.scan().plan_files())
 
 
@@ -137,7 +177,7 @@ def test_mor_then_cow_no_resurrection(catalog):
     # CoW delete rewrites the same file; the MoR-deleted row must not return
     t.delete_where("a = 2")
     assert sorted(r["a"] for r in t.to_a()) == [0, 1, 3, 4, 5, 6, 8, 9]
-    # and an update into the deleted predicate's value-space is kept
+    # and an update into the deleted row's value-space is kept
     t.update_where({"a": "7"}, "a = 9")
     assert sorted(r["a"] for r in t.to_a()) == [0, 1, 3, 4, 5, 6, 7, 8]
 
@@ -221,11 +261,13 @@ def test_positional_mor_time_travel(catalog):
     assert sorted(r["a"] for r in t.to_a(snapshot_id=snap1)) == [1, 2]
 
 
-def test_positional_and_predicate_mor_compose(catalog):
+def test_positional_and_equality_mor_compose(catalog):
     t = catalog.create_table("morp6", schema={"a": "int"})
     t.append([{"a": i} for i in range(10)])
     t.delete_where("a < 2", mode="merge-on-read")
-    t.delete_where("a >= 8", mode="merge-on-read-positional")
+    t.delete_by_keys([{"a": 1}, {"a": 8}, {"a": 9}], "a")  # 1 already dead
+    kinds = sorted(e["content"] for e in t._current_entries() if "delete-file" in e)
+    assert set(kinds) == {"position-deletes", "equality-deletes"}
     assert sorted(r["a"] for r in t.to_a()) == list(range(2, 8))
 
 

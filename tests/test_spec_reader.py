@@ -139,37 +139,24 @@ def test_spec_reader_dv_coordinates_from_v3_manifest_fields(catalog, spark):
     assert sorted(r["k"] for r in rows) == want
 
 
-def test_predicate_deletes_materialize_as_dvs_on_v3_opt_in(catalog, spark):
-    # write.delete.materialize-predicates=true: the non-spec predicate
-    # delete form converts to deletion vectors at commit time on v3, so
-    # the ENTIRE delete surface round-trips through the spec reader
-    # (no x-irs consultation — spec_reader never parses it)
-    t = catalog.create_table(
-        "spec_rd8",
-        schema={"k": "int"},
-        properties={
-            **AVRO_PROPS,
-            "format-version": "3",
-            "write.delete.materialize-predicates": "true",
-        },
-    )
-    t.append([{"k": i} for i in range(20)])
-    assert t.delete_where("k >= 15", mode="merge-on-read") == 5
-    entries = t._current_entries()
-    assert not [e for e in entries if "delete-predicate" in e]
-    assert [e for e in entries if e.get("content") == "deletion-vector"]
-    rows = _spec_rows(t, spark)
-    assert _as_sets(rows) == _as_sets(t.to_a())
-    assert sorted(r["k"] for r in rows) == list(range(15))
-    # without the property (same v3 table shape) the predicate form stays
-    t2 = catalog.create_table(
-        "spec_rd9",
-        schema={"k": "int"},
-        properties={**AVRO_PROPS, "format-version": "3"},
-    )
-    t2.append([{"k": i} for i in range(8)])
-    assert t2.delete_where("k >= 6", mode="merge-on-read") == 2
-    assert [e for e in t2._current_entries() if "delete-predicate" in e]
+def test_mor_deletes_round_trip_through_spec_reader(catalog, spark):
+    # every merge-on-read delete is a spec kind: deletion vectors on v3
+    # and positional delete files on v2, so the ENTIRE delete surface
+    # round-trips through the spec reader with no opt-in (no x-irs
+    # consultation — spec_reader never parses it)
+    for fv, kind in (("3", "deletion-vector"), ("2", "position-deletes")):
+        t = catalog.create_table(
+            f"spec_rd8_v{fv}",
+            schema={"k": "int"},
+            properties={**AVRO_PROPS, "format-version": fv},
+        )
+        t.append([{"k": i} for i in range(20)])
+        assert t.delete_where("k >= 15", mode="merge-on-read") == 5
+        kinds = {e.get("content") for e in t._current_entries() if "path" not in e}
+        assert kinds == {kind}
+        rows = _spec_rows(t, spark)
+        assert _as_sets(rows) == _as_sets(t.to_a())
+        assert sorted(r["k"] for r in rows) == list(range(15))
 
 
 def test_spec_reader_reconstructs_row_lineage_from_v3_manifests(catalog, spark):

@@ -418,16 +418,17 @@ def test_changelog_stream_mode_validation(catalog, spark):
         EngineTableStreamReader({"location": t.ops.location, "mode": "bogus"})
 
 
-def test_changelog_stream_cow_and_predicate_fallback(catalog, spark):
-    """CoW rewrites, predicate deletes, and prior-predicate masking
-    stream through mode=changelog via the per-commit content-diff
-    fallback (r9) — correct events, no refusal.  A CoW UPDATE emits
-    delete+insert for the touched row and NOTHING for rows the rewrite
-    merely copied."""
+def test_changelog_stream_cow_fallback_and_mor_delete(catalog, spark):
+    """CoW rewrites stream through mode=changelog via the per-commit
+    content-diff fallback (r9), interleaved with a merge-on-read delete
+    that streams structurally — correct events, no refusal.  A CoW
+    UPDATE emits delete+insert for the touched row and NOTHING for rows
+    the rewrite merely copied; the CoW DELETE after the MoR delete reads
+    the rewritten file under its delete view."""
     t = catalog.create_table("clcow", schema={"k": "int", "v": "string"})
     t.append([{"k": 1, "v": "a"}, {"k": 2, "v": "b"}, {"k": 3, "v": "c"}])
     t.update_where({"v": "'B'"}, "k = 2")             # CoW UPDATE rewrite
-    t.delete_where("k = 3", mode="merge-on-read")     # predicate delete
+    t.delete_where("k = 3", mode="merge-on-read")     # positional delete
     t.delete_where("k = 1")                           # CoW DELETE rewrite
     ev = _changelog_events(spark, t, "clcow_sink")
     assert ev == [
@@ -439,12 +440,11 @@ def test_changelog_stream_cow_and_predicate_fallback(catalog, spark):
         (3, "c", "delete", 2),
         (3, "c", "insert", 0),
     ]
-    # prior-predicate masking: an equality delete AFTER the predicate
-    # delete must not re-emit rows the predicate already killed — the
-    # commit routes through the content diff and emits only newly-dead
+    # prior-delete masking: an equality delete AFTER the positional
+    # delete must not re-emit rows the positional delete already killed
     t2 = catalog.create_table("clprior", schema={"k": "int", "v": "string"})
     t2.append([{"k": 1, "v": "a"}, {"k": 2, "v": "b"}, {"k": 3, "v": "c"}])
-    t2.delete_where("k = 2", mode="merge-on-read")    # predicate delete
+    t2.delete_where("k = 2", mode="merge-on-read")    # positional delete
     t2.delete_by_keys([{"k": 2}, {"k": 3}], "k")      # 2 already dead
     ev2 = _changelog_events(spark, t2, "clprior_sink")
     deletes = sorted((k, o) for k, _v, ty, o in ev2 if ty == "delete")
@@ -482,26 +482,35 @@ def test_changelog_stream_apply_replication(catalog, spark, tmp_path):
     assert state(rep) == [(1, "a2"), (3, "c"), (4, "d")]
 
 
-def test_changelog_stream_reissued_predicate_delete(catalog, spark):
-    """A byte-identical predicate re-issued in a later commit is a NEW
-    delete (its applies-to scope covers the newer files) — the old
-    text-only _del_id made the second commit stream ZERO events while
-    the batch changelog_scan emitted them (r9 review finding #1)."""
-    t = catalog.create_table("clre", schema={"k": "int", "v": "int"})
-    t.append([{"k": 1, "v": 1}, {"k": 2, "v": 9}])
-    t.delete_where("v > 5", mode="merge-on-read")      # kills k=2
-    t.append([{"k": 3, "v": 3}, {"k": 4, "v": 9}])
-    t.delete_where("v > 5", mode="merge-on-read")      # same text: kills k=4
-    ev = _changelog_events(spark, t, "clre_sink")
-    deletes = sorted((k, o) for k, _v, ty, o in ev if ty == "delete")
-    assert deletes == [(2, 1), (4, 3)]
-    inserts = sorted((k, o) for k, _v, ty, o in ev if ty == "insert")
-    assert inserts == [(1, 0), (2, 0), (3, 2), (4, 2)]
+def test_changelog_stream_reissued_mor_delete(catalog, spark):
+    """The same merge-on-read delete re-issued in a later commit is a NEW
+    delete that streams only the rows it newly kills — position delete
+    files on v2, deletion vectors on v3.  A text-keyed delete identity
+    once made the second commit stream ZERO events while the batch
+    changelog_scan emitted them (r9 review finding #1)."""
+    for fv in ("2", "3"):
+        t = catalog.create_table(
+            f"clre_v{fv}", schema={"k": "int", "v": "int"},
+            properties={"format-version": fv},
+        )
+        t.append([{"k": 1, "v": 1}, {"k": 2, "v": 9}])
+        t.delete_where("v > 5", mode="merge-on-read")      # kills k=2
+        t.append([{"k": 3, "v": 3}, {"k": 4, "v": 9}])
+        t.delete_where("v > 5", mode="merge-on-read")      # same text: kills k=4
+        kinds = {
+            e.get("content") for e in t._current_entries() if "delete-file" in e
+        }
+        assert kinds == {"deletion-vector" if fv == "3" else "position-deletes"}
+        ev = _changelog_events(spark, t, f"clre_v{fv}_sink")
+        deletes = sorted((k, o) for k, _v, ty, o in ev if ty == "delete")
+        assert deletes == [(2, 1), (4, 3)], fv
+        inserts = sorted((k, o) for k, _v, ty, o in ev if ty == "insert")
+        assert inserts == [(1, 0), (2, 0), (3, 2), (4, 2)], fv
 
 
 def test_changelog_stream_cow_replication_converges(catalog, spark, tmp_path):
     """Continuous CDC replication over a source mutated with CoW
-    rewrites AND predicate deletes: the replica converges to the source
+    rewrites AND merge-on-read deletes: the replica converges to the source
     through the content-diff fallback, restart-safe on one checkpoint."""
     from iceberg_ruby_spark.streaming import stream_changelog_apply
 
@@ -522,7 +531,7 @@ def test_changelog_stream_cow_replication_converges(catalog, spark, tmp_path):
     assert state(rep) == state(src) == [
         (1, "v1"), (2, "V2"), (3, "v3"), (4, "v4"),
     ]
-    src.delete_where("k = 3", mode="merge-on-read")       # predicate delete
+    src.delete_where("k = 3", mode="merge-on-read")       # positional delete
     src.delete_where("k = 1")                             # CoW DELETE
     src.append([{"k": 5, "v": "v5"}])
     sync()
@@ -866,46 +875,16 @@ def test_changelog_cow_diff_distributes(catalog, spark):
     assert touched == [(2, "v2", "delete"), (102, "v102", "delete"), (202, "v202", "delete")]
 
 
-def test_changelog_refuses_nonansi_stored_predicate(catalog, spark):
-    """A stored MoR delete predicate outside the shared-ANSI subset (here
-    RLIKE, Spark-only) must refuse at planning with a typed error instead
-    of silently handing Spark-dialect text to the executor's DuckDB
-    evaluation (r9 ADVICE medium).  The batch changelog falls back to the
-    relational diff (Spark evaluates the predicate natively) and still
-    consumes the window.  IN lists are ANSI — bit-identical in DuckDB —
-    so they stream (r10: the predicate parser gained [NOT] IN)."""
-    from iceberg_ruby_spark.errors import InvalidDataError
-    from iceberg_ruby_spark.streaming.source import EngineTableStreamReader
-
-    t = catalog.create_table("clansi", schema={"k": "int", "v": "string"})
-    t.append([{"k": i, "v": f"v{i}"} for i in range(1, 5)])
-    t.delete_where("v RLIKE 'v[23]'", mode="merge-on-read")
-    head = t.refresh().current_snapshot().snapshot_id
-    r = EngineTableStreamReader({"location": t.ops.location, "mode": "changelog"})
-    with pytest.raises(InvalidDataError, match="shared-ANSI"):
-        r.partitions({"snapshot_id": None}, {"snapshot_id": head})
-    batch = sorted(
-        (row["k"], row["_change_type"]) for row in t.changelog_scan().collect()
-    )
-    assert [(k, ty) for k, ty in batch if ty == "delete"] == [(2, "delete"), (3, "delete")]
-    # ANSI IN streams: planning accepts and the events are exact
-    t2 = catalog.create_table("clansi_in", schema={"k": "int", "v": "string"})
-    t2.append([{"k": i, "v": f"v{i}"} for i in range(1, 5)])
-    t2.delete_where("k IN (2, 3)", mode="merge-on-read")
-    ev = _changelog_events(spark, t2, "clansi_in_sink")
-    assert [(k, ty) for k, _v, ty, _o in ev if ty == "delete"] == [(2, "delete"), (3, "delete")]
-
-
 def test_changelog_skip_keeps_structural_deletes_in_mixed_commit(catalog, spark):
     """skip_rewrite_commits=true over a commit window carrying BOTH a
-    predicate delete and an equality delete: the predicate is passed over
-    but the equality delete still streams (r9 ADVICE: the skip path
-    under-emitted mixed commits by returning inserts only)."""
+    positional delete and an equality delete: both still stream (r9
+    ADVICE: the skip path under-emitted mixed commits by returning
+    inserts only)."""
     from iceberg_ruby_spark.streaming.source import EngineTableStreamReader
 
     t = catalog.create_table("clmixed", schema={"k": "int", "v": "string"})
     t.append([{"k": i, "v": f"v{i}"} for i in range(1, 5)])
-    t.delete_where("k = 3", mode="merge-on-read")      # predicate delete
+    t.delete_where("k = 3", mode="merge-on-read")      # positional delete
     t.delete_by_keys([{"k": 2}], "k")                   # equality delete
     head = t.refresh().current_snapshot().snapshot_id
     meta = t.ops.load()
@@ -918,17 +897,17 @@ def test_changelog_skip_keeps_structural_deletes_in_mixed_commit(catalog, spark)
         }
     )
     # collapse the two delete commits into one planning window against the
-    # append state: added_deletes then carries the predicate AND the
+    # append state: added_deletes then carries the positional AND the
     # equality entry in a single _commit_change_slices call
     snap = t.current_snapshot()
     parts = r._commit_change_slices(
         t.ops, first, snap, 0
     )
     kinds = sorted(p.kind for p in parts)
-    assert "delete-eq" in kinds, kinds
+    assert "delete-eq" in kinds and "delete-pos" in kinds, kinds
     events = _rows(r, parts)
     deletes = sorted(e[0] for e in events if e[-3] == "delete")
-    assert deletes == [2], events  # equality delete streamed, predicate skipped
+    assert deletes == [2, 3], events
 
 
 def test_changelog_delete_planning_is_delta_based(catalog, spark):

@@ -399,7 +399,8 @@ def test_inspect_metadata_tables(catalog):
     assert all(r["file_size_in_bytes"] > 0 for r in files)
 
     dels = t.inspect.delete_entries().collect()
-    assert len(dels) == 1 and dels[0]["kind"] == "predicate"
+    assert len(dels) == 1 and dels[0]["kind"] == "position-deletes"
+    assert dels[0]["scope_files"] == 1
 
     parts = {r["partition"]["k"]: r["record_count"] for r in t.inspect.partitions().collect()}
     assert parts == {"0": 11, "1": 10, "2": 10}

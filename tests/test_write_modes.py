@@ -64,16 +64,41 @@ def test_delete_mode_merge_on_read_resolves_dv_on_v3(catalog):
     assert sorted(r["k"] for r in t.to_a()) == list(range(8))
 
 
-def test_delete_mode_predicate_flavor(catalog):
-    t = catalog.create_table(
-        "d4",
-        schema={"k": "int"},
-        properties={"write.delete.mode": "merge-on-read-predicate"},
-    )
-    t.append([{"k": i} for i in range(10)])
-    assert t.delete_where("k >= 8") == 2
-    assert any("delete-predicate" in e for e in t._current_entries())
-    assert sorted(r["k"] for r in t.to_a()) == list(range(8))
+@pytest.mark.parametrize("fv", ["2", "3"])
+@pytest.mark.parametrize("op", ["delete", "update"])
+def test_mor_argument_and_property_write_same_kind(catalog, op, fv):
+    """``merge-on-read`` maps through ONE resolver whether it comes from
+    the ``mode=`` argument or the ``write.<op>.mode`` property: the same
+    spec delete kind — position deletes on v2, deletion vectors on v3 —
+    and no data file rewritten.  The retired predicate flavor is an
+    unknown mode."""
+
+    def run(t, **kw):
+        if op == "delete":
+            return t.delete_where("k >= 8", **kw)
+        return t.update_where({"v": "'u'"}, "k >= 8", **kw)
+
+    kinds = []
+    for src in ("arg", "prop"):
+        props = {"format-version": fv}
+        if src == "prop":
+            props[f"write.{op}.mode"] = "merge-on-read"
+        t = catalog.create_table(
+            f"mor_{op}_{src}_v{fv}",
+            schema={"k": "int", "v": "string"},
+            properties=props,
+        )
+        t.append([{"k": i, "v": "a"} for i in range(10)])
+        before = _data_paths(t)
+        assert run(t, **({"mode": "merge-on-read"} if src == "arg" else {})) == 2
+        assert set(before) <= set(_data_paths(t))
+        kinds.append(
+            {e["content"] for e in t._current_entries() if "delete-file" in e}
+        )
+    want = {"deletion-vector" if fv == "3" else "position-deletes"}
+    assert kinds == [want, want]
+    with pytest.raises(InvalidDataError, match=f"unknown {op} mode"):
+        run(t, mode="merge-on-read-predicate")
 
 
 def test_delete_mode_explicit_arg_overrides_property(catalog):
@@ -271,7 +296,7 @@ def test_mor_update_never_resurrects_dead_rows(catalog):
         properties={"format-version": "3", "write.update.mode": "merge-on-read"},
     )
     t3.append([{"k": i} for i in range(6)])
-    t3.delete_where("k = 5", mode="merge-on-read")   # predicate delete
+    t3.delete_where("k = 5", mode="merge-on-read")   # DV delete
     assert t3.update_where({"k": "k + 100"}, "k >= 4") == 1
     assert sorted(r["k"] for r in t3.to_a()) == [0, 1, 2, 3, 104]
 
