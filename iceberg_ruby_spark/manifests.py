@@ -54,9 +54,12 @@ engine is honest about what stays internal):
   Puffin-footer discovery.
 - Engine-internal state a spec reader has no slot for — per-entry
   schema-id and spec-id, location-relative paths (tables survive
-  ``rename_table``), applies-to file scoping, equality column names —
-  rides in one app metadata key (``x-irs``) per file, which spec readers
-  ignore by contract.  (Data-file parquet footers DO carry Iceberg
+  ``rename_table``), a positional delete's ``applies-to`` file list, an
+  equality delete's column names and ``key-bounds`` pruning hint — rides
+  in one app metadata key (``x-irs``) per file, which spec readers
+  ignore by contract.  None of it changes what a row's visibility is: an
+  equality delete applies by the spec's sequence rule alone, exactly as
+  a spec reader applies it.  (Data-file parquet footers DO carry Iceberg
   field-ids — ``parquet.field.id`` written via Spark's fieldId support,
   tests/test_parquet_field_ids.py — so spec readers column-map renamed
   tables without the extras.)
@@ -919,19 +922,17 @@ def write_avro_manifests(
                 for k in ("referenced-data-file", "content-offset", "content-size"):
                     if e.get(k) is not None:
                         ext[k] = e[k]
-            if e.get("applies-to") is not None:
-                ext["applies-to"] = [ops._rel(ops._abs(p)) for p in e["applies-to"]]
-            if e.get("seq-scoped"):
-                # sequence-scoped equality delete (streaming upsert): scope
-                # is "data sequence strictly below dseq" — no path list to
-                # store; the optional key-bounds hint rides along (plain
-                # JSON-literal values by construction)
-                ext["seq-scoped"] = True
-                if e.get("key-bounds") is not None:
-                    ext["key-bounds"] = e["key-bounds"]
             if is_eq:
+                # an equality delete's scope is the spec's "data sequence
+                # strictly below dseq" — no path list to store; the
+                # optional key-bounds hint rides along (plain JSON-literal
+                # values by construction)
                 ext["equality-ids"] = e.get("equality-ids")
                 ext["equality-cols"] = e.get("equality-cols")
+                if e.get("key-bounds") is not None:
+                    ext["key-bounds"] = e["key-bounds"]
+            elif e.get("applies-to") is not None:
+                ext["applies-to"] = [ops._rel(ops._abs(p)) for p in e["applies-to"]]
             extras.append(ext)
         mpath = os.path.join(ops.metadata_dir, f"{uid}-m{m_idx}.avro")
         m_idx += 1
@@ -1180,12 +1181,20 @@ def read_one_avro_manifest(ops: Any, mpath: str) -> list[dict[str, Any]]:
                     "equality-deletes" if df["content"] == 2 else "position-deletes",
                 ),
             }
-            if ext.get("applies-to") is not None:
-                e["applies-to"] = [ops._abs(p) for p in ext["applies-to"]]
-            if ext.get("seq-scoped"):
-                e["seq-scoped"] = True
+            if df["content"] == 2:
+                # Equality deletes apply by the sequence rule alone.  An
+                # older engine wrote verified deletes (delete_by_keys,
+                # merge-on-read merge_into) with an ``applies-to`` file
+                # list; it is dropped here and the entry read under the
+                # sequence rule, which is sound: the verified write's hit
+                # scan read EVERY live row of its base snapshot, so every
+                # live row matching a key sat in a listed file.  The extra
+                # files the sequence rule reaches held no live match at
+                # that snapshot, and rows already dead stay dead.
                 if ext.get("key-bounds") is not None:
                     e["key-bounds"] = ext["key-bounds"]
+            elif ext.get("applies-to") is not None:
+                e["applies-to"] = [ops._abs(p) for p in ext["applies-to"]]
             if ext.get("deleted-records") is not None:
                 e["deleted-records"] = ext["deleted-records"]
             if ext.get("base-location") is not None:

@@ -32,7 +32,7 @@ from iceberg_ruby_spark.plans import tpch  # noqa: E402,F401
 #     tier-0 head, VERDICT r12 verbatim), the two queries NEW in r13
 #     (engine_partition_rollup, multimodal_mp4_frames), and every query
 #     whose CODE or ORACLE changed in r13 — stream_upsert_sink (the
-#     seq-scoped fast-append commit rewrite), the changelog/CDC family
+#     sequence-rule fast-append commit rewrite), the changelog/CDC family
 #     (seq-scope resolution in slices planning + the merged eq-delete
 #     scan join), compact/maintain (_live_preds signature + seq-scope
 #     drop rule), the MoR-merge queries (eq loop restructure), the
@@ -74,7 +74,7 @@ _NEVER_DRIVER_CHECKED = [
     # scan/pair operators (value-identical expression, but the plan
     # changed — re-verify every consumer)
     "embedding_cosine_topk", "embedding_ann_lsh", "dedup_embedding_cosine",
-    # changed in r13: seq-scoped equality deletes + fast-append upsert
+    # changed in r13: sequence-rule equality deletes + fast-append upsert
     # commit (sink.py rewritten; also benched from r13)
     "stream_upsert_sink",
     # changed in r13: seq-scope resolution in changelog planning + the

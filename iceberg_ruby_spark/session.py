@@ -27,6 +27,23 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """Default ``spark.driver.memory``: half the host's ``MemTotal``,
+    capped at 24g.  A fixed 24g heap outgrew hosts with less RAM than
+    that, and the kernel OOM-killed the driver JVM without Spark ever
+    raising.  24g when ``meminfo`` is unreadable.
+    ``SPARK_GRAFT_DRIVER_MEM`` overrides the default in :func:`get_spark`."""
+    try:
+        with open(meminfo) as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    mb = int(line.split()[1]) // 2048  # kB → half, in MB
+                    return "24g" if mb >= 24 * 1024 else f"{mb}m"
+    except (OSError, ValueError, IndexError):
+        pass
+    return "24g"
+
+
 def get_spark(app_name: str = "iceberg_ruby_spark", cpus: Optional[int] = None) -> SparkSession:
     """Create (or reuse) the engine SparkSession."""
     n = cpus or default_parallelism()
@@ -59,7 +76,10 @@ def get_spark(app_name: str = "iceberg_ruby_spark", cpus: Optional[int] = None) 
                 "SPARK_GRAFT_BROADCAST_THRESHOLD", str(10 * 1024 * 1024)
             ),
         )
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.ansi.enabled", "false")
         # driver testdata events.parquet uses INT64 TIMESTAMP(NANOS); Spark

@@ -12,8 +12,10 @@ converges to the same replica state), so a crash between a batch's apply
 and its checkpoint commit is repaired by the replayed batch.
 
 100 TB shape: each micro-batch is O(changed rows) on both sides — the
-source side plans from per-commit manifest diffs scoped by the delete
-entries' ``applies-to`` lists (never a table scan), and the apply side
+source side plans from per-commit manifest diffs, each delete scoped
+from metadata alone (an equality delete by the spec's sequence rule and
+its key-bounds hint, a positional delete or deletion vector by the data
+files it names) — never a table scan — and the apply side
 routes through equality deletes + keyed merge (never a replica rewrite
 when the replica's write modes are merge-on-read).
 """

@@ -459,9 +459,9 @@ class EngineTableStreamWriter(DataSourceStreamArrowWriter):
         tuple within this task (batch order), write the distinct key
         tuples as ONE equality-delete parquet file (field ids stamped,
         same as the batch ``delete_by_keys`` key files), and record the
-        keys' per-column [min, max] + null presence so the driver can
-        bounds-prune the delete's ``applies-to`` file scope instead of
-        naming every live file."""
+        keys' per-column [min, max] + null presence: the delete entry's
+        ``key-bounds`` hint, which lets planners skip data files whose
+        bounds cannot hold a deleted key."""
         import numpy as np
         import pyarrow as pa
         import pyarrow.compute as pc
@@ -594,18 +594,18 @@ class EngineTableStreamWriter(DataSourceStreamArrowWriter):
         """ONE snapshot per micro-batch: an equality delete on the batch's
         keys + the batch's data files, committed as a fast-append DELTA —
         Iceberg's Flink upsert sink shape (equality-delete + append per
-        checkpoint).  The delete is SEQUENCE-scoped (the Iceberg spec's
-        scan-planning rule: an equality delete applies to data files whose
+        checkpoint).  Like every equality delete, it follows the Iceberg
+        spec's scan-planning rule (an equality delete applies to data files whose
         data sequence number is strictly below the delete's own — the form
         the reference's scan stack consumes via iceberg-rust,
         ``ext/iceberg/src/scan.rs:41``), so the batch's own rows survive
         without naming a single file.  Per-batch commit metadata is
-        O(batch): no live-entry read, no applies-to path list — flat in
+        O(batch): no live-entry read, no file list — flat in
         table size (r13; this was VERDICT r12's one ``weak``).  Readers
         prune with the per-entry ``key-bounds`` hint instead of a stored
         path list, so a partition-aligned CDC feed still scopes each
         delete's planning to the overlapping files."""
-        from iceberg_ruby_spark.table import _plain_bound_literal as _lit
+        from iceberg_ruby_spark.table import _equality_delete_entry
 
         head = (
             table.snapshot_for_ref(self.branch)
@@ -627,33 +627,18 @@ class EngineTableStreamWriter(DataSourceStreamArrowWriter):
                 except OSError:
                     pass
         else:
-            for d in dels:
-                entry = {
-                    "delete-file": d["path"],
-                    "seq-scoped": True,
-                    "deleted-records": d["count"],
-                    "content": "equality-deletes",
-                    "equality-ids": list(self._eq_ids),
-                    "equality-cols": list(self._eq_cols),
-                    "spec-id": self._spec_id,
-                }
-                lo = {
-                    c: w
-                    for c, v in (d.get("key_lower") or {}).items()
-                    if (w := _lit(v)) is not None
-                }
-                hi = {
-                    c: w
-                    for c, v in (d.get("key_upper") or {}).items()
-                    if (w := _lit(v)) is not None
-                }
-                kb = {c: (lo[c], hi[c]) for c in lo if c in hi}
-                if kb:
-                    entry["key-bounds"] = {
-                        "lower": {c: v[0] for c, v in kb.items()},
-                        "upper": {c: v[1] for c, v in kb.items()},
-                    }
-                delete_entries.append(entry)
+            delete_entries = [
+                _equality_delete_entry(
+                    d["path"],
+                    d["count"],
+                    self._eq_ids,
+                    self._eq_cols,
+                    self._spec_id,
+                    d.get("key_lower"),
+                    d.get("key_upper"),
+                )
+                for d in dels
+            ]
         if not data_entries and not delete_entries:
             return
         branch = self.branch if self.branch else "main"

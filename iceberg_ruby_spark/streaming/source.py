@@ -54,11 +54,13 @@ kinds — every merge-on-read mutation flavor: append commits emit
 inserts; EQUALITY-delete commits emit the dead rows by key match;
 POSITIONAL-delete and DELETION-VECTOR commits emit the rows at the
 recorded coordinates (DV replacement emits only new−old positions).
-Delete candidates come from each delete entry's own ``applies-to`` /
-``referenced-data-file`` scope — never a table scan — and every slice is
-masked against ALL prior deletes on its file (prior key sets, prior
-positions, the replaced DV), so a row dies in the changelog exactly
-once.  ``replace`` commits (compaction) emit nothing — physical churn
+Delete candidates come from metadata alone — an equality delete's
+sequence rule (parent-state files of strictly lower data sequence,
+key-bounds pruned), a positional delete's ``applies-to`` files, a
+deletion vector's ``referenced-data-file`` — never a table scan — and
+every slice is masked against ALL prior deletes on its file (prior key
+sets, prior positions, the replaced DV), so a row dies in the changelog
+exactly once.  ``replace`` commits (compaction) emit nothing — physical churn
 cancels logically.  Copy-on-write rewrites — the commit kind with no
 structural row form — fall back PER COMMIT to a content-diff slice
 (r9): the executor reads the commit's before/after file states under
@@ -109,8 +111,9 @@ def _entry_paths(entries: list[dict[str, Any]]) -> list[str]:
 
 
 def _touched_files(e: dict[str, Any]) -> list[str]:
-    """Data files a delete entry is scoped to (its ``applies-to`` list, or
-    the single ``referenced-data-file`` for a deletion vector)."""
+    """Data files a positional or DV delete entry is scoped to (its
+    ``applies-to`` list, or the single ``referenced-data-file`` for a
+    deletion vector); equality deletes resolve by sequence instead."""
     if e.get("content") == "deletion-vector":
         return [e["referenced-data-file"]]
     return list(e.get("applies-to") or [])
@@ -706,8 +709,8 @@ class EngineTableStreamReader(DataSourceStreamReader):
         """Per-commit structural change slices over the window — metadata
         reads only.  Scope (documented in the module docstring): append
         commits emit inserts; merge-on-read EQUALITY-delete commits emit
-        the dead rows (candidates come from the entry's own ``applies-to``
-        scope, masked against prior equality deletes so already-dead rows
+        the dead rows (candidates are the parent state's files of strictly
+        lower sequence, masked against prior deletes so already-dead rows
         are not re-emitted); positional and DV commits emit the rows at
         their coordinates the same way; ``replace`` commits (compaction)
         emit nothing — physical churn without logical change;
@@ -934,23 +937,22 @@ class EngineTableStreamReader(DataSourceStreamReader):
             }
         )
 
-    def _make_priors_for(self, ops, prior_del_entries, prior_data=None):
+    def _make_priors_for(self, ops, prior_del_entries, prior_data):
         """Closure computing the deletes already applied to one data file
         in the PARENT state — the mask that keeps already-dead rows out of
         a commit's delete events: prior equality key files, positional
         files and the replaced DV.  ``prior_data`` (the parent state's
-        DATA entries) resolves SEQUENCE-scoped prior equality deletes
-        (streaming-upsert commits): whether one applies to a file depends
-        on the file's data sequence number, which only its manifest entry
-        knows; a file it cannot resolve raises :class:`_NeedsContentDiff`,
-        the content-diff fallback."""
+        DATA entries) resolves prior equality deletes: whether one applies
+        to a file depends on the file's data sequence number, which only
+        its manifest entry knows; a file it cannot resolve raises
+        :class:`_NeedsContentDiff`, the content-diff fallback."""
         from iceberg_ruby_spark.table import (
             _compile_seq_scope,
             _seq_scope_applies,
         )
 
         entry_by_path = {
-            ops._abs(e["path"]): e for e in (prior_data or []) if "path" in e
+            ops._abs(e["path"]): e for e in prior_data if "path" in e
         }
         # precompile per-prior state ONCE — the closure runs per touched
         # file, and rebuilding key-bounds trees / re-absolutizing scope
@@ -958,7 +960,7 @@ class EngineTableStreamReader(DataSourceStreamReader):
         # chain's planning quadratic in commit count
         pre: list[tuple[str, dict, Any]] = []
         for pe in prior_del_entries:
-            if pe.get("seq-scoped"):
+            if pe.get("content") == "equality-deletes":
                 pre.append(("seq", pe, _compile_seq_scope(pe)))
             else:
                 pre.append(
@@ -1001,7 +1003,7 @@ class EngineTableStreamReader(DataSourceStreamReader):
 
     def _delete_slices(
         self, ops, added_deletes, prior_del_entries, slices, sid, ordinal,
-        entry_bases, prior_data=None,
+        entry_bases, prior_data,
     ) -> list[InputPartition]:
         from iceberg_ruby_spark.table import _seq_scope_touched
 
@@ -1026,19 +1028,15 @@ class EngineTableStreamReader(DataSourceStreamReader):
                     "pass over this commit"
                 )
             key_cols = list(e.get("equality-cols") or [])
-            if content == "equality-deletes" and not key_cols:
-                raise ValueError(
-                    f"equality delete in commit {sid} records no key "
-                    "columns; cannot stream its changelog"
-                )
-            if e.get("seq-scoped"):
-                # sequence-scoped equality delete: candidates are the
-                # PARENT state's data files with strictly lower sequence,
-                # key-bounds pruned — resolved from metadata in hand, the
-                # same O(changed + overlapping files) planning the
-                # applies-to form had
-                if prior_data is None:
-                    raise _NeedsContentDiff(e.get("delete-file"))
+            if content == "equality-deletes":
+                if not key_cols:
+                    raise ValueError(
+                        f"equality delete in commit {sid} records no key "
+                        "columns; cannot stream its changelog"
+                    )
+                # candidates are the PARENT state's data files with
+                # strictly lower sequence, key-bounds pruned — resolved
+                # from metadata in hand, O(changed + overlapping files)
                 touched = [
                     ops._abs(de["path"])
                     for de in _seq_scope_touched(
@@ -1123,7 +1121,7 @@ class EngineTableStreamReader(DataSourceStreamReader):
             if e.get("content") == "deletion-vector":
                 touched.add(ops._abs(e["referenced-data-file"]))
                 continue
-            if e.get("seq-scoped"):
+            if e.get("content") == "equality-deletes":
                 # ONE compile per delete, not per (delete, file) pair
                 scope = _compile_seq_scope(e)
                 touched |= {
@@ -1152,14 +1150,11 @@ class EngineTableStreamReader(DataSourceStreamReader):
             # would otherwise rebuild the seq-scope tree / abs-path set per
             # (path, entry) pair
             compiled = {
-                id(e): _compile_seq_scope(e) if e.get("seq-scoped") else None
-                for e in mor.values()
-            }
-            ap_abs = {
                 id(e): (
-                    {ops._abs(p) for p in e["applies-to"]}
-                    if e.get("applies-to") is not None
-                    else None
+                    _compile_seq_scope(e)
+                    if e.get("content") == "equality-deletes"
+                    else None if e.get("applies-to") is None
+                    else {ops._abs(p) for p in e["applies-to"]}
                 )
                 for e in mor.values()
             }
@@ -1178,24 +1173,17 @@ class EngineTableStreamReader(DataSourceStreamReader):
                                 )
                             )
                         continue
-                    if e.get("seq-scoped"):
-                        de = data.get(path_abs)
-                        if de is None or not _seq_scope_applies(
-                            compiled[id(e)], de
-                        ):
-                            continue
-                    else:
-                        ap = ap_abs[id(e)]
-                        if ap is not None and path_abs not in ap:
-                            continue
+                    scope = compiled[id(e)]
                     if content == "equality-deletes":
-                        eq.append(
-                            (
-                                ops._abs(e["delete-file"]),
-                                list(e.get("equality-cols") or []),
+                        de = data.get(path_abs)
+                        if de is not None and _seq_scope_applies(scope, de):
+                            eq.append(
+                                (
+                                    ops._abs(e["delete-file"]),
+                                    list(e.get("equality-cols") or []),
+                                )
                             )
-                        )
-                    elif content == "position-deletes":
+                    elif scope is None or path_abs in scope:
                         pos.append(ops._abs(e["delete-file"]))
                 specs.append({"path": path_abs, "eq": eq, "pos": pos, "dvs": dvs})
             return specs

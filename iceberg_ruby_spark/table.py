@@ -2323,23 +2323,17 @@ class Table:
         cur_data, cur_mor = split(cur_entries)
         mor_changed = set(prev_mor) ^ set(cur_mor)
         # a common file is "touched" when any added/removed MoR entry's
-        # scope includes it (applies-to None = all files at commit time;
-        # seq-scoped = strictly-lower data sequence, key-bounds pruned)
+        # scope includes it (equality: strictly-lower data sequence,
+        # key-bounds pruned; positional / DV: its applies-to files)
         touched = set()
         cand = {**prev_data, **cur_data}
         for k in mor_changed:
             e = prev_mor.get(k) or cur_mor[k]
-            if e.get("seq-scoped"):
-                # compile the scope ONCE per delete, not per (delete, file)
-                scope = _compile_seq_scope(e)
-                touched |= {
-                    p
-                    for p, de in cand.items()
-                    if _seq_scope_applies(scope, de)
-                }
+            if e.get("content") == "equality-deletes":
+                touched |= {de["path"] for de in _seq_scope_touched(e, cand.values())}
                 continue
             ap = e.get("applies-to")
-            touched |= set(ap) if ap is not None else set(prev_data) | set(cur_data)
+            touched |= set(ap) if ap is not None else set(cand)
         common_quiet = {
             p for p in set(prev_data) & set(cur_data) if p not in touched
         }
@@ -2348,7 +2342,7 @@ class Table:
         if not prev_side and not cur_side:
             return None
         # each side reads under ITS snapshot's full delete-entry view (MoR
-        # entries scoped to excluded files filter nothing — applies-to)
+        # entries scoped to excluded files filter nothing)
         cols = [f.name for f in schema.fields]
         before = self._read_entries(prev_side + list(prev_mor.values()), schema=schema).select(*cols)
         after = self._read_entries(cur_side + list(cur_mor.values()), schema=schema).select(*cols)
@@ -3500,10 +3494,11 @@ class Table:
         their name-at-write, added columns backfill ``initial_default``/null
         — then unioned.  No data rewrite on evolution, ever."""
         schema = schema or self.current_schema()
-        # merge-on-read deletes, scoped to the files they matched at delete
-        # time (rewritten files get new paths and fall outside): positional
-        # and DV entries anti-join the spec's (file_path, pos) pairs,
-        # equality entries anti-join their key tuples
+        # merge-on-read deletes: positional and DV entries anti-join the
+        # spec's (file_path, pos) pairs (rewritten files get new paths and
+        # fall outside), equality entries anti-join their key tuples on
+        # files of strictly lower data sequence (rewritten files take the
+        # rewrite's higher sequence)
         dfiles = [e for e in entries if "delete-file" in e]
         dv_files = [e for e in dfiles if e.get("content") == "deletion-vector"]
         pos_files = [
@@ -3722,20 +3717,19 @@ class Table:
                 abs_fp.alias(path_name), F.col("pos").alias(pos_name)
             )
             out = out.join(F.broadcast(del_df), [path_name, pos_name], "left_anti")
-        seq_eqs = [e for e in eq_files if e.get("seq-scoped")]
-        if seq_eqs:
-            # SEQUENCE-scoped equality deletes (streaming upsert commits,
-            # the Iceberg spec's scan-planning rule: a delete applies to
-            # rows of data files with STRICTLY lower data sequence).  Two
-            # structural choices keep a long upsert chain readable:
+        if eq_files:
+            # Equality deletes follow the Iceberg spec's scan-planning
+            # rule: a delete applies to rows of data files with STRICTLY
+            # lower data sequence.  Two structural choices keep a long
+            # delete chain readable:
             #
             # 1. Each row's data-file sequence comes from ONE broadcast
             #    (path → data-sequence-number) relation built from the
             #    driver's in-hand manifest entries — metadata-sized, never
             #    a per-delete path list in the plan.  Files without a
             #    recorded sequence predate seq stamping (strictly older
-            #    than any seq-scoped delete): -1.
-            # 2. All such deletes sharing a key-column set MERGE into ONE
+            #    than any equality delete): -1.
+            # 2. All deletes sharing a key-column set MERGE into ONE
             #    broadcast anti-join: union the key files, each key row
             #    tagged with its delete's sequence, and a row is dead iff
             #    some key row matches it with a HIGHER sequence than its
@@ -3772,10 +3766,10 @@ class Table:
             ).drop("__mor_sf")
             row_seq = F.coalesce(F.col("__mor_seq"), F.lit(-1))
             groups: dict[tuple, list[dict[str, Any]]] = {}
-            for e in seq_eqs:
+            for e in eq_files:
                 if e.get("data-sequence-number") is None:
                     raise InvalidDataError(
-                        "sequence-scoped equality delete entry carries no "
+                        "equality delete entry carries no "
                         f"data-sequence-number: {e.get('delete-file')!r}"
                     )
                 groups.setdefault(tuple(e["equality-cols"]), []).append(e)
@@ -3821,24 +3815,6 @@ class Table:
                 for j, c in enumerate(cols_key):
                     dead = dead & out[c].eqNullSafe(keys_df[f"__eqsk{gi}_{j}"])
                 out = out.join(F.broadcast(keys_df), dead, "left_anti")
-        for i, e in enumerate(eq_files):
-            if e.get("seq-scoped"):
-                continue  # merged into the grouped pass above
-            # equality delete: a row dies when its key tuple appears in the
-            # delete file (null-safe equality, Iceberg's semantics), scoped
-            # to the files live at delete time — one broadcast anti-join,
-            # duplicate key rows are harmless to it
-            eq_cols = e["equality-cols"]
-            dels = _memo_read_parquet(
-                self.spark, [self.ops._abs(e["delete-file"])]
-            ).select(*[F.col(c).alias(f"__eqk{i}_{j}") for j, c in enumerate(eq_cols)])
-            applies = e.get("applies-to")
-            dead = (
-                F.lit(True) if applies is None else F.col(path_name).isin(list(applies))
-            )
-            for j, c in enumerate(eq_cols):
-                dead = dead & out[c].eqNullSafe(dels[f"__eqk{i}_{j}"])
-            out = out.join(F.broadcast(dels), dead, "left_anti")
         if "__mor_seq" in out.columns:
             out = out.drop("__mor_seq")
         if pos_col is None and "__mor_pos" in out.columns:
@@ -3858,26 +3834,26 @@ class Table:
 
     @staticmethod
     def _live_deletes(
-        dels: list[dict[str, Any]],
-        kept_paths: set[str],
-        kept_entries: Optional[list[dict[str, Any]]] = None,
+        dels: list[dict[str, Any]], kept_entries: list[dict[str, Any]]
     ) -> list[dict[str, Any]]:
-        """Delete entries still needed after a rewrite: scope each to the
-        files that remain; drop it once no scoped file survives.  A
-        sequence-scoped equality delete survives as long as any kept data
-        file's sequence is still below its own (rewritten files take the
-        rewrite commit's HIGHER sequence, so the delete never replays onto
-        them — the rewrite already materialized it)."""
+        """Delete entries still needed after a rewrite that keeps
+        ``kept_entries``.  A positional or DV entry is scoped to the files
+        that remain and dropped once none survives.  An equality delete
+        survives as long as any kept data file's sequence is still below
+        its own (rewritten files take the rewrite commit's HIGHER
+        sequence, so the delete never replays onto them — the rewrite
+        already materialized it)."""
+        kept_data = [e for e in kept_entries if "path" in e]
+        kept_paths = {e["path"] for e in kept_data}
         out = []
-        kept_data = [e for e in (kept_entries or []) if "path" in e]
         for e in dels:
-            if e.get("seq-scoped"):
-                if kept_entries is None or _seq_scope_touched(e, kept_data):
+            if e.get("content") == "equality-deletes":
+                if _seq_scope_touched(e, kept_data):
                     out.append(e)
                 continue
             ap = e.get("applies-to")
             if ap is None:
-                out.append(e)
+                out.append(e)  # no recorded file scope: keep it whole
                 continue
             ap2 = [p for p in ap if p in kept_paths]
             if ap2:
@@ -4079,26 +4055,36 @@ class Table:
                         if "path" in b and b["path"] in removed_here
                     ]
                     for e in concurrent_pathless:
-                        if e.get("seq-scoped"):
-                            # a concurrent seq-scoped equality delete that
-                            # applies to a file this rewrite removed would
-                            # resurrect its dead rows (our rewritten files
-                            # take a HIGHER sequence the delete no longer
-                            # covers) — same hazard as applies-to overlap
-                            if _seq_scope_touched(e, removed_base_entries):
-                                raise InvalidDataError(
-                                    "commit conflict: a concurrent merge-on-"
-                                    "read delete applies to files this "
-                                    "operation rewrote; retry the operation "
-                                    "on fresh state"
-                                )
-                            continue
-                        ap = e.get("applies-to")
-                        if ap is not None and set(ap) & removed_here:
+                        # a concurrent equality delete that applies to a
+                        # file this rewrite removed would resurrect its
+                        # dead rows (our rewritten files take a HIGHER
+                        # sequence the delete no longer covers); likewise
+                        # a positional / DV delete naming such a file
+                        if (
+                            _seq_scope_touched(e, removed_base_entries)
+                            if e.get("content") == "equality-deletes"
+                            else set(e.get("applies-to") or ()) & removed_here
+                        ):
                             raise InvalidDataError(
                                 "commit conflict: a concurrent merge-on-read "
                                 "delete applies to files this operation "
                                 "rewrote; retry the operation on fresh state"
+                            )
+                    # a NEW equality delete of this commit would also kill
+                    # rows a concurrent append added (they carry a lower
+                    # sequence than this commit) that its hit count never
+                    # saw — Iceberg's RowDelta.validateNoConflictingDataFiles
+                    for e in entries:
+                        if (
+                            e.get("content") == "equality-deletes"
+                            and _entry_key(e) not in base_keys
+                            and _seq_scope_touched(e, concurrent_added)
+                        ):
+                            raise InvalidDataError(
+                                "commit conflict: a concurrent append added "
+                                "files this operation's equality delete "
+                                "applies to; retry the operation on fresh "
+                                "state"
                             )
                     # v3 invariant guard: carrying a concurrent DELETION
                     # VECTOR for a data file THIS commit also wrote a
@@ -4928,10 +4914,9 @@ class Table:
         new_entries = self._write_data_dir(survivors, lineage_cols=True)
         for e in new_entries:
             e["materialized-lineage"] = True
-        kept_paths = {e["path"] for e in keep_entries if "path" in e}
         self._commit_snapshot(
             "delete",
-            keep_entries + new_entries + self._live_deletes(dels, kept_paths, keep_entries),
+            keep_entries + new_entries + self._live_deletes(dels, keep_entries),
             {"deleted-records": deleted},
             base_snapshot_id=self._branch_head_id(branch),
             branch=target,
@@ -5242,35 +5227,40 @@ class Table:
         written as parquet and committed as a delete-file entry with the
         key columns' field ids; any row matching a key tuple on ``on`` (null
         key values match null, Iceberg's IS NOT DISTINCT FROM semantics) is
-        dead on read.  O(|keys|) write, no data-file rewrite — the
-        streaming-upsert shape (a CDC feed deletes by primary key without
-        knowing file positions).
+        dead on read.  Like every equality delete, it applies by the
+        Iceberg spec's sequence rule: to data files whose data sequence
+        number is strictly lower than its own, so rows appended LATER are
+        untouched; each key file's key range rides along as a
+        ``key-bounds`` pruning hint.  O(|keys|) write, no data-file
+        rewrite — the streaming-upsert shape (a CDC feed deletes by
+        primary key without knowing file positions).  Returns the number
+        of live rows the delete kills, found by one hit-counting scan;
+        nothing is committed when it finds none.
 
         ``scope`` (optional predicate string, same grammar as
         ``compact(where=...)``) is the caller's promise that every row
         matching the keys lives in files whose stats bounds can satisfy
-        it — the hit-finding scan then reads ONLY those files (manifest
-        bounds pruning, conservative), and the delete entry's
-        ``applies-to`` shrinks with it.  At 100 TB a CDC feed deleting
+        it — the hit-counting scan then reads ONLY those files (manifest
+        bounds pruning, conservative).  At 100 TB a CDC feed deleting
         keys from the last day's partitions scans the last day, not the
-        table.
+        table.  The scope does not narrow the delete itself: a FALSE
+        scope still kills every matching row, but the returned count
+        leaves out the rows outside it (and a call that finds no hit
+        inside the scope commits nothing).
 
-        A FALSE scope would silently miss rows outside it, so the call
-        POST-CHECKS the promise at stats level (r9 ADVICE): if any
-        scope-excluded file's bounds on the key columns overlap the key
-        set's value range, the promise is unverifiable and the call
-        raises rather than maybe-miss a delete.  ``scope_is_hint=True``
+        So the call POST-CHECKS the promise at stats level (r9 ADVICE):
+        if any scope-excluded file's bounds on the key columns overlap
+        the key set's value range, the promise is unverifiable and the
+        call raises rather than maybe-undercount.  ``scope_is_hint=True``
         opts back into unchecked hint semantics (the caller knows the
         overlap is physically vacuous — e.g. keys unique per partition).
-        The check is metadata-only: one tiny aggregate over the key frame
-        plus bounds arithmetic, no data files opened.
+        The check is metadata-only: the key files' footer ranges (their
+        ``key-bounds``) against the excluded files' manifest bounds.
 
         ``verify_hits=False`` (r13) is the BLIND CDC delete: skip the
-        hit-finding scan entirely and commit one SEQUENCE-scoped
-        equality delete (the Iceberg spec's scan-planning rule — it
-        applies to every data file with a strictly lower data sequence,
-        so rows appended LATER are untouched) with per-file key-bounds
-        hints, as a fast-append delta.  Zero table reads, O(|keys|)
+        hit-counting scan entirely and commit the same equality delete
+        as a fast-append delta, its key files range-partitioned so each
+        carries a tight ``key-bounds`` hint.  Zero table reads, O(|keys|)
         total — the shape a CDC feed deleting primary keys against a
         100 TB table needs when it does not care how many rows died.
         Returns the DISTINCT KEY count (an upper bound on dead rows),
@@ -5279,13 +5269,10 @@ class Table:
         self._check_writable()
         cols = [on] if isinstance(on, str) else list(on)
         schema = self.current_schema()
-        field_ids = []
         for c in cols:
-            f = schema.field_by_name(c)
-            if f is None:
+            if schema.field_by_name(c) is None:
                 raise InvalidDataError(f"unknown equality column: {c}")
-            field_ids.append(f.field_id)
-        keys_df = (
+        keys_df = self._stamped_keys(
             keys
             if isinstance(keys, DataFrame)
             else self.spark.createDataFrame(
@@ -5293,22 +5280,12 @@ class Table:
                 ice_t.Schema(
                     fields=[schema.field_by_name(c) for c in cols]
                 ).to_spark(),
-            )
+            ),
+            cols,
         )
-        # spec equality delete files carry the key columns with their
-        # Iceberg field ids stamped in the parquet footer
-        self.spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
-        keys_df = keys_df.select(
-            *[
-                F.col(c)
-                .cast(schema.field_by_name(c).to_spark().dataType)
-                .alias(c, metadata={"parquet.field.id": schema.field_by_name(c).field_id})
-                for c in cols
-            ]
-        ).distinct()
         if not verify_hits:
-            # BLIND CDC delete: no scan, one fast-append seq-scoped
-            # equality delete — O(|keys|) total work at any table size
+            # BLIND CDC delete: no scan, one fast-append equality delete —
+            # O(|keys|) total work at any table size
             if scope is not None:
                 raise InvalidDataError(
                     "delete_by_keys(verify_hits=False) performs no scan, "
@@ -5322,9 +5299,7 @@ class Table:
                 head = self.current_snapshot()
             if head is None or head.summary.get("total-data-files") == "0":
                 return 0  # nothing the delete could apply to
-            del_dir = os.path.join(
-                self.ops.data_dir, f"deletes-{uuid_mod.uuid4().hex[:12]}"
-            )
+            del_dir = self._new_delete_dir()
             # range-partition the key files so each carries TIGHT disjoint
             # key-bounds — after .distinct() the keys are hash-partitioned
             # and every output file would span ~the global key range,
@@ -5332,44 +5307,8 @@ class Table:
             keys_df.repartitionByRange(*cols).sortWithinPartitions(
                 *cols
             ).write.parquet(del_dir)
-            written = _read_back_parquet(self.spark, del_dir, keys_df.schema)
-            aggs = [F.count(F.lit(1)).alias("__n")]
-            for j, c in enumerate(cols):
-                aggs += [
-                    F.min(c).alias(f"__lo{j}"),
-                    F.max(c).alias(f"__hi{j}"),
-                    F.sum(F.col(c).isNull().cast("int")).alias(f"__nn{j}"),
-                ]
-            per_file = (
-                written.groupBy(F.col("_metadata.file_path").alias("__part"))
-                .agg(*aggs)
-                .collect()
-            )
-            n_keys = 0
-            delete_entries = []
-            for r in sorted(per_file, key=lambda r: r["__part"]):
-                part = _spark_uri_path(r["__part"])
-                n_keys += r["__n"]
-                lo, hi = {}, {}
-                for j, c in enumerate(cols):
-                    if r[f"__nn{j}"]:
-                        continue  # null keys: bounds can't witness them
-                    lv = _plain_bound_literal(r[f"__lo{j}"])
-                    hv = _plain_bound_literal(r[f"__hi{j}"])
-                    if lv is not None and hv is not None:
-                        lo[c], hi[c] = lv, hv
-                entry = {
-                    "delete-file": part,
-                    "seq-scoped": True,
-                    "deleted-records": r["__n"],
-                    "content": "equality-deletes",
-                    "equality-ids": list(field_ids),
-                    "equality-cols": list(cols),
-                    "spec-id": self.default_spec_id,
-                }
-                if lo:
-                    entry["key-bounds"] = {"lower": lo, "upper": hi}
-                delete_entries.append(entry)
+            delete_entries = self._key_delete_entries(del_dir, cols)
+            n_keys = sum(e["deleted-records"] for e in delete_entries)
             self._commit_snapshot(
                 "delete",
                 delete_entries,
@@ -5382,13 +5321,7 @@ class Table:
                 branch=branch or MAIN_BRANCH,
             )
             return n_keys
-        entries = self._current_entries(branch)
-        # count the live rows that will die (delta semantics, like the
-        # other MoR modes) and find which files they live in; with a
-        # scope promise, bounds-prune the files the counting scan opens
-        # (MoR delete entries ride along so already-dead rows don't
-        # count as hits)
-        scan_entries = entries
+        tree = None
         if scope is not None:
             tree = _parse_predicate(scope)
             if tree is None:
@@ -5396,25 +5329,8 @@ class Table:
                     "delete_by_keys(scope=...) needs a parseable predicate "
                     "(col op literal joined by AND/OR); got: " + repr(scope)
                 )
-            data, mor = self._split_entries(entries)
-            kept = self._prune_by_stats(data, tree)
-            if not scope_is_hint:
-                kept_ids = {id(e) for e in kept}
-                excluded = [e for e in data if id(e) not in kept_ids]
-                suspect = self._scope_overlap_files(excluded, keys_df, cols)
-                if suspect:
-                    raise InvalidDataError(
-                        "delete_by_keys(scope=...) promise is unverifiable: "
-                        f"{len(suspect)} scope-excluded file(s) have key-"
-                        "column bounds overlapping the key set (e.g. "
-                        f"{suspect[0]!r}) — matching rows there would be "
-                        "silently missed.  Widen the scope, or pass "
-                        "scope_is_hint=True if the overlap is known to be "
-                        "vacuous"
-                    )
-            scan_entries = kept + mor
-        live = self._read_entries(scan_entries, file_col="__f")
-        # Write the key file FIRST, then hit-find against its read-back
+        entries = self._current_entries(branch)
+        # Write the key file FIRST, then hit-count against its read-back
         # (r14): the keys frame is often a filtered scan/join in its own
         # right, and the old order evaluated it TWICE — once broadcast for
         # the hit count, once for the write — plus a forced Catalyst
@@ -5426,9 +5342,43 @@ class Table:
         # nothing, exactly like before (r6 review item: a 10^8-key
         # backfill must fall back to a shuffle semi-join, not OOM the
         # driver).
-        del_dir = os.path.join(self.ops.data_dir, f"deletes-{uuid_mod.uuid4().hex[:12]}")
+        del_dir = self._new_delete_dir()
         keys_df.sortWithinPartitions(*cols).write.parquet(del_dir)
         try:
+            delete_entries = self._key_delete_entries(del_dir, cols)
+            # count the live rows that will die (delta semantics, like the
+            # other MoR modes); with a scope promise, bounds-prune the
+            # files the counting scan opens (MoR delete entries ride along
+            # so already-dead rows don't count as hits)
+            scan_entries = entries
+            if tree is not None:
+                data, mor = self._split_entries(entries)
+                kept = self._prune_by_stats(data, tree)
+                if not scope_is_hint:
+                    # stats-level post-check of the promise: an excluded
+                    # file the delete's own key-bounds reach could hold a
+                    # matching row the count would leave out
+                    kept_ids = {id(e) for e in kept}
+                    excluded = [e for e in data if id(e) not in kept_ids]
+                    suspect = sorted(
+                        {
+                            d["path"]
+                            for e in delete_entries
+                            for d in _seq_scope_touched(e, excluded)
+                        }
+                    )
+                    if suspect:
+                        raise InvalidDataError(
+                            "delete_by_keys(scope=...) promise is "
+                            f"unverifiable: {len(suspect)} scope-excluded "
+                            "file(s) have key-column bounds overlapping the "
+                            f"key set (e.g. {suspect[0]!r}) — matching rows "
+                            "there would be left out of the returned count.  "
+                            "Widen the scope, or pass scope_is_hint=True if "
+                            "the overlap is known to be vacuous"
+                        )
+                scan_entries = kept + mor
+            live = self._read_entries(scan_entries)
             written = _read_back_parquet(self.spark, del_dir, keys_df.schema)
             # size/cleanup through the table's FileIO (r14 review): the key
             # files live under the TABLE location, which need not be local
@@ -5443,157 +5393,122 @@ class Table:
                 if size_bytes <= _BROADCAST_KEYS_MAX_BYTES // 4
                 else written
             )
-            hit_rows = (
-                live.join(keys_side, match_cond, "left_semi")
-                .groupBy("__f")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .collect()
-            )
+            deleted = live.join(keys_side, match_cond, "left_semi").count()
         except Exception:
             # the key files are written BEFORE verification (one keys
-            # evaluation instead of two); a failed read-back, listing or
-            # hit-count must not leak the uncommitted delete dir
+            # evaluation instead of two); a failed scope check, read-back,
+            # listing or hit-count must not leak the uncommitted delete dir
             try:
                 self.ops.io.delete_prefix(del_dir)
             except OSError:
                 pass
             raise
-        deleted = sum(r["n"] for r in hit_rows)
         if not deleted:
             self.ops.io.delete_prefix(del_dir)
             return 0
         self._commit_snapshot(
             "delete",
-            entries
-            + self._equality_delete_entries(
-                del_dir, sorted(r["__f"] for r in hit_rows), field_ids, cols
-            ),
+            entries + delete_entries,
             {"deleted-records": deleted, "mode": "merge-on-read-equality"},
             base_snapshot_id=self._branch_head_id(branch),
             branch=branch or MAIN_BRANCH,
         )
         return deleted
 
-    def _scope_overlap_files(
-        self, excluded: list[dict[str, Any]], keys_df: DataFrame, cols: list[str]
-    ) -> list[str]:
-        """Stats-level verification of a ``delete_by_keys`` scope promise:
-        paths of scope-EXCLUDED data files whose bounds on the key columns
-        overlap the key set's per-column [min, max] range — files where a
-        matching row COULD hide.  Conservative in both directions a check
-        must be: bounds are conservative, the per-column range is an
-        over-approximation of the key tuples, and anything unverifiable
-        (missing bounds, null keys, non-comparable types) counts as
-        overlap.  Metadata-only except one tiny aggregate over the keys."""
-        if not excluded:
-            return []
-        import datetime as _dt
+    def _stamped_keys(self, rows: DataFrame, cols: list[str]) -> DataFrame:
+        """The distinct ``cols`` tuples of ``rows`` in the table's types —
+        spec equality delete files carry the key columns with their
+        Iceberg field ids stamped in the parquet footer."""
+        schema = self.current_schema()
+        self.spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
+        return rows.select(
+            *[
+                F.col(c)
+                .cast(schema.field_by_name(c).to_spark().dataType)
+                .alias(c, metadata={"parquet.field.id": schema.field_by_name(c).field_id})
+                for c in cols
+            ]
+        ).distinct()
 
-        aggs = []
-        for c in cols:
-            aggs.append(F.min(c).alias(f"__mn_{c}"))
-            aggs.append(F.max(c).alias(f"__mx_{c}"))
-            aggs.append(
-                F.sum(F.when(F.col(c).isNull(), 1).otherwise(0)).alias(f"__nl_{c}")
-            )
-        row = keys_df.agg(*aggs).collect()[0]
+    def _new_delete_dir(self) -> str:
+        return os.path.join(self.ops.data_dir, f"deletes-{uuid_mod.uuid4().hex[:12]}")
 
-        def _lit(v):
-            if isinstance(v, (_dt.datetime, _dt.date)):
-                return v.isoformat(sep=" ") if isinstance(v, _dt.datetime) else str(v)
-            return v
-
-        node = None
-        for c in cols:
-            mn, mx, nl = row[f"__mn_{c}"], row[f"__mx_{c}"], row[f"__nl_{c}"]
-            if mn is None or mx is None or (nl or 0) > 0:
-                # null keys match null cells, which bounds never witness —
-                # nothing is provable; every excluded file is suspect
-                return sorted(e["path"] for e in excluded if "path" in e)
-            leaf = ("and", ("cmp", c, ">=", _lit(mn)), ("cmp", c, "<=", _lit(mx)))
-            node = leaf if node is None else ("and", node, leaf)
-        return sorted(
-            e["path"]
-            for e in excluded
-            if "path" in e and _bounds_may_match(e, node)
-        )
-
-    def _equality_delete_entries(
-        self,
-        del_dir: str,
-        applies: list[str],
-        field_ids: list[int],
-        cols: list[str],
+    def _key_delete_entries(
+        self, del_dir: str, cols: list[str]
     ) -> list[dict[str, Any]]:
         """Per-FILE spec entries for a freshly written equality-delete
-        directory: one ``content=2`` entry per parquet part file (the spec
-        shape — a manifest entry names a file, not a directory), with
-        ``deleted-records`` = key rows in THAT file, which is what the
-        spec's delete-file ``record_count`` means for equality deletes.
-        The matched-data-row total goes in the commit summary instead."""
-        out = []
-        for part, n in self._delete_part_counts(del_dir):
-            out.append(
-                {
-                    "delete-file": part,
-                    "applies-to": list(applies),
-                    "deleted-records": n,
-                    "content": "equality-deletes",
-                    "equality-ids": list(field_ids),
-                    "equality-cols": list(cols),
-                    "spec-id": self.default_spec_id,
-                }
+        directory: one ``content=2`` entry per non-empty parquet part file
+        (a manifest entry names a file, not a directory), with
+        ``deleted-records`` = key rows in THAT file — what the spec's
+        delete-file ``record_count`` means for equality deletes — and the
+        file's key range as its ``key-bounds`` hint."""
+        schema = self.current_schema()
+        field_ids = [schema.field_by_name(c).field_id for c in cols]
+        return [
+            _equality_delete_entry(
+                part, n, field_ids, cols, self.default_spec_id, lo, hi
             )
-        return out
+            for part, n, lo, hi in self._delete_part_stats(del_dir, cols)
+        ]
 
-    def _write_key_deletes(
-        self, rows: DataFrame, keys: list[str], applies: Iterable[str]
+    def _write_equality_deletes(
+        self, rows: DataFrame, keys: list[str]
     ) -> list[dict[str, Any]]:
         """Write the distinct ``keys`` tuples of ``rows`` as a fresh
-        equality-delete directory (key columns stamped with their field
-        ids) scoped to the data files ``applies``; its spec entries."""
-        schema = self.current_schema()
-        field_ids = [schema.field_by_name(k).field_id for k in keys]
-        self.spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
-        del_dir = os.path.join(
-            self.ops.data_dir, f"deletes-{uuid_mod.uuid4().hex[:12]}"
+        equality-delete directory; its spec entries (none, and the
+        directory removed, when ``rows`` is empty)."""
+        del_dir = self._new_delete_dir()
+        self._stamped_keys(rows, keys).sortWithinPartitions(*keys).write.parquet(
+            del_dir
         )
-        rows.select(
-            *[
-                F.col(k).alias(k, metadata={"parquet.field.id": fid})
-                for k, fid in zip(keys, field_ids)
+        entries = self._key_delete_entries(del_dir, keys)
+        if not entries:
+            self.ops.io.delete_prefix(del_dir)
+        return entries
+
+    def _delete_part_stats(self, del_dir: str, cols: list[str]) -> list:
+        """``(path, rows, lower, upper)`` per non-empty parquet part file
+        of a freshly written key directory, sorted by path; ``lower`` /
+        ``upper`` map each key column holding no null key to its min /
+        max.  Footer fast path (the same move as the manifest footer
+        stats): counts and ranges ARE the parquet footers' ``num_rows``
+        and column statistics, so local files need no Spark job at all;
+        non-local IO or any footer surprise falls back to one Spark
+        aggregation."""
+        paths = sorted(
+            p for p in self.ops.io.list(del_dir) if p.endswith(".parquet")
+        )
+        if all(os.path.isfile(p) for p in paths):
+            try:
+                stats = [_footer_key_stats(p, cols) for p in paths]
+                return [s for s in stats if s[1]]
+            except (OSError, ValueError, KeyError):
+                pass  # a footer Spark's min/max cannot trust: aggregate
+        aggs = [F.count(F.lit(1)).alias("__n")]
+        for j, c in enumerate(cols):
+            aggs += [
+                F.min(c).alias(f"__lo{j}"),
+                F.max(c).alias(f"__hi{j}"),
+                F.sum(F.col(c).isNull().cast("int")).alias(f"__nn{j}"),
             ]
-        ).distinct().sortWithinPartitions(*keys).write.parquet(del_dir)
-        return self._equality_delete_entries(del_dir, sorted(applies), field_ids, keys)
-
-    def _delete_part_counts(self, del_dir: str) -> list:
-        """``(path, rows)`` per parquet part file of a freshly written
-        delete directory, sorted by path.  Footer fast path (guide §1.2 —
-        the same move as the manifest footer stats): the counts ARE the
-        parquet footers' ``num_rows``, so local files need no Spark read
-        job at all; non-local IO or any footer surprise falls back to the
-        Spark aggregation.  Zero-row part files are skipped on both paths
-        (the aggregation emits no group for them)."""
-        try:
-            import pyarrow.parquet as _pq
-
-            paths = sorted(
-                p for p in self.ops.io.list(del_dir) if p.endswith(".parquet")
-            )
-            if paths and all(os.path.isfile(p) for p in paths):
-                counts = [
-                    (p, _pq.ParquetFile(p).metadata.num_rows) for p in paths
-                ]
-                return [(p, n) for p, n in counts if n]
-        except Exception:
-            pass
-        written = self.spark.read.parquet(del_dir)
         rows = (
-            written.groupBy(F.col("_metadata.file_path").alias("__part"))
-            .agg(F.count(F.lit(1)).alias("__n"))
+            self.spark.read.parquet(del_dir)
+            .groupBy(F.col("_metadata.file_path").alias("__part"))
+            .agg(*aggs)
             .collect()
         )
-        return sorted((_spark_uri_path(r["__part"]), r["__n"]) for r in rows)
+        out = []
+        for r in rows:
+            ok = [(j, c) for j, c in enumerate(cols) if not r[f"__nn{j}"]]
+            out.append(
+                (
+                    _spark_uri_path(r["__part"]),
+                    r["__n"],
+                    {c: r[f"__lo{j}"] for j, c in ok},
+                    {c: r[f"__hi{j}"] for j, c in ok},
+                )
+            )
+        return sorted(out, key=lambda s: s[0])
 
     def _update_where_mor(
         self, assignments: dict[str, Any], cond, mode: str,
@@ -5716,10 +5631,9 @@ class Table:
         )
         for e in new_entries:
             e["materialized-lineage"] = True
-        kept_paths = {e["path"] for e in keep_entries if "path" in e}
         self._commit_snapshot(
             "overwrite",
-            keep_entries + new_entries + self._live_deletes(dels, kept_paths, keep_entries),
+            keep_entries + new_entries + self._live_deletes(dels, keep_entries),
             {"updated-records": updated},
             base_snapshot_id=self._branch_head_id(branch),
             branch=branch or MAIN_BRANCH,
@@ -5957,10 +5871,9 @@ class Table:
         new_entries = self._write_data_dir(merged, lineage_cols=True)
         for e in new_entries:
             e["materialized-lineage"] = True
-        kept_paths = {e["path"] for e in keep_entries if "path" in e}
         self._commit_snapshot(
             "overwrite",
-            keep_entries + new_entries + self._live_deletes(dels, kept_paths, keep_entries),
+            keep_entries + new_entries + self._live_deletes(dels, keep_entries),
             {"operation-detail": "merge", **(summary_extra or {})},
             base_snapshot_id=self._branch_head_id(branch),
             branch=branch or MAIN_BRANCH,
@@ -5983,11 +5896,13 @@ class Table:
     ) -> "Table":
         """merge_into(mode='merge-on-read'): equality-delete the matched
         keys, append their updated versions plus inserts — single commit,
-        zero rewrites of existing files."""
+        zero rewrites of existing files.  The appended rows share the
+        delete's sequence number, so the delete (which applies only to
+        strictly lower sequences) never kills them."""
         from pyspark.sql import Observation
 
         entries = self._current_entries(branch)
-        live = self._read_entries(entries, file_col="__f")
+        live = self._read_entries(entries)
         marked = source.withColumn("__s_matched", F.lit(True))
         new_parts: list[DataFrame] = []
         eq_entries: list[dict[str, Any]] = []
@@ -5999,25 +5914,21 @@ class Table:
         ):
             # ONE live-table scan serves the matched clauses AND the
             # inserts: the live rows whose key the source carries,
-            # checkpointed (O(changed rows)) with their file set and
-            # count observed in the same job.  The checkpoint holds the
-            # live side only and re-joins the source, so update
+            # checkpointed (O(changed rows)) with their count observed in
+            # the same job.  The checkpoint holds the live side only and
+            # re-joins the source, so update
             # expressions keep the using-join's `k`, `t.*` and `s.*`
             # resolution (a checkpointed join drops the hidden `s.<key>`
             # columns).
             obs = Observation()
             hit = (
                 live.join(source.select(*keys), keys, "left_semi")
-                .observe(
-                    obs,
-                    F.count(F.lit(1)).alias("n"),
-                    F.collect_set("__f").alias("files"),
-                )
+                .observe(obs, F.count(F.lit(1)).alias("n"))
                 .localCheckpoint()
             )
             matched_n = obs.get["n"] or 0
         if matched_n and (when_matched_update or when_matched_delete is not None):
-            eq_entries = self._write_key_deletes(hit, keys, obs.get["files"])
+            eq_entries = self._write_equality_deletes(hit, keys)
             survivors = hit.alias("t").join(marked.alias("s"), keys, "inner")
             if when_matched_delete is not None:
                 # delete-matched rows fall to the equality delete and
@@ -6047,13 +5958,7 @@ class Table:
             losers = live.alias("t").join(marked.alias("s"), keys, "left_anti")
             if when_not_matched_by_source_delete is not True:
                 losers = losers.filter(F.coalesce(ncond, F.lit(False)))
-            lose_rows = (
-                losers.groupBy("__f").agg(F.count(F.lit(1)).alias("n")).collect()
-            )
-            if lose_rows:
-                eq_entries += self._write_key_deletes(
-                    losers, keys, (r["__f"] for r in lose_rows)
-                )
+            eq_entries += self._write_equality_deletes(losers, keys)
         if when_not_matched_by_source_update:
             # WHEN NOT MATCHED BY SOURCE [AND cond] THEN UPDATE, MoR form:
             # the _update_where_mor shape — equality-delete the stale
@@ -6075,13 +5980,9 @@ class Table:
                         F.lit(False),
                     )
                 )
-            upd_rows = (
-                upd_losers.groupBy("__f").agg(F.count(F.lit(1)).alias("n")).collect()
-            )
-            if upd_rows:
-                eq_entries += self._write_key_deletes(
-                    upd_losers, keys, (r["__f"] for r in upd_rows)
-                )
+            upd_entries = self._write_equality_deletes(upd_losers, keys)
+            if upd_entries:
+                eq_entries += upd_entries
                 out_cols = []
                 for c in cols:
                     if c in when_not_matched_by_source_update:
@@ -6258,9 +6159,8 @@ class Table:
             e["materialized-lineage"] = True
         commit_entries = new_entries
         if where is not None:
-            kept_paths = {e["path"] for e in keep_entries if "path" in e}
-            commit_entries = (
-                keep_entries + new_entries + self._live_deletes(dels, kept_paths, keep_entries)
+                commit_entries = (
+                keep_entries + new_entries + self._live_deletes(dels, keep_entries)
             )
         self._commit_snapshot(
             "replace",
@@ -7315,14 +7215,15 @@ def _key_bounds_tree(delete_entry: dict[str, Any]):
 def _seq_scope_touched(
     delete_entry: dict[str, Any], data_entries: list[dict[str, Any]]
 ) -> list[dict[str, Any]]:
-    """Data entries a SEQUENCE-scoped equality delete may apply to — the
-    Iceberg spec's scan-planning rule (an equality delete applies to data
+    """Data entries an equality delete may apply to — the Iceberg spec's
+    scan-planning rule (an equality delete applies to data
     files whose data sequence number is STRICTLY below the delete's own;
     the reference's scan stack consumes this form via iceberg-rust,
     ``/root/reference/ext/iceberg/src/scan.rs:41``), narrowed by the
     entry's ``key-bounds`` hint when present.  Conservative on missing
     metadata: a file without a recorded sequence predates seq stamping,
-    so the delete applies; an unstamped delete applies everywhere."""
+    so the delete applies; a delete not yet committed (no sequence) applies
+    to every file its key-bounds allow."""
     scope = _compile_seq_scope(delete_entry)
     return [e for e in data_entries if _seq_scope_applies(scope, e)]
 
@@ -7344,6 +7245,73 @@ def _plain_bound_literal(v: Any):
     if isinstance(v, (int, float, str)):
         return v
     return None
+
+
+def _equality_delete_entry(
+    path: str,
+    n: int,
+    field_ids: list[int],
+    cols: list[str],
+    spec_id: int,
+    lower: Optional[dict[str, Any]] = None,
+    upper: Optional[dict[str, Any]] = None,
+) -> dict[str, Any]:
+    """The spec entry of ONE equality-delete key file holding ``n`` key
+    rows.  Its scope is the spec's sequence rule (data files with a
+    strictly lower data sequence); ``lower``/``upper`` (key column → min /
+    max, columns holding a null key left out) become the ``key-bounds``
+    pruning hint — a column is bounded only when both ends have a plain
+    literal form."""
+    entry = {
+        "delete-file": path,
+        "deleted-records": n,
+        "content": "equality-deletes",
+        "equality-ids": list(field_ids),
+        "equality-cols": list(cols),
+        "spec-id": spec_id,
+    }
+    lo, hi = {}, {}
+    for c in cols:
+        lv = _plain_bound_literal((lower or {}).get(c))
+        hv = _plain_bound_literal((upper or {}).get(c))
+        if lv is not None and hv is not None:
+            lo[c], hi[c] = lv, hv
+    if lo:
+        entry["key-bounds"] = {"lower": lo, "upper": hi}
+    return entry
+
+
+def _footer_key_stats(path: str, cols: list[str]) -> tuple:
+    """``(path, rows, lower, upper)`` of one key parquet file from its
+    footer statistics alone.  Raises ValueError when a key column's
+    footer cannot stand in for Spark's min/max (no statistic for non-null
+    values, e.g. INT96 or oversized strings; timestamps, whose footer
+    values are UTC while Spark's are session-local)."""
+    import datetime as _dt
+
+    import pyarrow.parquet as _pq
+
+    md = _pq.ParquetFile(path).metadata
+    idx = {md.schema.column(j).path: j for j in range(md.num_columns)}
+    lo, hi = {}, {}
+    for c in cols:
+        mins, maxs, nulls = [], [], 0
+        for g in range(md.num_row_groups):
+            rg = md.row_group(g)
+            st = rg.column(idx[c]).statistics
+            if st is None or not st.has_null_count:
+                raise ValueError(f"no null count for {c} in {path}")
+            nulls += st.null_count
+            if st.has_min_max:
+                mins.append(st.min)
+                maxs.append(st.max)
+            elif rg.num_rows > st.null_count:
+                raise ValueError(f"no min/max for {c} in {path}")
+        if any(isinstance(v, _dt.datetime) for v in mins + maxs):
+            raise ValueError(f"timestamp key column {c}")
+        if not nulls and mins:
+            lo[c], hi[c] = min(mins), max(maxs)
+    return path, md.num_rows, lo, hi
 
 
 def _compile_seq_scope(delete_entry: dict[str, Any]) -> tuple:
@@ -7669,11 +7637,11 @@ class TableInspect:
                     {
                         "kind": e.get("content") or "position-deletes",
                         "detail": e["delete-file"],
-                        # sequence-scoped deletes name no file list — their
-                        # scope is "every data file with lower sequence"
+                        # equality deletes name no file list — their scope
+                        # is "every data file with lower sequence"
                         "scope_files": (
                             None
-                            if e.get("seq-scoped")
+                            if e.get("content") == "equality-deletes"
                             else len(e.get("applies-to") or [])
                         ),
                     }
@@ -8863,7 +8831,9 @@ class TableScan:
             for e in dfile_entries
         }
         dfile_scopes = {
-            id(e): _compile_seq_scope(e) if e.get("seq-scoped") else None
+            id(e): _compile_seq_scope(e)
+            if e.get("content") == "equality-deletes"
+            else None
             for e in dfile_entries
         }
 
@@ -8873,11 +8843,11 @@ class TableScan:
             for e in dfile_entries:
                 scope = dfile_scopes[id(e)]
                 if scope is not None:
-                    # sequence-scoped: applies iff the data file's
-                    # sequence is strictly lower (key-bounds pruned)
+                    # equality: applies iff the data file's sequence is
+                    # strictly lower (key-bounds pruned)
                     if _seq_scope_applies(scope, de):
                         out.extend(dfile_paths[id(e)])
-                elif e.get("applies-to") is None or path in e["applies-to"]:
+                elif path in e.get("applies-to", (path,)):
                     out.extend(dfile_paths[id(e)])
             return out
 

@@ -289,6 +289,61 @@ def test_legacy_list_with_predicate_deletes_raises(catalog):
         assert "predicate deletes" in str(err.value)
 
 
+def test_legacy_applies_to_equality_delete_reads_by_sequence(catalog, spark):
+    """An older engine wrote verified equality deletes with an engine-only
+    ``applies-to`` file list and no sequence marker.  Such a manifest,
+    rewritten by hand, must still read — under the spec's sequence rule,
+    with the list dropped — and give exactly the rows a spec reader
+    (which never saw the list) gives: the matched rows stay dead, rows
+    appended after the delete survive."""
+    from iceberg_ruby_spark.avro_file import write_ocf
+    from tests.support.spec_reader import read_spec_rows
+
+    t = catalog.create_table("av_legacy_eq", schema={"k": "int", "v": "string"})
+    t.append([{"k": i, "v": f"a{i}"} for i in range(4)])
+    t.append([{"k": i, "v": f"b{i}"} for i in range(10, 14)])
+    # what the older engine listed: the files holding a live hit
+    hit_files = sorted(
+        e["path"] for e in t._current_entries()
+        if "path" in e
+        and any(
+            int(e["lower-bounds"]["k"]) <= k <= int(e["upper-bounds"]["k"])
+            for k in (2, 12)
+        )
+    )
+    assert t.delete_by_keys([(2,), (12,)], on="k") == 2
+    list_path = t.ops._abs(t.current_snapshot().manifest_list)
+    _, list_records, _ = read_ocf(t.ops.io.read_bytes(list_path))
+    rewritten = 0
+    for rec in list_records:
+        mpath = rec["manifest_path"]
+        schema, records, meta = read_ocf(t.ops.io.read_bytes(mpath))
+        extras = json.loads(meta["x-irs"].decode())
+        for ext in extras["entries"]:
+            if ext.get("content") == "equality-deletes":
+                ext.pop("key-bounds", None)
+                ext["applies-to"] = [t.ops._rel(t.ops._abs(p)) for p in hit_files]
+                rewritten += 1
+        user_meta = {k: v for k, v in meta.items() if not k.startswith("avro.")}
+        user_meta["x-irs"] = json.dumps(extras).encode()
+        t.ops.io.write_bytes_atomic(
+            mpath, write_ocf(schema, records, metadata=user_meta), overwrite=True
+        )
+    assert rewritten
+    t.append([{"k": 2, "v": "c2"}, {"k": 12, "v": "c12"}])
+    t = t.refresh()
+    eqs = [e for e in t._current_entries() if e.get("content") == "equality-deletes"]
+    assert eqs and all("applies-to" not in e and "key-bounds" not in e for e in eqs)
+    rows = t.to_a()
+    assert sorted(r["v"] for r in rows) == sorted(
+        [f"a{i}" for i in (0, 1, 3)] + [f"b{i}" for i in (10, 11, 13)] + ["c2", "c12"]
+    )
+    spec_rows = read_spec_rows(spark, t.ops._abs(t.current_snapshot().manifest_list))
+    assert sorted(tuple(sorted(r.items())) for r in spec_rows) == sorted(
+        tuple(sorted(r.items())) for r in rows
+    )
+
+
 def test_schema_evolution_under_avro(catalog):
     t = catalog.create_table("av9", schema={"a": "int"}, properties=AVRO_PROPS)
     t.append([{"a": 1}])
@@ -608,9 +663,8 @@ def test_equality_delete_files_are_spec_shaped(catalog, spark):
 
 
 def test_seq_scoped_equality_delete_roundtrips_avro(catalog, spark, tmp_path):
-    """The streaming upsert sink's SEQUENCE-scoped equality delete
-    (seq-scoped marker + key-bounds hint, r13) survives the Avro manifest
-    round-trip, and the scan honors the spec rule (strictly-lower data
+    """The streaming upsert sink's equality delete (sequence number +
+    key-bounds hint, r13) survives the Avro manifest round-trip, and the scan honors the spec rule (strictly-lower data
     sequence) after re-reading the entries from disk."""
     from iceberg_ruby_spark.streaming.sink import (
         EngineTableStreamWriter,
@@ -682,7 +736,8 @@ def test_seq_scoped_equality_delete_roundtrips_avro(catalog, spark, tmp_path):
     ]
     assert len(eqs) == 1
     e = eqs[0]
-    assert e.get("seq-scoped") is True
+    assert e["content"] == "equality-deletes"
+    assert e["data-sequence-number"] == t.current_snapshot().sequence_number
     assert "applies-to" not in e
     assert e["key-bounds"] == {"lower": {"k": 2}, "upper": {"k": 3}}
     assert e["equality-cols"] == ["k"]

@@ -135,6 +135,40 @@ def test_concurrent_mor_delete_conflicts_with_overlapping_rewrite(catalog):
         h_upd.update_where({"b": "'y'"}, "a = 1")  # rewrites the same file
 
 
+def test_verified_equality_delete_conflicts_with_matching_append(catalog):
+    """A verified delete_by_keys (or merge-on-read merge) counts its hits
+    on the snapshot it planned against.  Its equality delete applies to
+    every file of lower sequence, so committing over a concurrent append
+    whose file may hold a deleted key would kill rows the count never
+    saw: that commit raises a conflict (Iceberg's
+    ``validateNoConflictingDataFiles``).  An append whose file bounds
+    cannot hold any deleted key does not conflict, and its rows survive."""
+    import pytest
+
+    from iceberg_ruby_spark.errors import InvalidDataError
+
+    t = catalog.create_table("cvd", schema={"k": "int", "v": "string"})
+    t.append([{"k": i, "v": "a"} for i in range(10)])
+
+    h_del = catalog.load_table("cvd")  # plans against the 10-row snapshot
+    h_mrg = catalog.load_table("cvd")
+    catalog.load_table("cvd").append([{"k": 5, "v": "late"}])
+    with pytest.raises(InvalidDataError, match="retry the operation on fresh state"):
+        h_del.delete_by_keys([(5,)], on="k")
+    with pytest.raises(InvalidDataError, match="retry the operation on fresh state"):
+        h_mrg.upsert([{"k": 5, "v": "m"}], on="k", mode="merge-on-read")
+    rows = sorted((r["k"], r["v"]) for r in t.refresh().to_a())
+    assert rows == sorted([(i, "a") for i in range(10)] + [(5, "late")])
+
+    h_del = catalog.load_table("cvd")
+    catalog.load_table("cvd").append([{"k": 100, "v": "late"}])
+    assert h_del.delete_by_keys([(3,)], on="k") == 1
+    rows = sorted((r["k"], r["v"]) for r in t.refresh().to_a())
+    assert rows == sorted(
+        [(i, "a") for i in range(10) if i != 3] + [(5, "late"), (100, "late")]
+    )
+
+
 def test_concurrent_appends_assign_disjoint_row_id_ranges(catalog):
     """Row-lineage under the optimistic race: losers retry against fresh
     metadata, so first-row-id ranges must come out dense and disjoint no

@@ -1,8 +1,9 @@
 """Spark work budget of merge-on-read writes and reads, counted through
 ``statusTracker`` job groups and the SQL status store: a MoR upsert
-scans the live table once, and a MoR read applies each equality-delete
-file with one broadcast, never a shuffle."""
+scans the live table once, and a MoR read applies all equality-delete
+files sharing a key-column set with one broadcast, never a shuffle."""
 
+import os
 import re
 import uuid
 
@@ -87,9 +88,41 @@ def test_mor_read_has_no_shuffle_per_equality_delete(catalog, spark):
         t.delete_by_keys([(k,)], on="k")
     n4, rows4, jobs4, stages4 = read()
     assert (rows1, rows4) == (39, 36)
-    added = n4 - n1
-    assert added >= 3
-    # each added delete file costs at most its broadcast's one-stage job
-    # (a per-delete distinct/aggregate would add a shuffle job and stage)
-    assert jobs4 - jobs1 <= added, (jobs1, jobs4, added)
-    assert stages4 - stages1 <= added, (stages1, stages4, added)
+    assert n4 - n1 >= 3
+    # every equality delete joins through ONE broadcast of all key files
+    # sharing a key-column set: added delete files add no job or stage
+    assert (jobs4, stages4) == (jobs1, stages1), (jobs1, jobs4, stages1, stages4)
+
+
+def _plan_shape(t):
+    """(broadcast joins in the executed read plan, whether any data-file
+    name appears in it outside the file scans' own location lists)."""
+    plan = t.scan().to_df()._jdf.queryExecution().executedPlan().toString()
+    joins = len(re.findall(r"Broadcast\w*Join", plan))
+    body = re.sub(r"Location: \w+ \[[^\]]*\]", "", plan)
+    names = [os.path.basename(p) for p in t._entry_files(t._current_entries())]
+    return joins, any(n in body for n in names)
+
+
+def test_mor_read_plan_constant_in_delete_count(catalog):
+    """The read plan of a table carrying 10 chained verified deletes, or
+    10 merge-on-read upserts, has as many broadcast joins as after the
+    first one, and never inlines a data-file path: equality deletes
+    apply by sequence number, not through per-delete file lists."""
+    mutations = {
+        "verified": lambda t, i: t.delete_by_keys([(i,)], on="k"),
+        "upsert": lambda t, i: t.upsert(
+            [{"k": i, "v": f"u{i}"}], on="k", mode="merge-on-read"
+        ),
+    }
+    for name, mutate in mutations.items():
+        t = catalog.create_table(f"mor_plan_{name}", schema={"k": "int", "v": "string"})
+        t.append([{"k": i, "v": f"v{i}"} for i in range(40)])
+        shapes = {}
+        for i in range(1, 11):
+            mutate(t, i)
+            t = t.refresh()
+            if i in (1, 10):
+                shapes[i] = _plan_shape(t)
+        assert shapes[1][0] >= 1, (name, shapes)
+        assert shapes[1] == shapes[10] == (shapes[1][0], False), (name, shapes)

@@ -324,34 +324,48 @@ def test_equality_delete_by_keys(catalog, spark):
     assert sorted(r["k"] for r in t.to_a()) == [0, 1, 4, 6, 7, 8, 9]
 
 
-def test_equality_delete_scoped_hit_scan(catalog, spark):
-    """delete_by_keys(scope=...) bounds-prunes the hit-finding scan AND
-    the delete entry's applies-to: a truthful scope gives identical
-    results to the unscoped call, and the equality-delete entry
-    references only in-scope files (r9: the ranged-CDC lever)."""
+def test_equality_delete_scoped_hit_scan(catalog, spark, monkeypatch):
+    """delete_by_keys(scope=...) bounds-prunes the hit-counting scan: a
+    truthful scope gives the same result as the unscoped call while the
+    scan opens only in-scope files (r9: the ranged-CDC lever).  The
+    equality-delete entry names no files; its key range rides as the
+    ``key-bounds`` hint, and inspect reports no file scope for it."""
+    from iceberg_ruby_spark.table import Table
+
     t = catalog.create_table("eqscope", schema={"k": "int", "v": "string"})
     t.append([{"k": i, "v": f"a{i}"} for i in range(0, 100)])
     t.append([{"k": i, "v": f"b{i}"} for i in range(100, 200)])
     t.append([{"k": i, "v": f"c{i}"} for i in range(200, 300)])
+    in_scope = {
+        e["path"] for e in t._current_entries()
+        if "path" in e and int(e["upper-bounds"]["k"]) >= 200
+    }
+    assert in_scope and len(in_scope) < len(_live_files(t))
+    read = []
+    orig = Table._read_entries
+
+    def counting(self, entries, *args, **kwargs):
+        read.append({e["path"] for e in entries if "path" in e})
+        return orig(self, entries, *args, **kwargs)
+
+    monkeypatch.setattr(Table, "_read_entries", counting)
     n = t.delete_by_keys([(210,), (250,), (5000,)], on="k", scope="k >= 200")
+    monkeypatch.undo()
     assert n == 2
+    assert read == [in_scope]
     survivors = sorted(r["k"] for r in t.to_a())
     assert survivors == sorted(set(range(300)) - {210, 250})
-    # the entry's applies-to covers only files whose bounds reach k>=200
     eq_entries = [
         e for e in t._current_entries()
         if e.get("content") == "equality-deletes"
     ]
-    assert len(eq_entries) == 1
-    applies = eq_entries[0].get("applies-to") or []
-    assert applies, "scoped delete must still record applies-to"
-    lo_files = {
-        e["path"] for e in t._current_entries()
-        if "path" in e
-        and int((e.get("upper-bounds") or {}).get("k", 10**9)) < 200
-    }
-    assert lo_files, "expected out-of-scope files with k upper bounds < 200"
-    assert not (set(applies) & lo_files)
+    assert eq_entries and all("applies-to" not in e for e in eq_entries)
+    bounds = [e["key-bounds"] for e in eq_entries]
+    assert min(b["lower"]["k"] for b in bounds) == 210
+    assert max(b["upper"]["k"] for b in bounds) == 5000
+    dels = t.inspect.delete_entries().collect()
+    assert len(dels) == len(eq_entries)
+    assert all(r["scope_files"] is None for r in dels)
     # malformed scope is a typed error, not a silent full scan
     import pytest as _pytest
 
@@ -409,28 +423,21 @@ def test_equality_delete_does_not_hit_later_appends(catalog):
     assert sorted(r["k"] for r in t.to_a()) == [1, 2]
 
 
-def _external_equality_delete(t, cols, rows, applies):
-    """Commit a hand-written (pyarrow) equality-delete file whose
-    entry applies to the data files ``applies``."""
+def _external_equality_delete(t, cols, rows):
+    """Commit a hand-written (pyarrow) equality-delete file."""
     import os
     import uuid
 
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    schema = t.current_schema()
     del_dir = os.path.join(t.ops.data_dir, f"deletes-{uuid.uuid4().hex[:12]}")
     os.makedirs(del_dir)
     pq.write_table(
         pa.Table.from_pylist([dict(zip(cols, r)) for r in rows]),
         os.path.join(del_dir, "part-00000.parquet"),
     )
-    entries = t._equality_delete_entries(
-        del_dir,
-        sorted(t.ops._abs(p) for p in applies),
-        [schema.field_by_name(c).field_id for c in cols],
-        cols,
-    )
+    entries = t._key_delete_entries(del_dir, cols)
     t._commit_snapshot(
         "delete",
         t._current_entries() + entries,
@@ -461,23 +468,21 @@ def test_equality_delete_file_duplicate_and_null_keys(catalog):
         t,
         ["k", "g"],
         [(1, "a"), (1, "a"), (None, "b"), (2, None), (2, None), (None, "b")],
-        _live_files(t),
     )
     assert sorted(r["v"] for r in t.to_a()) == [3, 5, 7, 8]
     assert t.scan().count() == 4
 
 
-def test_equality_delete_applies_to_scope(catalog):
-    """An equality delete kills matching rows only in the files its
-    entry applies to: a same-key row in a file outside the scope, older
-    or appended later, survives."""
+def test_equality_delete_sequence_scope(catalog):
+    """An equality delete kills matching rows in every data file of
+    strictly lower data sequence, whichever commit wrote it, and none in
+    files appended after it."""
     t = catalog.create_table("eqapplies", schema={"k": "int", "v": "string"})
-    t.append([{"k": 1, "v": "a1"}, {"k": 2, "v": "a2"}])
-    scoped = _live_files(t)
-    t.append([{"k": 1, "v": "b1"}])  # older than the delete, out of scope
-    t = _external_equality_delete(t, ["k"], [(1,), (2,)], scoped)
+    t.append([{"k": 1, "v": "a1"}, {"k": 2, "v": "a2"}, {"k": 3, "v": "a3"}])
+    t.append([{"k": 1, "v": "b1"}])
+    t = _external_equality_delete(t, ["k"], [(1,), (2,)])
     t.append([{"k": 1, "v": "c1"}, {"k": 2, "v": "c2"}])  # after the delete
-    assert sorted(r["v"] for r in t.refresh().to_a()) == ["b1", "c1", "c2"]
+    assert sorted(r["v"] for r in t.refresh().to_a()) == ["a3", "c1", "c2"]
 
 
 def test_seq_scoped_deletes_at_two_sequences(catalog):
@@ -495,7 +500,7 @@ def test_seq_scoped_deletes_at_two_sequences(catalog):
     seqs = sorted(
         e["data-sequence-number"]
         for e in t._current_entries()
-        if e.get("seq-scoped")
+        if e.get("content") == "equality-deletes"
     )
     assert len(seqs) == 2 and seqs[0] < seqs[1]
     rows = sorted((r["k"], r["v"]) for r in t.to_a())
@@ -750,8 +755,8 @@ def test_remove_orphans_safety_window(catalog):
 
 
 def test_equality_delete_scope_postcheck(catalog, spark):
-    """r10 (r9 ADVICE): a FALSE scope promise no longer silently misses
-    deletes — the stats-level post-check sees a scope-excluded file whose
+    """r10 (r9 ADVICE): a FALSE scope promise no longer silently
+    undercounts — the stats-level post-check sees a scope-excluded file whose
     key-column bounds overlap the key range and raises;
     scope_is_hint=True opts back into unchecked hint semantics."""
     import pytest as _pytest
@@ -765,9 +770,12 @@ def test_equality_delete_scope_postcheck(catalog, spark):
     with _pytest.raises(InvalidDataError, match="unverifiable"):
         t.delete_by_keys([(50,)], on="k", scope="k >= 100")
     assert sorted(r["k"] for r in t.to_a()) == list(range(200))  # nothing died
-    # the explicit hint keeps the documented (miss-capable) fast path
+    # the explicit hint keeps the documented (undercount-capable) fast
+    # path: the count sees only in-scope files, so it finds no hit here
+    # and commits nothing
     n = t.delete_by_keys([(50,)], on="k", scope="k >= 100", scope_is_hint=True)
-    assert n == 0  # silently missed, as the hint contract says
+    assert n == 0
+    assert 50 in {r["k"] for r in t.to_a()}
     # a truthful scope still passes the check and deletes
     n = t.delete_by_keys([(150,)], on="k", scope="k >= 100")
     assert n == 1
@@ -900,7 +908,8 @@ def test_blind_delete_by_keys(catalog, spark):
     eq = [
         e for e in t._current_entries() if e.get("content") == "equality-deletes"
     ]
-    assert len(eq) == 1 and eq[0].get("seq-scoped") is True
+    assert len(eq) == 1
+    assert eq[0]["data-sequence-number"] == t.current_snapshot().sequence_number
     assert eq[0]["key-bounds"] == {"lower": {"k": 3}, "upper": {"k": 99}}
     assert sorted(r["k"] for r in t.to_a()) == [0, 1, 2, 4, 5, 6, 8, 9]
     # rows appended AFTER the delete are immune, including re-used keys

@@ -159,6 +159,53 @@ def test_mor_deletes_round_trip_through_spec_reader(catalog, spark):
         assert sorted(r["k"] for r in rows) == list(range(15))
 
 
+def test_spec_reader_matches_engine_after_mor_merge_and_verified_deletes(
+    catalog, spark
+):
+    # merge-on-read MERGE (update, insert, delete-by-source) and verified
+    # delete_by_keys write equality deletes under the spec's sequence
+    # rule alone: a spec reader that never consults x-irs must see the
+    # engine's rows after every step, on v2 and v3 — including rows the
+    # merge re-inserted in the same commit as its delete and keys
+    # re-appended after a delete
+    for fv in ("2", "3"):
+        t = catalog.create_table(
+            f"spec_rd_merge_v{fv}",
+            schema={"k": "int", "v": "string"},
+            properties={**AVRO_PROPS, "format-version": fv},
+        )
+        t.append([{"k": i, "v": f"a{i}"} for i in range(12)])
+        t.append([{"k": i, "v": f"b{i}"} for i in range(12, 20)])
+
+        def check():
+            assert _as_sets(_spec_rows(t, spark)) == _as_sets(t.refresh().to_a())
+
+        assert t.delete_by_keys([(3,), (13,)], on="k") == 2
+        check()
+        src = spark.createDataFrame(
+            [(k, f"m{k}") for k in (1, 4, 13, 15, 30)], "k int, v string"
+        )
+        t.merge_into(
+            src,
+            on="k",
+            when_matched_update={"v": "s.v"},
+            when_not_matched_insert=True,
+            when_not_matched_by_source_delete="t.k >= 16",
+            mode="merge-on-read",
+        )
+        check()
+        rows = {r["k"]: r["v"] for r in t.refresh().to_a()}
+        assert rows[1] == "m1" and rows[15] == "m15" and rows[30] == "m30"
+        assert rows[13] == "m13" and 3 not in rows
+        assert not any(16 <= k < 20 for k in rows)
+        t.append([{"k": 3, "v": "c3"}])
+        assert t.delete_by_keys([(1,), (30,)], on="k") == 2
+        check()
+        assert sorted(t.refresh().to_a(), key=lambda r: r["k"])[:3] == [
+            {"k": 0, "v": "a0"}, {"k": 2, "v": "a2"}, {"k": 3, "v": "c3"}
+        ]
+
+
 def test_spec_reader_reconstructs_row_lineage_from_v3_manifests(catalog, spark):
     # v3 row lineage through spec artifacts ONLY: first_row_id from
     # manifest field 142 plus position, with materialized reserved

@@ -521,9 +521,9 @@ def test_native_stream_writer_upsert(catalog, spark, tmp_path):
         if s.summary.get("streaming-sink-id")
     ]
     assert marks == [("streaming-upsert", "0"), ("streaming-upsert", "1")]
-    # the second batch carries a SEQUENCE-scoped equality delete (the
-    # Iceberg scan-planning rule: it applies only to data files with a
-    # strictly LOWER data sequence) — no applies-to path list, so the
+    # the second batch carries an equality delete at its own commit's
+    # sequence (the Iceberg scan-planning rule: it applies only to data
+    # files with a strictly LOWER data sequence) — no path list, so the
     # commit's metadata is O(batch) however many files the table holds,
     # and the batch's own rows survived their own delete
     eq = [
@@ -533,7 +533,10 @@ def test_native_stream_writer_upsert(catalog, spark, tmp_path):
     ]
     assert len(eq) == 1
     assert eq[0]["equality-cols"] == ["k"]
-    assert eq[0].get("seq-scoped") is True
+    batch1 = [
+        s for s in gold.snapshots if s.summary.get("streaming-batch-id") == "1"
+    ]
+    assert eq[0]["data-sequence-number"] == batch1[0].sequence_number
     assert "applies-to" not in eq[0]
     # the per-entry key-bounds hint (reader-side pruning) spans the
     # batch's keys
