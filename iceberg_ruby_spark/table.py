@@ -34,9 +34,16 @@ the files that actually contain matching rows (one Spark job over
 rewrite only those, and carry every other file forward by reference — a
 one-row delete on a 100 TB table rewrites one file, not the table.
 
-Reads are plain ``spark.read.parquet(*files)`` — Catalyst pushes filters and
-projections into the Parquet scan, and hidden-partition columns written by
-``partitionBy`` prune directories.
+Reads are plain Spark file scans over the files the manifests name, under a
+read schema built from table metadata (``_read_files``): each data file is
+read with the fields of the schema its manifest entry records
+(``schema-id``), position-delete files with the spec's ``file_path``/``pos``,
+equality-delete files with their key columns typed by ``equality-ids``.  No
+read infers a schema from footers, so building a scan starts no Spark job;
+only ``add_files`` and the catalog's ``snapshot`` procedure infer, to
+validate files from outside the table.
+Catalyst pushes filters and projections into the scan, and hidden-partition
+columns written by ``partitionBy`` prune directories.
 """
 
 from __future__ import annotations
@@ -51,6 +58,7 @@ from typing import Any, Iterable, Optional, Sequence, Union
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as _T
 
 from iceberg_ruby_spark.errors import (
     InvalidDataError,
@@ -657,244 +665,29 @@ def _bloom_maybe_contains(blob: bytes, m: int, k: int, val_str: str) -> bool:
 # the explicit hint, which would otherwise override Spark's own guard.
 _BROADCAST_KEYS_MAX_BYTES = 64 << 20
 
-# Inferred-schema memo for the scan read path (r13, guide §1.2: don't
-# compute things twice).  ``spark.read.parquet`` with no schema re-infers
-# from file footers on EVERY call (~100-300 ms per scan group at bench
-# scale); iceberg data files are IMMUTABLE (rewrites mint new paths), so
-# the inference result for a given (basePath, file set) never changes —
-# the first scan infers, repeats pass the identical StructType
-# explicitly.  Metadata only: row data is read from parquet at execution
-# on every scan.  The mergeSchema branch (reserved lineage columns in
-# SOME files) stays on live inference — its result depends on footer
-# union, and callers are rare.  LRU-capped so a 24/7 session's memo
-# stays bounded.
-_SCAN_SCHEMA_MEMO: dict = {}
-_SCAN_SCHEMA_MEMO_MAX = 256
+# The spec's fixed position-delete file columns (format spec "Position
+# Delete Files"; the optional ``row`` column is never read).
+_POS_DELETE_FIELDS = (
+    _T.StructField("file_path", _T.StringType()),
+    _T.StructField("pos", _T.LongType()),
+)
 
 
-def _scan_schema_memo_put(key, spark_schema) -> None:
-    _SCAN_SCHEMA_MEMO[key] = spark_schema
-    if len(_SCAN_SCHEMA_MEMO) > _SCAN_SCHEMA_MEMO_MAX:
-        _SCAN_SCHEMA_MEMO.pop(next(iter(_SCAN_SCHEMA_MEMO)))
-
-
-# Per-PATH footer-schema memo (r14, VERDICT r13 #6: kill remaining
-# schema-inferring reads).  The per-fileset memo above only helps the
-# SECOND scan of an identical file set; every first scan still paid a
-# Spark schema-inference JOB (~0.1 s at bench scale, a footer pass over
-# every file at 100 TB).  Data files are immutable, so each file's
-# footer schema can be read ONCE (pyarrow, driver-side, ~1 ms local)
-# and reused across every file-set grouping that ever includes the
-# file — new commits recombine old files into new sets, which the
-# fileset memo cannot exploit.  Anything the footer maps ambiguously
-# (variant logical types, INT96/nanos timestamps) returns None and the
-# caller falls back to live Spark inference; SPARK_GRAFT_SCHEMA_XCHECK=1
-# makes every declared-schema read ALSO infer and assert equality.
-_FOOTER_SCHEMA_MEMO: dict = {}
-_FOOTER_SCHEMA_MEMO_MAX = 4096
-
-
-def _relax_nullable(dt):
-    """Recursively nullable/containsNull=True — Spark inference reports
-    everything nullable; footer schemas carry parquet repetition."""
-    import pyspark.sql.types as _T
-
-    if isinstance(dt, _T.StructType):
-        return _T.StructType(
-            [
-                _T.StructField(f.name, _relax_nullable(f.dataType), True)
-                for f in dt.fields
-            ]
-        )
-    if isinstance(dt, _T.ArrayType):
-        return _T.ArrayType(_relax_nullable(dt.elementType), True)
-    if isinstance(dt, _T.MapType):
-        return _T.MapType(
-            _relax_nullable(dt.keyType), _relax_nullable(dt.valueType), True
-        )
-    return dt
-
-
-def _arrow_type_ambiguous(t) -> bool:
-    """Arrow types whose Spark-read mapping differs from footer-derived
-    conversion: ns-unit timestamps (INT96 legacy files and true
-    nano-parquet read differently than ``from_arrow_schema`` maps them)."""
-    import pyarrow as _pa
-
-    if _pa.types.is_timestamp(t):
-        return t.unit == "ns"
-    if _pa.types.is_list(t) or _pa.types.is_large_list(t):
-        return _arrow_type_ambiguous(t.value_type)
-    if _pa.types.is_struct(t):
-        return any(_arrow_type_ambiguous(f.type) for f in t)
-    if _pa.types.is_map(t):
-        return _arrow_type_ambiguous(t.key_type) or _arrow_type_ambiguous(
-            t.item_type
-        )
-    return False
-
-
-def _footer_file_schema(path: str):
-    """The file's column StructType built from its parquet FOOTER
-    (immutable files ⇒ per-path LRU), or None when the footer is
-    unreadable or maps ambiguously — callers fall back to inference."""
-    st = _FOOTER_SCHEMA_MEMO.get(path)
-    if st is not None:
-        return st
-    local = _local_path(path)
-    if "://" in local or not os.path.isfile(local):
-        return None
-    try:
-        import pyarrow.parquet as _pq
-        from pyspark.sql.pandas.types import from_arrow_schema
-
-        arrow = _pq.read_schema(local)
-        if any(_arrow_type_ambiguous(f.type) for f in arrow):
-            return None
-        st = from_arrow_schema(arrow, prefer_timestamp_ntz=True)
-    except Exception:
-        return None
-    st = _relax_nullable(st)
-    _FOOTER_SCHEMA_MEMO[path] = st
-    if len(_FOOTER_SCHEMA_MEMO) > _FOOTER_SCHEMA_MEMO_MAX:
-        _FOOTER_SCHEMA_MEMO.pop(next(iter(_FOOTER_SCHEMA_MEMO)))
-    return st
-
-
-def _declared_read_schema(paths, base_path=None, part_types=None):
-    """The full read schema Spark inference WOULD return for these paths
-    (file columns unioned across footers + hive partition-directory
-    columns under ``base_path``), or None when any piece cannot be
-    derived — mixed layouts, unknown partition types, exotic footers.
-    ``part_types`` maps partition-directory names to their Spark types
-    (identity partitions: the table column's type — the read path casts
-    to the target schema afterwards either way).
-
-    Capped at ``SPARK_GRAFT_DECLARED_SCHEMA_MAX_FILES`` (256) paths: the
-    footer walk is driver-side and sequential, so for a very large scan
-    group plain inference is the better trade — non-mergeSchema
-    inference reads ONE footer, and mergeSchema distributes the walk
-    across the cluster.  The per-fileset memo still makes repeats of a
-    big group free after the first inference."""
-    import pyspark.sql.types as _T
-
-    try:
-        cap = int(
-            os.environ.get("SPARK_GRAFT_DECLARED_SCHEMA_MAX_FILES", "256")
-        )
-    except ValueError:
-        cap = 256
-    if len(paths) > cap > 0:
-        return None
-    fields: list = []
-    seen: dict = {}
-    for p in paths:
-        st = _footer_file_schema(p)
-        if st is None:
-            return None
-        for f in st.fields:
-            prev = seen.get(f.name)
-            if prev is None:
-                seen[f.name] = f.dataType
-                fields.append(f)
-            elif prev != f.dataType:
-                return None
-    if base_path is not None:
-        base = os.path.abspath(_local_path(base_path))
-        pcols = None
-        for p in paths:
-            rel = os.path.relpath(
-                os.path.dirname(os.path.abspath(_local_path(p))), base
-            )
-            names = tuple(
-                s.split("=", 1)[0] for s in rel.split(os.sep) if "=" in s
-            )
-            if pcols is None:
-                pcols = names
-            elif pcols != names:
-                return None
-        for name in pcols or ():
-            if name in seen:
-                return None
-            t = (part_types or {}).get(name)
-            if t is None:
-                return None
-            fields.append(_T.StructField(name, t, True))
-    return _T.StructType(fields)
-
-
-def _xcheck_declared_schema(reader_fn, declared, tag: str, paths=()) -> None:
-    """SPARK_GRAFT_SCHEMA_XCHECK=1: run the live inference the declared
-    schema replaced and assert containment — every inferred field exists
-    in the declared schema, with the identical type for FILE columns.
-    Containment, not equality: plain (non-mergeSchema) inference reads
-    ONE footer, so on groups where only some files carry the reserved
-    lineage columns it under-reports them; the declared union includes
-    them, and downstream projections select by name, ignoring extras.
-    Partition-DIRECTORY columns (names absent from every footer) only
-    need to exist: inference narrows their type from the directory
-    string (``p=1`` → int) while the declared schema uses the table
-    column's type — the read path casts to the table type either way."""
-    inferred = _relax_nullable(reader_fn().schema)
-    got = {f.name: f.dataType for f in declared.fields}
-    file_names = set()
-    for p in paths:
-        st = _footer_file_schema(p)
-        if st is not None:
-            file_names |= {f.name for f in st.fields}
-    bad = [
-        f.name
-        for f in inferred.fields
-        if f.name not in got
-        or (f.name in file_names and got[f.name] != f.dataType)
-    ]
-    if bad:
-        raise AssertionError(
-            f"declared-read-schema mismatch on {bad} ({tag}):\n"
-            f"declared: {declared.simpleString()}\n"
-            f"inferred: {inferred.simpleString()}"
-        )
-
-
-def _memo_read_parquet(
-    spark: SparkSession, paths, base_path=None, part_types=None
+def _read_files(
+    spark: SparkSession, paths, fields, fmt: str = "parquet", base_path=None
 ) -> DataFrame:
-    """Parquet read of IMMUTABLE files with the schema DECLARED instead of
-    inferred: built from per-path footer schemas (plus partition-directory
-    columns) when derivable, else inferred once and memoized per file set.
-    Either way repeats never pay a footer re-inference job."""
-    key = (base_path, tuple(paths))
-    reader = spark.read
+    """Read files the table's metadata names under a schema built from
+    that metadata (``fields``, Spark ``StructField`` objects) — never from
+    footers or inference, so building the frame starts no Spark job.  A
+    declared column a file lacks reads null, a narrower physical type
+    reads widened, and hive partition directories under ``base_path``
+    still surface, typed by the declared field of the same name or else
+    from the path string."""
+    schema = _T.StructType([_T.StructField(f.name, f.dataType) for f in fields])
+    reader = spark.read.schema(schema)
     if base_path is not None:
         reader = reader.option("basePath", base_path)
-    cached = _SCAN_SCHEMA_MEMO.get(key)
-    if cached is None:
-        cached = _declared_read_schema(paths, base_path, part_types)
-        if cached is not None:
-            if os.environ.get("SPARK_GRAFT_SCHEMA_XCHECK"):
-                _xcheck_declared_schema(
-                    lambda: reader.parquet(*paths), cached, paths[0], paths
-                )
-            _scan_schema_memo_put(key, cached)
-    if cached is None:
-        df = reader.parquet(*paths)
-        _scan_schema_memo_put(key, df.schema)
-        return df
-    return reader.schema(cached).parquet(*paths)
-
-
-def _read_back_parquet(spark: SparkSession, out_dir: str, like_schema) -> DataFrame:
-    """Read back a directory THIS engine just wrote, passing the writer's
-    own schema (nullability relaxed, per-field metadata stripped) so the
-    read skips footer re-inference — the files were written from a frame
-    with exactly these columns and types, so inference could return
-    nothing else."""
-    import pyspark.sql.types as _T
-
-    clean = _T.StructType(
-        [_T.StructField(f.name, f.dataType, True) for f in like_schema.fields]
-    )
-    return spark.read.schema(clean).parquet(out_dir)
+    return reader.format(fmt).load(paths if isinstance(paths, str) else list(paths))
 
 
 _THETA_TYPES = (
@@ -2284,8 +2077,6 @@ class Table:
         return src.mapInArrow(run_slices, st)
 
     def _changelog_empty(self) -> DataFrame:
-        import pyspark.sql.types as _T
-
         base = self.current_schema().to_spark()
         fields = list(base.fields) + [
             _T.StructField("_change_type", _T.StringType()),
@@ -2940,8 +2731,6 @@ class Table:
         the reserved columns physically) take their non-null cells straight
         from the file; null cells and inheritance-based files derive
         ``first-row-id + position`` / the file's data sequence number."""
-        import pyspark.sql.types as _T
-
         df = self._read_entries(
             entries,
             schema=schema,
@@ -2992,9 +2781,10 @@ class Table:
     ) -> list[dict[str, Any]]:
         """Distributed write of one commit's data files.  Returns the new
         file-level manifest entries (path, record-count, per-column
-        lower/upper bounds).  Stats come from one
-        aggregation over ``_metadata.file_path`` on the freshly written
-        files — the write itself stays a single distributed job.
+        lower/upper bounds) from :meth:`_collect_file_stats`: the parquet
+        footers of an unpartitioned parquet write, else one aggregation
+        over ``_metadata.file_path`` on the freshly written files — the
+        write itself stays a single distributed job.
 
         ``lineage_cols=True`` (compaction) carries ``_row_id`` /
         ``_last_updated_sequence_number`` through as physical columns with
@@ -3174,48 +2964,39 @@ class Table:
             writer.orc(out)
         else:
             writer.parquet(out)
-        return self._collect_file_stats(out, partitioned=bool(part_cols))
+        return self._collect_file_stats(
+            out, df.schema.fields, fmt, partitioned=bool(part_cols)
+        )
 
     def _collect_file_stats(
-        self, out_dir: str, partitioned: bool = False
+        self, out_dir: str, fields, fmt: str, partitioned: bool = False
     ) -> list[dict[str, Any]]:
         """Per-file manifest entries (record counts, min/max bounds, null
-        counts) for the freshly written files.
+        counts) for the files just written to ``out_dir`` from a frame
+        with ``fields``.
 
-        Fast path (r13, optimization guide §1 first-principles): the
-        parquet FOOTERS already carry exactly these statistics, so reading
-        them costs O(files × KB of footer) instead of the full second data
-        scan the previous Spark aggregation paid — at 100 TB that second
-        scan doubled every commit's read volume.  Value semantics are
-        pinned to the aggregation path (same bound truncation, same
-        NaN-greatest float ordering, same all-null handling); the
-        ``SPARK_GRAFT_STATS_XCHECK=1`` env makes every commit compute BOTH
-        and assert equality (the whole pytest gate and oracle mirror were
-        run that way when this landed).  Falls back to the Spark
-        aggregation for ORC, hive-partitioned layouts (bounds for the
-        directory-derived partition columns need Spark's partition-value
-        inference), non-local IO, and any file whose footer lacks a needed
-        statistic (e.g. parquet-mr drops min/max for >4 KB values)."""
+        Unpartitioned parquet writes take the bounds from the parquet
+        FOOTERS (:meth:`_footer_stat_entries`): they already carry these
+        statistics, so no second scan of the data runs.  ORC writes,
+        hive-partitioned layouts (bounds of the directory-derived
+        partition columns), non-local IO and any file whose footer lacks a
+        needed statistic (e.g. parquet-mr drops min/max for >4 KB values)
+        fall back to one Spark aggregation (:meth:`_file_stat_entries`)
+        over the files read under the writer frame's schema; the two
+        paths agree value for value
+        (``test_table.py::test_footer_stats_match_spark_aggregation``)."""
         files = list(self.ops.io.list(out_dir))
-        has_orc = any(f.endswith(".orc") for f in files)
-        if not has_orc and not any(f.endswith(".parquet") for f in files):
+        if not any(f.endswith("." + fmt) for f in files):
             return []  # zero-row write (e.g. a delete emptied every hit file)
-        entries = None
-        if not has_orc and not partitioned:
+        if fmt == "parquet" and not partitioned:
             entries = self._footer_stat_entries(
                 [f for f in files if f.endswith(".parquet")]
             )
-        if entries is not None and not os.environ.get("SPARK_GRAFT_STATS_XCHECK"):
-            return entries
-        reader = self.spark.read.option("basePath", out_dir)
-        written = reader.orc(out_dir) if has_orc else reader.parquet(out_dir)
-        agg_entries = self._file_stat_entries(written)
-        if entries is not None and entries != agg_entries:
-            raise AssertionError(
-                "footer-stats mismatch vs Spark aggregation:\n"
-                f"footer: {entries}\nagg:    {agg_entries}"
-            )
-        return agg_entries
+            if entries is not None:
+                return entries
+        return self._file_stat_entries(
+            _read_files(self.spark, out_dir, fields, fmt, base_path=out_dir)
+        )
 
     # Spark-side float ordering for multi-row-group aggregation: NaN is
     # GREATER than everything (so max picks it, min never does unless all
@@ -3483,16 +3264,19 @@ class Table:
         pos_col: Optional[str] = None,
         extra_cols: Optional[dict[str, str]] = None,
     ) -> DataFrame:
-        """Read manifest entries back as a DataFrame, restoring declared
-        column order and types (identity-partition values round-trip through
-        directory names; Spark's partition-column type inference is undone by
-        casting back to the table schema — round-1 review item).
+        """Read manifest entries back as a DataFrame in the target
+        ``schema``'s column order and types.
 
         Schema evolution: each entry records the ``schema-id`` it was
-        written under.  Files are read in per-schema groups and projected
-        onto the target schema by **field id** — renamed columns resolve to
-        their name-at-write, added columns backfill ``initial_default``/null
-        — then unioned.  No data rewrite on evolution, ever."""
+        written under, and that schema is the file's read schema (its
+        stored fields, plus ``extra_cols`` as nullable longs), so building
+        the frame infers nothing.  Identity-partition values round-trip
+        through directory names, typed by the same fields.  Files are read
+        in per-(schema, commit directory, format) groups and projected
+        onto the target schema by **field id** — renamed columns resolve
+        to their name-at-write, added columns backfill
+        ``initial_default``/null, widened columns cast — then unioned.  No
+        data rewrite on evolution, ever."""
         schema = schema or self.current_schema()
         # merge-on-read deletes: positional and DV entries anti-join the
         # spec's (file_path, pos) pairs (rewritten files get new paths and
@@ -3539,8 +3323,6 @@ class Table:
                 groups.setdefault((sid, commit_dir(p), fmt), []).append(p)
         groups = {k: fs for k, fs in groups.items() if fs}
         if not groups:
-            import pyspark.sql.types as _T
-
             empty_schema = schema.to_spark()
             extra = []
             if file_col:
@@ -3554,59 +3336,35 @@ class Table:
             return self.spark.createDataFrame([], empty_schema)
         parts = []
         for sid, cdir, fmt in sorted(groups):
+            # the entry's written schema is the file's: its stored fields
+            # (v3 unknown columns are never stored) plus the lineage
+            # columns, which only some files carry and the rest read null
             written = self.schema_by_id(sid) or schema
-            reader = self.spark.read.option("basePath", cdir)
-            paths = groups[(sid, cdir, fmt)]
-            # identity partition directories cast to the written column's
-            # type (the projection below re-casts to the target schema
-            # anyway); unknown names (transformed specs) fall back to
-            # live inference inside the helpers
-            part_types = {f.name: f.to_spark().dataType for f in written.fields}
-            if fmt == "orc":
-                df = reader.format("orc").load(paths)
-            elif extra_cols:
-                # reserved columns (materialized lineage) exist only in
-                # SOME files of a group (compaction outputs share the flat
-                # unpartitioned group with later appends).  The declared
-                # union schema surfaces them everywhere, null where a file
-                # lacks them — what option("mergeSchema") computed with a
-                # footer-inference JOB per call (r14: mergeSchema was the
-                # one read the r13 fileset memo could not cover)
-                declared = _declared_read_schema(paths, cdir, part_types)
-                if declared is not None:
-                    if os.environ.get("SPARK_GRAFT_SCHEMA_XCHECK"):
-                        _xcheck_declared_schema(
-                            lambda cd=cdir, ps=paths: self.spark.read.option(
-                                "basePath", cd
-                            ).option("mergeSchema", "true").parquet(*ps),
-                            declared,
-                            f"lineage:{paths[0]}",
-                            paths,
-                        )
-                    df = reader.schema(declared).parquet(*paths)
-                else:
-                    df = reader.option("mergeSchema", "true").parquet(*paths)
-            else:
-                df = _memo_read_parquet(
-                    self.spark, paths, base_path=cdir, part_types=part_types
-                )
+            stored = {
+                f.field_id: f
+                for f in written.fields
+                if not isinstance(f.field_type, ice_t.UnknownType)
+            }
+            df = _read_files(
+                self.spark,
+                groups[(sid, cdir, fmt)],
+                [f.to_spark() for f in stored.values()]
+                + [_T.StructField(c, _T.LongType()) for c in extra_cols or {}],
+                fmt,
+                base_path=cdir,
+            )
             cols = []
             for f in schema.fields:
-                wf = written.field_by_id(f.field_id)
+                wf = stored.get(f.field_id)
                 spark_t = f.to_spark().dataType
                 if isinstance(f.field_type, ice_t.UnknownType):
-                    # v3 unknown: never stored, always reads null — even
-                    # if some file physically carries the name
                     cols.append(F.lit(None).alias(f.name))
-                elif wf is not None and wf.name in df.columns:
+                elif wf is not None:
                     cols.append(F.col(wf.name).cast(spark_t).alias(f.name))
                 else:
                     cols.append(F.lit(f.initial_default).cast(spark_t).alias(f.name))
             for phys, alias in (extra_cols or {}).items():
-                if phys in df.columns:
-                    cols.append(F.col(phys).cast("long").alias(alias))
-                else:
-                    cols.append(F.lit(None).cast("long").alias(alias))
+                cols.append(F.col(phys).alias(alias))
             if need_pos:
                 # physical row position within the parquet file — the spec's
                 # positional-delete coordinate; Spark's _metadata.row_index
@@ -3672,10 +3430,11 @@ class Table:
             del_parts = []
             if pos_files:
                 del_parts.append(
-                    _memo_read_parquet(
+                    _read_files(
                         self.spark,
                         [self.ops._abs(e["delete-file"]) for e in pos_files],
-                    ).select("file_path", F.col("pos").cast("long").alias("pos"))
+                        _POS_DELETE_FIELDS,
+                    )
                 )
             if dv_files:
                 # v3 deletion vectors: decode each referenced file's roaring
@@ -3685,8 +3444,6 @@ class Table:
                 # The decoded set is deleted-rows-sized — the same driver
                 # posture as broadcasting the positional delete sets.
                 from iceberg_ruby_spark.deletion_vectors import decode_dv_blob
-                import pyspark.sql.types as _T
-
                 dv_rows = []
                 blob_cache: dict[str, bytes] = {}
                 for e in dv_files:
@@ -3739,8 +3496,6 @@ class Table:
             #    time past ~100 micro-batches, and Iceberg readers
             #    likewise merge all equality deletes into one pass per
             #    file.
-            import pyspark.sql.types as _T
-
             seq_pairs = []
             for de in entries:
                 if "delete-file" in de:
@@ -3796,7 +3551,13 @@ class Table:
                     ),
                 )
                 keys_df = (
-                    _memo_read_parquet(self.spark, [p for p, _ in fseq])
+                    _read_files(
+                        self.spark,
+                        [p for p, _ in fseq],
+                        self._key_fields(
+                            list(cols_key), groups[cols_key][0].get("equality-ids")
+                        ),
+                    )
                     .select(
                         *[
                             F.col(c).alias(f"__eqsk{gi}_{j}")
@@ -4582,70 +4343,77 @@ class Table:
         pat = "^(" + "|".join(re.escape(p) for p in loc_prefixes) + ")"
         rel_fp = F.regexp_replace(F.col("__f"), pat, "")
         # Spec-shaped position delete files (format spec "Position
-        # Delete Files"): column names file_path/pos with the reserved
-        # field ids 2147483546/2147483545 stamped in the parquet
-        # footer, file_path as the full data-file path (the same form
-        # the Avro manifests publish), rows clustered per target file
-        # and sorted by (file_path, pos).  Rename-survival moves to the
-        # entry's ``base-location`` (the table location at write time):
-        # the read path strips any recorded base and re-absolutizes
-        # against the current location, so the file CONTENT stays
-        # spec-readable while the engine still survives rename_table.
+        # Delete Files") hold file_path as the full data-file path (the
+        # same form the Avro manifests publish).  Rename-survival moves
+        # to the entry's ``base-location`` (the table location at write
+        # time): the read path strips any recorded base and
+        # re-absolutizes against the current location, so the file
+        # CONTENT stays spec-readable while the engine still survives
+        # rename_table.
         loc = self.ops.location
         base = (loc if "://" in loc else os.path.abspath(loc)).rstrip("/")
-        self.spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
         hits = live.filter(cond).select(
-            F.concat(F.lit(base + "/"), rel_fp).alias(
+            F.concat(F.lit(base + "/"), rel_fp).alias("file_path"),
+            F.col("__p").alias("pos"),
+        )
+        del_entries = self._write_position_deletes(hits, base)
+        return del_entries, sum(e["deleted-records"] for e in del_entries)
+
+    def _write_position_deletes(
+        self, pairs: DataFrame, base: str
+    ) -> list[dict[str, Any]]:
+        """Write the (``file_path``, ``pos``) rows of ``pairs`` as spec
+        position-delete files and return their entries (none, and the
+        directory removed, when ``pairs`` is empty).  Spec layout: the
+        reserved field ids 2147483546/2147483545 stamped in the parquet
+        footer, one file per target-file hash bucket, rows sorted by
+        (file_path, pos) — the layout Iceberg readers merge most cheaply.
+        Each entry records its targets as ``applies-to`` (relative to
+        ``base``, the table location the paths were written under, kept
+        as ``base-location``) and its row count, from ONE footer-cheap
+        job over the written files."""
+        self.spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
+        del_dir = self._new_delete_dir()
+        pairs.select(
+            F.col("file_path").alias(
                 "file_path", metadata={"parquet.field.id": 2147483546}
             ),
-            F.col("__p")
+            F.col("pos")
             .cast("long")
             .alias("pos", metadata={"parquet.field.id": 2147483545}),
-        )
-        del_dir = os.path.join(
-            self.ops.data_dir, f"deletes-{uuid_mod.uuid4().hex[:12]}"
-        )
-        # one delete file per target data file (hash distribution on
-        # file_path), positions sorted within — the layout Iceberg
-        # readers merge most cheaply
-        hits.repartition(F.col("file_path")).sortWithinPartitions(
+        ).repartition(F.col("file_path")).sortWithinPartitions(
             "file_path", "pos"
         ).write.parquet(del_dir)
-        written = _read_back_parquet(self.spark, del_dir, hits.schema)
-        # per-part-file counts + target scope in ONE footer-cheap job
         per_file = (
-            written.groupBy(F.col("_metadata.file_path").alias("__part"))
+            _read_files(self.spark, del_dir, _POS_DELETE_FIELDS)
+            .groupBy(F.col("_metadata.file_path").alias("__part"))
             .agg(
                 F.count(F.lit(1)).alias("__n"),
                 F.collect_set("file_path").alias("__targets"),
             )
             .collect()
         )
-        deleted = sum(r["__n"] for r in per_file)
-        if not deleted:
+        if not per_file:
             self.ops.io.delete_prefix(del_dir)
-            return [], 0
+            return []
         strip = base + "/"
-        del_entries = []
-        for r in sorted(per_file, key=lambda r: r["__part"]):
-            part = _spark_uri_path(r["__part"])
-            del_entries.append(
-                {
-                    "delete-file": part,
-                    "applies-to": sorted(
-                        t[len(strip):] if t.startswith(strip) else t
-                        for t in r["__targets"]
-                    ),
-                    "deleted-records": r["__n"],
-                    "content": "position-deletes",
-                    "base-location": base,
-                    # spec at write time — keeps the Avro per-spec
-                    # manifest grouping correct even if the table's
-                    # default spec evolves after this delete
-                    "spec-id": self.default_spec_id,
-                }
-            )
-        return del_entries, deleted
+        return [
+            {
+                "delete-file": _spark_uri_path(r["__part"]),
+                "applies-to": sorted(
+                    t[len(strip):] if t.startswith(strip) else t
+                    for t in r["__targets"]
+                ),
+                "deleted-records": r["__n"],
+                "content": "position-deletes",
+                "base-location": base,
+                # spec at write time — keeps the Avro per-spec manifest
+                # grouping correct even if the table's default spec
+                # evolves after this delete
+                "spec-id": self.default_spec_id,
+            }
+            for r in sorted(per_file, key=lambda r: r["__part"])
+        ]
 
     def _dv_delete_build(
         self, cur_entries: list[dict[str, Any]], cond, cond_str: Optional[str] = None
@@ -4699,8 +4467,6 @@ class Table:
         # as COMPRESSED payload bytes on a broadcast file-keyed
         # join; the union with the new positions happens inside the
         # grouped build, also executor-side.
-        import pyspark.sql.types as _T
-
         loc = self.ops.location
         base = (loc if "://" in loc else os.path.abspath(loc)).rstrip("/")
         prior_rows = []
@@ -5379,7 +5145,7 @@ class Table:
                         )
                 scan_entries = kept + mor
             live = self._read_entries(scan_entries)
-            written = _read_back_parquet(self.spark, del_dir, keys_df.schema)
+            written = _read_files(self.spark, del_dir, keys_df.schema.fields)
             # size/cleanup through the table's FileIO (r14 review): the key
             # files live under the TABLE location, which need not be local
             size_bytes = sum(
@@ -5432,6 +5198,26 @@ class Table:
 
     def _new_delete_dir(self) -> str:
         return os.path.join(self.ops.data_dir, f"deletes-{uuid_mod.uuid4().hex[:12]}")
+
+    def _key_fields(self, cols: list[str], ids=None) -> list:
+        """Read fields of an equality-delete key file: ``cols`` as written,
+        typed from the table's schemas by field id (``ids``, the entry's
+        ``equality-ids``; by name when absent).  int and float keys read
+        in their wide form, which covers files written before a widen and
+        files whose writer used the wide physical type alike."""
+        by_id = {f.field_id: f for s in self.schemas for f in s.fields}
+        cur = self.current_schema()
+        by_id.update({f.field_id: f for f in cur.fields})
+        out = []
+        for j, c in enumerate(cols):
+            f = by_id.get(ids[j]) if ids else cur.field_by_name(c)
+            dt = f.to_spark().dataType
+            if isinstance(dt, _T.IntegerType):
+                dt = _T.LongType()
+            elif isinstance(dt, _T.FloatType):
+                dt = _T.DoubleType()
+            out.append(_T.StructField(c, dt))
+        return out
 
     def _key_delete_entries(
         self, del_dir: str, cols: list[str]
@@ -5492,7 +5278,7 @@ class Table:
                 F.sum(F.col(c).isNull().cast("int")).alias(f"__nn{j}"),
             ]
         rows = (
-            self.spark.read.parquet(del_dir)
+            _read_files(self.spark, del_dir, self._key_fields(cols))
             .groupBy(F.col("_metadata.file_path").alias("__part"))
             .agg(*aggs)
             .collect()
@@ -6219,8 +6005,6 @@ class Table:
         one read of the delete files themselves.  Returns iceberg-spark's
         result vocabulary."""
         self._check_writable()
-        import uuid as uuid_mod
-
         entries = self._current_entries()
         pos = [e for e in entries if e.get("content") == "position-deletes"]
         if len(pos) <= 1:
@@ -6236,14 +6020,15 @@ class Table:
         # applies, so consolidation survives prior rename_table moves)
         parts = []
         for e in pos:
-            df_e = _memo_read_parquet(
-                self.spark, [self.ops._abs(e["delete-file"])]
-            ).select("file_path", F.col("pos").cast("long").alias("pos"))
             ebase = (e.get("base-location") or base).rstrip("/")
             rel = F.regexp_replace(
                 F.col("file_path"), "^" + re.escape(ebase + "/"), ""
             )
-            parts.append(df_e.select(rel.alias("file_path"), "pos"))
+            parts.append(
+                _read_files(
+                    self.spark, [self.ops._abs(e["delete-file"])], _POS_DELETE_FIELDS
+                ).select(rel.alias("file_path"), "pos")
+            )
         merged = parts[0]
         for p_ in parts[1:]:
             merged = merged.unionByName(p_)
@@ -6251,42 +6036,10 @@ class Table:
         merged = merged.distinct().select(
             F.when(is_abs, F.col("file_path"))
             .otherwise(F.concat(F.lit(base + "/"), F.col("file_path")))
-            .alias("file_path", metadata={"parquet.field.id": 2147483546}),
-            F.col("pos").alias("pos", metadata={"parquet.field.id": 2147483545}),
+            .alias("file_path"),
+            "pos",
         )
-        del_dir = os.path.join(
-            self.ops.data_dir, f"deletes-{uuid_mod.uuid4().hex[:12]}"
-        )
-        self.spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
-        merged.repartition(F.col("file_path")).sortWithinPartitions(
-            "file_path", "pos"
-        ).write.parquet(del_dir)
-        written = _read_back_parquet(self.spark, del_dir, merged.schema)
-        per_file = (
-            written.groupBy(F.col("_metadata.file_path").alias("__part"))
-            .agg(
-                F.count(F.lit(1)).alias("__n"),
-                F.collect_set("file_path").alias("__targets"),
-            )
-            .collect()
-        )
-        strip = base + "/"
-        new_entries = []
-        for r in sorted(per_file, key=lambda r: r["__part"]):
-            part = _spark_uri_path(r["__part"])
-            new_entries.append(
-                {
-                    "delete-file": part,
-                    "applies-to": sorted(
-                        t[len(strip):] if t.startswith(strip) else t
-                        for t in r["__targets"]
-                    ),
-                    "deleted-records": r["__n"],
-                    "content": "position-deletes",
-                    "base-location": base,
-                    "spec-id": self.default_spec_id,
-                }
-            )
+        new_entries = self._write_position_deletes(merged, base)
         self._commit_snapshot(
             "replace",
             others + new_entries,
@@ -7873,13 +7626,12 @@ class TableInspect:
         parts = []
         if pos_files:
             parts.append(
-                _memo_read_parquet(
-                    t.spark, [t.ops._abs(e["delete-file"]) for e in pos_files]
-                )
-                .select(
-                    "file_path",
-                    F.col("pos").cast("long").alias("pos"),
-                    F.input_file_name().alias("delete_file_path"),
+                _read_files(
+                    t.spark,
+                    [t.ops._abs(e["delete-file"]) for e in pos_files],
+                    _POS_DELETE_FIELDS,
+                ).select(
+                    "file_path", "pos", F.input_file_name().alias("delete_file_path")
                 )
             )
         if dv_files:
@@ -8880,8 +8632,6 @@ class TableScan:
         spark = self.table.spark
         if snap is None:
             st = schema.to_spark()
-            import pyspark.sql.types as _T
-
             extra_fields = []
             if self._metadata_columns:
                 extra_fields += [
@@ -8901,10 +8651,8 @@ class TableScan:
                 snap.manifest_list, self._parsed_filter_trees(), allow_mor=True
             )
             entries = self._prune_entries(entries)
-            # _read_entries restores declared column order AND casts each
-            # column back to the table schema (identity-partition values
-            # round-trip through directory names; without the cast Spark's
-            # partition type inference can flip e.g. string→int)
+            # _read_entries reads each file under its written schema and
+            # projects it onto ``schema``'s column order and types
             if self._row_lineage:
                 df = self.table._read_entries_with_lineage(
                     entries, schema=schema, keep_coords=self._metadata_columns

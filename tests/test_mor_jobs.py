@@ -126,3 +126,48 @@ def test_mor_read_plan_constant_in_delete_count(catalog):
                 shapes[i] = _plan_shape(t)
         assert shapes[1][0] >= 1, (name, shapes)
         assert shapes[1] == shapes[10] == (shapes[1][0], False), (name, shapes)
+
+
+def test_read_path_starts_no_schema_job(catalog, spark):
+    """Building a scan's DataFrame runs no Spark job: every file's read
+    schema comes from table metadata, never from footer inference — for a
+    300-file table, and for a v3 lineage read over compacted files that
+    carry the reserved lineage columns next to files that do not.  File
+    listing stays on the driver (the parallel-listing threshold is raised,
+    so only schema work could start a job)."""
+    key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "100000")
+    try:
+        t = catalog.create_table(
+            "nojob_flat",
+            schema={"k": "int", "v": "string"},
+            properties={"write.spark.max-records-per-file": "1"},
+        )
+        t.append([{"k": i, "v": f"v{i}"} for i in range(300)])
+        t = t.refresh()
+        assert len(t._entry_files(t._current_entries())) == 300
+        df, jobs = _in_group(spark, lambda: t.scan().to_df())
+        assert jobs == []
+        assert df.count() == 300
+
+        v3 = catalog.create_table(
+            "nojob_v3",
+            schema={"k": "int", "v": "string"},
+            properties={"format-version": "3"},
+        )
+        for b in range(3):
+            v3.append([{"k": b * 10 + i, "v": f"v{b}"} for i in range(10)])
+        v3.compact()
+        v3.append([{"k": 100 + i, "v": "late"} for i in range(5)])
+        v3 = v3.refresh()
+        df, jobs = _in_group(
+            spark, lambda: v3.scan().with_row_lineage().to_df()
+        )
+        assert jobs == []
+        rows = df.collect()
+        assert len(rows) == 35
+        assert len({r["_row_id"] for r in rows}) == 35
+        assert all(r["_last_updated_sequence_number"] is not None for r in rows)
+    finally:
+        spark.conf.set(key, prev)

@@ -4,6 +4,7 @@ backfill, extra-column rejection, metadata accessors, time travel)."""
 
 import datetime
 import decimal
+import json
 
 import pytest
 
@@ -23,47 +24,137 @@ FULL_SCHEMA = {
 }
 
 
-def test_append_type_grid_roundtrip(catalog):
-    t = catalog.create_table("events", schema=FULL_SCHEMA)
-    today = datetime.date(2026, 8, 13)
-    rows = [
-        {
-            "boolean": True,
-            "int": 1,
-            "long": 1,
-            "float": 1.5,
-            "double": 1.5,
-            "decimal": decimal.Decimal("1000"),
-            "date": today,
-            "timestamp": datetime.datetime(1970, 1, 1),
-            "string": "one",
-            "binary": b"one",
-        },
-        {k: None for k in FULL_SCHEMA},
-        {
-            "boolean": False,
-            "int": 3,
-            "long": 3,
-            "float": 3.5,
-            "double": 3.5,
-            "decimal": decimal.Decimal("-1.23456789"),
-            "date": today + datetime.timedelta(days=2),
-            "timestamp": datetime.datetime(1970, 1, 1, 0, 0, 2),
-            "string": "three",
-            "binary": b"three",
-        },
+def _grid_schema(v3: bool):
+    """FULL_SCHEMA plus timestamptz, time, uuid, fixed, a nested struct,
+    list and map, and (v3) variant — field ids assigned in order."""
+    from iceberg_ruby_spark import types as T
+    from iceberg_ruby_spark.table_definition import parse_type
+
+    fields = [
+        T.NestedField(i + 1, name, parse_type(typ))
+        for i, (name, typ) in enumerate(FULL_SCHEMA.items())
     ]
-    t.append(rows)
-    got = sorted(t.to_a(), key=lambda r: (r["int"] is None, r["int"] or 0))
-    exp = sorted(rows, key=lambda r: (r["int"] is None, r["int"] or 0))
+    nxt = len(fields) + 1
+
+    def field(name, typ, required=False):
+        nonlocal nxt
+        nxt += 1
+        return T.NestedField(nxt - 1, name, typ, required=required)
+
+    fields += [
+        field("timestamptz", T.TimestampTzType()),
+        field("time", T.TimeType()),
+        field("uuid", T.UuidType()),
+        field("fixed", T.FixedType(4)),
+    ]
+    fields.append(
+        field(
+            "struct",
+            T.StructType([field("a", T.IntType()), field("b", T.StringType())]),
+        )
+    )
+    fields.append(field("list", T.ListType(field("element", T.LongType()))))
+    fields.append(
+        field(
+            "map",
+            T.MapType(
+                field("key", T.StringType(), required=True),
+                field("value", T.LongType()),
+            ),
+        )
+    )
+    if v3:
+        fields.append(field("variant", T.VariantType()))
+    return T.Schema(fields)
+
+
+def _grid_rows(base: int, v3: bool):
+    """Two valued rows keyed by ``int`` = base+1 / base+3, and one all-null
+    row (partition columns included, so every layout writes a null
+    partition)."""
+    today = datetime.date(2026, 8, 13)
+    utc = datetime.timezone.utc
+    rows = []
+    for i in (base + 1, base + 3):
+        r = {
+            "boolean": i % 2 == 1,
+            "int": i,
+            "long": i,
+            "float": i + 0.5,
+            "double": i + 0.5,
+            "decimal": decimal.Decimal(f"-{i}.12345678"),
+            "date": today + datetime.timedelta(days=i),
+            "timestamp": datetime.datetime(1970, 1, 1, 0, 0, i),
+            "string": f"s{i}",
+            "binary": f"b{i}".encode(),
+            "timestamptz": datetime.datetime(2026, 1, 1, 0, 0, i, tzinfo=utc),
+            "time": i * 1_000_000,
+            "uuid": f"00000000-0000-0000-0000-{i:012d}",
+            "fixed": f"f{i:03d}".encode(),
+            "struct": {"a": i, "b": f"n{i}"},
+            "list": [i, i * 10],
+            "map": {"k": i},
+        }
+        if v3:
+            r["variant"] = {"a": i, "tags": ["x"]}
+        rows.append(r)
+    rows.append({k: None for k in rows[0]})
+    return rows
+
+
+# (partition spec, properties, v3) per layout
+GRID_LAYOUTS = {
+    "unpartitioned": (None, {}, False),
+    "unpartitioned-v3": (None, {"format-version": "3"}, True),
+    "identity-int": (["int"], {}, False),
+    "identity-string": (["string"], {}, False),
+    "identity-date": (["date"], {}, False),
+    "day": ([("timestamp", "day")], {}, False),
+    "orc": (None, {"write.format.default": "orc"}, False),
+}
+
+
+def _assert_grid_rows(got, exp, layout):
+    def key(r):
+        return (r["int"] is None, r["int"] or 0)
+
+    got, exp = sorted(got, key=key), sorted(exp, key=key)
+    assert len(got) == len(exp), layout
     for g, e in zip(got, exp):
+        assert set(g) == set(e), layout
         for k, v in e.items():
+            w = g[k]
             if isinstance(v, decimal.Decimal):
-                assert g[k] == v.quantize(decimal.Decimal("1e-8"))
+                v = v.quantize(decimal.Decimal("1e-8"))
             elif isinstance(v, bytes):
-                assert bytes(g[k]) == v
-            else:
-                assert g[k] == v, (k, g[k], v)
+                w = bytes(w)
+            elif isinstance(v, datetime.datetime) and v.tzinfo is not None:
+                v = v.astimezone(datetime.timezone.utc).replace(tzinfo=None)
+            assert w == v, (layout, k, w, v)
+
+
+def test_append_type_grid_roundtrip(catalog):
+    """Every type round-trips through every file layout: the appended
+    rows read back equal, before and after widening int→long and
+    float→double, with the pre-widen and post-widen files read
+    together."""
+    for layout, (spec, props, v3) in GRID_LAYOUTS.items():
+        t = catalog.create_table(
+            f"grid_{layout.replace('-', '_')}",
+            schema=_grid_schema(v3),
+            partition_spec=spec,
+            properties=props,
+        )
+        first = _grid_rows(0, v3)
+        t.append(first)
+        _assert_grid_rows(t.to_a(), first, layout)
+        t.update_schema().update_column("int", "long").update_column(
+            "float", "double"
+        ).commit()
+        t = t.refresh()
+        second = _grid_rows(10, v3)
+        t.append(second)
+        _assert_grid_rows(t.refresh().to_a(), first + second, layout)
 
 
 def test_append_decimal_coercion(catalog):
@@ -949,3 +1040,88 @@ def test_orc_native_writes(catalog, spark):
             schema={"a": "int"},
             properties={"write.format.default": "avro"},
         ).append([{"a": 1}])
+
+
+def test_footer_stats_match_spark_aggregation(catalog, spark):
+    """The two stats collectors agree value for value on the same freshly
+    written files: parquet footers (the write path's fast path) and the
+    Spark aggregation (its fallback) — every stats type, NaN floats, an
+    all-null column, strings past the truncate(16) prefix, counts and
+    none metrics modes, and several row groups per file.  Decimal
+    footers are the exception: pyarrow cannot decode their statistics, so
+    a decimal column sends the write to the aggregation."""
+    import math
+
+    import pyarrow.parquet as pq
+
+    t = catalog.create_table(
+        "stats_xcheck",
+        schema={
+            "b": "boolean",
+            "i": "int",
+            "l": "long",
+            "f": "float",
+            "d": "double",
+            "dt": "date",
+            "ts": "timestamp",
+            "tstz": "timestamptz",
+            "s": "string",
+            "nul": "int",
+            "cnt": "long",
+            "off": "string",
+        },
+        properties={
+            "write.metadata.metrics.column.cnt": "counts",
+            "write.metadata.metrics.column.off": "none",
+            "write.spark.max-records-per-file": "1500",
+        },
+    )
+    utc = datetime.timezone.utc
+    rows = []
+    for n in range(3000):
+        rows.append(
+            {
+                "b": n % 3 == 0,
+                "i": n - 1500,
+                "l": n * 1_000_003,
+                "f": math.nan if n % 7 == 0 else n / 4,
+                "d": math.nan if n % 11 == 0 else -n / 8,
+                "dt": datetime.date(2020, 1, 1) + datetime.timedelta(days=n),
+                "ts": datetime.datetime(2020, 1, 1) + datetime.timedelta(seconds=n),
+                "tstz": datetime.datetime(2021, 1, 1, tzinfo=utc)
+                + datetime.timedelta(minutes=n),
+                "s": None if n % 5 == 0 else f"prefix-longer-than-16-{n:05d}",
+                "nul": None,
+                "cnt": n,
+                "off": f"x{n}",
+            }
+        )
+    spark.conf.set("parquet.block.size", "4096")
+    try:
+        t.append(rows)
+    finally:
+        spark.conf.unset("parquet.block.size")
+    paths = sorted(t._entry_files(t._current_entries()))
+    assert len(paths) >= 2
+    assert all(pq.ParquetFile(p).metadata.num_row_groups > 1 for p in paths)
+    footer = t._footer_stat_entries(paths)
+    assert footer is not None
+    agg = t._file_stat_entries(
+        spark.read.schema(t.current_schema().to_spark()).parquet(*paths)
+    )
+    # NaN bounds compare by their JSON text (nan != nan as a float)
+    assert json.dumps(footer, sort_keys=True) == json.dumps(agg, sort_keys=True)
+    e = footer[0]
+    assert "nul" in e["null-counts"] and e["lower-bounds"]["nul"] is None
+    assert "cnt" in e["null-counts"] and "cnt" not in e["lower-bounds"]
+    assert "off" not in e["null-counts"]
+    assert len(e["lower-bounds"]["s"]) == 16
+
+    dec = catalog.create_table("stats_xcheck_dec", schema={"dec": "decimal(12, 3)"})
+    dec.append([{"dec": decimal.Decimal("1.125")}, {"dec": decimal.Decimal("-2.5")}])
+    dec_paths = dec._entry_files(dec._current_entries())
+    assert dec._footer_stat_entries(dec_paths) is None
+    ents = dec._current_entries()
+    lo = min(decimal.Decimal(e["lower-bounds"]["dec"]) for e in ents)
+    hi = max(decimal.Decimal(e["upper-bounds"]["dec"]) for e in ents)
+    assert (lo, hi) == (decimal.Decimal("-2.5"), decimal.Decimal("1.125"))
