@@ -690,6 +690,33 @@ def _read_files(
     return reader.format(fmt).load(paths if isinstance(paths, str) else list(paths))
 
 
+def _absent_defaults(path: str, fmt: str, written: ice_t.Schema) -> tuple:
+    """Ids of ``written``'s defaulted fields that the file at ``path``
+    stores neither as a column nor as a partition directory.  An entry's
+    ``schema-id`` is its file's write schema when this engine wrote the
+    manifest, but other writers record the manifest header's schema for
+    every entry, and a merged manifest's header can be newer than some of
+    its files; a defaulted column such a file lacks must read its
+    initial-default, not null.  Only defaulted fields need the check, so
+    only files under a schema with one open a footer (pyarrow, on the
+    driver, no Spark job); files off the local filesystem are taken to
+    store every field."""
+    defaulted = [f for f in written.fields if f.initial_default is not None]
+    local = _local_path(path)
+    if not defaulted or not os.path.isfile(local):
+        return ()
+    if fmt == "orc":
+        from pyarrow import orc as _orc
+
+        names = set(_orc.ORCFile(local).schema.names)
+    else:
+        import pyarrow.parquet as _pq
+
+        names = set(_pq.read_schema(local).names)
+    names |= set(_parse_dir_partition_values(local))
+    return tuple(f.field_id for f in defaulted if f.name not in names)
+
+
 _THETA_TYPES = (
     ice_t.BooleanType, ice_t.IntType, ice_t.LongType, ice_t.FloatType,
     ice_t.DoubleType, ice_t.DateType, ice_t.TimestampType, ice_t.TimestampTzType,
@@ -3270,13 +3297,16 @@ class Table:
         Schema evolution: each entry records the ``schema-id`` it was
         written under, and that schema is the file's read schema (its
         stored fields, plus ``extra_cols`` as nullable longs), so building
-        the frame infers nothing.  Identity-partition values round-trip
-        through directory names, typed by the same fields.  Files are read
-        in per-(schema, commit directory, format) groups and projected
-        onto the target schema by **field id** — renamed columns resolve
-        to their name-at-write, added columns backfill
-        ``initial_default``/null, widened columns cast — then unioned.  No
-        data rewrite on evolution, ever."""
+        the frame infers nothing.  The one footer look is for defaulted
+        fields (``_absent_defaults``): another writer's manifest can name
+        a schema newer than the file, and a defaulted column the file
+        lacks reads its initial-default.  Identity-partition values
+        round-trip through directory names, typed by the same fields.
+        Files are read in per-(schema, commit directory, format, absent
+        defaulted fields) groups and projected onto the target schema by
+        **field id** — renamed columns resolve to their name-at-write,
+        added columns backfill ``initial_default``/null, widened columns
+        cast — then unioned.  No data rewrite on evolution, ever."""
         schema = schema or self.current_schema()
         # merge-on-read deletes: positional and DV entries anti-join the
         # spec's (file_path, pos) pairs (rewritten files get new paths and
@@ -3314,13 +3344,17 @@ class Table:
             return os.path.join(self.ops.data_dir, segs[0])
 
         groups: dict[tuple, list[str]] = {}
+        written_by_sid: dict[int, ice_t.Schema] = {}
         for e in entries:
             if "delete-file" in e:
                 continue
             sid = e.get("schema-id", schema.schema_id)
+            if sid not in written_by_sid:
+                written_by_sid[sid] = self.schema_by_id(sid) or schema
             for p in self._entry_files([e]):
                 fmt = "orc" if p.endswith(".orc") else "parquet"
-                groups.setdefault((sid, commit_dir(p), fmt), []).append(p)
+                absent = _absent_defaults(p, fmt, written_by_sid[sid])
+                groups.setdefault((sid, commit_dir(p), fmt, absent), []).append(p)
         groups = {k: fs for k, fs in groups.items() if fs}
         if not groups:
             empty_schema = schema.to_spark()
@@ -3335,19 +3369,20 @@ class Table:
                 empty_schema = _T.StructType(extra + list(empty_schema.fields))
             return self.spark.createDataFrame([], empty_schema)
         parts = []
-        for sid, cdir, fmt in sorted(groups):
+        for sid, cdir, fmt, absent in sorted(groups):
             # the entry's written schema is the file's: its stored fields
-            # (v3 unknown columns are never stored) plus the lineage
-            # columns, which only some files carry and the rest read null
-            written = self.schema_by_id(sid) or schema
+            # (v3 unknown columns are never stored, defaulted columns the
+            # file lacks read their default) plus the lineage columns,
+            # which only some files carry and the rest read null
             stored = {
                 f.field_id: f
-                for f in written.fields
+                for f in written_by_sid[sid].fields
                 if not isinstance(f.field_type, ice_t.UnknownType)
+                and f.field_id not in absent
             }
             df = _read_files(
                 self.spark,
-                groups[(sid, cdir, fmt)],
+                groups[(sid, cdir, fmt, absent)],
                 [f.to_spark() for f in stored.values()]
                 + [_T.StructField(c, _T.LongType()) for c in extra_cols or {}],
                 fmt,
@@ -3555,7 +3590,7 @@ class Table:
                         self.spark,
                         [p for p, _ in fseq],
                         self._key_fields(
-                            list(cols_key), groups[cols_key][0].get("equality-ids")
+                            list(cols_key), groups[cols_key][0]["equality-ids"]
                         ),
                     )
                     .select(
@@ -5199,25 +5234,17 @@ class Table:
     def _new_delete_dir(self) -> str:
         return os.path.join(self.ops.data_dir, f"deletes-{uuid_mod.uuid4().hex[:12]}")
 
-    def _key_fields(self, cols: list[str], ids=None) -> list:
+    def _key_fields(self, cols: list[str], ids: list[int]) -> list:
         """Read fields of an equality-delete key file: ``cols`` as written,
-        typed from the table's schemas by field id (``ids``, the entry's
-        ``equality-ids``; by name when absent).  int and float keys read
-        in their wide form, which covers files written before a widen and
-        files whose writer used the wide physical type alike."""
+        typed by their field ids (``ids``, the ``equality-ids``) from the
+        table's schemas, the current type first — the same rule as data
+        files, so a key file written before a widen reads widened."""
         by_id = {f.field_id: f for s in self.schemas for f in s.fields}
-        cur = self.current_schema()
-        by_id.update({f.field_id: f for f in cur.fields})
-        out = []
-        for j, c in enumerate(cols):
-            f = by_id.get(ids[j]) if ids else cur.field_by_name(c)
-            dt = f.to_spark().dataType
-            if isinstance(dt, _T.IntegerType):
-                dt = _T.LongType()
-            elif isinstance(dt, _T.FloatType):
-                dt = _T.DoubleType()
-            out.append(_T.StructField(c, dt))
-        return out
+        by_id.update({f.field_id: f for f in self.current_schema().fields})
+        return [
+            _T.StructField(c, by_id[i].to_spark().dataType)
+            for c, i in zip(cols, ids)
+        ]
 
     def _key_delete_entries(
         self, del_dir: str, cols: list[str]
@@ -5234,7 +5261,9 @@ class Table:
             _equality_delete_entry(
                 part, n, field_ids, cols, self.default_spec_id, lo, hi
             )
-            for part, n, lo, hi in self._delete_part_stats(del_dir, cols)
+            for part, n, lo, hi in self._delete_part_stats(
+                del_dir, cols, field_ids
+            )
         ]
 
     def _write_equality_deletes(
@@ -5252,9 +5281,12 @@ class Table:
             self.ops.io.delete_prefix(del_dir)
         return entries
 
-    def _delete_part_stats(self, del_dir: str, cols: list[str]) -> list:
+    def _delete_part_stats(
+        self, del_dir: str, cols: list[str], ids: list[int]
+    ) -> list:
         """``(path, rows, lower, upper)`` per non-empty parquet part file
-        of a freshly written key directory, sorted by path; ``lower`` /
+        of a freshly written key directory (key columns ``cols``, field
+        ids ``ids``), sorted by path; ``lower`` /
         ``upper`` map each key column holding no null key to its min /
         max.  Footer fast path (the same move as the manifest footer
         stats): counts and ranges ARE the parquet footers' ``num_rows``
@@ -5278,7 +5310,7 @@ class Table:
                 F.sum(F.col(c).isNull().cast("int")).alias(f"__nn{j}"),
             ]
         rows = (
-            _read_files(self.spark, del_dir, self._key_fields(cols))
+            _read_files(self.spark, del_dir, self._key_fields(cols, ids))
             .groupBy(F.col("_metadata.file_path").alias("__part"))
             .agg(*aggs)
             .collect()

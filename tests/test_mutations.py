@@ -430,11 +430,16 @@ def _external_equality_delete(t, cols, rows):
 
     import pyarrow as pa
     import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
 
     del_dir = os.path.join(t.ops.data_dir, f"deletes-{uuid.uuid4().hex[:12]}")
     os.makedirs(del_dir)
+    # the key columns in the table's types, as spec writers store them
+    spark_schema = t.current_schema().to_spark()
+    key_schema = to_arrow_schema(StructType([spark_schema[c] for c in cols]))
     pq.write_table(
-        pa.Table.from_pylist([dict(zip(cols, r)) for r in rows]),
+        pa.Table.from_pylist([dict(zip(cols, r)) for r in rows], schema=key_schema),
         os.path.join(del_dir, "part-00000.parquet"),
     )
     entries = t._key_delete_entries(del_dir, cols)

@@ -383,6 +383,54 @@ def test_add_column_with_default_values(catalog):
     assert f.initial_default == "none" and f.write_default == "none"
 
 
+def test_default_reads_for_file_older_than_manifest_schema(catalog):
+    """Other writers record a manifest's header ``schema-id`` for every
+    entry in it, and a merged manifest's header can name a schema newer
+    than some of its files.  A defaulted column such a file lacks reads
+    the column's initial-default, not null — in Parquet and ORC alike."""
+    import json
+
+    from iceberg_ruby_spark.avro_file import read_ocf, write_ocf
+
+    for fmt in ("parquet", "orc"):
+        t = catalog.create_table(
+            f"dflt_hdr_{fmt}",
+            schema={"a": "int"},
+            properties={"write.format.default": fmt},
+        )
+        t.append([{"a": 1}])
+        with t.update_schema() as u:
+            u.add_column("tag", "string", default="none")
+        t = t.refresh()
+        new_sid = t.current_schema_id
+        assert new_sid != 0
+        # hand-write the data manifest the way such a writer would: no
+        # per-entry schema-id, the header naming the newer schema
+        list_path = t.ops._abs(t.current_snapshot().manifest_list)
+        _, list_records, _ = read_ocf(t.ops.io.read_bytes(list_path))
+        for rec in list_records:
+            mpath = rec["manifest_path"]
+            schema, records, meta = read_ocf(t.ops.io.read_bytes(mpath))
+            extras = json.loads(meta["x-irs"].decode())
+            for ext in extras["entries"]:
+                ext.pop("schema-id", None)
+            user_meta = {k: v for k, v in meta.items() if not k.startswith("avro.")}
+            user_meta["x-irs"] = json.dumps(extras).encode()
+            user_meta["schema-id"] = str(new_sid).encode()
+            t.ops.io.write_bytes_atomic(
+                mpath, write_ocf(schema, records, metadata=user_meta), overwrite=True
+            )
+        t = t.refresh()
+        assert {e["schema-id"] for e in t._current_entries() if "path" in e} == {
+            new_sid
+        }
+        assert t.to_a() == [{"a": 1, "tag": "none"}], fmt
+        t.append([{"a": 2, "tag": None}, {"a": 3, "tag": "x"}])
+        assert sorted((r["a"], r["tag"]) for r in t.refresh().to_a()) == [
+            (1, "none"), (2, None), (3, "x")
+        ], fmt
+
+
 def test_sql_add_column_default(catalog):
     t = catalog.create_table("dflt2", schema={"a": "int"})
     t.append([{"a": 1}])

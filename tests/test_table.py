@@ -69,24 +69,30 @@ def _grid_schema(v3: bool):
 
 
 def _grid_rows(base: int, v3: bool):
-    """Two valued rows keyed by ``int`` = base+1 / base+3, and one all-null
-    row (partition columns included, so every layout writes a null
-    partition)."""
+    """Two valued rows keyed by ``int`` = base+1 / base+3 (True and False,
+    a positive and a negative decimal, the epoch-zero timestamp), and one
+    all-null row (partition columns included, so every layout writes a
+    null partition)."""
     today = datetime.date(2026, 8, 13)
     utc = datetime.timezone.utc
+    valued = [
+        (1, True, "1000", 0, datetime.datetime(1970, 1, 1), "one"),
+        (3, False, "-1.23456789", 2, datetime.datetime(1970, 1, 1, 0, 0, 2), "three"),
+    ]
     rows = []
-    for i in (base + 1, base + 3):
+    for n, flag, dec, days, ts, word in valued:
+        i = base + n
         r = {
-            "boolean": i % 2 == 1,
+            "boolean": flag,
             "int": i,
             "long": i,
             "float": i + 0.5,
             "double": i + 0.5,
-            "decimal": decimal.Decimal(f"-{i}.12345678"),
-            "date": today + datetime.timedelta(days=i),
-            "timestamp": datetime.datetime(1970, 1, 1, 0, 0, i),
-            "string": f"s{i}",
-            "binary": f"b{i}".encode(),
+            "decimal": decimal.Decimal(dec),
+            "date": today + datetime.timedelta(days=days),
+            "timestamp": ts,
+            "string": word,
+            "binary": word.encode(),
             "timestamptz": datetime.datetime(2026, 1, 1, 0, 0, i, tzinfo=utc),
             "time": i * 1_000_000,
             "uuid": f"00000000-0000-0000-0000-{i:012d}",
@@ -1047,9 +1053,9 @@ def test_footer_stats_match_spark_aggregation(catalog, spark):
     written files: parquet footers (the write path's fast path) and the
     Spark aggregation (its fallback) — every stats type, NaN floats, an
     all-null column, strings past the truncate(16) prefix, counts and
-    none metrics modes, and several row groups per file.  Decimal
-    footers are the exception: pyarrow cannot decode their statistics, so
-    a decimal column sends the write to the aggregation."""
+    none metrics modes, and several row groups per file.  A decimal
+    column's committed bounds are checked on their own, whichever
+    collector wrote them."""
     import math
 
     import pyarrow.parquet as pq
@@ -1119,8 +1125,6 @@ def test_footer_stats_match_spark_aggregation(catalog, spark):
 
     dec = catalog.create_table("stats_xcheck_dec", schema={"dec": "decimal(12, 3)"})
     dec.append([{"dec": decimal.Decimal("1.125")}, {"dec": decimal.Decimal("-2.5")}])
-    dec_paths = dec._entry_files(dec._current_entries())
-    assert dec._footer_stat_entries(dec_paths) is None
     ents = dec._current_entries()
     lo = min(decimal.Decimal(e["lower-bounds"]["dec"]) for e in ents)
     hi = max(decimal.Decimal(e["upper-bounds"]["dec"]) for e in ents)
