@@ -30,10 +30,10 @@ the REST backend.
 
 from __future__ import annotations
 
-import json
 import os
+import re
 import tempfile
-from typing import Any, Optional
+from typing import Optional
 
 from iceberg_ruby_spark.catalog import Catalog, Ident, _norm_ident
 from iceberg_ruby_spark.errors import (
@@ -52,102 +52,33 @@ def _err_name(exc: Exception) -> str:
     return code or type(exc).__name__
 
 
-class _PointerTableOps:
-    """FsTableOps file layout + a service-held metadata-location pointer.
+def _version_of(pointer: Optional[str]) -> Optional[int]:
+    """The version number of a ``.../v{N}.json`` metadata location."""
+    m = re.match(r"^v(\d+)\.json$", os.path.basename(pointer or ""))
+    return int(m.group(1)) if m else None
 
-    The pointer value is the absolute path of the current ``v{N}.json``;
-    the version number is parsed back out of it, so the service stores
-    exactly what AWS stores (a metadata location string) and the engine
-    keeps its integer-version commit protocol."""
 
-    def __init__(self, store, parts: list[str], location: str, io):
-        from iceberg_ruby_spark.io import LocalFileIO
-        from iceberg_ruby_spark.table import FsTableOps
+class _ServicePointer:
+    """A table's version pointer held by the service — the
+    :class:`~iceberg_ruby_spark.table.FsTableOps` pointer seam over a
+    store's ``get_pointer``/``set_pointer``.  The service stores what AWS
+    stores, the absolute path of the current ``v{N}.json``; the version
+    number is parsed back out of it."""
 
-        self.store = store  # get_pointer()/set_pointer(expected, new) seam
+    def __init__(self, store, parts: list[str], location: str):
+        self.store = store
         self.parts = list(parts)
         self.location = location
-        self.io = io or LocalFileIO()
-        self.metadata_dir = os.path.join(location, "metadata")
-        self.data_dir = os.path.join(location, "data")
-        self._fs = FsTableOps(location, io=self.io)
 
-    @staticmethod
-    def _version_of(pointer: Optional[str]) -> Optional[int]:
-        if not pointer:
-            return None
-        base = os.path.basename(pointer)
-        if base.startswith("v") and base.endswith(".json"):
-            try:
-                return int(base[1:-5])
-            except ValueError:
-                return None
-        return None
+    def _file(self, v: int) -> str:
+        return os.path.join(self.location, "metadata", f"v{v}.json")
 
-    def exists(self) -> bool:
-        return self.store.get_pointer(self.parts) is not None
+    def read(self) -> Optional[int]:
+        return _version_of(self.store.get_pointer(self.parts))
 
-    def current_version(self) -> int:
-        v = self._version_of(self.store.get_pointer(self.parts))
-        if v is None:
-            raise NoSuchTableError(f"table does not exist: {'.'.join(self.parts)}")
-        return v
-
-    def load(self, version: Optional[int] = None):
-        from iceberg_ruby_spark.table import TableMetadata
-
-        v = version if version is not None else self.current_version()
-        path = os.path.join(self.metadata_dir, f"v{v}.json")
-        return TableMetadata(json.loads(self.io.read(path)), v, path)
-
-    def commit(self, base_version: Optional[int], new_meta: dict[str, Any]):
-        from iceberg_ruby_spark.table import TableMetadata
-
-        new_version = (base_version or 0) + 1
-        path = os.path.join(self.metadata_dir, f"v{new_version}.json")
-        # metadata file first (conditional create blocks same-version racers
-        # even before the service CAS), then swing the pointer
-        self.io.write_atomic(path, json.dumps(new_meta, indent=1), overwrite=False)
-        expected = (
-            os.path.join(self.metadata_dir, f"v{base_version}.json")
-            if base_version
-            else None
-        )
-        self.store.set_pointer(self.parts, expected, path, self.location)
-        # advisory hint keeps the dir a valid FS-layout table
-        self.io.replace(
-            os.path.join(self.metadata_dir, "version-hint.text"), str(new_version)
-        )
-        return TableMetadata(new_meta, new_version, path)
-
-    # file-plane passthroughs
-    def _rel(self, p: str) -> str:
-        return self._fs._rel(p)
-
-    def _abs(self, p: str) -> str:
-        return self._fs._abs(p)
-
-    def write_manifest(
-        self,
-        snapshot_id: int,
-        entries: list[dict[str, Any]],
-        ctx: Any,
-        base_list: Optional[str] = None,
-    ) -> str:
-        return self._fs.write_manifest(snapshot_id, entries, ctx=ctx, base_list=base_list)
-
-    def read_manifest(self, manifest_list: str) -> list[dict[str, Any]]:
-        return self._fs.read_manifest(manifest_list)
-
-    def read_manifest_filtered(
-        self, manifest_list: str, trees, allow_mor: bool = False
-    ):
-        return self._fs.read_manifest_filtered(
-            manifest_list, trees, allow_mor=allow_mor
-        )
-
-    def read_manifest_delta(self, end_list: str, start_list: str):
-        return self._fs.read_manifest_delta(end_list, start_list)
+    def swap(self, base: Optional[int], new: int) -> None:
+        expected = self._file(base) if base else None
+        self.store.set_pointer(self.parts, expected, self._file(new), self.location)
 
 
 class _AwsCatalogBase(Catalog):
@@ -168,10 +99,12 @@ class _AwsCatalogBase(Catalog):
         return parts[0]
 
     def _table_ops(self, location: str, parts: Optional[list[str]] = None):
-        if parts is None:
-            rel = os.path.relpath(os.path.abspath(location), self.warehouse)
-            parts = rel.split(os.sep)
-        return _PointerTableOps(self._store(), parts, location, self.io)
+        from iceberg_ruby_spark.table import FsTableOps
+
+        parts = parts or self._warehouse_ident(location)
+        ops = FsTableOps(location, io=self.io)
+        ops.pointer = _ServicePointer(self._store(), parts, location)
+        return ops
 
     def _table_location(self, ident: Ident) -> tuple[list[str], str]:
         parts = self._with_namespace(ident)
@@ -186,14 +119,12 @@ class _AwsCatalogBase(Catalog):
         parts = self._with_namespace(ident)
         if os.path.isdir(metadata_location):
             # table-location form (the FS catalog's register convention):
-            # resolve the current v{N}.json via the advisory version hint
-            hint = os.path.join(metadata_location, "metadata", "version-hint.text")
-            v = self.io.read(hint).strip()
-            metadata_location = os.path.join(
-                metadata_location, "metadata", f"v{v}.json"
-            )
-        version = _PointerTableOps._version_of(metadata_location)
-        if version is None:
+            # resolve the current v{N}.json through the FS version hint
+            from iceberg_ruby_spark.table import FsTableOps
+
+            ops = FsTableOps(metadata_location, io=self.io)
+            metadata_location = ops.load().metadata_file
+        if _version_of(metadata_location) is None:
             raise InvalidDataError(
                 f"not a v{{N}}.json metadata location: {metadata_location!r}"
             )

@@ -189,13 +189,21 @@ class Catalog:
     # ------------------------------------------------------------------ utils
     def _table_ops(self, location: str, parts: Optional[list[str]] = None):
         """The metadata plane for a table at ``location`` — the backend
-        seam: FsTableOps here; RestCatalog returns RestTableOps so the
-        version pointer and commits live on the catalog server.  ``parts``
-        is the catalog identifier when the caller knows it (required by
-        registry-backed ops; unused by filesystem ops)."""
+        seam.  Every backend returns an :class:`FsTableOps`, which owns
+        the table's files and its commit; a backend only attaches its
+        version pointer (``ops.pointer``: the SQL row, the Glue / S3
+        Tables metadata location).  This FS catalog attaches none, so the
+        table's ``version-hint.text`` is its pointer.  RestCatalog returns
+        the subclass RestTableOps, because its server owns the metadata
+        document itself.  ``parts`` is the catalog identifier when the
+        caller knows it (registry-backed backends need it)."""
         from iceberg_ruby_spark.table import FsTableOps
 
         return FsTableOps(location, io=self.io)
+
+    def _warehouse_ident(self, location: str) -> list[str]:
+        """Identifier of the warehouse-resident table at ``location``."""
+        return os.path.relpath(os.path.abspath(location), self.warehouse).split(os.sep)
 
     def _ns_dir(self, ns: list[str]) -> str:
         return os.path.join(self.warehouse, *ns)

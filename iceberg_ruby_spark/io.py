@@ -9,8 +9,9 @@ The contract an implementation must provide:
 
 - ``write_atomic(path, text, overwrite=False)`` raising ``FileExistsError``
   when ``overwrite=False`` and the object exists — the commit primitive.
-  Local: ``O_EXCL`` create.  S3: conditional put (``If-None-Match: *``).
-  GCS: ``x-goods-if-generation-match: 0``.  HDFS: ``create(overwrite=false)``.
+  It publishes the whole object or nothing.  Local: temp file +
+  ``os.link``.  S3: conditional put (``If-None-Match: *``).  GCS:
+  ``x-goods-if-generation-match: 0``.  HDFS: ``create(overwrite=false)``.
 - ``replace(path, text)`` — last-writer-wins swap (version-hint).  Local:
   temp file + ``os.replace``.  Object stores: plain put (single-key puts
   are atomic).
@@ -20,6 +21,7 @@ The contract an implementation must provide:
 
 from __future__ import annotations
 
+import contextlib
 import os
 import uuid
 from collections.abc import Iterator
@@ -89,8 +91,9 @@ class FileIO:
 
 
 class LocalFileIO(FileIO):
-    """POSIX implementation: ``O_EXCL`` create for conditional writes,
-    temp-file + ``os.replace`` for swaps."""
+    """POSIX implementation: every write goes to a temp file first, then
+    ``os.link`` publishes a conditional write (it fails if the name
+    exists) and ``os.replace`` a swap."""
 
     def read(self, path: str) -> str:
         with open(path) as f:
@@ -101,36 +104,27 @@ class LocalFileIO(FileIO):
             return f.read()
 
     def write_atomic(self, path: str, text: str, overwrite: bool = False) -> None:
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        if overwrite:
-            self.replace(path, text)
-            return
-        fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-        with os.fdopen(fd, "w") as f:
-            f.write(text)
+        self.write_bytes_atomic(path, text.encode(), overwrite=overwrite)
 
     def write_bytes_atomic(self, path: str, data: bytes, overwrite: bool = False) -> None:
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        if overwrite:
-            tmp = os.path.join(
-                os.path.dirname(path), f".{os.path.basename(path)}.{uuid.uuid4().hex}"
-            )
-            with open(tmp, "wb") as f:
-                f.write(data)
-            os.replace(tmp, path)
-            return
-        fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-        with os.fdopen(fd, "wb") as f:
-            f.write(data)
-
-    def replace(self, path: str, text: str) -> None:
+        """Write a temp file beside ``path``, then publish it whole:
+        ``os.replace`` when overwriting, else ``os.link``, which raises
+        ``FileExistsError`` when ``path`` exists.  A crash mid-write
+        leaves only the hidden temp file, never a torn ``path``."""
         os.makedirs(os.path.dirname(path), exist_ok=True)
         tmp = os.path.join(
             os.path.dirname(path), f".{os.path.basename(path)}.{uuid.uuid4().hex}"
         )
-        with open(tmp, "w") as f:
-            f.write(text)
-        os.replace(tmp, path)
+        try:
+            with open(tmp, "wb") as f:
+                f.write(data)
+            (os.replace if overwrite else os.link)(tmp, path)
+        finally:
+            with contextlib.suppress(FileNotFoundError):
+                os.remove(tmp)
+
+    def replace(self, path: str, text: str) -> None:
+        self.write_bytes_atomic(path, text.encode(), overwrite=True)
 
     def exists(self, path: str) -> bool:
         return os.path.exists(path)

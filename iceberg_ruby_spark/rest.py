@@ -69,6 +69,7 @@ from iceberg_ruby_spark.errors import (
     NoSuchTableError,
     TableAlreadyExistsError,
 )
+from iceberg_ruby_spark.table import FsTableOps, TableMetadata
 
 # multi-level namespace separator in URL paths, per the REST spec
 _NS_SEP = "\x1f"
@@ -384,23 +385,18 @@ def metadata_updates(base: dict[str, Any], new: dict[str, Any]) -> tuple[list, l
     return ups, reqs
 
 
-class RestTableOps:
-    """FsTableOps-compatible metadata plane backed by the REST server.
-
-    The server owns the metadata document and its version; manifests and
-    data files live under the table location on FileIO storage (same
-    relative-path mapping as FsTableOps, so a table registered into a
-    filesystem catalog later reads identically)."""
+class RestTableOps(FsTableOps):
+    """A REST-catalog table's metadata plane.  The server owns the
+    metadata document and its version, so ``exists``/``current_version``/
+    ``load``/``commit`` go to the server; manifests and data files stay
+    under the table location, written and read by :class:`FsTableOps`
+    (so a table registered into a filesystem catalog later reads
+    identically)."""
 
     def __init__(self, client: RestClient, parts: list[str], location: str, io):
-        from iceberg_ruby_spark.io import LocalFileIO
-
+        super().__init__(location, io=io)
         self.client = client
         self.parts = list(parts)
-        self.location = location
-        self.io = io or LocalFileIO()
-        self.metadata_dir = os.path.join(location, "metadata")
-        self.data_dir = os.path.join(location, "data")
 
     # -- registry ----------------------------------------------------------
     def exists(self) -> bool:
@@ -423,9 +419,7 @@ class RestTableOps:
     def current_version(self) -> int:
         return _location_version(self._get().get("metadata-location"))
 
-    def load(self, version: Optional[int] = None):
-        from iceberg_ruby_spark.table import TableMetadata
-
+    def load(self, version: Optional[int] = None) -> TableMetadata:
         doc = self._get()
         meta = doc["metadata"]
         v = _location_version(doc.get("metadata-location"))
@@ -436,16 +430,14 @@ class RestTableOps:
             )
         return TableMetadata(meta, v, doc.get("metadata-location", self.location))
 
-    def _doc_to_metadata(self, doc: dict[str, Any]):
-        from iceberg_ruby_spark.table import TableMetadata
-
+    def _doc_to_metadata(self, doc: dict[str, Any]) -> TableMetadata:
         return TableMetadata(
             doc["metadata"],
             _location_version(doc.get("metadata-location")),
             doc.get("metadata-location", self.location),
         )
 
-    def commit(self, base_version: Optional[int], new_meta: dict[str, Any]):
+    def commit(self, base_version: Optional[int], new_meta: dict[str, Any]) -> TableMetadata:
         """Spec CommitTableRequest round trip.
 
         Create: POST a CreateTableRequest (name/schema/spec/order/props;
@@ -541,49 +533,6 @@ class RestTableOps:
             raise
         return self._doc_to_metadata(doc)
 
-    # -- manifests: identical relative-path storage to FsTableOps ----------
-    def _rel(self, p: str) -> str:
-        ap = os.path.abspath(p)
-        loc = os.path.abspath(self.location)
-        if ap == loc or ap.startswith(loc + os.sep):
-            return os.path.relpath(ap, loc)
-        return p
-
-    def _abs(self, p: str) -> str:
-        return p if os.path.isabs(p) else os.path.join(self.location, p)
-
-    def write_manifest(
-        self,
-        snapshot_id: int,
-        entries: list[dict[str, Any]],
-        ctx: Any,
-        base_list: Optional[str] = None,
-    ) -> str:
-        from iceberg_ruby_spark.table import FsTableOps
-
-        # same manifest plane as FsTableOps (fast-append chaining included);
-        # only the metadata-document pointer lives on the REST server
-        return FsTableOps.write_manifest(self, snapshot_id, entries, ctx, base_list)
-
-    def read_manifest(self, manifest_list: str) -> list[dict[str, Any]]:
-        from iceberg_ruby_spark.table import FsTableOps
-
-        return FsTableOps.read_manifest(self, manifest_list)
-
-    def read_manifest_filtered(
-        self, manifest_list: str, trees, allow_mor: bool = False
-    ):
-        from iceberg_ruby_spark.table import FsTableOps
-
-        return FsTableOps.read_manifest_filtered(
-            self, manifest_list, trees, allow_mor=allow_mor
-        )
-
-    def read_manifest_delta(self, end_list: str, start_list: str):
-        from iceberg_ruby_spark.table import FsTableOps
-
-        return FsTableOps.read_manifest_delta(self, end_list, start_list)
-
 
 class RestCatalog(Catalog):
     """Catalog whose registry lives on an Iceberg REST catalog server
@@ -623,11 +572,9 @@ class RestCatalog(Catalog):
 
     # -- backend seam ------------------------------------------------------
     def _table_ops(self, location: str, parts: Optional[list[str]] = None):
-        if parts is None:
-            # only derivable for warehouse-resident tables; callers pass
-            # the identifier explicitly for custom locations
-            rel = os.path.relpath(os.path.abspath(location), self.warehouse)
-            parts = rel.split(os.sep)
+        # only derivable for warehouse-resident tables; callers pass the
+        # identifier explicitly for custom locations
+        parts = parts or self._warehouse_ident(location)
         return RestTableOps(self.client, parts, location, self.io)
 
     def _table_location(self, ident: Ident) -> tuple[list[str], str]:
@@ -806,8 +753,6 @@ class RestCatalog(Catalog):
         """Attach an existing FS table to the REST catalog by reference —
         the spec's RegisterTableRequest: ``{name, metadata-location}``,
         and the SERVER loads the metadata document from storage."""
-        from iceberg_ruby_spark.table import FsTableOps
-
         parts = self._with_namespace(ident)
         if self.table_exists(parts):
             raise TableAlreadyExistsError(f"table already exists: {'.'.join(parts)}")

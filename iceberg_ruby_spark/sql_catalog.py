@@ -10,10 +10,11 @@ Protocol (the same split Iceberg's JDBC catalog uses):
 - the DATABASE holds the registry — namespace rows, table rows, and each
   table's current metadata VERSION pointer;
 - metadata/manifest/data FILES stay on FileIO storage under the table
-  location, written exactly like FsTableOps (``v{N}.json`` + manifests),
-  so a table is freely re-registerable between FS/SQL/REST catalogs.
+  location, written by FsTableOps (``v{N}.json`` + manifests), so a table
+  is freely re-registerable between FS/SQL/REST catalogs.
 
-Commits compare-and-swap the version pointer::
+A table's ops are FsTableOps with a :class:`_SqlPointer` attached; its
+commit compare-and-swaps the version pointer::
 
     UPDATE iceberg_tables SET version = N+1
      WHERE catalog = ? AND ns = ? AND name = ? AND version = N
@@ -28,7 +29,7 @@ import json
 import os
 import sqlite3
 import threading
-from typing import Any, Optional
+from typing import Optional
 
 from iceberg_ruby_spark.catalog import Catalog, Ident, _norm_ident
 from iceberg_ruby_spark.errors import (
@@ -89,116 +90,44 @@ def _parse_uri(uri: str) -> str:
     return uri
 
 
-class SqlTableOps:
-    """FsTableOps file layout + SQL version pointer with CAS commits."""
+class _SqlPointer:
+    """A table's version pointer in its ``iceberg_tables`` row — the
+    :class:`~iceberg_ruby_spark.table.FsTableOps` pointer seam."""
 
-    def __init__(self, db: _Db, catalog_name: str, parts: list[str], location: str, io):
-        from iceberg_ruby_spark.io import LocalFileIO
-        from iceberg_ruby_spark.table import FsTableOps
-
+    def __init__(self, db: _Db, catalog: str, parts: list[str], location: str):
         self.db = db
-        self.catalog_name = catalog_name
-        self.parts = list(parts)
+        self.key = (catalog, _NS_SEP.join(parts[:-1]), parts[-1])
+        self.ident = ".".join(parts)
         self.location = location
-        self.io = io or LocalFileIO()
-        self.metadata_dir = os.path.join(location, "metadata")
-        self.data_dir = os.path.join(location, "data")
-        # file-plane helpers (manifest read/write, rel/abs mapping)
-        self._fs = FsTableOps(location, io=self.io)
 
-    def _key(self) -> tuple[str, str, str]:
-        return (self.catalog_name, _NS_SEP.join(self.parts[:-1]), self.parts[-1])
-
-    def _row(self) -> Optional[tuple[str, int]]:
+    def read(self) -> Optional[int]:
         with self.db.connect() as conn:
-            cur = conn.execute(
-                "SELECT location, version FROM iceberg_tables "
+            row = conn.execute(
+                "SELECT version FROM iceberg_tables "
                 "WHERE catalog = ? AND ns = ? AND name = ?",
-                self._key(),
-            )
-            row = cur.fetchone()
-        return row
+                self.key,
+            ).fetchone()
+        return None if row is None else int(row[0])
 
-    def exists(self) -> bool:
-        return self._row() is not None
-
-    def current_version(self) -> int:
-        row = self._row()
-        if row is None:
-            raise NoSuchTableError(f"table does not exist: {'.'.join(self.parts)}")
-        return int(row[1])
-
-    def load(self, version: Optional[int] = None):
-        from iceberg_ruby_spark.table import TableMetadata
-
-        v = version if version is not None else self.current_version()
-        path = os.path.join(self.metadata_dir, f"v{v}.json")
-        return TableMetadata(json.loads(self.io.read(path)), v, path)
-
-    def commit(self, base_version: Optional[int], new_meta: dict[str, Any]):
-        from iceberg_ruby_spark.table import TableMetadata
-
-        new_version = (base_version or 0) + 1
-        path = os.path.join(self.metadata_dir, f"v{new_version}.json")
-        # metadata file first (conditional create blocks same-version racers
-        # even before the SQL CAS), then swing the pointer
-        self.io.write_atomic(path, json.dumps(new_meta, indent=1), overwrite=False)
-        cat, ns, name = self._key()
+    def swap(self, base: Optional[int], new: int) -> None:
         with self.db.lock, self.db.connect() as conn:
-            if base_version in (None, 0):
+            if not base:
                 try:
                     conn.execute(
                         "INSERT INTO iceberg_tables "
                         "(catalog, ns, name, location, version) VALUES (?,?,?,?,?)",
-                        (cat, ns, name, self.location, new_version),
+                        (*self.key, self.location, new),
                     )
                 except sqlite3.IntegrityError:
-                    raise FileExistsError(f"table row exists: {'.'.join(self.parts)}")
-            else:
-                cur = conn.execute(
-                    "UPDATE iceberg_tables SET version = ? "
-                    "WHERE catalog = ? AND ns = ? AND name = ? AND version = ?",
-                    (new_version, cat, ns, name, base_version),
-                )
-                if cur.rowcount == 0:
-                    raise FileExistsError(
-                        f"version CAS lost: {'.'.join(self.parts)} @ v{base_version}"
-                    )
-        # advisory version-hint alongside the files so the table dir is a
-        # valid FS-layout table too (re-registerable into an FS catalog)
-        self.io.replace(
-            os.path.join(self.metadata_dir, "version-hint.text"), str(new_version)
-        )
-        return TableMetadata(new_meta, new_version, path)
-
-    # file-plane passthroughs
-    def _rel(self, p: str) -> str:
-        return self._fs._rel(p)
-
-    def _abs(self, p: str) -> str:
-        return self._fs._abs(p)
-
-    def write_manifest(
-        self,
-        snapshot_id: int,
-        entries: list[dict[str, Any]],
-        ctx: Any,
-        base_list: Optional[str] = None,
-    ) -> str:
-        return self._fs.write_manifest(snapshot_id, entries, ctx=ctx, base_list=base_list)
-
-    def read_manifest(self, manifest_list: str) -> list[dict[str, Any]]:
-        return self._fs.read_manifest(manifest_list)
-
-    def read_manifest_filtered(
-        self, manifest_list: str, trees, allow_mor: bool = False
-    ):
-        return self._fs.read_manifest_filtered(
-            manifest_list, trees, allow_mor=allow_mor
-        )
-
-    def read_manifest_delta(self, end_list: str, start_list: str):
-        return self._fs.read_manifest_delta(end_list, start_list)
+                    raise FileExistsError(f"table row exists: {self.ident}")
+                return
+            cur = conn.execute(
+                "UPDATE iceberg_tables SET version = ? "
+                "WHERE catalog = ? AND ns = ? AND name = ? AND version = ?",
+                (new, *self.key, base),
+            )
+            if cur.rowcount == 0:
+                raise FileExistsError(f"version CAS lost: {self.ident} @ v{base}")
 
 
 class SqlCatalog(Catalog):
@@ -229,10 +158,12 @@ class SqlCatalog(Catalog):
 
     # -- seam --------------------------------------------------------------
     def _table_ops(self, location: str, parts: Optional[list[str]] = None):
-        if parts is None:
-            rel = os.path.relpath(os.path.abspath(location), self.warehouse)
-            parts = rel.split(os.sep)
-        return SqlTableOps(self.db, self.name, parts, location, self.io)
+        from iceberg_ruby_spark.table import FsTableOps
+
+        parts = parts or self._warehouse_ident(location)
+        ops = FsTableOps(location, io=self.io)
+        ops.pointer = _SqlPointer(self.db, self.name, parts, location)
+        return ops
 
     def _table_location(self, ident: Ident) -> tuple[list[str], str]:
         parts = self._with_namespace(ident)

@@ -330,7 +330,14 @@ class EngineTableStreamReader(DataSourceStreamReader):
         # term that grew with live file count).  Keyed by the manifest
         # list it reflects; advanced per-commit from deltas.
         self._dv_cache: Optional[dict] = None
-        meta = _ops(self.location).load()
+        # the planner's metadata plane: a Table passes its own ops
+        # (Table.changelog_scan — a catalog table's version lives in its
+        # registry, not in a hint beside the files); a reader Spark builds
+        # has only the location.  Planning runs on the driver, and
+        # __getstate__ keeps the ops out of the reader shipped to
+        # executors (a SQL catalog's pointer holds a lock).
+        self._planner_ops = options.get("ops")
+        meta = self._meta_ops().load()
         if start_ts is not None:
             if self._ref:
                 raise ValueError(
@@ -376,6 +383,12 @@ class EngineTableStreamReader(DataSourceStreamReader):
             )
         )
 
+    def _meta_ops(self):
+        return self._planner_ops or _ops(self.location)
+
+    def __getstate__(self) -> dict:
+        return {**self.__dict__, "_planner_ops": None}
+
     @staticmethod
     def _admission_opt(options: dict, name: str) -> Optional[int]:
         v = options.get(name)
@@ -415,7 +428,7 @@ class EngineTableStreamReader(DataSourceStreamReader):
         return meta.current_snapshot_id
 
     def latestOffset(self) -> dict:
-        meta = _ops(self.location).load()
+        meta = self._meta_ops().load()
         head = self._head(meta)
         if not self._bounded or head is None:
             off = {"snapshot_id": head}
@@ -472,7 +485,7 @@ class EngineTableStreamReader(DataSourceStreamReader):
         bounding, consumption is strictly per-commit (Iceberg's streaming
         iterator semantics): an append's files are emitted even if a later
         in-window rewrite replaced them."""
-        ops = _ops(self.location)
+        ops = self._meta_ops()
         by_id = {s.snapshot_id: s for s in meta.snapshots}
         base = last if last is not None else {"snapshot_id": self._starting}
         base_id = base.get("snapshot_id")
@@ -596,7 +609,7 @@ class EngineTableStreamReader(DataSourceStreamReader):
         start_pos, end_pos = start.get("pos"), end.get("pos")
         if end_id is None or (start_id == end_id and start_pos == end_pos):
             return []
-        ops = _ops(self.location)
+        ops = self._meta_ops()
         meta = ops.load()
         by_id = {s.snapshot_id: s for s in meta.snapshots}
         if self._offset_le(by_id, end, start):

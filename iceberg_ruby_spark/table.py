@@ -19,8 +19,9 @@ Storage model (Iceberg-shaped, Spark-native — no Iceberg runtime jar):
 
 Each commit (append / overwrite / delete / update / merge) writes a new data
 directory via a distributed Spark job, then commits a new snapshot +
-metadata version with an **optimistic, atomic** ``O_EXCL`` create of
-``v{N+1}.json`` — the same commit protocol shape as Iceberg's
+metadata version with an **optimistic, atomic** conditional create of
+``v{N+1}.json`` (``FsTableOps.commit``, the one commit path for every
+catalog) — the same commit protocol shape as Iceberg's
 HadoopTableOperations.  Snapshot manifests live in their own files so the
 metadata log does not grow quadratically with history length (the analog of
 Iceberg's manifest-list indirection).
@@ -328,10 +329,25 @@ def _file_path_col():
 
 
 class FsTableOps:
-    """Table metadata operations over a :class:`~iceberg_ruby_spark.io.FileIO`
-    (POSIX by default; the interface contract — conditional put for commits,
-    last-writer-wins swap for the version hint — maps directly onto
-    S3/GCS/HDFS, round-1 review item)."""
+    """A table's metadata plane — its ``v{N}.json`` version files, its
+    manifests and the commit protocol — over a
+    :class:`~iceberg_ruby_spark.io.FileIO` (POSIX by default; the
+    conditional put a commit needs maps directly onto S3/GCS/HDFS).
+
+    Every catalog commits through this class.  A backend differs only in
+    its version POINTER, the place that names the current ``v{N}.json``:
+
+    - ``pointer is None`` (FS and Memory catalogs): the table's own
+      ``metadata/version-hint.text``.  The conditional create of
+      ``v{N+1}.json`` is the commit's compare-and-swap and the hint is
+      last-writer-wins, so reads probe past a stale hint to the newest
+      published version file (Iceberg's HadoopTableOperations).
+    - a catalog pointer (the SQL catalog's table row, the Glue / S3
+      Tables metadata location): an object with ``read()`` → the current
+      version or ``None`` (no table), and ``swap(base, new)`` raising
+      ``FileExistsError`` when another committer moved it first.  The
+      catalog is authoritative; the hint is still written after each
+      swap, so the directory stays a valid FS-layout table."""
 
     def __init__(self, location: str, io: Optional["FileIO"] = None):
         from iceberg_ruby_spark.io import FileIO, LocalFileIO  # noqa: F401
@@ -340,9 +356,16 @@ class FsTableOps:
         self.io: FileIO = io or LocalFileIO()
         self.metadata_dir = os.path.join(location, "metadata")
         self.data_dir = os.path.join(location, "data")
+        self.pointer: Optional[Any] = None
+        self._hint = os.path.join(self.metadata_dir, "version-hint.text")
+
+    def _version_file(self, v: int) -> str:
+        return os.path.join(self.metadata_dir, f"v{v}.json")
 
     def exists(self) -> bool:
-        if self.io.exists(os.path.join(self.metadata_dir, "version-hint.text")):
+        if self.pointer is not None:
+            return self.pointer.read() is not None
+        if self.io.exists(self._hint):
             return True
         return self._scan_latest_version() is not None
 
@@ -368,39 +391,54 @@ class FsTableOps:
             return None
         return best
 
-    def current_version(self) -> int:
-        hint = os.path.join(self.metadata_dir, "version-hint.text")
+    def _hint_version(self) -> Optional[int]:
         try:
-            return int(self.io.read(hint).strip())
+            v = int(self.io.read(self._hint).strip())
         except (OSError, ValueError):
             v = self._scan_latest_version()
             if v is None:
-                raise NoSuchTableError(f"no table at {self.location}")
+                return None
             # heal the hint for subsequent readers (best-effort)
             try:
-                self.io.replace(hint, str(v))
+                self.io.replace(self._hint, str(v))
             except OSError:
                 pass
-            return v
+        # a committer that published v{N+1} and died before moving the
+        # hint left it stale; the published version file is the truth
+        while self.io.exists(self._version_file(v + 1)):
+            v += 1
+        return v
+
+    def current_version(self) -> int:
+        v = self.pointer.read() if self.pointer is not None else self._hint_version()
+        if v is None:
+            raise NoSuchTableError(f"no table at {self.location}")
+        return v
 
     def load(self, version: Optional[int] = None) -> TableMetadata:
-        if not self.exists():
+        if version is None:
+            version = self.current_version()
+        elif not self.exists():
             raise NoSuchTableError(f"no table at {self.location}")
-        v = version if version is not None else self.current_version()
-        path = os.path.join(self.metadata_dir, f"v{v}.json")
-        return TableMetadata(json.loads(self.io.read(path)), v, path)
+        path = self._version_file(version)
+        return TableMetadata(json.loads(self.io.read(path)), version, path)
 
     def commit(self, base_version: Optional[int], new_meta: dict[str, Any]) -> TableMetadata:
-        """Optimistic commit: conditional create of the next version file
-        (raises FileExistsError if a concurrent committer won); the
-        version-hint swap is last-writer-wins and always points at an
-        existing version (Iceberg's HadoopTableOperations protocol)."""
+        """Optimistic commit, the same four steps for every catalog:
+
+        1. conditional create of ``v{N+1}.json`` (``FileExistsError`` when
+           a concurrent committer published it first);
+        2. the catalog pointer's swap base → N+1 (``FileExistsError`` when
+           its CAS is lost);
+        3. the version hint: the FS pointer itself, or an advisory copy
+           beside a catalog pointer;
+        4. :meth:`_trim_old_versions`."""
         new_version = (base_version or 0) + 1
-        path = os.path.join(self.metadata_dir, f"v{new_version}.json")
+        path = self._version_file(new_version)
         self.io.write_atomic(path, json.dumps(new_meta, indent=1), overwrite=False)
-        self.io.replace(
-            os.path.join(self.metadata_dir, "version-hint.text"), str(new_version)
-        )
+        if self.pointer is not None:
+            self.pointer.swap(base_version, new_version)
+        self.io.replace(self._hint, str(new_version))
         self._trim_old_versions(new_meta, new_version)
         return TableMetadata(new_meta, new_version, path)
 
@@ -423,7 +461,7 @@ class FsTableOps:
         cutoff = new_version - 1 - keep  # newest retained old version
         v = cutoff
         while v >= 1:
-            path = os.path.join(self.metadata_dir, f"v{v}.json")
+            path = self._version_file(v)
             if not self.io.exists(path):
                 break  # already trimmed below this point
             try:
@@ -848,9 +886,10 @@ class Table:
         self.identifier = identifier or []
         self.catalog = catalog
         self.read_only = read_only
-        # ops: the metadata plane (load/commit/manifests).  FsTableOps by
-        # default; a REST-catalog table passes RestTableOps so commits CAS
-        # through the catalog server instead of the filesystem.
+        # ops: the metadata plane (load/commit/manifests), an FsTableOps.
+        # A catalog table passes the ops its catalog built: FsTableOps
+        # with the catalog's version pointer attached (SQL, Glue, S3
+        # Tables), or RestTableOps, whose server owns the metadata.
         self.ops = ops or FsTableOps(location, io=io)
         self.metadata = self.ops.load()
         # per-instance lazy cache: col -> bloom index dict | None; False
@@ -2073,7 +2112,7 @@ class Table:
 
         try:
             reader = EngineTableStreamReader(
-                {"location": self.ops.location, "mode": "changelog"}
+                {"location": self.ops.location, "mode": "changelog", "ops": self.ops}
             )
             slices = reader.partitions(
                 {"snapshot_id": from_id}, {"snapshot_id": to_id}
@@ -3062,6 +3101,7 @@ class Table:
         semantics), timestamps convert to naive UTC exactly like a
         collected Spark row."""
         import datetime as _dt
+        import decimal as _dec
 
         try:
             import pyarrow.parquet as _pq
@@ -3132,13 +3172,23 @@ class Table:
                     if not st.has_min_max:
                         ok = False  # non-null values but no bounds (e.g.
                         break  # parquet-mr's >4 KB stats drop)
-                    try:
-                        lo, hi = _norm(st.min), _norm(st.max)
-                    except Exception:
-                        # pyarrow can't decode this type's statistics
-                        # (e.g. FLBA-backed decimal(>18)): same as absent
-                        ok = False
-                        break
+                    sc = md.schema.column(ci)
+                    if sc.logical_type.type == "DECIMAL" and sc.physical_type in (
+                        "INT32",
+                        "INT64",
+                    ):
+                        # pyarrow cannot decode the statistics of an
+                        # INT32/INT64-backed decimal (what Spark writes up
+                        # to precision 18); the raw unscaled ints are exact
+                        lo = _dec.Decimal(st.min_raw).scaleb(-sc.scale)
+                        hi = _dec.Decimal(st.max_raw).scaleb(-sc.scale)
+                    else:
+                        try:
+                            lo, hi = _norm(st.min), _norm(st.max)
+                        except Exception:
+                            # a type pyarrow cannot decode: same as absent
+                            ok = False
+                            break
                     mins[name] = (
                         self._stat_min(mins[name], lo) if name in mins else lo
                     )

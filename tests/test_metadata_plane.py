@@ -1,0 +1,148 @@
+"""One metadata plane: every catalog commits through ``FsTableOps`` and
+differs only in its version pointer.  Crash consistency of the FS
+pointer's commit (a version file is published whole or not at all, and a
+stale hint never hides a published version), and one conformance test
+that runs the same table lifecycle on every catalog backend."""
+
+from __future__ import annotations
+
+import glob
+import os
+import shutil
+import signal
+import subprocess
+import sys
+import tempfile
+import textwrap
+
+import pytest
+
+import iceberg_ruby_spark as ice
+from iceberg_ruby_spark.aws import GlueCatalog, S3TablesCatalog
+from tests.support.aws_stubs import FakeGlueClient, FakeS3TablesClient
+from tests.support.rest_server import StubRestServer
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+# A child process that commits one metadata version and is killed by the
+# kernel halfway through writing the version file: RLIMIT_FSIZE at half
+# the document's size, SIGXFSZ restored to its default (terminate).
+_CRASH_COMMIT = textwrap.dedent(
+    """
+    import json, resource, signal, sys
+    from iceberg_ruby_spark.table import FsTableOps
+
+    ops = FsTableOps(sys.argv[1])
+    meta = ops.load()
+    raw = dict(meta.raw, properties={**meta.properties, "crashed": "yes"})
+    half = len(json.dumps(raw, indent=1)) // 2
+    signal.signal(signal.SIGXFSZ, signal.SIG_DFL)
+    resource.setrlimit(resource.RLIMIT_FSIZE, (half, half))
+    ops.commit(meta.version, raw)
+    """
+)
+
+
+def test_crash_mid_write_leaves_no_version_file(catalog):
+    t = catalog.create_table("crash", schema={"k": "int"})
+    t.append([{"k": 1}])
+    head = t.ops.current_version()
+    proc = subprocess.run(
+        [sys.executable, "-c", _CRASH_COMMIT, t.ops.location],
+        cwd=REPO,
+        env={**os.environ, "PYTHONDONTWRITEBYTECODE": "1"},
+        capture_output=True,
+    )
+    assert proc.returncode == -signal.SIGXFSZ, proc.stderr.decode()[-2000:]
+    assert not os.path.exists(os.path.join(t.ops.metadata_dir, f"v{head + 1}.json"))
+    t2 = catalog.load_table("crash")
+    assert t2.metadata.version == head
+    assert "crashed" not in t2.properties
+    t2.append([{"k": 2}])
+    assert sorted(r["k"] for r in catalog.load_table("crash").to_a()) == [1, 2]
+
+
+def test_version_published_without_hint_swap_does_not_wedge(catalog):
+    """A committer that published v{N+1}.json and died before moving the
+    hint: readers see v{N+1} (the hint is advisory) and appends go on."""
+    t = catalog.create_table("stale_hint", schema={"k": "int"})
+    t.append([{"k": 1}])
+    t.append([{"k": 2}])
+    head = t.ops.current_version()
+    with open(os.path.join(t.ops.metadata_dir, "version-hint.text"), "w") as f:
+        f.write(str(head - 1))
+    catalog.load_table("stale_hint").append([{"k": 3}])
+    t2 = catalog.load_table("stale_hint")
+    assert t2.metadata.version == head + 1
+    assert sorted(r["k"] for r in t2.to_a()) == [1, 2, 3]
+
+
+ARN = "arn:aws:s3tables:us-east-1:000000000000:bucket/conformance"
+
+
+@pytest.fixture(params=["fs", "memory", "sql", "rest", "glue", "s3tables"])
+def anycat(request, spark):
+    kind = request.param
+    wh = tempfile.mkdtemp(prefix=f"conformance_{kind}_")
+    kw = {"namespace": "default", "spark": spark}
+    server = None
+    if kind == "fs":
+        cat = ice.Catalog(wh, **kw)
+    elif kind == "memory":
+        cat = ice.MemoryCatalog(wh, **kw)
+    elif kind == "sql":
+        cat = ice.SqlCatalog(uri=f"sqlite:///{wh}/catalog.db", warehouse=wh, **kw)
+    elif kind == "rest":
+        server = StubRestServer(warehouse=wh).__enter__()
+        cat = ice.RestCatalog(server.uri, warehouse=wh, **kw)
+    elif kind == "glue":
+        cat = GlueCatalog(warehouse=wh, client=FakeGlueClient(), **kw)
+    else:
+        cat = S3TablesCatalog(arn=ARN, client=FakeS3TablesClient(), warehouse=wh, **kw)
+    cat.create_namespace("default")
+    yield kind, cat
+    if server is not None:
+        server.__exit__(None, None, None)
+    shutil.rmtree(wh, ignore_errors=True)
+
+
+def test_backend_conformance(anycat):
+    """Append ×3, a merge-on-read delete, time travel and changelog_scan
+    give the same rows on every backend; where the metadata files live
+    under the table location, delete-after-commit keeps exactly
+    previous-versions-max + 1 version files."""
+    kind, cat = anycat
+    t = cat.create_table(
+        "conf",
+        schema={"k": "int", "v": "string"},
+        properties={
+            "write.metadata.delete-after-commit.enabled": "true",
+            "write.metadata.previous-versions-max": "1",
+        },
+    )
+    for i in range(3):
+        t.append([{"k": 2 * i, "v": f"a{i}"}, {"k": 2 * i + 1, "v": f"b{i}"}])
+    second = t.snapshots[1].snapshot_id
+    t.delete_where("k IN (1, 4)", mode="merge-on-read")
+
+    t = cat.load_table("conf")
+    assert sorted(r["k"] for r in t.to_a()) == [0, 2, 3, 5]
+    assert sorted(r["k"] for r in t.to_a(snapshot_id=second)) == [0, 1, 2, 3]
+    order = {s.snapshot_id: i for i, s in enumerate(t.snapshots)}
+    changes = sorted(
+        (order[r["_commit_snapshot_id"]], r["_change_type"], r["k"], r["v"])
+        for r in t.changelog_scan().collect()
+    )
+    assert changes == [
+        (0, "insert", 0, "a0"),
+        (0, "insert", 1, "b0"),
+        (1, "insert", 2, "a1"),
+        (1, "insert", 3, "b1"),
+        (2, "insert", 4, "a2"),
+        (2, "insert", 5, "b2"),
+        (3, "delete", 1, "b0"),
+        (3, "delete", 4, "a2"),
+    ]
+    if kind != "rest":  # the REST server keeps the metadata documents
+        versions = glob.glob(os.path.join(t.ops.metadata_dir, "v*.json"))
+        assert len(versions) == 2, sorted(versions)

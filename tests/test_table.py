@@ -1053,9 +1053,9 @@ def test_footer_stats_match_spark_aggregation(catalog, spark):
     written files: parquet footers (the write path's fast path) and the
     Spark aggregation (its fallback) — every stats type, NaN floats, an
     all-null column, strings past the truncate(16) prefix, counts and
-    none metrics modes, and several row groups per file.  A decimal
-    column's committed bounds are checked on their own, whichever
-    collector wrote them."""
+    none metrics modes, and several row groups per file — and decimals
+    of both integer widths Spark writes (INT64 for decimal(12, 3), INT32
+    for decimal(5, 2)), whose committed bounds are also checked."""
     import math
 
     import pyarrow.parquet as pq
@@ -1123,9 +1123,26 @@ def test_footer_stats_match_spark_aggregation(catalog, spark):
     assert "off" not in e["null-counts"]
     assert len(e["lower-bounds"]["s"]) == 16
 
-    dec = catalog.create_table("stats_xcheck_dec", schema={"dec": "decimal(12, 3)"})
-    dec.append([{"dec": decimal.Decimal("1.125")}, {"dec": decimal.Decimal("-2.5")}])
+    dec = catalog.create_table(
+        "stats_xcheck_dec", schema={"dec": "decimal(12, 3)", "d5": "decimal(5, 2)"}
+    )
+    D = decimal.Decimal
+    dec.append(
+        [
+            {"dec": D("1.125"), "d5": D("-0.5")},
+            {"dec": D("-2.5"), "d5": D("999.99")},
+            {"dec": None, "d5": None},
+        ]
+    )
+    paths = sorted(dec._entry_files(dec._current_entries()))
+    footer = dec._footer_stat_entries(paths)
+    assert footer is not None
+    agg = dec._file_stat_entries(
+        spark.read.schema(dec.current_schema().to_spark()).parquet(*paths)
+    )
+    assert footer == agg
     ents = dec._current_entries()
-    lo = min(decimal.Decimal(e["lower-bounds"]["dec"]) for e in ents)
-    hi = max(decimal.Decimal(e["upper-bounds"]["dec"]) for e in ents)
-    assert (lo, hi) == (decimal.Decimal("-2.5"), decimal.Decimal("1.125"))
+    for col, bounds in (("dec", (D("-2.5"), D("1.125"))), ("d5", (D("-0.5"), D("999.99")))):
+        lo = min(D(e["lower-bounds"][col]) for e in ents if e["lower-bounds"].get(col))
+        hi = max(D(e["upper-bounds"][col]) for e in ents if e["upper-bounds"].get(col))
+        assert (lo, hi) == bounds
