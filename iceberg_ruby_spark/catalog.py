@@ -48,6 +48,7 @@ from iceberg_ruby_spark.table import (
     Table,
     TableMetadata,
     _now_ms,
+    ancestors,
     _parse_predicate,
     _schema_to_json,
 )
@@ -1766,20 +1767,12 @@ class Catalog:
             )
         tbl = self.load_table(self._sql_table_ident(str(table_ident)))
         if proc == "ancestors_of":
-            rows = []
             start = arg("snapshot_id", 1)
-            cur = (
-                tbl.snapshot_by_id(int(start))
-                if start is not None
-                else tbl.current_snapshot()
+            by_id = {s.snapshot_id: s for s in tbl.snapshots}
+            head = by_id.get(
+                int(start) if start is not None else tbl.current_snapshot_id
             )
-            while cur is not None:
-                rows.append((cur.snapshot_id, cur.timestamp_ms))
-                cur = (
-                    tbl.snapshot_by_id(cur.parent_snapshot_id)
-                    if cur.parent_snapshot_id is not None
-                    else None
-                )
+            rows = [(s.snapshot_id, s.timestamp_ms) for s in ancestors(by_id, head)]
             return Result(
                 small_local_df(self.spark, 
                     rows, "snapshot_id long, timestamp long"

@@ -64,10 +64,10 @@ exactly once.  ``replace`` commits (compaction) emit nothing — physical churn
 cancels logically.  Copy-on-write rewrites — the commit kind with no
 structural row form — fall back PER COMMIT to a content-diff slice
 (r9): the executor reads the commit's before/after file states under
-their delete views and emits the multiset difference, the same
-comparison the batch ``changelog_scan`` makes.  Correct-if-slower:
-one task per such commit, O(changed files' rows); merge-on-read
-pipelines never hit it.
+their delete views and emits the multiset difference.  The batch
+``Table.changelog_scan`` runs these same slices as one job.
+Correct-if-slower: O(changed files' rows) per such commit, split into
+bounds-disjoint file groups; merge-on-read pipelines never hit it.
 ``skip_rewrite_commits=true`` still passes over rewrite commits
 entirely for consumers that only want the streamable kinds.  Iceberg
 itself has no
@@ -85,13 +85,6 @@ from pyspark.sql.datasource import (
     DataSourceStreamReader,
     InputPartition,
 )
-
-# the snapshot-summary ``mode`` of every merge-on-read DELETE commit
-# (Table.delete_where, Table.delete_by_keys): no data file is added
-MOR_DELETE_MODES = frozenset(
-    {"merge-on-read-positional", "merge-on-read-equality", "merge-on-read-dv"}
-)
-
 
 def _ops(location: str):
     from iceberg_ruby_spark.table import FsTableOps
@@ -224,11 +217,9 @@ class _ContentDiffSlice(InputPartition):
     whose file scope is unresolvable).  Carries per-file read specs for the
     commit's BEFORE and AFTER states (quiet common files already
     excluded at planning); the executor reads both sides under their
-    delete views and emits the multiset difference, mirroring the batch
-    ``Table.changelog_scan`` content comparison (table.py
-    ``_changelog_commit_diff``).  One task per such commit: the work is
-    O(changed files' rows), the same bound as the batch diff, but not
-    spread across executors — merge-on-read commits stay on the
+    delete views and emits the multiset difference.  One task per
+    bounds-disjoint file group of the commit (``_diff_groups``): the work
+    is O(changed files' rows) — merge-on-read commits stay on the
     structural O(changed) slices and never pay this."""
 
     kind = "content-diff"
@@ -318,12 +309,6 @@ class EngineTableStreamReader(DataSourceStreamReader):
         # what sizes a CDC backfill's batches.
         self._last: Optional[dict] = None
         self._floor: Optional[dict] = None
-        # content-diff distribution: split a CoW commit's diff
-        # into bounds-disjoint file groups so it plans >1 task (r9 VERDICT
-        # item 1).  Off-switch kept for A/B probes and as a safety valve.
-        self._split_diffs = (
-            str(options.get("content_diff_split", "true")).lower() != "false"
-        )
         # incremental delete-view cache: the prior-delete mask for a
         # structurally-derivable delete commit is served from here instead
         # of a full manifest read (r9 VERDICT item 4 — the one planning
@@ -442,11 +427,9 @@ class EngineTableStreamReader(DataSourceStreamReader):
         per-snapshot unit partial offsets index into).  O(new files) via
         the structural delta; rewrite commits contribute nothing when
         skip_rewrites."""
-        safe = snap.operation == "append" or (
-            snap.operation == "delete"
-            and snap.summary.get("mode") in MOR_DELETE_MODES
-        )
-        if not safe and self.skip_rewrites:
+        from iceberg_ruby_spark.table import appends_only
+
+        if self.skip_rewrites and not appends_only(snap):
             return []
         parent = (
             by_id.get(snap.parent_snapshot_id)
@@ -485,21 +468,17 @@ class EngineTableStreamReader(DataSourceStreamReader):
         bounding, consumption is strictly per-commit (Iceberg's streaming
         iterator semantics): an append's files are emitted even if a later
         in-window rewrite replaced them."""
+        from iceberg_ruby_spark.errors import InvalidDataError
+        from iceberg_ruby_spark.table import snapshot_window
+
         ops = self._meta_ops()
         by_id = {s.snapshot_id: s for s in meta.snapshots}
         base = last if last is not None else {"snapshot_id": self._starting}
         base_id = base.get("snapshot_id")
         base_pos = base.get("pos")
-        chain = []
-        cur = by_id.get(head)
-        while cur is not None and cur.snapshot_id != base_id:
-            chain.append(cur)
-            cur = (
-                by_id.get(cur.parent_snapshot_id)
-                if cur.parent_snapshot_id is not None
-                else None
-            )
-        if base_id is not None and cur is None:
+        try:
+            window = snapshot_window(by_id, base_id, by_id.get(head))
+        except InvalidDataError:
             # base expired / not an ancestor: let partitions() surface the
             # error on the unbounded window rather than planning blind
             return {"snapshot_id": head}
@@ -543,7 +522,7 @@ class EngineTableStreamReader(DataSourceStreamReader):
             if stop < len(entries):
                 return {"snapshot_id": base_id, "pos": stop}
         out = {"snapshot_id": base_id}
-        for snap in reversed(chain):
+        for snap in window:
             if _exhausted():
                 break
             entries = self._delta_entries(ops, by_id, snap)
@@ -593,16 +572,26 @@ class EngineTableStreamReader(DataSourceStreamReader):
             if a_pos is None:
                 return b_pos is None  # full == full; full > any partial
             return b_pos is None or a_pos <= b_pos
-        cur = by_id.get(b_id)
-        while cur is not None:
-            if cur.snapshot_id == a_id:
-                return True
-            cur = (
-                by_id.get(cur.parent_snapshot_id)
-                if cur.parent_snapshot_id is not None
-                else None
-            )
-        return False
+        from iceberg_ruby_spark.table import ancestors
+
+        return any(s.snapshot_id == a_id for s in ancestors(by_id, by_id.get(b_id)))
+
+    def _append_window(self, by_id, start_id, end_snap) -> list:
+        """The append-mode window, oldest first; a commit that rewrites
+        rows refuses unless ``skip_rewrite_commits`` passes over it."""
+        from iceberg_ruby_spark.table import appends_only, snapshot_window
+
+        window = snapshot_window(by_id, start_id, end_snap)
+        if not self.skip_rewrites:
+            for snap in window:
+                if not appends_only(snap):
+                    raise ValueError(
+                        f"streaming read crossed a {snap.operation!r} commit "
+                        f"({snap.snapshot_id}); rewrites cannot be consumed "
+                        "as appends — set skip_rewrite_commits=true to pass "
+                        "over them"
+                    )
+        return window
 
     def partitions(self, start: dict, end: dict) -> list[InputPartition]:
         start_id, end_id = start.get("snapshot_id"), end.get("snapshot_id")
@@ -654,26 +643,8 @@ class EngineTableStreamReader(DataSourceStreamReader):
             return self._partial_window(
                 ops, by_id, start_id, start_pos, end_snap, end_pos
             )
-        # walk end → start validating every commit in the window
-        cur = end_snap
-        while cur is not None and cur.snapshot_id != start_id:
-            safe = cur.operation == "append" or (
-                cur.operation == "delete"
-                and cur.summary.get("mode") in MOR_DELETE_MODES
-            )
-            if not safe and not self.skip_rewrites:
-                raise ValueError(
-                    f"streaming read crossed a {cur.operation!r} commit "
-                    f"({cur.snapshot_id}); rewrites cannot be consumed as "
-                    "appends — set skip_rewrite_commits=true to pass over "
-                    "them"
-                )
-            parent = cur.parent_snapshot_id
-            cur = by_id.get(parent) if parent is not None else None
-        if start_id is not None and cur is None:
-            raise ValueError(
-                f"offset snapshot {start_id} is not an ancestor of {end_id}"
-            )
+        window = self._append_window(by_id, start_id, end_snap)
+        cur = by_id.get(start_id) if start_id is not None else None
         if cur is not None and not self.skip_rewrites:
             # fast-append structural delta: micro-batch planning opens only
             # the manifests ADDED in the window — O(new files), independent
@@ -692,22 +663,15 @@ class EngineTableStreamReader(DataSourceStreamReader):
         if cur is not None:
             base_paths = set(_entry_paths(ops.read_manifest(cur.manifest_list)))
         if self.skip_rewrites:
+            from iceberg_ruby_spark.table import appends_only
+
             # exclude file churn introduced by any rewrite commit in the
             # window: only files appended by clean append commits emit
-            rewritten: set[str] = set()
-            walk = end_snap
-            while walk is not None and walk.snapshot_id != start_id:
-                safe = walk.operation == "append" or (
-                    walk.operation == "delete"
-                    and walk.summary.get("mode") in MOR_DELETE_MODES
-                )
-                if not safe:
-                    rewritten |= set(
-                        _entry_paths(ops.read_manifest(walk.manifest_list))
+            for snap in window:
+                if not appends_only(snap):
+                    base_paths |= set(
+                        _entry_paths(ops.read_manifest(snap.manifest_list))
                     )
-                parent = walk.parent_snapshot_id
-                walk = by_id.get(parent) if parent is not None else None
-            base_paths |= rewritten
         new = [
             p
             for p in _entry_paths(ops.read_manifest(end_snap.manifest_list))
@@ -730,24 +694,13 @@ class EngineTableStreamReader(DataSourceStreamReader):
         copy-on-write rewrites fall back to one content-diff slice per
         commit (``_content_diff_slices``) unless ``skip_rewrite_commits=
         true`` skips them."""
-        chain = []
-        cur = end_snap
-        while cur is not None and cur.snapshot_id != start_id:
-            chain.append(cur)
-            cur = (
-                by_id.get(cur.parent_snapshot_id)
-                if cur.parent_snapshot_id is not None
-                else None
-            )
-        if start_id is not None and cur is None:
-            raise ValueError(
-                f"offset snapshot {start_id} is not an ancestor of "
-                f"{end_snap.snapshot_id}"
-            )
-        chain.reverse()
-        prev = cur  # None ⇒ window starts at table creation
+        from iceberg_ruby_spark.table import snapshot_window
+
+        window = snapshot_window(by_id, start_id, end_snap)
+        # None ⇒ window starts at table creation
+        prev = by_id.get(start_id) if start_id is not None else None
         slices: list[InputPartition] = []
-        for ordinal, snap in enumerate(chain):
+        for ordinal, snap in enumerate(window):
             slices += self._commit_change_slices(ops, prev, snap, ordinal)
             prev = snap
         return slices
@@ -1095,12 +1048,11 @@ class EngineTableStreamReader(DataSourceStreamReader):
     def _content_diff_slices(
         self, ops, prev_entries, cur_entries, sid: int, ordinal: int
     ) -> list[InputPartition]:
-        """One whole-commit content-diff slice — planning half of the
+        """The content-diff slices of one commit — planning half of the
         correct-if-slower fallback for commits the structural paths can't
         derive (CoW rewrites, unresolvable prior delete scopes).
 
-        Mirrors the batch ``Table._changelog_commit_diff`` exclusion: a
-        data file common to both states whose delete scope didn't change
+        A data file common to both states whose delete scope didn't change
         contributes identical rows to both sides, so it's dropped from
         BOTH reads up front; the executor diffs only the rest.  Each
         side's spec carries the file plus every delete of that state
@@ -1242,7 +1194,7 @@ class EngineTableStreamReader(DataSourceStreamReader):
         NULLs of the column merge with each other (a NULL row can only
         equal another NULL row), and a file missing stats disqualifies the
         column.  The column producing the most groups wins."""
-        if len(paths) <= 1 or not self._split_diffs:
+        if len(paths) <= 1:
             return [list(paths)]
         best: Optional[list[list[str]]] = None
         for col in self._columns:
@@ -1266,35 +1218,11 @@ class EngineTableStreamReader(DataSourceStreamReader):
             lo = start_pos or 0
             hi = end_pos if end_pos is not None else len(sfiles)
             return [_FileSlice(p, self._columns) for p in sfiles[lo:hi]]
-        cur = end_snap
-        chain = []
-        while cur is not None and cur.snapshot_id != start_id:
-            safe = cur.operation == "append" or (
-                cur.operation == "delete"
-                and cur.summary.get("mode") in MOR_DELETE_MODES
-            )
-            if not safe and not self.skip_rewrites:
-                raise ValueError(
-                    f"streaming read crossed a {cur.operation!r} commit "
-                    f"({cur.snapshot_id}); rewrites cannot be consumed as "
-                    "appends — set skip_rewrite_commits=true to pass over "
-                    "them"
-                )
-            chain.append(cur)
-            parent = cur.parent_snapshot_id
-            cur = by_id.get(parent) if parent is not None else None
-        if start_id is not None and cur is None:
-            raise ValueError(
-                f"offset snapshot {start_id} is not an ancestor of "
-                f"{end_snap.snapshot_id}"
-            )
+        window = self._append_window(by_id, start_id, end_snap)
         files: list[str] = []
         if start_pos is not None:
-            ssnap = by_id.get(start_id)
-            if ssnap is None:
-                raise ValueError(f"offset snapshot {start_id} no longer exists")
-            files += self._delta_paths(ops, by_id, ssnap)[start_pos:]
-        for snap in reversed(chain):
+            files += self._delta_paths(ops, by_id, by_id[start_id])[start_pos:]
+        for snap in window:
             f = self._delta_paths(ops, by_id, snap)
             if snap.snapshot_id == end_snap.snapshot_id and end_pos is not None:
                 f = f[:end_pos]
@@ -1556,11 +1484,11 @@ class EngineTableStreamReader(DataSourceStreamReader):
         """Executor half of the content-diff fallback: read the commit's
         before/after states under their delete views and emit the
         multiset difference — insert rows that appear only after, delete
-        rows that appear only before — exactly the batch
-        ``changelog_scan``'s ``exceptAll`` semantics (DuckDB's EXCEPT ALL
-        is the same multiset operator, with NaN-equal and nested-type
-        value equality).  A CoW UPDATE thus emits delete+insert for
-        touched rows and nothing for rows the rewrite merely copied.
+        rows that appear only before — Spark's ``exceptAll`` semantics
+        (DuckDB's EXCEPT ALL is the same multiset operator, with NaN-equal
+        and nested-type value equality).  A CoW UPDATE thus emits
+        delete+insert for touched rows and nothing for rows the rewrite
+        merely copied.
         Fully vectorized (r11): file masking, the union of each side,
         and the diff itself all run in DuckDB over Arrow buffers; the
         result leaves as Arrow batches."""

@@ -55,7 +55,7 @@ import os
 import time
 import uuid as uuid_mod
 from dataclasses import dataclass
-from typing import Any, Iterable, Optional, Sequence, Union
+from typing import Any, Iterable, Iterator, Optional, Sequence, Union
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -130,6 +130,58 @@ class Snapshot:
             schema_id=d.get("schema-id", 0),
             summary=d.get("summary", {}),
         )
+
+
+# the snapshot-summary ``mode`` of every merge-on-read DELETE commit
+# (Table.delete_where, Table.delete_by_keys): no data file is added
+MOR_DELETE_MODES = frozenset(
+    {"merge-on-read-positional", "merge-on-read-equality", "merge-on-read-dv"}
+)
+
+
+def appends_only(snap: Snapshot) -> bool:
+    """True when the commit adds no file that rewrites existing rows: an
+    append, or a merge-on-read delete (a delete file or deletion vector).
+    A copy-on-write delete, overwrite or replace rewrites survivors into
+    new files a manifest diff would misreport as appended rows."""
+    return snap.operation == "append" or (
+        snap.operation == "delete" and snap.summary.get("mode") in MOR_DELETE_MODES
+    )
+
+
+def ancestors(
+    by_id: dict[int, Snapshot], snap: Optional[Snapshot]
+) -> Iterator[Snapshot]:
+    """``snap``, then its parents, newest first; stops at the first
+    snapshot or at a parent missing from ``by_id`` (expired)."""
+    while snap is not None:
+        yield snap
+        parent = snap.parent_snapshot_id
+        snap = by_id.get(parent) if parent is not None else None
+
+
+def snapshot_window(
+    by_id: dict[int, Snapshot], start_id: Optional[int], end_snap: Optional[Snapshot]
+) -> list[Snapshot]:
+    """The commits after ``start_id`` up to and including ``end_snap``,
+    oldest first; ``start_id=None`` starts at the first snapshot.  Raises
+    :class:`InvalidDataError` when ``start_id`` is missing or is not an
+    ancestor of ``end_snap``."""
+    window = []
+    for snap in ancestors(by_id, end_snap):
+        if snap.snapshot_id == start_id:
+            break
+        window.append(snap)
+    else:
+        if start_id is not None:
+            if start_id not in by_id:
+                raise InvalidDataError(f"no snapshot with id {start_id}")
+            end_id = end_snap.snapshot_id if end_snap is not None else None
+            raise InvalidDataError(
+                f"snapshot {start_id} is not an ancestor of {end_id}"
+            )
+    window.reverse()
+    return window
 
 
 def _schema_to_json(schema: ice_t.Schema) -> dict[str, Any]:
@@ -1842,42 +1894,20 @@ class Table:
         base_paths: set[str] = set()
         entries: Optional[list[dict[str, Any]]] = None
         if from_snapshot_id is not None:
-            from iceberg_ruby_spark.streaming.source import MOR_DELETE_MODES
-
-            from_snap = self.snapshot_by_id(from_snapshot_id)
-            if from_snap is None:
-                raise InvalidDataError(f"no snapshot with id {from_snapshot_id}")
+            by_id = {s.snapshot_id: s for s in self.snapshots}
             # a replace/overwrite (compaction, update, merge) inside the
             # window rewrites rows into new files that a manifest diff would
             # misreport as appends — same restriction as Iceberg's
             # incremental append scan
-            cur = to_snap
-            while cur is not None and cur.snapshot_id != from_snap.snapshot_id:
-                incremental_safe = cur.operation == "append" or (
-                    # merge-on-read deletes (positional file, equality
-                    # file, or deletion vector) add no data files;
-                    # copy-on-write deletes REWRITE survivors into new
-                    # files a manifest diff would misreport as appends
-                    cur.operation == "delete"
-                    and cur.summary.get("mode") in MOR_DELETE_MODES
-                )
-                if not incremental_safe:
+            for cur in snapshot_window(by_id, from_snapshot_id, to_snap):
+                if not appends_only(cur):
                     raise InvalidDataError(
                         "incremental scan window crosses a "
                         f"{cur.operation!r} snapshot ({cur.snapshot_id}); "
                         "only append and merge-on-read-delete commits can "
                         "be consumed incrementally"
                     )
-                cur = (
-                    self.snapshot_by_id(cur.parent_snapshot_id)
-                    if cur.parent_snapshot_id is not None
-                    else None
-                )
-            if cur is None:
-                raise InvalidDataError(
-                    f"snapshot {from_snapshot_id} is not an ancestor of "
-                    f"{to_snap.snapshot_id}"
-                )
+            from_snap = by_id[from_snapshot_id]
             # fast-append structural delta: O(new files) planning — only
             # the window's own manifests are opened.  (Pre-window MoR
             # delete entries are scoped to files that existed at their
@@ -1909,8 +1939,6 @@ class Table:
         self,
         from_snapshot_id: Optional[Union[int, str]] = None,
         to_snapshot_id: Optional[Union[int, str]] = None,
-        chunk_commits: int = 16,
-        engine: str = "slices",
     ) -> DataFrame:
         """Row-level changes between two snapshots: the table columns plus
         ``_change_type`` ('insert' | 'delete'), ``_commit_snapshot_id``,
@@ -1922,130 +1950,61 @@ class Table:
         a pure rewrite (compaction / Z-order) emits NOTHING.  Window ends
         accept a snapshot id OR a branch/tag name.
 
-        ``engine='slices'`` (default) executes the STREAM planner's
-        per-commit structural slices as one batch job — one task per
-        slice, the exact executor code the changelog stream runs: append
-        commits stream their new files, MoR delete commits emit dead rows
-        masked against prior deletes (never a before/after comparison),
-        CoW rewrites run the distributed content diff.  The r10 probe
-        measured the old per-commit ``exceptAll`` diff at 1136 s for a
-        200-commit sf0.1 window the slice plan covers in seconds — the
-        diff read every changed file twice and shuffled both sides per
-        commit.
+        The window runs as ONE job over the stream planner's per-commit
+        slices: append commits stream their new files, MoR delete commits
+        emit dead rows masked against prior deletes (never a before/after
+        comparison), CoW rewrites run the distributed content diff.
+        Planning happens driver-side exactly as a stream drain would plan
+        the same window; execution ships the pickled reader + slices to
+        executors — the same contract the Python DataSource runtime uses —
+        and runs the reader's own ``read()`` per slice, one task each.  The
+        RDD hop is deliberate: the work unit is "run this slice's
+        imperative reader", not a relational expression.  A window the
+        planner refuses (a ``from`` that is not an ancestor, a delete entry
+        of an unknown kind or without key columns) raises
+        :class:`InvalidDataError` naming the snapshot or commit."""
+        from iceberg_ruby_spark.streaming.source import EngineTableStreamReader
 
-        ``engine='diff'`` keeps that relational before/after plan: each
-        adjacent snapshot pair reads only changed files under both delete
-        views and cancels through ``exceptAll``.  It remains the fallback
-        the slices planner drops to automatically when it refuses a
-        window (e.g. a delete entry of an unknown kind, or one that
-        records no key columns).
-        Long diff windows are CHUNKED: every ``chunk_commits`` diff-bearing
-        commits the accumulated sub-plan is local-checkpointed, so a
-        200-commit window plans as ~13 bounded jobs instead of the union
-        of hundreds of exceptAll trees that OOMed the driver (SCALE.md r9
-        probe); ``chunk_commits=0`` disables chunking."""
-        if engine not in ("slices", "diff"):
-            raise InvalidDataError(
-                f"changelog_scan engine must be 'slices' or 'diff', got {engine!r}"
-            )
         from_snapshot_id = self._resolve_snapshot_arg(from_snapshot_id)
         to_snapshot_id = self._resolve_snapshot_arg(to_snapshot_id)
         to_id = to_snapshot_id if to_snapshot_id is not None else self.current_snapshot_id
+        fields = list(self.current_schema().to_spark().fields) + [
+            _T.StructField("_change_type", _T.StringType()),
+            _T.StructField("_commit_snapshot_id", _T.LongType()),
+            _T.StructField("_change_ordinal", _T.IntegerType()),
+        ]
+        empty = self.spark.createDataFrame([], _T.StructType(fields))
         if to_id is None:
-            return self._changelog_empty()
-        to_snap = self.snapshot_by_id(to_id)
-        if to_snap is None:
+            return empty
+        if self.snapshot_by_id(to_id) is None:
             raise InvalidDataError(f"no snapshot with id {to_snapshot_id}")
-        if engine == "slices":
-            df = self._changelog_scan_slices(from_snapshot_id, to_id)
-            if df is not None:
-                return df
-        # walk parents back to the window start; replay forward
-        chain = []
-        cur = to_snap
-        while cur is not None and cur.snapshot_id != from_snapshot_id:
-            chain.append(cur)
-            cur = (
-                self.snapshot_by_id(cur.parent_snapshot_id)
-                if cur.parent_snapshot_id is not None
-                else None
+        reader = EngineTableStreamReader(
+            {"location": self.ops.location, "mode": "changelog", "ops": self.ops}
+        )
+        try:
+            slices = reader.partitions(
+                {"snapshot_id": from_snapshot_id}, {"snapshot_id": to_id}
             )
-        if from_snapshot_id is not None and cur is None:
-            raise InvalidDataError(
-                f"snapshot {from_snapshot_id} is not an ancestor of {to_id}"
-            )
-        chain.reverse()
-        schema = self.current_schema()
-        cols = [f.name for f in schema.fields]
-        parts = []
-        # chunking state: parts[:sealed] are already checkpointed; diffs
-        # counts the exceptAll-bearing parts accumulated since the seal
-        sealed, diffs = 0, 0
+        except ValueError as e:
+            raise InvalidDataError(str(e)) from e
+        if not slices:
+            return empty
 
-        def _seal_chunk() -> None:
-            nonlocal sealed, diffs
-            live = parts[sealed:]
-            out = live[0]
-            for p in live[1:]:
-                out = out.unionByName(p)
-            # localCheckpoint computes the chunk NOW and replaces its plan
-            # with a scan of the pinned result — the union of chunks stays
-            # a flat, bounded plan however long the window is
-            parts[sealed:] = [out.localCheckpoint(eager=True)]
-            sealed = len(parts)
-            diffs = 0
+        def run_slices(batches):
+            # reader.read yields pyarrow.RecordBatch already cast to the
+            # changelog Arrow schema — they flow to the JVM as Arrow
+            # stream frames, never as pickled Python rows
+            for b in batches:
+                for i in b.column(0).to_pylist():
+                    yield from reader.read(slices[i])
 
-        prev_list = cur.manifest_list if cur is not None else None
-        # full entry view loaded lazily — a window of fast-append commits
-        # never reads ANY full manifest (O(new files) per commit)
-        prev_entries = [] if cur is None else None
-        for ordinal, snap in enumerate(chain):
-            delta = (
-                self.ops.read_manifest_delta(snap.manifest_list, prev_list)
-                if prev_list is not None
-                else None
-            )
-            if delta is not None and all("path" in e for e in delta):
-                # structurally-proven append-only commit: the changelog IS
-                # the delta files' rows, no before/after row comparison
-                if delta:
-                    parts.append(
-                        self._read_entries(delta, schema=schema)
-                        .select(*cols)
-                        .withColumn("_change_type", F.lit("insert"))
-                        .withColumn("_commit_snapshot_id", F.lit(snap.snapshot_id))
-                        .withColumn("_change_ordinal", F.lit(ordinal))
-                    )
-                prev_list = snap.manifest_list
-                prev_entries = None
-                continue
-            if prev_entries is None:
-                prev_entries = self.ops.read_manifest(prev_list)
-            cur_entries = self.ops.read_manifest(snap.manifest_list)
-            diff = self._changelog_commit_diff(prev_entries, cur_entries, schema)
-            if diff is not None:
-                parts.append(
-                    diff.withColumn(
-                        "_commit_snapshot_id", F.lit(snap.snapshot_id)
-                    ).withColumn("_change_ordinal", F.lit(ordinal))
-                )
-                diffs += 1
-                if chunk_commits and diffs >= chunk_commits:
-                    _seal_chunk()
-            prev_entries = cur_entries
-            prev_list = snap.manifest_list
-        if not parts:
-            return self._changelog_empty()
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+        src = self.spark.range(0, len(slices), 1, len(slices))
+        return src.mapInArrow(run_slices, empty.schema)
 
     def changelog_net(
         self,
         from_snapshot_id: Optional[Union[int, str]] = None,
         to_snapshot_id: Optional[Union[int, str]] = None,
-        engine: str = "slices",
     ) -> DataFrame:
         """NET row-level changes over the window — iceberg-spark's
         ``create_changelog_view(net_changes => true)`` semantics: changes
@@ -2059,9 +2018,7 @@ class Table:
         One aggregation over the window-sized changelog (signed count per
         row content, map-side partials); multiplicities survive —
         ``abs(net)`` copies emit for content appearing multiple times."""
-        ch = self.changelog_scan(
-            from_snapshot_id, to_snapshot_id, engine=engine
-        )
+        ch = self.changelog_scan(from_snapshot_id, to_snapshot_id)
         cols = [
             c
             for c in ch.columns
@@ -2092,120 +2049,6 @@ class Table:
                 F.col("__last._change_ordinal").alias("_change_ordinal"),
             )
         )
-
-    def _changelog_scan_slices(
-        self, from_id: Optional[int], to_id: int
-    ) -> Optional[DataFrame]:
-        """The batch changelog window as ONE job over the stream planner's
-        per-commit slices.  Planning happens driver-side exactly as a
-        stream drain would plan the same window (structural slices for
-        append/MoR commits, bounds-disjoint content-diff groups for CoW);
-        execution ships the pickled reader + slices to executors — the
-        same contract the Python DataSource runtime uses — and runs the
-        reader's own ``read()`` per slice, one task each.  The RDD hop is
-        deliberate: the work unit is "run this slice's imperative reader",
-        not a relational expression, and the result immediately becomes a
-        DataFrame with the changelog schema.  Returns None when the slices
-        planner refuses the window (caller falls back to the relational
-        diff, which can evaluate what the planner refused)."""
-        from iceberg_ruby_spark.streaming.source import EngineTableStreamReader
-
-        try:
-            reader = EngineTableStreamReader(
-                {"location": self.ops.location, "mode": "changelog", "ops": self.ops}
-            )
-            slices = reader.partitions(
-                {"snapshot_id": from_id}, {"snapshot_id": to_id}
-            )
-        except (ValueError, InvalidDataError, OSError):
-            # the planner's REFUSALS (unknown delete kind, foreign ops
-            # layout) — intentional fallbacks to the relational diff.
-            # Anything else is a planner bug and must surface, not
-            # silently demote every changelog read to the 300×-slower
-            # diff path (r10 review finding).
-            return None
-        empty = self._changelog_empty()  # single source of the schema
-        if not slices:
-            return empty
-        st = empty.schema
-
-        def run_slices(batches):
-            # reader.read yields pyarrow.RecordBatch already cast to the
-            # changelog Arrow schema — they flow to the JVM as Arrow
-            # stream frames, never as pickled Python rows (r10 VERDICT
-            # item 1: the batch path shares the stream's vectorized
-            # emission)
-            for b in batches:
-                for i in b.column(0).to_pylist():
-                    yield from reader.read(slices[i])
-
-        src = self.spark.range(0, len(slices), 1, len(slices))
-        return src.mapInArrow(run_slices, st)
-
-    def _changelog_empty(self) -> DataFrame:
-        base = self.current_schema().to_spark()
-        fields = list(base.fields) + [
-            _T.StructField("_change_type", _T.StringType()),
-            _T.StructField("_commit_snapshot_id", _T.LongType()),
-            _T.StructField("_change_ordinal", _T.IntegerType()),
-        ]
-        return self.spark.createDataFrame([], _T.StructType(fields))
-
-    def _changelog_commit_diff(
-        self,
-        prev_entries: list[dict[str, Any]],
-        cur_entries: list[dict[str, Any]],
-        schema,
-    ) -> Optional[DataFrame]:
-        """insert/delete rows for ONE commit, reading only what changed.
-
-        A data file common to both manifests contributes identical rows to
-        both sides UNLESS the merge-on-read delete entries scoped to it
-        differ — so common files with unchanged delete scope are excluded
-        from BOTH reads up front, and ``exceptAll`` cancels the rest."""
-
-        def mor_key(e: dict[str, Any]):
-            return json.dumps(
-                {k: sorted(v) if isinstance(v, (list, set)) else v
-                 for k, v in e.items() if k != "schema-id"},
-                sort_keys=True, default=str,
-            )
-
-        def split(entries):
-            data = {e["path"]: e for e in entries if "path" in e}
-            mor = {mor_key(e): e for e in entries if "path" not in e}
-            return data, mor
-
-        prev_data, prev_mor = split(prev_entries)
-        cur_data, cur_mor = split(cur_entries)
-        mor_changed = set(prev_mor) ^ set(cur_mor)
-        # a common file is "touched" when any added/removed MoR entry's
-        # scope includes it (equality: strictly-lower data sequence,
-        # key-bounds pruned; positional / DV: its applies-to files)
-        touched = set()
-        cand = {**prev_data, **cur_data}
-        for k in mor_changed:
-            e = prev_mor.get(k) or cur_mor[k]
-            if e.get("content") == "equality-deletes":
-                touched |= {de["path"] for de in _seq_scope_touched(e, cand.values())}
-                continue
-            ap = e.get("applies-to")
-            touched |= set(ap) if ap is not None else set(cand)
-        common_quiet = {
-            p for p in set(prev_data) & set(cur_data) if p not in touched
-        }
-        prev_side = [e for p, e in prev_data.items() if p not in common_quiet]
-        cur_side = [e for p, e in cur_data.items() if p not in common_quiet]
-        if not prev_side and not cur_side:
-            return None
-        # each side reads under ITS snapshot's full delete-entry view (MoR
-        # entries scoped to excluded files filter nothing)
-        cols = [f.name for f in schema.fields]
-        before = self._read_entries(prev_side + list(prev_mor.values()), schema=schema).select(*cols)
-        after = self._read_entries(cur_side + list(cur_mor.values()), schema=schema).select(*cols)
-        inserts = after.exceptAll(before).withColumn("_change_type", F.lit("insert"))
-        deletes = before.exceptAll(after).withColumn("_change_type", F.lit("delete"))
-        return inserts.unionByName(deletes)
 
     @property
     def inspect(self) -> "TableInspect":
@@ -6496,9 +6339,11 @@ class Table:
         older_than: Optional[Any] = None,
         dry_run: bool = False,
     ) -> list[str]:
-        """Delete commit dirs whose files are referenced by no live snapshot.
-        Returns the removed dirs, or with ``return_files=True`` every file
-        path removed (the iceberg-spark procedure's result granularity).
+        """Delete commit dirs whose files are referenced by no live snapshot,
+        and the hidden ``.<name>.<hex>`` temp files a crashed atomic write
+        leaves under ``metadata/``.  Returns the removed dirs and temp
+        files, or with ``return_files=True`` every file path removed (the
+        iceberg-spark procedure's result granularity).
 
         ``older_than`` (epoch-millis, datetime, or ISO string) is the
         procedure's safety window: only dirs whose files were ALL last
@@ -6543,7 +6388,20 @@ class Table:
                 if not dry_run:
                     self.ops.io.delete_prefix(d)
                 removed.append(d)
+        for f in self.ops.io.list(self.ops.metadata_dir):
+            if not _ATOMIC_TEMP.match(os.path.basename(f)):
+                continue
+            if cutoff is not None and (self.ops.io.mtime_ms(f) or cutoff) >= cutoff:
+                continue  # inside the safety window — maybe in-flight
+            if not dry_run:
+                self.ops.io.delete(f)
+            removed.append(f)
+            removed_files.append(f)
         return removed_files if return_files else removed
+
+
+# the temp file ``LocalFileIO.write_bytes_atomic`` writes beside its target
+_ATOMIC_TEMP = re.compile(r"^\..+\.[0-9a-f]{32}$")
 
 
 # --------------------------------------------------------------------------
@@ -7370,21 +7228,16 @@ class TableInspect:
         )
 
     def history(self) -> DataFrame:
-        current = self.table.current_snapshot_id
-        ancestors = set()
-        cur = self.table.current_snapshot()
-        while cur is not None:
-            ancestors.add(cur.snapshot_id)
-            cur = (
-                self.table.snapshot_by_id(cur.parent_snapshot_id)
-                if cur.parent_snapshot_id is not None
-                else None
-            )
+        by_id = {s.snapshot_id: s for s in self.table.snapshots}
+        lineage = {
+            s.snapshot_id
+            for s in ancestors(by_id, by_id.get(self.table.current_snapshot_id))
+        }
         rows = [
             {
                 "made_current_at": e["timestamp-ms"],
                 "snapshot_id": e["snapshot-id"],
-                "is_current_ancestor": e["snapshot-id"] in ancestors,
+                "is_current_ancestor": e["snapshot-id"] in lineage,
             }
             for e in self.table.metadata.snapshot_log
         ]

@@ -20,9 +20,9 @@ kind.  Then measures:
 
 3. **Stream-vs-batch changelog equivalence** — a foreachBatch counting
    drain measures the stream's total event count, then the BATCH
-   ``changelog_scan().count()`` over the same window must complete
-   under default driver memory (the chunked plan; the unchunked union
-   OOMed, SCALE.md r9) and count exactly what the stream emitted.
+   ``changelog_scan().count()`` over the same window (the same slices
+   as the stream, run as one job) must complete under default driver
+   memory and count exactly what the stream emitted.
 
 Usage: python scripts/cdc_scale_probe.py [sf_dir] [n_waves]
 Prints one JSON line; exits 1 if append-commit planning is not flat
@@ -179,11 +179,9 @@ def main() -> None:
     q2.awaitTermination()
     stream_events_wall = time.time() - t0
     stream_events = sum(batch_counts)
-    # -- BATCH changelog_scan over the same 200-commit window: r9's probe
-    # found the unchunked union of per-commit diff plans OOMs the driver;
-    # the chunked plan (localCheckpoint every chunk_commits diffs) must
-    # complete under default driver memory and count exactly what the
-    # stream emitted
+    # -- BATCH changelog_scan over the same 200-commit window: the stream
+    # planner's slices run as one job; it must complete under default
+    # driver memory and count exactly what the stream emitted
     t0 = time.time()
     batch_events = src.changelog_scan().count()
     batch_scan_wall = time.time() - t0

@@ -177,7 +177,10 @@ def test_filtered_count_soundness_fallbacks(catalog, spark):
     # a NULL in the compared column disproves full-match: k <= 10 would
     # bound-match both rows, but NULL k rows fail the predicate
     t2 = catalog.create_table("aggf3", schema={"k": "long"})
-    t2.append([{"k": 1}, {"k": None}, {"k": 5}])
+    # one file per row whatever the core count: every file is all-null
+    # or null-free, which the null-count proof below needs
+    for k in (1, None, 5):
+        t2.append([{"k": k}])
     assert t2.scan().filter("k <= 10").count() == 2
     # IS NULL / IS NOT NULL prove from null counts alone (zero-read)
     t2 = t2.refresh()

@@ -62,6 +62,39 @@ def test_crash_mid_write_leaves_no_version_file(catalog):
     assert sorted(r["k"] for r in catalog.load_table("crash").to_a()) == [1, 2]
 
 
+def test_remove_orphan_files_reclaims_crashed_metadata_temp(catalog):
+    """The hidden temp file a commit killed mid-write leaves under
+    ``metadata/`` is an orphan: cleanup reclaims it once it is older than
+    the cutoff, reports it under ``dry_run`` without deleting it, and
+    leaves the table's own files alone."""
+    import time
+
+    t = catalog.create_table("crash_orphan", schema={"k": "int"})
+    t.append([{"k": 1}])
+    proc = subprocess.run(
+        [sys.executable, "-c", _CRASH_COMMIT, t.ops.location],
+        cwd=REPO,
+        env={**os.environ, "PYTHONDONTWRITEBYTECODE": "1"},
+        capture_output=True,
+    )
+    assert proc.returncode == -signal.SIGXFSZ, proc.stderr.decode()[-2000:]
+    head = t.ops.current_version()
+    temps = glob.glob(os.path.join(t.ops.metadata_dir, f".v{head + 1}.json.*"))
+    assert len(temps) == 1, os.listdir(t.ops.metadata_dir)
+    now_ms = int(time.time() * 1000)
+    # inside the safety window: a writer may still be publishing it
+    assert t.remove_orphan_files(older_than=now_ms - 60_000) == []
+    assert t.remove_orphan_files(
+        older_than=now_ms + 60_000, dry_run=True, return_files=True
+    ) == temps
+    assert os.path.exists(temps[0])
+    assert t.remove_orphan_files(older_than=now_ms + 60_000) == temps
+    assert not os.path.exists(temps[0])
+    t2 = catalog.load_table("crash_orphan")
+    t2.append([{"k": 2}])
+    assert sorted(r["k"] for r in catalog.load_table("crash_orphan").to_a()) == [1, 2]
+
+
 def test_version_published_without_hint_swap_does_not_wedge(catalog):
     """A committer that published v{N+1}.json and died before moving the
     hint: readers see v{N+1} (the hint is advisory) and appends go on."""

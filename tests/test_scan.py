@@ -166,6 +166,61 @@ def test_incremental_scan_rejects_non_ancestor(catalog):
         t.incremental_scan(from_snapshot_id=other.current_snapshot_id).collect()
 
 
+def test_changelog_rejects_non_ancestor(catalog):
+    """A changelog window whose ``from`` is not an ancestor of its end
+    raises InvalidDataError, in the batch scan and in the stream reader
+    alike (both plan through one window walk)."""
+    import pytest
+
+    from iceberg_ruby_spark.errors import InvalidDataError
+    from iceberg_ruby_spark.streaming.source import EngineTableStreamReader
+
+    t = catalog.create_table("clanc", schema={"a": "int"})
+    t.append([{"a": 1}])
+    t.append([{"a": 2}], branch="side")  # diverges from main
+    side = t.refresh().snapshot_for_ref("side").snapshot_id
+    t.append([{"a": 3}])
+    head = t.refresh().current_snapshot_id
+    other = catalog.create_table("clanc2", schema={"a": "int"})
+    other.append([{"a": 9}])
+    foreign = other.current_snapshot_id
+    r = EngineTableStreamReader({"location": t.ops.location, "mode": "changelog"})
+    for start, msg in ((side, "not an ancestor"), (foreign, "no snapshot")):
+        with pytest.raises(InvalidDataError, match=msg):
+            t.changelog_scan(from_snapshot_id=start)
+        with pytest.raises(InvalidDataError, match=msg):
+            r.partitions({"snapshot_id": start}, {"snapshot_id": head})
+
+
+def test_changelog_planner_refusal_raises(catalog, monkeypatch):
+    """A window the slices planner refuses raises InvalidDataError with
+    the planner's message; an I/O failure while planning propagates as
+    itself.  Neither degrades to another plan."""
+    import pytest
+
+    from iceberg_ruby_spark.errors import InvalidDataError
+    from iceberg_ruby_spark.streaming.source import EngineTableStreamReader
+
+    t = catalog.create_table("clref", schema={"a": "int"})
+    t.append([{"a": 1}, {"a": 2}])
+    t.delete_where("a = 1", mode="merge-on-read")
+    sid = t.current_snapshot_id
+
+    def refuse(self, *args, **kwargs):
+        raise ValueError(f"unknown delete kind in commit {sid}")
+
+    monkeypatch.setattr(EngineTableStreamReader, "_delete_slices", refuse)
+    with pytest.raises(InvalidDataError, match=f"commit {sid}"):
+        t.changelog_scan()
+
+    def unreadable(self, *args, **kwargs):
+        raise FileNotFoundError("manifest gone")
+
+    monkeypatch.setattr(EngineTableStreamReader, "_delete_slices", unreadable)
+    with pytest.raises(FileNotFoundError, match="manifest gone"):
+        t.changelog_scan()
+
+
 def test_incremental_scan_cow_delete_rejected_mor_allowed(catalog):
     import pytest
 
@@ -419,10 +474,11 @@ def test_is_null_pruning_and_scan(catalog):
 
 
 def test_changelog_scan_slices_engine_matches_diff(catalog):
-    """The default slices engine (stream-planner execution) and the
-    relational exceptAll diff produce the same event multiset over a
-    window mixing every commit kind; the slices planner is actually in
-    use (returns a plan, not the fallback)."""
+    """The slices engine (stream-planner execution) produces the event
+    multiset of the time-travel oracle (each commit's state diffed
+    against its parent's) over a window mixing every commit kind."""
+    from tests.support.changelog_oracle import changelog_oracle
+
     t = catalog.create_table("clsl", schema={"k": "int", "v": "string"})
     t.append([{"k": i, "v": f"v{i}"} for i in range(6)])
     t.delete_by_keys([(1,)], on="k")                       # equality MoR
@@ -435,8 +491,8 @@ def test_changelog_scan_slices_engine_matches_diff(catalog):
         (r["k"], r["v"], r["_change_type"], r["_change_ordinal"])
         for r in df.collect()
     )
-    assert t._changelog_scan_slices(None, t.current_snapshot().snapshot_id) is not None
-    assert ev(t.changelog_scan()) == ev(t.changelog_scan(engine="diff"))
+    want = sorted((k, v, ty, o) for k, v, ty, _sid, o in changelog_oracle(t))
+    assert ev(t.changelog_scan()) == want
     dead = [(k, ty) for k, _v, ty, _o in ev(t.changelog_scan()) if ty == "delete"]
     assert dead == [(1, "delete"), (2, "delete"), (3, "delete"), (4, "delete")]
 
@@ -490,10 +546,12 @@ def test_changelog_net_cancels_within_window(catalog):
 def test_changelog_slices_type_fidelity(catalog):
     """r11: timestamp/date/decimal columns are value-identical through
     the Arrow-batched slices engine (structural + DuckDB content-diff
-    slices) and the relational diff — the cross-boundary type matrix for
-    the mapInArrow/RecordBatch emission."""
+    slices) and the time-travel oracle — the cross-boundary type matrix
+    for the mapInArrow/RecordBatch emission."""
     import datetime as dt
     import decimal
+
+    from tests.support.changelog_oracle import changelog_oracle
 
     t = catalog.create_table(
         "cl_types",
@@ -513,7 +571,7 @@ def test_changelog_slices_type_fidelity(catalog):
     t.delete_where("k >= 190")  # CoW -> content-diff slice
     t = t.refresh()
     a = sorted(map(tuple, t.changelog_scan().collect()))
-    b = sorted(map(tuple, t.changelog_scan(engine="diff").collect()))
+    b = sorted(changelog_oracle(t))
     assert a == b and len(a) == 218
     r = a[0]
     assert isinstance(r[1], dt.datetime) and isinstance(r[2], dt.date)

@@ -221,7 +221,13 @@ def test_max_files_per_trigger_restart_resyncs(catalog):
 
 def test_max_files_per_trigger_end_to_end(catalog, spark):
     t = catalog.create_table("srcmf3", schema={"k": "int", "v": "string"})
-    t.append([{"k": i, "v": "a"} for i in range(8)])
+    # one commit of three files whatever the core count (hash-partitioned
+    # by k), so admission must cut batches inside the commit
+    t.append(
+        spark.createDataFrame([(i, "a") for i in range(8)], "k int, v string")
+        .repartition(4, "k")
+    )
+    assert t.refresh().current_snapshot().summary["added-data-files"] == "3"
     q = _start(spark, t, "srcmf3_sink", max_files_per_trigger="1")
     try:
         q.processAllAvailable()
@@ -821,12 +827,13 @@ def test_changelog_refuses_partial_offsets(catalog):
 def test_changelog_cow_diff_distributes(catalog, spark):
     """r10: a CoW UPDATE touching several bounds-disjoint files plans >1
     content-diff slice (the r9 single-task-per-commit ceiling), and the
-    distributed plan's events equal both the single-slice plan's and the
+    distributed plan's events equal both the time-travel oracle's and the
     batch changelog_scan's."""
     from iceberg_ruby_spark.streaming.source import (
         EngineTableStreamReader,
         _ContentDiffSlice,
     )
+    from tests.support.changelog_oracle import changelog_oracle
 
     t = catalog.create_table(
         "clsplit",
@@ -863,12 +870,12 @@ def test_changelog_cow_diff_distributes(catalog, spark):
         )
 
     split_ev = drain("clsplit_sink")
-    single_ev = drain("clsplit_sink1", content_diff_split="false")
+    oracle = sorted((k, v, ty) for k, v, ty, _sid, _o in changelog_oracle(t))
     batch = sorted(
         (row["k"], row["v"], row["_change_type"])
         for row in t.changelog_scan().collect()
     )
-    assert split_ev == single_ev == batch
+    assert split_ev == oracle == batch
     # the CoW UPDATE's events: delete+insert per touched key, nothing for
     # the rows the rewrite merely copied
     touched = [(k, v, ty) for k, v, ty in split_ev if ty == "delete"]
