@@ -35,14 +35,8 @@ import re
 import tempfile
 from typing import Optional
 
-from iceberg_ruby_spark.catalog import Catalog, Ident, _norm_ident
-from iceberg_ruby_spark.errors import (
-    InvalidDataError,
-    NamespaceAlreadyExistsError,
-    NoSuchNamespaceError,
-    NoSuchTableError,
-    TableAlreadyExistsError,
-)
+from iceberg_ruby_spark.catalog import Catalog, Ident
+from iceberg_ruby_spark.errors import InvalidDataError, NoSuchTableError
 
 
 def _err_name(exc: Exception) -> str:
@@ -50,6 +44,18 @@ def _err_name(exc: Exception) -> str:
     fakes just use the class name.  Normalize both."""
     code = getattr(exc, "response", {}).get("Error", {}).get("Code", "")
     return code or type(exc).__name__
+
+
+def _pages(call, items: str, token: str, **kw) -> list:
+    """Every item of a paginated AWS list call; ``token`` names the
+    continuation key of both the request and the response."""
+    out, tok = [], None
+    while True:
+        resp = call(**kw, **({token: tok} if tok else {}))
+        out += resp.get(items, [])
+        tok = resp.get(token)
+        if not tok:
+            return out
 
 
 def _version_of(pointer: Optional[str]) -> Optional[int]:
@@ -89,8 +95,8 @@ class _AwsCatalogBase(Catalog):
         # warehouseLocation), not in an FS pointer file
         return
 
-    def _flat_ns(self, ns: Ident) -> str:
-        parts = _norm_ident(ns)
+    def _flat(self, parts: list[str]) -> str:
+        """The service's namespace name; a nested namespace is refused."""
         if len(parts) != 1:
             raise InvalidDataError(
                 f"{type(self).__name__} namespaces are single-level: "
@@ -115,28 +121,8 @@ class _AwsCatalogBase(Catalog):
         loc = self._store().get_location(parts)
         return parts, loc or os.path.join(self.warehouse, *parts)
 
-    def register_table(self, ident: Ident, metadata_location: str):
-        parts = self._with_namespace(ident)
-        if os.path.isdir(metadata_location):
-            # table-location form (the FS catalog's register convention):
-            # resolve the current v{N}.json through the FS version hint
-            from iceberg_ruby_spark.table import FsTableOps
-
-            ops = FsTableOps(metadata_location, io=self.io)
-            metadata_location = ops.load().metadata_file
-        if _version_of(metadata_location) is None:
-            raise InvalidDataError(
-                f"not a v{{N}}.json metadata location: {metadata_location!r}"
-            )
-        location = os.path.dirname(os.path.dirname(os.path.abspath(metadata_location)))
-        if not self.namespace_exists([parts[-2]]):
-            raise NoSuchNamespaceError(f"namespace does not exist: {parts[-2]}")
-        if self._store().get_pointer(parts) is not None:
-            raise TableAlreadyExistsError(f"table already exists: {'.'.join(parts)}")
-        self._store().set_pointer(
-            parts, None, os.path.abspath(metadata_location), location
-        )
-        return self.load_table(parts)
+    def _attach(self, parts, location, meta) -> None:
+        self._store().set_pointer(parts, None, meta.metadata_file, location)
 
 
 # ---------------------------------------------------------------------------
@@ -240,125 +226,55 @@ class GlueCatalog(_AwsCatalogBase):
     def _store(self) -> _GlueStore:
         return self._glue_store
 
-    # -- namespaces (Glue databases) --------------------------------------
-    def create_namespace(self, ns, properties=None, if_not_exists=False) -> None:
-        db = self._flat_ns(ns)
+    # -- registry store (databases are namespaces) --------------------------
+    def _ns_props(self, parts):
+        try:
+            db = self.client.get_database(Name=self._flat(parts))
+        except Exception as e:  # noqa: BLE001
+            if _err_name(e) == "EntityNotFoundException":
+                return None
+            raise
+        return dict(db["Database"].get("Parameters", {}))
+
+    def _ns_create(self, parts, props) -> None:
         try:
             self.client.create_database(
-                DatabaseInput={"Name": db, "Parameters": dict(properties or {})}
+                DatabaseInput={"Name": parts[0], "Parameters": props}
             )
         except Exception as e:  # noqa: BLE001
             if _err_name(e) == "AlreadyExistsException":
-                if if_not_exists:
-                    return
-                raise NamespaceAlreadyExistsError(f"namespace already exists: {db}")
+                raise FileExistsError(parts[0]) from e
             raise
 
-    def list_namespaces(self, parent=None) -> list[list[str]]:
-        if parent:
-            raise NoSuchNamespaceError(
-                f"Glue namespaces are single-level; no children under "
-                f"{'.'.join(_norm_ident(parent))}"
-            )
-        out, token = [], None
-        while True:
-            kw = {"NextToken": token} if token else {}
-            resp = self.client.get_databases(**kw)
-            out += [[d["Name"]] for d in resp.get("DatabaseList", [])]
-            token = resp.get("NextToken")
-            if not token:
-                return sorted(out)
-
-    def namespace_exists(self, ns) -> bool:
-        try:
-            db = self._flat_ns(ns)
-        except InvalidDataError:
-            return False
-        try:
-            self.client.get_database(Name=db)
-            return True
-        except Exception as e:  # noqa: BLE001
-            if _err_name(e) == "EntityNotFoundException":
-                return False
-            raise
-
-    def namespace_properties(self, ns) -> dict[str, str]:
-        db = self._flat_ns(ns)
-        try:
-            resp = self.client.get_database(Name=db)
-        except Exception as e:  # noqa: BLE001
-            if _err_name(e) == "EntityNotFoundException":
-                raise NoSuchNamespaceError(f"namespace does not exist: {db}")
-            raise
-        return dict(resp["Database"].get("Parameters", {}))
-
-    def update_namespace(self, ns, properties) -> None:
-        db = self._flat_ns(ns)
-        merged = {**self.namespace_properties(db), **dict(properties)}
+    def _ns_store(self, parts, old, new) -> None:
         self.client.update_database(
-            Name=db, DatabaseInput={"Name": db, "Parameters": merged}
+            Name=parts[0], DatabaseInput={"Name": parts[0], "Parameters": new}
         )
 
-    def drop_namespace(self, ns, if_exists=False) -> None:
-        db = self._flat_ns(ns)
-        if not self.namespace_exists(db):
-            if if_exists:
-                return
-            raise NoSuchNamespaceError(f"namespace does not exist: {db}")
-        if self.list_tables([db]):
-            raise InvalidDataError(f"namespace is not empty: {db}")
-        self.client.delete_database(Name=db)
+    def _ns_delete(self, parts) -> None:
+        self.client.delete_database(Name=parts[0])
 
-    # -- tables ------------------------------------------------------------
-    def list_tables(self, ns=None) -> list[list[str]]:
-        db = self._flat_ns(ns) if ns else (self.namespace or [None])[0]
-        if db is None:
-            raise NoSuchNamespaceError("no namespace given and no default set")
-        if not self.namespace_exists(db):
-            raise NoSuchNamespaceError(f"namespace does not exist: {db}")
-        out, token = [], None
-        while True:
-            kw = {"NextToken": token} if token else {}
-            resp = self.client.get_tables(DatabaseName=db, **kw)
-            out += [[db, t["Name"]] for t in resp.get("TableList", [])]
-            token = resp.get("NextToken")
-            if not token:
-                return sorted(out)
+    def _ns_children(self, parts) -> list[str]:
+        if parts:
+            return []
+        dbs = _pages(self.client.get_databases, "DatabaseList", "NextToken")
+        return [d["Name"] for d in dbs]
 
-    def drop_table(self, ident, if_exists=False) -> None:
-        parts = self._with_namespace(ident)
-        if not self.table_exists(parts):
-            if if_exists:
-                return
-            raise NoSuchTableError(f"table does not exist: {'.'.join(parts)}")
-        self.client.delete_table(DatabaseName=parts[-2], Name=parts[-1])
+    def _table_names(self, parts) -> list[str]:
+        tables = _pages(
+            self.client.get_tables, "TableList", "NextToken", DatabaseName=parts[0]
+        )
+        return [t["Name"] for t in tables]
 
-    def purge_table(self, ident) -> None:
-        parts, loc = self._table_location(ident)
-        self.drop_table(parts)
-        if os.path.isdir(loc):
-            import shutil
+    def _detach(self, parts, location, purge) -> None:
+        self.client.delete_table(DatabaseName=parts[0], Name=parts[1])
 
-            shutil.rmtree(loc, ignore_errors=True)
-
-    def rename_table(self, old, new) -> None:
+    def _rename(self, old, new, location) -> None:
         # Glue has no rename API (documented AWS limitation): re-create the
         # entry under the new name pointing at the same metadata, then
         # delete the old one.  Not atomic — same caveat as AWS's own docs.
-        old_p = self._with_namespace(old)
-        new_p = self._with_namespace(new)
-        pointer = self._store().get_pointer(old_p)
-        if pointer is None:
-            raise NoSuchTableError(f"table does not exist: {'.'.join(old_p)}")
-        if not self.namespace_exists([new_p[-2]]):
-            raise NoSuchNamespaceError(f"namespace does not exist: {new_p[-2]}")
-        if self._store().get_pointer(new_p) is not None:
-            raise TableAlreadyExistsError(f"table already exists: {'.'.join(new_p)}")
-        loc = self._store().get_location(old_p) or os.path.join(
-            self.warehouse, *old_p
-        )
-        self._store().set_pointer(new_p, None, pointer, loc)
-        self.client.delete_table(DatabaseName=old_p[-2], Name=old_p[-1])
+        self._store().set_pointer(new, None, self._store().get_pointer(old), location)
+        self.client.delete_table(DatabaseName=old[0], Name=old[1])
 
 
 # ---------------------------------------------------------------------------
@@ -464,119 +380,59 @@ class S3TablesCatalog(_AwsCatalogBase):
     def _store(self) -> _S3TablesStore:
         return self._s3t_store
 
-    # -- namespaces --------------------------------------------------------
-    def create_namespace(self, ns, properties=None, if_not_exists=False) -> None:
-        n = self._flat_ns(ns)
-        if properties:
-            raise InvalidDataError("S3 Tables namespaces do not take properties")
+    # -- registry store ----------------------------------------------------
+    def _ns_props(self, parts):
         try:
-            self.client.create_namespace(tableBucketARN=self.arn, namespace=[n])
-        except Exception as e:  # noqa: BLE001
-            if _err_name(e) == "ConflictException":
-                if if_not_exists:
-                    return
-                raise NamespaceAlreadyExistsError(f"namespace already exists: {n}")
-            raise
-
-    def list_namespaces(self, parent=None) -> list[list[str]]:
-        if parent:
-            raise NoSuchNamespaceError(
-                "S3 Tables namespaces are single-level; no children under "
-                f"{'.'.join(_norm_ident(parent))}"
-            )
-        out, token = [], None
-        while True:
-            kw = {"continuationToken": token} if token else {}
-            resp = self.client.list_namespaces(tableBucketARN=self.arn, **kw)
-            out += [list(n["namespace"]) for n in resp.get("namespaces", [])]
-            token = resp.get("continuationToken")
-            if not token:
-                return sorted(out)
-
-    def namespace_exists(self, ns) -> bool:
-        try:
-            n = self._flat_ns(ns)
-        except InvalidDataError:
-            return False
-        try:
-            self.client.get_namespace(tableBucketARN=self.arn, namespace=n)
-            return True
+            self.client.get_namespace(tableBucketARN=self.arn, namespace=self._flat(parts))
         except Exception as e:  # noqa: BLE001
             if _err_name(e) == "NotFoundException":
-                return False
+                return None
             raise
-
-    def namespace_properties(self, ns) -> dict[str, str]:
-        if not self.namespace_exists(ns):
-            raise NoSuchNamespaceError(
-                f"namespace does not exist: {'.'.join(_norm_ident(ns))}"
-            )
         return {}  # the service stores none
 
-    def update_namespace(self, ns, properties) -> None:
-        raise InvalidDataError("S3 Tables namespaces do not take properties")
+    def _ns_create(self, parts, props) -> None:
+        self._ns_store(parts, {}, props)  # refuses any properties
+        try:
+            self.client.create_namespace(tableBucketARN=self.arn, namespace=parts)
+        except Exception as e:  # noqa: BLE001
+            if _err_name(e) == "ConflictException":
+                raise FileExistsError(parts[0]) from e
+            raise
 
-    def drop_namespace(self, ns, if_exists=False) -> None:
-        n = self._flat_ns(ns)
-        if not self.namespace_exists(n):
-            if if_exists:
-                return
-            raise NoSuchNamespaceError(f"namespace does not exist: {n}")
-        if self.list_tables([n]):
-            raise InvalidDataError(f"namespace is not empty: {n}")
-        self.client.delete_namespace(tableBucketARN=self.arn, namespace=n)
+    def _ns_store(self, parts, old, new) -> None:
+        if new:
+            raise InvalidDataError("S3 Tables namespaces do not take properties")
 
-    # -- tables ------------------------------------------------------------
-    def list_tables(self, ns=None) -> list[list[str]]:
-        n = self._flat_ns(ns) if ns else (self.namespace or [None])[0]
-        if n is None:
-            raise NoSuchNamespaceError("no namespace given and no default set")
-        if not self.namespace_exists(n):
-            raise NoSuchNamespaceError(f"namespace does not exist: {n}")
-        out, token = [], None
-        while True:
-            kw = {"continuationToken": token} if token else {}
-            resp = self.client.list_tables(
-                tableBucketARN=self.arn, namespace=n, **kw
-            )
-            out += [[n, t["name"]] for t in resp.get("tables", [])]
-            token = resp.get("continuationToken")
-            if not token:
-                return sorted(out)
+    def _ns_delete(self, parts) -> None:
+        self.client.delete_namespace(tableBucketARN=self.arn, namespace=parts[0])
 
-    def drop_table(self, ident, if_exists=False) -> None:
-        parts = self._with_namespace(ident)
-        if not self.table_exists(parts):
-            if if_exists:
-                return
-            raise NoSuchTableError(f"table does not exist: {'.'.join(parts)}")
+    def _ns_children(self, parts) -> list[str]:
+        if parts:
+            return []
+        spaces = _pages(
+            self.client.list_namespaces, "namespaces", "continuationToken",
+            tableBucketARN=self.arn,
+        )
+        return [n["namespace"][0] for n in spaces]
+
+    def _table_names(self, parts) -> list[str]:
+        tables = _pages(
+            self.client.list_tables, "tables", "continuationToken",
+            tableBucketARN=self.arn, namespace=parts[0],
+        )
+        return [t["name"] for t in tables]
+
+    def _detach(self, parts, location, purge) -> None:
         self.client.delete_table(
-            tableBucketARN=self.arn, namespace=parts[-2], name=parts[-1]
+            tableBucketARN=self.arn, namespace=parts[0], name=parts[1]
         )
 
-    def purge_table(self, ident) -> None:
-        parts, loc = self._table_location(ident)
-        self.drop_table(parts)
-        if os.path.isdir(loc):
-            import shutil
-
-            shutil.rmtree(loc, ignore_errors=True)
-
-    def rename_table(self, old, new) -> None:
-        old_p = self._with_namespace(old)
-        new_p = self._with_namespace(new)
-        if not self.table_exists(old_p):
-            raise NoSuchTableError(f"table does not exist: {'.'.join(old_p)}")
-        if not self.namespace_exists([new_p[-2]]):
-            raise NoSuchNamespaceError(f"namespace does not exist: {new_p[-2]}")
-        if self.table_exists(new_p):
-            raise TableAlreadyExistsError(f"table already exists: {'.'.join(new_p)}")
-        t = self._s3t_store._get(old_p)
+    def _rename(self, old, new, location) -> None:
         self.client.rename_table(
             tableBucketARN=self.arn,
-            namespace=old_p[-2],
-            name=old_p[-1],
-            newNamespaceName=new_p[-2],
-            newName=new_p[-1],
-            versionToken=t["versionToken"],
+            namespace=old[0],
+            name=old[1],
+            newNamespaceName=new[0],
+            newName=new[1],
+            versionToken=self._s3t_store._get(old)["versionToken"],
         )

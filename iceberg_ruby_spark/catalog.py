@@ -1,12 +1,11 @@
 """Catalog — namespace + table DDL and the SQL entry point.
 
 Reference: ``lib/iceberg/catalog.rb`` (+5 backend subclasses —
-rest/glue/s3tables/sql/memory).  This engine ships one backend, a
-**filesystem warehouse catalog** (the analog of the reference's
-``MemoryCatalog(warehouse:)``, ``lib/iceberg/memory_catalog.rb:4-10``); the
-other backends are thin config over the same protocol and are intentionally
-out of scope in a jar-less environment (they would be Spark catalog-plugin
-configs, not engine code).
+rest/glue/s3tables/sql/memory).  As there, the registry API is written
+once, in :class:`Catalog`; a backend (``sql_catalog``, ``rest``, ``aws``)
+supplies only its registry store and its version pointer.  This module's
+own store is the **filesystem warehouse** (the analog of the reference's
+``MemoryCatalog(warehouse:)``, ``lib/iceberg/memory_catalog.rb:4-10``).
 
 Warehouse layout::
 
@@ -77,6 +76,18 @@ def _norm_ident(ident: Ident) -> list[str]:
     if not parts or any(not p for p in parts):
         raise InvalidDataError(f"invalid identifier: {ident!r}")
     return parts
+
+
+def _no_namespace(parts: list[str]) -> NoSuchNamespaceError:
+    return NoSuchNamespaceError(f"namespace does not exist: {'.'.join(parts)}")
+
+
+def _no_table(parts: list[str]) -> NoSuchTableError:
+    return NoSuchTableError(f"table does not exist: {'.'.join(parts)}")
+
+
+def _table_taken(parts: list[str]) -> TableAlreadyExistsError:
+    return TableAlreadyExistsError(f"table already exists: {'.'.join(parts)}")
 
 
 def _parse_partition_transform_sql(txt: str) -> tuple[str, str]:
@@ -168,7 +179,26 @@ def _split_top_level(src: str, sep: str = ",") -> list[str]:
 
 
 class Catalog:
-    """Filesystem-warehouse catalog."""
+    """One namespace-and-table contract over a pluggable registry store.
+
+    The public registry calls (``create_namespace``, ``list_namespaces``,
+    ``namespace_exists``, ``namespace_properties``, ``update_namespace``,
+    ``drop_namespace``, ``list_tables``, ``table_exists``, ``drop_table``,
+    ``purge_table``, ``rename_table``, ``register_table``) are defined
+    here once: argument handling, the default namespace, check order and
+    error types.  A backend overrides only the private store hooks —
+
+    - namespaces: ``_ns_props`` (properties, ``None`` when absent),
+      ``_ns_create`` (``FileExistsError`` when present), ``_ns_store``,
+      ``_ns_delete``, ``_ns_children``;
+    - tables: ``_table_names``, ``_detach``, ``_rename``, ``_attach``;
+
+    — beside its version pointer (``_table_location`` / ``_table_ops``).
+    A hook raises the contract's typed error when the store itself finds
+    that another client got there between the check and the call.  This
+    class's own hooks are the filesystem warehouse store:
+    ``.namespace.json`` markers, ``.pointer.json`` files for tables whose
+    files live elsewhere, and ``.dropped-*`` tombstones."""
 
     def __init__(
         self,
@@ -189,15 +219,16 @@ class Catalog:
 
     # ------------------------------------------------------------------ utils
     def _table_ops(self, location: str, parts: Optional[list[str]] = None):
-        """The metadata plane for a table at ``location`` — the backend
-        seam.  Every backend returns an :class:`FsTableOps`, which owns
-        the table's files and its commit; a backend only attaches its
-        version pointer (``ops.pointer``: the SQL row, the Glue / S3
-        Tables metadata location).  This FS catalog attaches none, so the
-        table's ``version-hint.text`` is its pointer.  RestCatalog returns
-        the subclass RestTableOps, because its server owns the metadata
-        document itself.  ``parts`` is the catalog identifier when the
-        caller knows it (registry-backed backends need it)."""
+        """The metadata plane for a table at ``location`` — the pointer
+        seam beside the registry store hooks.  Every backend returns an
+        :class:`FsTableOps`, which owns the table's files and its commit;
+        a backend only attaches its version pointer (``ops.pointer``: the
+        SQL row, the Glue / S3 Tables metadata location).  This FS catalog
+        attaches none, so the table's ``version-hint.text`` is its
+        pointer.  RestCatalog returns the subclass RestTableOps, because
+        its server owns the metadata document itself.  ``parts`` is the
+        catalog identifier when the caller knows it (registry-backed
+        backends need it)."""
         from iceberg_ruby_spark.table import FsTableOps
 
         return FsTableOps(location, io=self.io)
@@ -245,6 +276,12 @@ class Catalog:
             overwrite=True,
         )
 
+    def _require_namespace(self, parts: list[str]) -> dict[str, str]:
+        props = self._ns_props(parts)
+        if props is None:
+            raise _no_namespace(parts)
+        return props
+
     # ------------------------------------------------------------- namespaces
     def create_namespace(
         self,
@@ -253,59 +290,81 @@ class Catalog:
         if_not_exists: bool = False,
     ) -> None:
         parts = _norm_ident(ns)
-        marker = self._ns_marker(parts)
-        if self.io.exists(marker):
-            if if_not_exists:
+        if self._ns_props(parts) is None:
+            # parents must exist for nested namespaces (reference
+            # test/namespace_test.rb:32-49)
+            if len(parts) > 1 and self._ns_props(parts[:-1]) is None:
+                raise NoSuchNamespaceError(
+                    f"parent namespace does not exist: {'.'.join(parts[:-1])}"
+                )
+            try:
+                self._ns_create(parts, dict(properties or {}))
                 return
+            except FileExistsError:
+                pass  # created since the check above
+        if not if_not_exists:
             raise NamespaceAlreadyExistsError(f"namespace already exists: {'.'.join(parts)}")
-        # parents must exist for nested namespaces (reference
-        # test/namespace_test.rb:32-49)
-        if len(parts) > 1 and not self.io.exists(self._ns_marker(parts[:-1])):
-            raise NoSuchNamespaceError(f"parent namespace does not exist: {'.'.join(parts[:-1])}")
-        self.io.write_atomic(marker, json.dumps({"properties": properties or {}}), overwrite=True)
 
     def list_namespaces(self, parent: Optional[Ident] = None) -> list[list[str]]:
         base = _norm_ident(parent) if parent else []
-        if base and not self.namespace_exists(base):
-            raise NoSuchNamespaceError(f"namespace does not exist: {'.'.join(base)}")
-        root = self._ns_dir(base) if base else self.warehouse
-        out = []
-        for d in self.io.list_children(root):
-            if self.io.exists(os.path.join(root, d, _NS_FILE)):
-                out.append([*base, d])
-        return out
+        if base:
+            self._require_namespace(base)
+        return sorted([*base, child] for child in self._ns_children(base))
 
     def namespace_exists(self, ns: Ident) -> bool:
         try:
-            parts = _norm_ident(ns)
+            return self._ns_props(_norm_ident(ns)) is not None
         except InvalidDataError:
             return False
-        return self.io.exists(self._ns_marker(parts))
 
     def namespace_properties(self, ns: Ident) -> dict[str, str]:
-        parts = _norm_ident(ns)
-        marker = self._ns_marker(parts)
-        if not self.io.exists(marker):
-            raise NoSuchNamespaceError(f"namespace does not exist: {'.'.join(parts)}")
-        return json.loads(self.io.read(marker)).get("properties", {})
+        return dict(self._require_namespace(_norm_ident(ns)))
 
     def update_namespace(self, ns: Ident, properties: dict[str, str]) -> None:
+        """Replace the namespace's property map with ``properties``."""
         parts = _norm_ident(ns)
-        marker = self._ns_marker(parts)
-        if not self.io.exists(marker):
-            raise NoSuchNamespaceError(f"namespace does not exist: {'.'.join(parts)}")
-        self.io.write_atomic(marker, json.dumps({"properties": properties}), overwrite=True)
+        self._ns_store(parts, self._require_namespace(parts), dict(properties))
 
     def drop_namespace(self, ns: Ident, if_exists: bool = False) -> None:
         parts = _norm_ident(ns)
-        marker = self._ns_marker(parts)
-        if not self.io.exists(marker):
+        if self._ns_props(parts) is None:
             if if_exists:
                 return
-            raise NoSuchNamespaceError(f"namespace does not exist: {'.'.join(parts)}")
-        if self.list_tables(parts) or self.list_namespaces(parts):
+            raise _no_namespace(parts)
+        if self._ns_children(parts) or self._table_names(parts):
             raise InvalidDataError(f"namespace is not empty: {'.'.join(parts)}")
+        self._ns_delete(parts)
+
+    # ------------------------------------------- the FS store: namespace hooks
+    def _ns_props(self, parts: list[str]) -> Optional[dict[str, str]]:
+        """The namespace's properties; ``None`` when it does not exist."""
+        try:
+            return json.loads(self.io.read(self._ns_marker(parts))).get("properties", {})
+        except (FileNotFoundError, NotADirectoryError):
+            return None
+
+    def _ns_create(self, parts: list[str], props: dict[str, str]) -> None:
+        """Create the namespace; ``FileExistsError`` when it exists."""
+        self.io.write_atomic(self._ns_marker(parts), json.dumps({"properties": props}))
+
+    def _ns_store(self, parts: list[str], old: dict[str, str], new: dict[str, str]) -> None:
+        """Replace the namespace's properties ``old`` with ``new``."""
+        self.io.write_atomic(
+            self._ns_marker(parts), json.dumps({"properties": new}), overwrite=True
+        )
+
+    def _ns_delete(self, parts: list[str]) -> None:
+        """Delete the (empty) namespace."""
         self.io.delete_prefix(self._ns_dir(parts))
+
+    def _ns_children(self, parts: list[str]) -> list[str]:
+        """Names of the namespaces directly under ``parts`` (``[]``: the root)."""
+        root = self._ns_dir(parts)
+        return [
+            d
+            for d in self.io.list_children(root)
+            if self.io.exists(os.path.join(root, d, _NS_FILE))
+        ]
 
     # ----------------------------------------------------------------- tables
     def create_table(
@@ -329,7 +388,7 @@ class Catalog:
         parts, loc = self._table_location(ident)
         ns = parts[:-1]
         if not self.namespace_exists(ns):
-            raise NoSuchNamespaceError(f"namespace does not exist: {'.'.join(ns)}")
+            raise _no_namespace(ns)
         if self.table_exists(parts):
             if or_replace:
                 return self._replace_table(
@@ -337,7 +396,7 @@ class Catalog:
                 )
             if if_not_exists:
                 return self.load_table(parts)
-            raise TableAlreadyExistsError(f"table already exists: {'.'.join(parts)}")
+            raise _table_taken(parts)
         # no schema → EMPTY-schema table, the reference's behavior
         # (test/create_table_test.rb:108-111: ``create_table("events")``
         # yields a table whose schema has zero fields)
@@ -540,7 +599,7 @@ class Catalog:
         parts, loc = self._table_location(ident)
         ops = self._table_ops(loc, parts)
         if not ops.exists():
-            raise NoSuchTableError(f"table does not exist: {'.'.join(parts)}")
+            raise _no_table(parts)
         return Table(self.spark, loc, identifier=parts, catalog=self, io=self.io, ops=ops)
 
     def table_exists(self, ident: Ident) -> bool:
@@ -557,46 +616,104 @@ class Catalog:
             parts = self.default_namespace
         else:
             parts = _norm_ident(ns)
-        if not self.namespace_exists(parts):
-            raise NoSuchNamespaceError(f"namespace does not exist: {'.'.join(parts)}")
-        root = self._ns_dir(parts)
-        out = []
-        from iceberg_ruby_spark.table import FsTableOps
+        self._require_namespace(parts)
+        return sorted([*parts, name] for name in self._table_names(parts))
 
-        for d in self.io.list_children(root):
-            candidate = os.path.join(root, d)
-            # FsTableOps.exists covers the hint file AND hint-lost tables
-            # recoverable from committed v{N}.json files (tombstones stay
-            # authoritative) — a loadable table must also be listable
-            if FsTableOps(candidate, io=self.io).exists() or (
-                self.io.exists(os.path.join(candidate, _POINTER_FILE))
-                and self.table_exists([*parts, d])
-            ):
-                out.append([*parts, d])
-        return out
+    def _existing_table(self, ident: Ident) -> tuple[list[str], str]:
+        parts, loc = self._table_location(ident)
+        if not self._table_ops(loc, parts).exists():
+            raise _no_table(parts)
+        return parts, loc
 
     def drop_table(self, ident: Ident, if_exists: bool = False) -> None:
-        parts, loc = self._table_location(ident)
-        if not self.table_exists(parts):
+        """Take the table out of the catalog; its files stay (reference
+        semantics: ``purge_table`` deletes them)."""
+        try:
+            parts, loc = self._existing_table(ident)
+        except NoSuchTableError:
             if if_exists:
                 return
-            raise NoSuchTableError(f"table does not exist: {'.'.join(parts)}")
-        warehouse_loc = os.path.join(self.warehouse, *parts)
-        pointer = os.path.join(warehouse_loc, _POINTER_FILE)
-        if self.io.exists(pointer):
-            # registered/custom-location table: detach, leave data in place
-            self.io.delete_prefix(warehouse_loc)
-            return
-        # drop from catalog without purging data (reference semantics:
-        # drop_table leaves files; purge_table deletes them).  The
-        # tombstone records the version via current_version() so a
-        # hint-lost-but-recoverable table (FsTableOps hint recovery)
-        # drops cleanly too.
+            raise
+        self._detach(parts, loc, purge=False)
+
+    def purge_table(self, ident: Ident) -> None:
+        """Drop the table, then delete its location through ``self.io``."""
+        parts, loc = self._existing_table(ident)
+        self._detach(parts, loc, purge=True)
+        self.io.delete_prefix(loc)
+
+    def rename_table(self, old: Ident, new: Ident) -> None:
+        old_parts, loc = self._existing_table(old)
+        new_parts = self._with_namespace(new)
+        if not self.namespace_exists(new_parts[:-1]):
+            raise _no_namespace(new_parts[:-1])
+        if self.table_exists(new_parts):
+            raise _table_taken(new_parts)
+        try:
+            self._rename(old_parts, new_parts, loc)
+        except FileExistsError:
+            raise _table_taken(new_parts)
+
+    def register_table(self, ident: Ident, metadata_location: str) -> Table:
+        """Attach an existing table to a catalog name **by reference**, at
+        its current version, matching the reference's semantics
+        (``catalog.rb:99-101``) — no O(data) copy (round-1 review item).
+        ``metadata_location`` is the table directory or one of its
+        ``metadata/v{N}.json`` files."""
         from iceberg_ruby_spark.table import FsTableOps
 
-        meta_dir = os.path.join(loc, "metadata")
+        parts, loc = self._table_location(ident)
+        if not self.namespace_exists(parts[:-1]):
+            raise _no_namespace(parts[:-1])
+        if self._table_ops(loc, parts).exists():
+            raise _table_taken(parts)
+        src = metadata_location
+        if src.endswith(".json"):
+            src = os.path.dirname(os.path.dirname(src))  # .../metadata/vN.json → table dir
+        source = FsTableOps(os.path.abspath(src), io=self.io)
+        if not source.exists():
+            raise NoSuchTableError(f"no table metadata at {metadata_location}")
+        try:
+            self._attach(parts, source.location, source.load())
+        except FileExistsError:
+            raise _table_taken(parts)
+        return self.load_table(parts)
+
+    # ----------------------------------------------- the FS store: table hooks
+    def _table_names(self, parts: list[str]) -> list[str]:
+        """Names of the tables in namespace ``parts``."""
+        from iceberg_ruby_spark.table import FsTableOps
+
+        root = self._ns_dir(parts)
+        # FsTableOps.exists covers the hint file AND hint-lost tables
+        # recoverable from committed v{N}.json files (tombstones stay
+        # authoritative) — a loadable table must also be listable
+        return [
+            d
+            for d in self.io.list_children(root)
+            if FsTableOps(os.path.join(root, d), io=self.io).exists()
+            or (
+                self.io.exists(os.path.join(root, d, _POINTER_FILE))
+                and self.table_exists([*parts, d])
+            )
+        ]
+
+    def _detach(self, parts: list[str], location: str, purge: bool) -> None:
+        """Take the table at ``location`` out of the registry.  ``purge``
+        says its files are deleted next (REST forwards it to the server)."""
+        from iceberg_ruby_spark.table import FsTableOps
+
+        entry = os.path.join(self.warehouse, *parts)
+        if self.io.exists(os.path.join(entry, _POINTER_FILE)):
+            # registered/custom-location table: the pointer goes, the files stay
+            self.io.delete_prefix(entry)
+            return
+        # the tombstone stops FsTableOps' hint recovery from bringing the
+        # table back; it records current_version() so a
+        # hint-lost-but-recoverable table drops cleanly too
+        meta_dir = os.path.join(location, "metadata")
         hint = os.path.join(meta_dir, "version-hint.text")
-        version = FsTableOps(loc, io=self.io).current_version()
+        version = FsTableOps(location, io=self.io).current_version()
         self.io.write_atomic(
             os.path.join(meta_dir, f".dropped-{uuid_mod.uuid4().hex}"),
             str(version),
@@ -605,49 +722,18 @@ class Catalog:
         if self.io.exists(hint):
             self.io.delete(hint)
 
-    def purge_table(self, ident: Ident) -> None:
-        parts, loc = self._table_location(ident)
-        if not self.table_exists(parts):
-            raise NoSuchTableError(f"table does not exist: {'.'.join(parts)}")
-        self.io.delete_prefix(loc)
-        warehouse_loc = os.path.join(self.warehouse, *parts)
-        if os.path.abspath(warehouse_loc) != os.path.abspath(loc):
-            self.io.delete_prefix(warehouse_loc)
-
-    def rename_table(self, old: Ident, new: Ident) -> None:
-        old_parts, _old_loc = self._table_location(old)
-        new_parts, _new_loc = self._table_location(new)
-        if not self.table_exists(old_parts):
-            raise NoSuchTableError(f"table does not exist: {'.'.join(old_parts)}")
-        if not self.namespace_exists(new_parts[:-1]):
-            raise NoSuchNamespaceError(f"namespace does not exist: {'.'.join(new_parts[:-1])}")
-        if self.table_exists(new_parts):
-            raise TableAlreadyExistsError(f"table already exists: {'.'.join(new_parts)}")
-        # move the warehouse entry (data dir, or pointer file for
-        # registered/custom-location tables — those keep their data in place)
+    def _rename(self, old: list[str], new: list[str], location: str) -> None:
+        """Move the registry entry ``old`` (files at ``location``) to ``new``."""
+        # the warehouse entry moves: the data dir, or the pointer file of a
+        # registered/custom-location table, whose files stay in place
         self.io.move_prefix(
-            os.path.join(self.warehouse, *old_parts),
-            os.path.join(self.warehouse, *new_parts),
+            os.path.join(self.warehouse, *old), os.path.join(self.warehouse, *new)
         )
 
-    def register_table(self, ident: Ident, metadata_location: str) -> Table:
-        """Attach an existing table's metadata to a catalog name **by
-        reference** (pointer file), matching the reference's semantics
-        (``catalog.rb:99-101``) — no O(data) copy (round-1 review item)."""
-        parts, loc = self._table_location(ident)
-        if self.table_exists(parts):
-            raise TableAlreadyExistsError(f"table already exists: {'.'.join(parts)}")
-        src = metadata_location
-        if src.endswith(".json"):
-            src = os.path.dirname(os.path.dirname(src))  # .../metadata/vN.json → table dir
-        src = os.path.abspath(src)
-        from iceberg_ruby_spark.table import FsTableOps
-
-        if not FsTableOps(src, io=self.io).exists():
-            raise NoSuchTableError(f"no table metadata at {metadata_location}")
-        if src != os.path.abspath(loc):
-            self._write_pointer(parts, src)
-        return self.load_table(parts)
+    def _attach(self, parts: list[str], location: str, meta: TableMetadata) -> None:
+        """Register the table at ``location``, whose current metadata is
+        ``meta``; ``FileExistsError`` when the name is taken."""
+        self._write_pointer(parts, location)
 
     # -------------------------------------------------------------------- sql
     _PARAM_RE = re.compile(r"\$(\d+)")
@@ -1246,7 +1332,7 @@ class Catalog:
         are first-class: stored as SQL text, re-resolved per query)."""
         parts = self._with_namespace(ident)
         if not self.namespace_exists(parts[:-1]):
-            raise NoSuchNamespaceError(f"namespace does not exist: {'.'.join(parts[:-1])}")
+            raise _no_namespace(parts[:-1])
         path = os.path.join(self.warehouse, *parts[:-1], f"{parts[-1]}.view.json")
         if self.io.exists(path) and not replace:
             raise TableAlreadyExistsError(f"view already exists: {'.'.join(parts)}")

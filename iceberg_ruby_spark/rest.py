@@ -61,14 +61,8 @@ import urllib.parse
 import urllib.request
 from typing import Any, Optional
 
-from iceberg_ruby_spark.catalog import Catalog, Ident, _norm_ident
-from iceberg_ruby_spark.errors import (
-    InvalidDataError,
-    NamespaceAlreadyExistsError,
-    NoSuchNamespaceError,
-    NoSuchTableError,
-    TableAlreadyExistsError,
-)
+from iceberg_ruby_spark.catalog import Catalog, Ident, _no_namespace, _no_table
+from iceberg_ruby_spark.errors import InvalidDataError, NoSuchTableError
 from iceberg_ruby_spark.table import FsTableOps, TableMetadata
 
 # multi-level namespace separator in URL paths, per the REST spec
@@ -587,192 +581,105 @@ class RestCatalog(Catalog):
                 return parts, os.path.join(self.warehouse, *parts)
             raise
 
-    # -- namespaces --------------------------------------------------------
-    def create_namespace(self, ns, properties=None, if_not_exists=False) -> None:
-        parts = _norm_ident(ns)
+    # -- registry store ----------------------------------------------------
+    def _call(
+        self,
+        method: str,
+        path: str,
+        body: Optional[dict] = None,
+        params: Optional[dict] = None,
+        on: Optional[dict[int, Exception]] = None,
+    ) -> dict:
+        """One request; a status listed in ``on`` raises its mapped error.
+        Catalog checks before each call, so such a status means another
+        client changed the registry in between."""
         try:
-            self.client.request(
-                "POST",
-                f"{self.client.prefix}/namespaces",
-                {"namespace": parts, "properties": properties or {}},
-            )
+            return self.client.request(method, path, body, params)
         except RestError as e:
-            if e.status == 409:
-                if if_not_exists:
-                    return
-                raise NamespaceAlreadyExistsError(
-                    f"namespace already exists: {'.'.join(parts)}"
-                )
-            if e.status == 404:
-                raise NoSuchNamespaceError(
-                    f"parent namespace does not exist: {'.'.join(parts[:-1])}"
-                )
+            if on and e.status in on:
+                raise on[e.status] from e
             raise
 
-    def list_namespaces(self, parent=None) -> list[list[str]]:
-        params = None
-        if parent:
-            base = _norm_ident(parent)
-            params = {"parent": _NS_SEP.join(base)}
-        try:
-            out = self.client.request(
-                "GET", f"{self.client.prefix}/namespaces", params=params
-            )
-        except RestError as e:
-            if e.status == 404:
-                raise NoSuchNamespaceError(f"namespace does not exist: {parent}")
-            raise
-        return [list(n) for n in out.get("namespaces", [])]
-
-    def namespace_exists(self, ns) -> bool:
-        try:
-            parts = _norm_ident(ns)
-        except InvalidDataError:
-            return False
-        try:
-            self.client.request("HEAD", self.client.ns_path(parts))
-            return True
-        except RestError as e:
-            if e.status == 404:
-                return False
-            raise
-
-    def namespace_properties(self, ns) -> dict[str, str]:
-        parts = _norm_ident(ns)
+    def _ns_props(self, parts):
         try:
             out = self.client.request("GET", self.client.ns_path(parts))
         except RestError as e:
             if e.status == 404:
-                raise NoSuchNamespaceError(
-                    f"namespace does not exist: {'.'.join(parts)}"
-                )
+                return None
             raise
         return out.get("properties", {})
 
-    def update_namespace(self, ns, properties) -> None:
-        parts = _norm_ident(ns)
-        try:
-            self.client.request(
-                "POST",
-                self.client.ns_path(parts, "properties"),
-                {"removals": [], "updates": properties},
-            )
-        except RestError as e:
-            if e.status == 404:
-                raise NoSuchNamespaceError(
-                    f"namespace does not exist: {'.'.join(parts)}"
-                )
-            raise
+    def _ns_create(self, parts, props) -> None:
+        self._call(
+            "POST",
+            f"{self.client.prefix}/namespaces",
+            {"namespace": parts, "properties": props},
+            on={409: FileExistsError(".".join(parts)), 404: _no_namespace(parts[:-1])},
+        )
 
-    def drop_namespace(self, ns, if_exists=False) -> None:
-        parts = _norm_ident(ns)
-        try:
-            self.client.request("DELETE", self.client.ns_path(parts))
-        except RestError as e:
-            if e.status == 404:
-                if if_exists:
-                    return
-                raise NoSuchNamespaceError(
-                    f"namespace does not exist: {'.'.join(parts)}"
-                )
-            if e.status == 409:
-                raise InvalidDataError(f"namespace is not empty: {'.'.join(parts)}")
-            raise
+    def _ns_store(self, parts, old, new) -> None:
+        # the spec applies removals, then merges updates: a replace names
+        # every dropped key
+        body = {"removals": sorted(set(old) - set(new)), "updates": new}
+        self._call(
+            "POST", self.client.ns_path(parts, "properties"), body,
+            on={404: _no_namespace(parts)},
+        )
 
-    # -- tables ------------------------------------------------------------
-    def list_tables(self, ns=None) -> list[list[str]]:
-        if ns is None:
-            if not self.default_namespace:
-                raise InvalidDataError(
-                    "no namespace given and no default namespace set"
-                )
-            parts = self.default_namespace
-        else:
-            parts = _norm_ident(ns)
-        try:
-            out = self.client.request("GET", self.client.ns_path(parts, "tables"))
-        except RestError as e:
-            if e.status == 404:
-                raise NoSuchNamespaceError(
-                    f"namespace does not exist: {'.'.join(parts)}"
-                )
-            raise
-        return [
-            [*ident["namespace"], ident["name"]]
-            for ident in out.get("identifiers", [])
-        ]
+    def _ns_delete(self, parts) -> None:
+        self._call(
+            "DELETE",
+            self.client.ns_path(parts),
+            on={
+                404: _no_namespace(parts),
+                409: InvalidDataError(f"namespace is not empty: {'.'.join(parts)}"),
+            },
+        )
 
-    def drop_table(self, ident, if_exists=False) -> None:
-        parts, _loc = self._table_location(ident)
-        try:
-            self.client.request("DELETE", self.client.table_path(parts))
-        except RestError as e:
-            if e.status == 404:
-                if if_exists:
-                    return
-                raise NoSuchTableError(f"table does not exist: {'.'.join(parts)}")
-            raise
+    def _ns_children(self, parts) -> list[str]:
+        out = self._call(
+            "GET",
+            f"{self.client.prefix}/namespaces",
+            params={"parent": _NS_SEP.join(parts)} if parts else None,
+            on={404: _no_namespace(parts)},
+        )
+        return [ns[-1] for ns in out.get("namespaces", [])]
 
-    def purge_table(self, ident) -> None:
-        parts, loc = self._table_location(ident)
-        try:
-            self.client.request(
-                "DELETE",
-                self.client.table_path(parts),
-                params={"purgeRequested": "true"},
-            )
-        except RestError as e:
-            if e.status == 404:
-                raise NoSuchTableError(f"table does not exist: {'.'.join(parts)}")
-            raise
-        self.io.delete_prefix(loc)
+    def _table_names(self, parts) -> list[str]:
+        out = self._call(
+            "GET", self.client.ns_path(parts, "tables"), on={404: _no_namespace(parts)}
+        )
+        return [ident["name"] for ident in out.get("identifiers", [])]
 
-    def rename_table(self, old, new) -> None:
-        old_parts = self._with_namespace(old)
-        new_parts = self._with_namespace(new)
+    def _detach(self, parts, location, purge) -> None:
+        self._call(
+            "DELETE",
+            self.client.table_path(parts),
+            params={"purgeRequested": "true"} if purge else None,
+            on={404: _no_table(parts)},
+        )
+
+    def _rename(self, old, new, location) -> None:
         body = {
-            "source": {"namespace": old_parts[:-1], "name": old_parts[-1]},
-            "destination": {"namespace": new_parts[:-1], "name": new_parts[-1]},
+            "source": {"namespace": old[:-1], "name": old[-1]},
+            "destination": {"namespace": new[:-1], "name": new[-1]},
         }
-        try:
-            self.client.request(
-                "POST", f"{self.client.prefix}/tables/rename", body
-            )
-        except RestError as e:
-            if e.status == 404:
-                raise NoSuchTableError(
-                    f"table does not exist: {'.'.join(old_parts)}"
-                )
-            if e.status == 409:
-                raise TableAlreadyExistsError(
-                    f"table already exists: {'.'.join(new_parts)}"
-                )
-            raise
+        self._call(
+            "POST",
+            f"{self.client.prefix}/tables/rename",
+            body,
+            on={
+                404: _no_table(old),
+                409: FileExistsError(".".join(new)),
+            },
+        )
 
-    def register_table(self, ident, metadata_location: str):
-        """Attach an existing FS table to the REST catalog by reference —
-        the spec's RegisterTableRequest: ``{name, metadata-location}``,
-        and the SERVER loads the metadata document from storage."""
-        parts = self._with_namespace(ident)
-        if self.table_exists(parts):
-            raise TableAlreadyExistsError(f"table already exists: {'.'.join(parts)}")
-        src = metadata_location
-        if src.endswith(".json"):
-            src = os.path.dirname(os.path.dirname(src))
-        src = os.path.abspath(src)
-        fs_ops = FsTableOps(src, io=self.io)
-        if not fs_ops.exists():
-            raise NoSuchTableError(f"no table metadata at {metadata_location}")
-        meta = fs_ops.load()
-        body = {"name": parts[-1], "metadata-location": meta.metadata_file}
-        try:
-            self.client.request(
-                "POST", self.client.ns_path(parts[:-1], "register"), body
-            )
-        except RestError as e:
-            if e.status == 409:
-                raise TableAlreadyExistsError(
-                    f"table already exists: {'.'.join(parts)}"
-                )
-            raise
-        return self.load_table(parts)
+    def _attach(self, parts, location, meta) -> None:
+        # the spec's RegisterTableRequest: the SERVER loads the metadata
+        # document from storage
+        self._call(
+            "POST",
+            self.client.ns_path(parts[:-1], "register"),
+            {"name": parts[-1], "metadata-location": meta.metadata_file},
+            on={404: _no_namespace(parts[:-1]), 409: FileExistsError(".".join(parts))},
+        )

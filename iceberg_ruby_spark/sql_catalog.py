@@ -31,14 +31,8 @@ import sqlite3
 import threading
 from typing import Optional
 
-from iceberg_ruby_spark.catalog import Catalog, Ident, _norm_ident
-from iceberg_ruby_spark.errors import (
-    InvalidDataError,
-    NamespaceAlreadyExistsError,
-    NoSuchNamespaceError,
-    NoSuchTableError,
-    TableAlreadyExistsError,
-)
+from iceberg_ruby_spark.catalog import Catalog, Ident, _no_namespace, _no_table
+from iceberg_ruby_spark.errors import InvalidDataError
 
 _SCHEMA = [
     """CREATE TABLE IF NOT EXISTS iceberg_namespaces (
@@ -79,10 +73,15 @@ class _Db:
 
 
 def _parse_uri(uri: str) -> str:
-    """'sqlite:///path/db.sqlite' / 'sqlite:path' / bare path → file path."""
+    """SQL catalog uri → sqlite file path, read as sqlx reads it: the path
+    follows ``sqlite://`` (or ``sqlite:``), so ``sqlite:///abs/c.db`` and
+    ``sqlite:////abs/c.db`` open ``/abs/c.db`` while ``sqlite:rel.db`` and
+    a bare path stay relative to the working directory."""
     if uri.startswith("sqlite:"):
-        rest = uri[len("sqlite:"):]
-        return rest.lstrip("/") if rest.startswith("///") else rest.lstrip("/") or rest
+        path = uri[len("sqlite:"):]
+        if path.startswith("//"):
+            path = path[2:]
+        return "/" + path.lstrip("/") if path.startswith("/") else path
     if "://" in uri:
         raise InvalidDataError(
             f"unsupported SQL catalog uri (sqlite profile only): {uri!r}"
@@ -132,7 +131,9 @@ class _SqlPointer:
 
 class SqlCatalog(Catalog):
     """Catalog registry in a SQL database (reference
-    ``lib/iceberg/sql_catalog.rb``); files under ``warehouse``."""
+    ``lib/iceberg/sql_catalog.rb``); files under ``warehouse``.  It
+    supplies :class:`Catalog`'s store hooks as statements on the two
+    registry tables and its version pointer as :class:`_SqlPointer`."""
 
     def __init__(
         self,
@@ -167,221 +168,86 @@ class SqlCatalog(Catalog):
 
     def _table_location(self, ident: Ident) -> tuple[list[str], str]:
         parts = self._with_namespace(ident)
+        rows = self._query(
+            "SELECT location FROM iceberg_tables "
+            "WHERE catalog = ? AND ns = ? AND name = ?",
+            *self._key(parts),
+        )
+        return parts, rows[0][0] if rows else os.path.join(self.warehouse, *parts)
+
+    # -- registry store ----------------------------------------------------
+    def _key(self, parts: list[str]) -> tuple[str, str, str]:
+        return (self.name, _NS_SEP.join(parts[:-1]), parts[-1])
+
+    def _query(self, sql: str, *args) -> list[tuple]:
         with self.db.connect() as conn:
-            row = conn.execute(
-                "SELECT location FROM iceberg_tables "
-                "WHERE catalog = ? AND ns = ? AND name = ?",
-                (self.name, _NS_SEP.join(parts[:-1]), parts[-1]),
-            ).fetchone()
-        if row:
-            return parts, row[0]
-        return parts, os.path.join(self.warehouse, *parts)
+            return conn.execute(sql, args).fetchall()
 
-    # -- namespaces --------------------------------------------------------
-    def create_namespace(self, ns, properties=None, if_not_exists=False) -> None:
-        parts = _norm_ident(ns)
-        key = _NS_SEP.join(parts)
-        with self.db.lock, self.db.connect() as conn:
-            if len(parts) > 1:
-                parent = conn.execute(
-                    "SELECT 1 FROM iceberg_namespaces WHERE catalog = ? AND ns = ?",
-                    (self.name, _NS_SEP.join(parts[:-1])),
-                ).fetchone()
-                if parent is None:
-                    raise NoSuchNamespaceError(
-                        f"parent namespace does not exist: {'.'.join(parts[:-1])}"
-                    )
-            try:
-                conn.execute(
-                    "INSERT INTO iceberg_namespaces (catalog, ns, properties) "
-                    "VALUES (?,?,?)",
-                    (self.name, key, json.dumps(properties or {})),
-                )
-            except sqlite3.IntegrityError:
-                if if_not_exists:
-                    return
-                raise NamespaceAlreadyExistsError(
-                    f"namespace already exists: {'.'.join(parts)}"
-                )
-
-    def list_namespaces(self, parent=None) -> list[list[str]]:
-        base = _norm_ident(parent) if parent else []
-        if base and not self.namespace_exists(base):
-            raise NoSuchNamespaceError(f"namespace does not exist: {'.'.join(base)}")
-        with self.db.connect() as conn:
-            rows = conn.execute(
-                "SELECT ns FROM iceberg_namespaces WHERE catalog = ?", (self.name,)
-            ).fetchall()
-        out = []
-        for (key,) in rows:
-            levels = key.split(_NS_SEP)
-            if len(levels) == len(base) + 1 and levels[: len(base)] == base:
-                out.append(levels)
-        return sorted(out)
-
-    def namespace_exists(self, ns) -> bool:
-        try:
-            parts = _norm_ident(ns)
-        except InvalidDataError:
-            return False
-        with self.db.connect() as conn:
-            row = conn.execute(
-                "SELECT 1 FROM iceberg_namespaces WHERE catalog = ? AND ns = ?",
-                (self.name, _NS_SEP.join(parts)),
-            ).fetchone()
-        return row is not None
-
-    def namespace_properties(self, ns) -> dict[str, str]:
-        parts = _norm_ident(ns)
-        with self.db.connect() as conn:
-            row = conn.execute(
-                "SELECT properties FROM iceberg_namespaces "
-                "WHERE catalog = ? AND ns = ?",
-                (self.name, _NS_SEP.join(parts)),
-            ).fetchone()
-        if row is None:
-            raise NoSuchNamespaceError(f"namespace does not exist: {'.'.join(parts)}")
-        return json.loads(row[0])
-
-    def update_namespace(self, ns, properties) -> None:
-        parts = _norm_ident(ns)
-        with self.db.lock, self.db.connect() as conn:
-            cur = conn.execute(
-                "UPDATE iceberg_namespaces SET properties = ? "
-                "WHERE catalog = ? AND ns = ?",
-                (json.dumps(properties), self.name, _NS_SEP.join(parts)),
-            )
-            if cur.rowcount == 0:
-                raise NoSuchNamespaceError(
-                    f"namespace does not exist: {'.'.join(parts)}"
-                )
-
-    def drop_namespace(self, ns, if_exists=False) -> None:
-        parts = _norm_ident(ns)
-        key = _NS_SEP.join(parts)
-        with self.db.lock, self.db.connect() as conn:
-            row = conn.execute(
-                "SELECT 1 FROM iceberg_namespaces WHERE catalog = ? AND ns = ?",
-                (self.name, key),
-            ).fetchone()
-            if row is None:
-                if if_exists:
-                    return
-                raise NoSuchNamespaceError(
-                    f"namespace does not exist: {'.'.join(parts)}"
-                )
-            child = conn.execute(
-                "SELECT 1 FROM iceberg_namespaces "
-                "WHERE catalog = ? AND ns LIKE ? LIMIT 1",
-                (self.name, key + _NS_SEP + "%"),
-            ).fetchone()
-            tbl = conn.execute(
-                "SELECT 1 FROM iceberg_tables WHERE catalog = ? AND ns = ? LIMIT 1",
-                (self.name, key),
-            ).fetchone()
-            if child or tbl:
-                raise InvalidDataError(f"namespace is not empty: {'.'.join(parts)}")
-            conn.execute(
-                "DELETE FROM iceberg_namespaces WHERE catalog = ? AND ns = ?",
-                (self.name, key),
-            )
-
-    # -- tables ------------------------------------------------------------
-    def list_tables(self, ns=None) -> list[list[str]]:
-        if ns is None:
-            if not self.default_namespace:
-                raise InvalidDataError(
-                    "no namespace given and no default namespace set"
-                )
-            parts = self.default_namespace
-        else:
-            parts = _norm_ident(ns)
-        if not self.namespace_exists(parts):
-            raise NoSuchNamespaceError(f"namespace does not exist: {'.'.join(parts)}")
-        with self.db.connect() as conn:
-            rows = conn.execute(
-                "SELECT name FROM iceberg_tables WHERE catalog = ? AND ns = ? "
-                "ORDER BY name",
-                (self.name, _NS_SEP.join(parts)),
-            ).fetchall()
-        return [[*parts, r[0]] for r in rows]
-
-    def drop_table(self, ident, if_exists=False) -> None:
-        parts = self._with_namespace(ident)
-        with self.db.lock, self.db.connect() as conn:
-            cur = conn.execute(
-                "DELETE FROM iceberg_tables WHERE catalog = ? AND ns = ? AND name = ?",
-                (self.name, _NS_SEP.join(parts[:-1]), parts[-1]),
-            )
-        if cur.rowcount == 0 and not if_exists:
-            raise NoSuchTableError(f"table does not exist: {'.'.join(parts)}")
-
-    def purge_table(self, ident) -> None:
-        parts, loc = self._table_location(ident)
-        if not self.table_exists(parts):
-            raise NoSuchTableError(f"table does not exist: {'.'.join(parts)}")
-        self.drop_table(parts)
-        self.io.delete_prefix(loc)
-
-    def rename_table(self, old, new) -> None:
-        old_parts = self._with_namespace(old)
-        new_parts = self._with_namespace(new)
-        if not self.namespace_exists(new_parts[:-1]):
-            raise NoSuchNamespaceError(
-                f"namespace does not exist: {'.'.join(new_parts[:-1])}"
-            )
-        with self.db.lock, self.db.connect() as conn:
-            dst = conn.execute(
-                "SELECT 1 FROM iceberg_tables WHERE catalog = ? AND ns = ? AND name = ?",
-                (self.name, _NS_SEP.join(new_parts[:-1]), new_parts[-1]),
-            ).fetchone()
-            if dst is not None:
-                raise TableAlreadyExistsError(
-                    f"table already exists: {'.'.join(new_parts)}"
-                )
-            cur = conn.execute(
-                "UPDATE iceberg_tables SET ns = ?, name = ? "
-                "WHERE catalog = ? AND ns = ? AND name = ?",
-                (
-                    _NS_SEP.join(new_parts[:-1]),
-                    new_parts[-1],
-                    self.name,
-                    _NS_SEP.join(old_parts[:-1]),
-                    old_parts[-1],
-                ),
-            )
-            if cur.rowcount == 0:
-                raise NoSuchTableError(f"table does not exist: {'.'.join(old_parts)}")
-
-    def register_table(self, ident, metadata_location: str):
-        """Attach an existing FS-layout table by pointer row (no copy)."""
-        from iceberg_ruby_spark.table import FsTableOps
-
-        parts = self._with_namespace(ident)
-        if self.table_exists(parts):
-            raise TableAlreadyExistsError(f"table already exists: {'.'.join(parts)}")
-        src = metadata_location
-        if src.endswith(".json"):
-            src = os.path.dirname(os.path.dirname(src))
-        src = os.path.abspath(src)
-        fs_ops = FsTableOps(src, io=self.io)
-        if not fs_ops.exists():
-            raise NoSuchTableError(f"no table metadata at {metadata_location}")
+    def _write(self, sql: str, *args) -> int:
+        """Run one write statement; the number of rows it changed.  A
+        uniqueness violation raises ``FileExistsError``."""
         with self.db.lock, self.db.connect() as conn:
             try:
-                conn.execute(
-                    "INSERT INTO iceberg_tables (catalog, ns, name, location, version) "
-                    "VALUES (?,?,?,?,?)",
-                    (
-                        self.name,
-                        _NS_SEP.join(parts[:-1]),
-                        parts[-1],
-                        src,
-                        fs_ops.current_version(),
-                    ),
-                )
-            except sqlite3.IntegrityError:
-                raise TableAlreadyExistsError(
-                    f"table already exists: {'.'.join(parts)}"
-                )
-        return self.load_table(parts)
+                return conn.execute(sql, args).rowcount
+            except sqlite3.IntegrityError as e:
+                raise FileExistsError(str(e)) from e
+
+    def _ns_props(self, parts):
+        rows = self._query(
+            "SELECT properties FROM iceberg_namespaces WHERE catalog = ? AND ns = ?",
+            self.name, _NS_SEP.join(parts),
+        )
+        return json.loads(rows[0][0]) if rows else None
+
+    def _ns_create(self, parts, props) -> None:
+        self._write(
+            "INSERT INTO iceberg_namespaces (catalog, ns, properties) VALUES (?,?,?)",
+            self.name, _NS_SEP.join(parts), json.dumps(props),
+        )
+
+    def _ns_store(self, parts, old, new) -> None:
+        if not self._write(
+            "UPDATE iceberg_namespaces SET properties = ? WHERE catalog = ? AND ns = ?",
+            json.dumps(new), self.name, _NS_SEP.join(parts),
+        ):
+            raise _no_namespace(parts)
+
+    def _ns_delete(self, parts) -> None:
+        self._write(
+            "DELETE FROM iceberg_namespaces WHERE catalog = ? AND ns = ?",
+            self.name, _NS_SEP.join(parts),
+        )
+
+    def _ns_children(self, parts) -> list[str]:
+        rows = self._query("SELECT ns FROM iceberg_namespaces WHERE catalog = ?", self.name)
+        levels = [key.split(_NS_SEP) for (key,) in rows]
+        return [lv[-1] for lv in levels if lv[:-1] == parts]
+
+    def _table_names(self, parts) -> list[str]:
+        rows = self._query(
+            "SELECT name FROM iceberg_tables WHERE catalog = ? AND ns = ?",
+            self.name, _NS_SEP.join(parts),
+        )
+        return [name for (name,) in rows]
+
+    def _detach(self, parts, location, purge) -> None:
+        if not self._write(
+            "DELETE FROM iceberg_tables WHERE catalog = ? AND ns = ? AND name = ?",
+            *self._key(parts),
+        ):
+            raise _no_table(parts)
+
+    def _rename(self, old, new, location) -> None:
+        if not self._write(
+            "UPDATE iceberg_tables SET ns = ?, name = ? "
+            "WHERE catalog = ? AND ns = ? AND name = ?",
+            *self._key(new)[1:], *self._key(old),
+        ):
+            raise _no_table(old)
+
+    def _attach(self, parts, location, meta) -> None:
+        self._write(
+            "INSERT INTO iceberg_tables (catalog, ns, name, location, version) "
+            "VALUES (?,?,?,?,?)",
+            *self._key(parts), location, meta.version,
+        )

@@ -19,25 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _last_batch_id(table) -> int:
-    for snap in reversed(table.snapshots):
-        bid = snap.summary.get("streaming-batch-id")
-        if bid is not None:
-            return int(bid)
-    return -1
-
-
-def _append_with_batch_id(table, df: DataFrame, batch_id: int) -> None:
-    df = table._normalize_input(df)
-    new_entries = table._write_data_dir(df)
-    n = table._entries_rowcount(new_entries)
-    table._commit_snapshot(
-        "append",
-        new_entries,
-        {"added-records": n, "streaming-batch-id": str(batch_id)},
-        mode="append",
-    )
+from iceberg_ruby_spark.streaming.events import _append_with_batch_id, _last_batch_id
 
 
 def stream_dedup_ingest(

@@ -184,6 +184,30 @@ def user_activity_stateful(
     )
 
 
+def _last_batch_id(table) -> int:
+    """The streaming batch id recorded by the table's newest snapshot that
+    carries one, or -1 — the exactly-once replay guard: a micro-batch
+    whose id is not above it was committed before."""
+    for snap in reversed(table.snapshots):
+        bid = snap.summary.get("streaming-batch-id")
+        if bid is not None:
+            return int(bid)
+    return -1
+
+
+def _append_with_batch_id(table, df: DataFrame, batch_id: int) -> None:
+    """Append ``df`` as one snapshot that records ``batch_id``."""
+    df = table._normalize_input(df)
+    new_entries = table._write_data_dir(df)
+    n = table._entries_rowcount(new_entries)
+    table._commit_snapshot(
+        "append",
+        new_entries,
+        {"added-records": n, "streaming-batch-id": str(batch_id)},
+        mode="append",
+    )
+
+
 def stream_to_table(
     stream_df: DataFrame,
     table,
@@ -200,23 +224,9 @@ def stream_to_table(
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         t = table.refresh()
-        last = -1
-        for snap in reversed(t.snapshots):
-            bid = snap.summary.get("streaming-batch-id")
-            if bid is not None:
-                last = int(bid)
-                break
-        if batch_id <= last:
+        if batch_id <= _last_batch_id(t):
             return  # replayed batch — already committed
-        df = t._normalize_input(batch_df)
-        new_entries = t._write_data_dir(df)
-        n = t._entries_rowcount(new_entries)
-        t._commit_snapshot(
-            "append",
-            new_entries,
-            {"added-records": n, "streaming-batch-id": str(batch_id)},
-            mode="append",
-        )
+        _append_with_batch_id(t, batch_df, batch_id)
 
     writer = stream_df.writeStream.foreachBatch(write_batch).option(
         "checkpointLocation", checkpoint_dir
@@ -244,13 +254,7 @@ def stream_upsert_to_table(
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         t = table.refresh()
-        last = -1
-        for snap in reversed(t.snapshots):
-            bid = snap.summary.get("streaming-batch-id")
-            if bid is not None:
-                last = int(bid)
-                break
-        if batch_id <= last:
+        if batch_id <= _last_batch_id(t):
             return  # replayed batch — already committed
         cols = [f.name for f in t.current_schema().fields]
         # collapse duplicate keys inside the batch: last occurrence wins

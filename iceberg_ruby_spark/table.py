@@ -7167,6 +7167,20 @@ def _classify_entry(entry: dict[str, Any], trees) -> Optional[bool]:
     return None
 
 
+def _null_leaf_count(entry: dict[str, Any], trees) -> Optional[int]:
+    """Rows of the file matching ``trees`` when they are one bare
+    ``col IS [NOT] NULL``: its null count, or its record count minus that;
+    None for any other filter or a file without those stats."""
+    if len(trees) != 1 or trees[0][0] in ("and", "or"):
+        return None
+    _, col, op, _ = trees[0]
+    nc = (entry.get("null-counts") or {}).get(col)
+    rc = entry.get("record-count")
+    if op not in ("isnull", "notnull") or nc is None or rc is None:
+        return None
+    return nc if op == "isnull" else rc - nc
+
+
 def _tree_columns(node) -> set:
     """Column names referenced by a parsed predicate tree."""
     if node[0] in ("and", "or"):
@@ -7945,7 +7959,9 @@ class TableScan:
         satisfies it, zero nulls in the compared columns) or fully-misses
         it (:func:`_bounds_may_match` false) — the partition-aligned
         shape (``WHERE day = X`` against day-partitioned files).  One
-        file the predicate SPLITS demotes the whole answer to the scan;
+        file the predicate SPLITS demotes the whole answer to the scan,
+        except under a bare ``col IS [NOT] NULL`` with no delete
+        outstanding, which counts each file from its null count;
         float/double predicates are excluded (NaN breaks bound
         reasoning).  r12: a deletion vector no longer demotes filtered
         COUNT(*) — its dead rows live entirely in its referenced file, so
@@ -8095,7 +8111,13 @@ class TableScan:
         for e in data:
             m = _classify_entry(e, trees)
             if m is None:
-                return U  # the predicate splits this file
+                # the predicate splits this file: exact only for a bare
+                # IS [NOT] NULL with no delete outstanding
+                n = None if mor else _null_leaf_count(e, trees)
+                if n is None:
+                    return U
+                total += n
+                continue
             matched[self.table.ops._abs(e["path"])] = m
             if m:
                 rc = e.get("record-count")

@@ -31,6 +31,14 @@ import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 TIMINGS = os.path.join(REPO, "tmp", "gate_timings.json")
+sys.path.insert(0, REPO)
+
+from iceberg_ruby_spark.session import default_driver_memory  # noqa: E402
+
+
+def _mem_mb(size: str) -> int:
+    """A JVM memory size (``24g``, ``7680m``) in MB."""
+    return int(size[:-1]) * (1024 if size[-1] == "g" else 1)
 
 
 def load_timings() -> dict[str, float]:
@@ -64,10 +72,9 @@ def main() -> None:
     shards = shard_files(files, k, timings)
     env = dict(os.environ)
     env.setdefault("SPARK_GRAFT_CPUS", "6")
-    # 5 JVMs × the 24g default driver heap would cap at 120 GB on a
-    # 125 GB host (no swap) — size the slice with the shard count so the
-    # aggregate ceiling stays under physical memory
-    env.setdefault("SPARK_GRAFT_DRIVER_MEM", "19g")
+    # the shards share the one session's default heap (half the host's
+    # memory, capped), so their JVMs together stay under physical memory
+    env.setdefault("SPARK_GRAFT_DRIVER_MEM", f"{_mem_mb(default_driver_memory()) // k}m")
     procs = []
     t0 = time.time()
     for i, shard in enumerate(shards):

@@ -372,10 +372,12 @@ class _Handler(BaseHTTPRequestHandler):
                 ns = _split_ns(mm.group(1))
                 if ns not in s.namespaces:
                     return self._send(404, {"error": "no such namespace"})
+                # spec UpdateNamespacePropertiesRequest: apply the
+                # removals, then merge the updates
                 body = self._body()
                 for k in body.get("removals", []):
                     s.namespaces[ns].pop(k, None)
-                s.namespaces[ns] = dict(body.get("updates") or {})
+                s.namespaces[ns].update(body.get("updates") or {})
                 return self._send(200, {})
             mm = re.match(r"^namespaces/([^/]+)/tables$", rest)
             if mm:

@@ -194,6 +194,21 @@ def test_filtered_count_soundness_fallbacks(catalog, spark):
     assert t3.scan().filter("k < 10").count() == 2
 
 
+def test_null_filter_count_on_mixed_file_from_null_counts(catalog, spark):
+    """A bare IS [NOT] NULL count is exact from each file's null count and
+    record count, also for a file holding both nulls and values: no Spark
+    job runs."""
+    from tests.test_mor_jobs import _in_group
+
+    t = catalog.create_table("aggnull", schema={"k": "long"})
+    t.append(spark.createDataFrame([(1,), (None,), (5,)], "k long").coalesce(1))
+    t = t.refresh()
+    assert len(t.scan().plan_files()) == 1
+    for pred, want in (("k IS NULL", 1), ("k IS NOT NULL", 2)):
+        n, jobs = _in_group(spark, lambda: t.scan().filter(pred).count())
+        assert (n, jobs) == (want, []), pred
+
+
 def test_count_col_from_null_counts(catalog):
     """COUNT(col) = sum(record-count - null-count) — proven metadata-only
     by deleting the files; any delete kind forces execution (a DV kills

@@ -1,8 +1,10 @@
-"""One metadata plane: every catalog commits through ``FsTableOps`` and
-differs only in its version pointer.  Crash consistency of the FS
-pointer's commit (a version file is published whole or not at all, and a
-stale hint never hides a published version), and one conformance test
-that runs the same table lifecycle on every catalog backend."""
+"""One metadata plane and one catalog plane: every catalog commits
+through ``FsTableOps`` and differs only in its version pointer, and runs
+one namespace-and-table contract over its own registry store.  Crash
+consistency of the FS pointer's commit (a version file is published whole
+or not at all, and a stale hint never hides a published version), and two
+conformance tests that run the same table lifecycle and the same registry
+contract on every catalog backend."""
 
 from __future__ import annotations
 
@@ -19,6 +21,13 @@ import pytest
 
 import iceberg_ruby_spark as ice
 from iceberg_ruby_spark.aws import GlueCatalog, S3TablesCatalog
+from iceberg_ruby_spark.errors import (
+    InvalidDataError,
+    NamespaceAlreadyExistsError,
+    NoSuchNamespaceError,
+    NoSuchTableError,
+    TableAlreadyExistsError,
+)
 from tests.support.aws_stubs import FakeGlueClient, FakeS3TablesClient
 from tests.support.rest_server import StubRestServer
 
@@ -179,3 +188,147 @@ def test_backend_conformance(anycat):
     if kind != "rest":  # the REST server keeps the metadata documents
         versions = glob.glob(os.path.join(t.ops.metadata_dir, "v*.json"))
         assert len(versions) == 2, sorted(versions)
+
+
+
+# The one namespace-and-table contract, on every backend.  Glue and S3
+# Tables refuse nested namespaces (and S3 Tables any namespace
+# properties) up front.
+
+
+def test_contract_sql(anycat):
+    """SQL reads the catalog's tables, by bare name in the default
+    namespace."""
+    _, cat = anycat
+    cat.create_table("events", schema={"k": "int"}).append([{"k": 2}, {"k": 1}])
+    assert cat.sql("SELECT k FROM events ORDER BY k").rows == [[1], [2]]
+
+
+def test_contract_default_namespace(anycat, monkeypatch):
+    """list_tables() and unqualified names use the default namespace; with
+    none set they raise InvalidDataError."""
+    _, cat = anycat
+    cat.create_table("events", schema={"k": "int"})
+    assert cat.list_tables() == [["default", "events"]]
+    monkeypatch.setattr(cat, "default_namespace", None)
+    with pytest.raises(InvalidDataError):
+        cat.list_tables()
+    with pytest.raises(InvalidDataError):
+        cat.drop_table("events")
+
+
+def test_contract_namespaces(anycat):
+    """Namespace CRUD: typed errors, sorted listings, property replace and
+    the non-empty drop guard."""
+    kind, cat = anycat
+    nested = kind not in ("glue", "s3tables")
+    props = {} if kind == "s3tables" else {"a": "1"}
+    cat.create_namespace("ns1", properties=props)
+    with pytest.raises(NamespaceAlreadyExistsError):
+        cat.create_namespace("ns1")
+    cat.create_namespace("ns1", if_not_exists=True)
+    assert cat.namespace_properties("ns1") == props
+    if kind == "s3tables":
+        with pytest.raises(InvalidDataError):
+            cat.update_namespace("ns1", {"b": "2"})
+    else:
+        cat.update_namespace("ns1", {"b": "2"})  # replaces, never merges
+        assert cat.namespace_properties("ns1") == {"b": "2"}
+    for call in (cat.namespace_properties, lambda ns: cat.update_namespace(ns, {})):
+        with pytest.raises(NoSuchNamespaceError):
+            call("missing")
+    with pytest.raises(NoSuchNamespaceError if nested else InvalidDataError):
+        cat.create_namespace("missing.child")
+
+    cat.create_namespace("b_ns")
+    assert cat.list_namespaces() == [["b_ns"], ["default"], ["ns1"]]
+    assert cat.list_namespaces("ns1") == []
+    with pytest.raises(NoSuchNamespaceError):
+        cat.list_namespaces("missing")
+    if nested:
+        cat.create_namespace("ns1.z")
+        cat.create_namespace("ns1.y")
+        assert cat.list_namespaces("ns1") == [["ns1", "y"], ["ns1", "z"]]
+        with pytest.raises(InvalidDataError, match="namespace is not empty"):
+            cat.drop_namespace("ns1")
+        cat.drop_namespace("ns1.z")
+        cat.drop_namespace("ns1.y")
+
+    with pytest.raises(NoSuchNamespaceError):
+        cat.drop_namespace("missing")
+    cat.drop_namespace("missing", if_exists=True)
+    cat.create_table("t", schema={"k": "int"})
+    with pytest.raises(InvalidDataError, match="namespace is not empty"):
+        cat.drop_namespace("default")
+    cat.drop_namespace("ns1")
+    assert not cat.namespace_exists("ns1")
+
+
+def test_contract_tables(anycat, monkeypatch):
+    """list_tables is sorted; drop_table keeps the files; purge_table
+    deletes them through the catalog's FileIO; rename_table checks the
+    source, then the destination namespace, then the destination."""
+    _, cat = anycat
+    cat.create_table("events", schema={"k": "int"}).append([{"k": 2}, {"k": 1}])
+    cat.create_table("alpha", schema={"k": "int"}).append([{"k": 3}])
+    assert cat.list_tables("default") == [["default", "alpha"], ["default", "events"]]
+    with pytest.raises(NoSuchNamespaceError):
+        cat.list_tables("missing")
+
+    data_dir = cat.load_table("alpha").ops.data_dir
+    cat.drop_table("alpha")
+    assert not cat.table_exists("alpha")
+    assert glob.glob(os.path.join(data_dir, "**", "*.parquet"), recursive=True)
+    with pytest.raises(NoSuchTableError):
+        cat.drop_table("alpha")
+    cat.drop_table("alpha", if_exists=True)
+
+    purged = cat.create_table("purged", schema={"k": "int"})
+    purged.append([{"k": 4}])
+    deleted = []
+    real_delete = cat.io.delete_prefix
+    monkeypatch.setattr(
+        cat.io, "delete_prefix", lambda p: (deleted.append(p), real_delete(p))
+    )
+    cat.purge_table("purged")
+    assert purged.location in deleted and not os.path.exists(purged.location)
+    assert not cat.table_exists("purged")
+    with pytest.raises(NoSuchTableError):
+        cat.purge_table("purged")
+
+    cat.create_table("other", schema={"k": "int"})
+    cat.create_namespace("b_ns")
+    with pytest.raises(NoSuchTableError):
+        cat.rename_table("nope", "missing.x")
+    with pytest.raises(NoSuchNamespaceError):
+        cat.rename_table("events", "missing.x")
+    with pytest.raises(TableAlreadyExistsError):
+        cat.rename_table("events", "other")
+    cat.rename_table("events", "b_ns.ev")
+    assert not cat.table_exists("events")
+    assert cat.list_tables("b_ns") == [["b_ns", "ev"]]
+    assert sorted(r["k"] for r in cat.load_table("b_ns.ev").to_a()) == [1, 2]
+
+
+def test_contract_register_table(anycat, tmp_path):
+    """register_table checks the namespace, then the name, then the
+    source; a table directory and a metadata file both resolve."""
+    _, cat = anycat
+    src_cat = ice.Catalog(str(tmp_path / "src"), spark=cat.spark)
+    src_cat.create_namespace("s")
+    src = src_cat.create_table("s.t", schema={"k": "int"})
+    src.append([{"k": 7}])
+    cat.create_table("other", schema={"k": "int"})
+    nothing = str(tmp_path / "nothing")
+    with pytest.raises(NoSuchNamespaceError):
+        cat.register_table("missing.r", src.location)
+    assert not cat.table_exists("missing.r")
+    with pytest.raises(TableAlreadyExistsError):
+        cat.register_table("other", nothing)
+    with pytest.raises(NoSuchTableError):
+        cat.register_table("r0", nothing)
+    for name, where in (("r1", src.location), ("r2", src.metadata.metadata_file)):
+        assert [r["k"] for r in cat.register_table(name, where).to_a()] == [7]
+    assert cat.list_tables() == [
+        ["default", "other"], ["default", "r1"], ["default", "r2"]
+    ]

@@ -254,3 +254,21 @@ def test_call_compute_partition_stats(catalog):
     t.append([{"k": 1, "g": "a"}, {"k": 2, "g": "b"}])
     assert catalog.sql("CALL system.compute_partition_stats('cps')").rows == [[2]]
     assert t.refresh().partition_statistics
+
+
+def test_uri_absolute_path_opens_absolute_file(spark, tmp_path, monkeypatch):
+    """The path follows ``sqlite://``: an absolute path stays absolute, so
+    the database never lands under the working directory."""
+    from iceberg_ruby_spark.sql_catalog import _parse_uri
+
+    cwd = tmp_path / "cwd"
+    cwd.mkdir()
+    monkeypatch.chdir(cwd)
+    ice.SqlCatalog(
+        uri=f"sqlite:///{tmp_path}/c.db", warehouse=str(tmp_path / "wh"), spark=spark
+    )
+    assert (tmp_path / "c.db").is_file()
+    assert list(cwd.iterdir()) == []
+    assert _parse_uri("sqlite:///abs/c.db") == "/abs/c.db"
+    assert _parse_uri("sqlite:////abs/c.db") == "/abs/c.db"
+    assert _parse_uri("sqlite:rel.db") == "rel.db"
