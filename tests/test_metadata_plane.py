@@ -190,7 +190,6 @@ def test_backend_conformance(anycat):
         assert len(versions) == 2, sorted(versions)
 
 
-
 # The one namespace-and-table contract, on every backend.  Glue and S3
 # Tables refuse nested namespaces (and S3 Tables any namespace
 # properties) up front.
