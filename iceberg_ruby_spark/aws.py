@@ -90,11 +90,6 @@ class _ServicePointer:
 class _AwsCatalogBase(Catalog):
     """Shared skeleton: single-level namespaces, service-held pointers."""
 
-    def _write_pointer(self, parts, location) -> None:
-        # custom locations live in the service registry (StorageDescriptor /
-        # warehouseLocation), not in an FS pointer file
-        return
-
     def _flat(self, parts: list[str]) -> str:
         """The service's namespace name; a nested namespace is refused."""
         if len(parts) != 1:

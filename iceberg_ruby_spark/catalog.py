@@ -268,14 +268,6 @@ class Catalog:
             return parts, json.loads(self.io.read(pointer))["location"]
         return parts, default_loc
 
-    def _write_pointer(self, parts: list[str], location: str) -> None:
-        default_loc = os.path.join(self.warehouse, *parts)
-        self.io.write_atomic(
-            os.path.join(default_loc, _POINTER_FILE),
-            json.dumps({"location": os.path.abspath(location)}),
-            overwrite=True,
-        )
-
     def _require_namespace(self, parts: list[str]) -> dict[str, str]:
         props = self._ns_props(parts)
         if props is None:
@@ -464,8 +456,10 @@ class Catalog:
         ops = self._table_ops(loc, parts)
         os.makedirs(ops.data_dir, exist_ok=True)
         ops.commit(0, meta)
-        if location is not None:
-            self._write_pointer(parts, loc)
+        if location is not None and not self.table_exists(parts):
+            # a store whose first commit does not register the table
+            # (this FS warehouse, for a custom location) records it now
+            self._attach(parts, loc, ops.load())
         return Table(self.spark, loc, identifier=parts, catalog=self, io=self.io, ops=ops)
 
     def _replace_table(
@@ -733,7 +727,11 @@ class Catalog:
     def _attach(self, parts: list[str], location: str, meta: TableMetadata) -> None:
         """Register the table at ``location``, whose current metadata is
         ``meta``; ``FileExistsError`` when the name is taken."""
-        self._write_pointer(parts, location)
+        self.io.write_atomic(
+            os.path.join(self.warehouse, *parts, _POINTER_FILE),
+            json.dumps({"location": os.path.abspath(location)}),
+            overwrite=True,
+        )
 
     # -------------------------------------------------------------------- sql
     _PARAM_RE = re.compile(r"\$(\d+)")

@@ -76,7 +76,9 @@ from __future__ import annotations
 import datetime as _dt
 import decimal as _decimal
 import json
+import math
 import os
+import re
 import struct
 import urllib.parse
 import uuid as _uuid
@@ -187,7 +189,7 @@ def bound_to_bytes(value: Any, t: Optional[ice_t.Type]) -> Optional[bytes]:
 
 def bound_from_bytes(b: bytes, t: ice_t.Type) -> Any:
     """Inverse of :func:`bound_to_bytes`, producing the same JSON-safe form
-    the engine stores in its internal entries (``Table._json_stat``)."""
+    the engine stores in its internal entries (:func:`stat_value`)."""
     if isinstance(t, ice_t.BooleanType):
         return b == b"\x01"
     if isinstance(t, ice_t.IntType):
@@ -510,6 +512,245 @@ def partition_values_from_path(
             except (ValueError, ArithmeticError):
                 out[p["avro_name"]] = None
     return out
+
+
+# --------------------------------------------------------------------------
+# file statistics: one merge, one finishing step, one footer reader
+# --------------------------------------------------------------------------
+#
+# Every bound a manifest records comes through here: parquet footers of
+# engine-written data and equality-key files, the Spark aggregation the
+# writer falls back to, the stream sink's Arrow columns and the manifest
+# list's column summaries.  A producer gathers partial values per column
+# (row groups, an Arrow column, one aggregated row, a manifest's
+# entries); ``merge_bounds`` combines them and ``finish_stats`` applies
+# the metrics modes and the JSON stat form.
+
+# column types whose files record min/max bounds
+STATS_TYPES = (
+    ice_t.BooleanType,
+    ice_t.IntType,
+    ice_t.LongType,
+    ice_t.FloatType,
+    ice_t.DoubleType,
+    ice_t.DecimalType,
+    ice_t.DateType,
+    ice_t.TimestampType,
+    ice_t.TimestampTzType,
+    ice_t.StringType,
+)
+
+
+def metrics_truncate_len(mode: str) -> Optional[int]:
+    m = re.match(r"truncate\((\d+)\)$", mode)
+    return int(m.group(1)) if m else None
+
+
+def stat_modes(
+    schema: ice_t.Schema, props: dict, extra: tuple = ()
+) -> dict[str, str]:
+    """Iceberg metrics mode (``write.metadata.metrics.column.X``, else
+    ``.default``) of every column that records stats — the schema's
+    stats-typed columns plus ``extra`` (shredded variant columns):
+    ``none`` (no stats), ``counts`` (null counts only), ``truncate(N)``
+    (the default, N=16) or ``full``."""
+    cols = [f.name for f in schema.fields if isinstance(f.field_type, STATS_TYPES)]
+    default = props.get("write.metadata.metrics.default", "truncate(16)")
+    return {
+        c: str(props.get(f"write.metadata.metrics.column.{c}", default)).strip()
+        for c in [*cols, *extra]
+    }
+
+
+def truncate_upper(v: str, n: int) -> Optional[str]:
+    """Iceberg UnicodeUtil.truncateStringMax: prefix of ``n`` chars with
+    the last incrementable code point bumped, so the result still
+    upper-bounds the original.  All-U+10FFFF prefixes can't be
+    incremented → None (no upper bound recorded)."""
+    if len(v) <= n:
+        return v
+    chars = list(v[:n])
+    for i in range(len(chars) - 1, -1, -1):
+        cp = ord(chars[i])
+        if cp >= 0x10FFFF:
+            continue
+        nxt = cp + 1
+        if 0xD800 <= nxt <= 0xDFFF:
+            # never bump into the surrogate range: a lone surrogate is
+            # unencodable (Avro manifests UTF-8-encode bounds); jump past
+            # it (0xE000 > every surrogate, so the result still bounds)
+            nxt = 0xE000
+        chars[i] = chr(nxt)
+        return "".join(chars[: i + 1])
+    return None
+
+
+def stat_value(v: Any) -> Any:
+    """A bound in its JSON stat form: dates and timestamps as ISO strings
+    (an aware timestamp as naive UTC, the value a collected Spark row
+    holds in a UTC session), decimals as strings, the rest as is."""
+    if isinstance(v, _dt.datetime) and v.tzinfo is not None:
+        v = v.astimezone(_dt.timezone.utc).replace(tzinfo=None)
+    if isinstance(v, (_dt.datetime, _dt.date)):
+        return v.isoformat()
+    if isinstance(v, _decimal.Decimal):
+        return str(v)
+    return v
+
+
+def merge_bounds(los: list, his: list) -> tuple:
+    """(least of ``los``, greatest of ``his``) under the one order every
+    bound follows: NaN sorts greatest, as in Spark SQL and parquet-mr.  A
+    NaN anywhere makes the upper bound NaN; the lower bound is NaN only
+    when every value is.  A column's values share one type, so only float
+    columns pay for the NaN pass; the rest take builtin min and max."""
+    if type(his[0]) is not float:
+        return min(los), max(his)
+    finite = [v for v in los if v == v]  # NaN is the one value != itself
+    lo = min(finite) if finite else math.nan
+    hi = math.nan if any(v != v for v in his) else max(his)
+    return lo, hi
+
+
+def finish_stats(modes: dict[str, str], parts: dict[str, tuple]) -> tuple:
+    """(lower-bounds, upper-bounds, null-counts) of one file in JSON stat
+    form, from per-column partial values ``parts`` — ``{col: (lows,
+    highs, null count)}``, empty lists for a column holding no non-null
+    value — under the metrics ``modes``.  ``truncate(N)`` keeps N-char
+    string prefixes and bumps an upper prefix of full length, since it
+    may have been cut from a longer value (an unbumpable one is left
+    out); an all-null column records None for both bounds."""
+    lowers, uppers, nulls = {}, {}, {}
+    for c, (los, his, nc) in parts.items():
+        mode = modes[c]
+        if mode == "none":
+            continue
+        nulls[c] = int(nc)
+        if mode == "counts":
+            continue
+        lo, hi = merge_bounds(los, his) if los else (None, None)
+        if isinstance(hi, str) and (n := metrics_truncate_len(mode)) is not None:
+            lo, hi = lo[:n], hi[:n]
+            if len(hi) == n:
+                hi = truncate_upper(hi + "\x00", n)
+        lowers[c] = stat_value(lo)
+        if hi is not None or lo is None:
+            uppers[c] = stat_value(hi)
+    return lowers, uppers, nulls
+
+
+def stat_entry(path: str, rows: int, size: int, stats: tuple) -> dict[str, Any]:
+    """A data file's manifest entry from its :func:`finish_stats` result,
+    less the schema and spec ids its writer adds."""
+    lowers, uppers, nulls = stats
+    return {
+        "path": path,
+        "record-count": rows,
+        "file-size-bytes": size,
+        "lower-bounds": lowers,
+        "upper-bounds": uppers,
+        "null-counts": nulls,
+    }
+
+
+def _partition_parts(partition: Optional[dict], modes: dict, rows: int) -> dict:
+    """Partial values of identity-partition columns, which a file holds
+    only in its path: one value (or all rows null) per file."""
+    return {
+        c: ([v], [v], 0) if v is not None else ([], [], rows)
+        for c, v in (partition or {}).items()
+        if c in modes
+    }
+
+
+def footer_stats(
+    path: str, modes: dict[str, str], partition: Optional[dict] = None
+) -> Optional[tuple]:
+    """(record count, lower-bounds, upper-bounds, null-counts) of one
+    parquet file from its footer, plus ``partition`` (its identity-
+    partition values parsed from the path; None for the null partition).
+    None when the footer cannot stand in for a scan: it cannot be read,
+    or a column of ``modes`` lacks a null count, or has non-null values
+    but no min/max (parquet-mr drops them for values over 4 KB) or ones
+    pyarrow cannot decode.  For footers Spark writes only: parquet-mr
+    records NaN as a float column's max, while pyarrow's writer leaves
+    NaN out of both bounds."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    try:
+        md = pq.ParquetFile(path).metadata
+    except (OSError, pa.ArrowException):
+        return None
+    parts = _partition_parts(partition, modes, md.num_rows)
+    for g in range(md.num_row_groups):
+        rg = md.row_group(g)
+        for ci in range(rg.num_columns):
+            col = rg.column(ci)
+            name = col.path_in_schema
+            mode = modes.get(name)
+            if mode is None or mode == "none":
+                continue
+            st = col.statistics
+            if st is None or not st.has_null_count:
+                return None
+            los, his, nc = parts.get(name, ([], [], 0))
+            parts[name] = (los, his, nc + st.null_count)
+            if mode == "counts" or st.null_count == rg.num_rows:
+                continue
+            if not st.has_min_max:
+                return None
+            sc = md.schema.column(ci)
+            if sc.logical_type.type == "DECIMAL" and sc.physical_type in (
+                "INT32",
+                "INT64",
+            ):
+                # pyarrow cannot decode the statistics of an INT32/INT64
+                # decimal (what Spark writes up to precision 18); the raw
+                # unscaled ints are exact
+                los.append(_decimal.Decimal(st.min_raw).scaleb(-sc.scale))
+                his.append(_decimal.Decimal(st.max_raw).scaleb(-sc.scale))
+                continue
+            try:
+                los.append(st.min)
+                his.append(st.max)
+            except (ValueError, pa.ArrowException):
+                return None
+    return (md.num_rows, *finish_stats(modes, parts))
+
+
+def arrow_stats(
+    tbl: Any, modes: dict[str, str], partition: Optional[dict] = None
+) -> tuple:
+    """(lower-bounds, upper-bounds, null-counts) of an Arrow table about to
+    be written as one file, plus its ``partition`` values (see
+    :func:`footer_stats`).  Arrow's min_max skips NaN (and reports an
+    all-NaN column as [inf, -inf]), so a float column's NaN joins the
+    partial values on its own."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    parts = _partition_parts(partition, modes, tbl.num_rows)
+    for c in tbl.column_names:
+        mode = modes.get(c)
+        if mode is None or mode == "none":
+            continue
+        col = tbl.column(c)
+        los, his = [], []
+        parts[c] = (los, his, col.null_count)
+        if mode == "counts":
+            continue
+        if pa.types.is_floating(col.type):
+            nan = pc.is_nan(col)
+            if pc.any(nan).as_py():
+                los.append(math.nan)
+                his.append(math.nan)
+                col = col.filter(pc.invert(nan))
+        mm = pc.min_max(col)
+        if mm["min"].is_valid:
+            los.append(mm["min"].as_py())
+            his.append(mm["max"].as_py())
+    return finish_stats(modes, parts)
 
 
 # --------------------------------------------------------------------------
@@ -990,11 +1231,12 @@ def _manifest_summary(data: list[dict[str, Any]]) -> dict[str, Any]:
 
     Soundness: a column appears ONLY when every data entry in the manifest
     records both bounds for it (a bound-less file could hold anything);
-    ``lo``/``hi`` are min/max over the files' conservative bounds, so the
-    manifest range is conservative too; ``nulls`` (summed) appears only
-    when every file records a null count; ``rows`` only when every file
-    records a row count.  Values are the entries' stored JSON-stat forms —
-    min/max on mixed non-comparable types drops the column."""
+    ``lo``/``hi`` merge the files' conservative bounds (:func:`merge_bounds`:
+    a file's NaN upper bound makes the manifest's NaN), so the manifest
+    range is conservative too; ``nulls`` (summed) appears only when every
+    file records a null count; ``rows`` only when every file records a
+    row count.  Values are the entries' stored JSON-stat forms — mixed
+    non-comparable types drop the column."""
     rows: Optional[int] = 0
     for e in data:
         rc = e.get("record-count")
@@ -1026,9 +1268,10 @@ def _manifest_summary(data: list[dict[str, Any]]) -> dict[str, Any]:
         if not ok:
             continue
         try:
-            entry = {"lo": min(los), "hi": max(his)}
+            lo, hi = merge_bounds(los, his)
         except TypeError:
             continue  # mixed bound types: not comparable, skip the column
+        entry = {"lo": lo, "hi": hi}
         if have_nulls:
             entry["nulls"] = nulls
         cols[c] = entry

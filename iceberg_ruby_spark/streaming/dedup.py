@@ -19,7 +19,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from iceberg_ruby_spark.streaming.events import _append_with_batch_id, _last_batch_id
+from iceberg_ruby_spark.streaming.events import (
+    _append_with_batch_id,
+    _checkpoint_sink_id,
+)
+from iceberg_ruby_spark.streaming.sink import last_committed_batch
 
 
 def stream_dedup_ingest(
@@ -48,13 +52,15 @@ def stream_dedup_ingest(
         minhash_incremental_pairs,
     )
 
+    sink_id = _checkpoint_sink_id(checkpoint_dir)
+
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         from pyspark import StorageLevel
 
         dt = docs_table.refresh()
         st = sigs_table.refresh()
-        docs_done = batch_id <= _last_batch_id(dt)
-        sigs_done = batch_id <= _last_batch_id(st)
+        docs_done = batch_id <= last_committed_batch(dt, sink_id)
+        sigs_done = batch_id <= last_committed_batch(st, sink_id)
         if docs_done and sigs_done:
             return  # fully replayed epoch
         batch = batch_df.persist(StorageLevel.MEMORY_AND_DISK)
@@ -98,9 +104,9 @@ def stream_dedup_ingest(
             "left_semi",
         )
         if not docs_done:
-            _append_with_batch_id(dt, kept, batch_id)
+            _append_with_batch_id(dt, kept, sink_id, batch_id)
         if not sigs_done:
-            _append_with_batch_id(st, kept_sigs, batch_id)
+            _append_with_batch_id(st, kept_sigs, sink_id, batch_id)
         batch.unpersist()
 
     writer = stream_df.writeStream.foreachBatch(write_batch).option(

@@ -2,11 +2,19 @@
 
 from __future__ import annotations
 
+import os
+import urllib.parse
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from iceberg_ruby_spark.streaming.sink import (
+    BATCH_ID_KEY,
+    SINK_ID_KEY,
+    last_committed_batch,
+)
 
 # inferred-schema memo for the immutable events test file (see
 # read_events_stream)
@@ -184,26 +192,26 @@ def user_activity_stateful(
     )
 
 
-def _last_batch_id(table) -> int:
-    """The streaming batch id recorded by the table's newest snapshot that
-    carries one, or -1 — the exactly-once replay guard: a micro-batch
-    whose id is not above it was committed before."""
-    for snap in reversed(table.snapshots):
-        bid = snap.summary.get("streaming-batch-id")
-        if bid is not None:
-            return int(bid)
-    return -1
+def _checkpoint_sink_id(checkpoint_dir: str) -> str:
+    """The replay-guard scope of a foreachBatch sink: its checkpoint
+    location, whose batch ids it continues across restarts."""
+    ckpt = str(checkpoint_dir)
+    return ckpt if urllib.parse.urlparse(ckpt).scheme else os.path.abspath(ckpt)
 
 
-def _append_with_batch_id(table, df: DataFrame, batch_id: int) -> None:
-    """Append ``df`` as one snapshot that records ``batch_id``."""
+def _batch_summary(sink_id: str, batch_id: int) -> dict:
+    return {SINK_ID_KEY: sink_id, BATCH_ID_KEY: str(batch_id)}
+
+
+def _append_with_batch_id(table, df: DataFrame, sink_id: str, batch_id: int) -> None:
+    """Append ``df`` as one snapshot that records ``(sink_id, batch_id)``."""
     df = table._normalize_input(df)
     new_entries = table._write_data_dir(df)
     n = table._entries_rowcount(new_entries)
     table._commit_snapshot(
         "append",
         new_entries,
-        {"added-records": n, "streaming-batch-id": str(batch_id)},
+        {"added-records": n, **_batch_summary(sink_id, batch_id)},
         mode="append",
     )
 
@@ -215,18 +223,20 @@ def stream_to_table(
     trigger_available_now: bool = True,
 ):
     """Streaming ingestion into a catalog table via ``foreachBatch``, with
-    EXACTLY-ONCE effect: each micro-batch commit records its epoch id in
-    the snapshot summary, and replayed batches (restart after a crash
-    between sink commit and checkpoint advance) are skipped when their id
-    is <= the last committed one.
+    EXACTLY-ONCE effect: each micro-batch commit records its checkpoint
+    and epoch id in the snapshot summary, and replayed batches (restart
+    after a crash between sink commit and checkpoint advance) are skipped
+    when their id is <= the last one committed from the same checkpoint
+    (:func:`~iceberg_ruby_spark.streaming.sink.last_committed_batch`).
 
     Returns the StreamingQuery; callers await/stop it."""
+    sink_id = _checkpoint_sink_id(checkpoint_dir)
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         t = table.refresh()
-        if batch_id <= _last_batch_id(t):
+        if batch_id <= last_committed_batch(t, sink_id):
             return  # replayed batch — already committed
-        _append_with_batch_id(t, batch_df, batch_id)
+        _append_with_batch_id(t, batch_df, sink_id, batch_id)
 
     writer = stream_df.writeStream.foreachBatch(write_batch).option(
         "checkpointLocation", checkpoint_dir
@@ -251,10 +261,11 @@ def stream_upsert_to_table(
 
     Returns the StreamingQuery; callers await/stop it."""
     keys = [on] if isinstance(on, str) else list(on)
+    sink_id = _checkpoint_sink_id(checkpoint_dir)
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         t = table.refresh()
-        if batch_id <= _last_batch_id(t):
+        if batch_id <= last_committed_batch(t, sink_id):
             return  # replayed batch — already committed
         cols = [f.name for f in t.current_schema().fields]
         # collapse duplicate keys inside the batch: last occurrence wins
@@ -281,7 +292,7 @@ def stream_upsert_to_table(
             when_matched_update={c: f"s.{c}" for c in cols if c not in keys},
             when_not_matched_insert=True,
             mode="merge-on-read",
-            summary_extra={"streaming-batch-id": str(batch_id)},
+            summary_extra=_batch_summary(sink_id, batch_id),
         )
 
     writer = stream_df.writeStream.foreachBatch(write_batch).option(

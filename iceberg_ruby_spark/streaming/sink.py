@@ -53,13 +53,30 @@ SINK_ID_KEY = "streaming-sink-id"
 BATCH_ID_KEY = "streaming-batch-id"
 
 
+def last_committed_batch(table, sink_id: str) -> int:
+    """The highest ``streaming-batch-id`` the sink ``sink_id`` committed
+    to ``table``, or -1 — the exactly-once replay guard every streaming
+    sink shares: a micro-batch whose id is not above it was committed
+    before.  Batch ids restart at 0 with each checkpoint, so only the
+    same sink's commits count."""
+    last = -1
+    for s in table.snapshots:
+        summ = s.summary or {}
+        if summ.get(SINK_ID_KEY) == sink_id:
+            try:
+                last = max(last, int(summ.get(BATCH_ID_KEY, -1)))
+            except (TypeError, ValueError):
+                pass
+    return last
+
+
 @dataclass
 class _FileMsg(WriterCommitMessage):
-    # one task may write several files (one per partition value it holds)
-    files: list  # of {path, count, size, lower, upper}
-    # upsert mode: this task's equality-delete key file(s) + key ranges
-    # ({path, count, key_lower, key_upper, key_has_null}); empty in
-    # append mode
+    # one task may write several files (one per partition value it holds);
+    # each is a manifest entry without the plan-time schema/spec ids
+    files: list
+    # upsert mode: this task's equality-delete key file(s), same shape;
+    # empty in append mode
     delete_files: list = None
 
 
@@ -137,20 +154,19 @@ class EngineTableStreamWriter(DataSourceStreamArrowWriter):
         # transformed sources stay IN the file and the derived value
         # exists only as the directory segment.
         eng_schema = _current_schema(meta)
-        self._eq_cols: list = []
-        self._eq_ids: list = []
+        self._eq_fields: list = []
         if self.mode == "upsert":
-            by_id = {f.field_id: f.name for f in eng_schema.fields}
+            by_id = {f.field_id: f for f in eng_schema.fields}
             ids = list(getattr(eng_schema, "identifier_field_ids", []) or [])
-            self._eq_cols = [by_id[i] for i in ids if i in by_id]
-            self._eq_ids = [i for i in ids if i in by_id]
-            if not self._eq_cols:
+            self._eq_fields = [by_id[i] for i in ids if i in by_id]
+            if not self._eq_fields:
                 raise InvalidDataError(
                     "stream sink mode 'upsert' requires identifier fields "
                     "on the table — declare them via "
                     "update_schema().set_identifier_fields(...) (the "
                     "Flink upsert sink's equality-field-columns contract)"
                 )
+        self._eq_cols = [f.name for f in self._eq_fields]
         self._part_fields: list = []  # (source, out_name, transform, src_type)
         spec_fields = (default_spec or {}).get("fields", [])
         if spec_fields:
@@ -224,28 +240,12 @@ class EngineTableStreamWriter(DataSourceStreamArrowWriter):
         # metadata ids cross over from plan time
         self._schema_id = meta.current_schema_id
         self._spec_id = default_spec_id
-        from iceberg_ruby_spark.table import Table as _T
-
-        self._stats_cols = [
-            f.name
-            for f in eng_schema.fields
-            if isinstance(f.field_type, _T._STATS_TYPES)
-        ]
-        # string-bound truncation lengths (Iceberg
-        # write.metadata.metrics.*, default truncate(16)) — long text
-        # columns must not ship whole documents into every manifest entry;
-        # ONE parser shared with the batch stat collector
-        from iceberg_ruby_spark.table import metrics_mode, metrics_truncate_len
+        from iceberg_ruby_spark.manifests import stat_modes
 
         props = meta.raw.get("properties", {})
-        self._metrics_modes: dict = {}
-        self._str_bound_len: dict = {}
-        for f in eng_schema.fields:
-            mode = metrics_mode(props, f.name)
-            self._metrics_modes[f.name] = mode
-            n = metrics_truncate_len(mode)
-            if n is not None:
-                self._str_bound_len[f.name] = n
+        # the table's metrics modes: executors finish each file's stats
+        # through the batch writer's rule (manifests.arrow_stats)
+        self._modes = stat_modes(eng_schema, props)
         # identity sort-order fields: each written file is sorted like the
         # batch writer's sortWithinPartitions, so manifest bounds stay
         # tight for range predicates on the sort key.  Transformed sort
@@ -290,20 +290,24 @@ class EngineTableStreamWriter(DataSourceStreamArrowWriter):
             return v.isoformat()
         return urllib.parse.quote(str(v), safe="")
 
-    def _write_files(self, tbl, dir_path: str, file_cols: list) -> list[dict]:
+    def _write_files(
+        self, tbl, dir_path: str, file_cols: list, partition: Optional[dict] = None
+    ) -> list[dict]:
         """Write one-or-more data files from an Arrow table: sorted once,
         then split at ``write.spark.max-records-per-file`` rows (the
         slices of a sorted table keep tight disjoint sort-key bounds, so
-        splitting IMPROVES manifest pruning rather than diluting it)."""
+        splitting IMPROVES manifest pruning rather than diluting it).
+        ``partition``: the identity-partition values the files' directory
+        holds."""
         limit = self._max_rows_per_file
         if limit is None or tbl.num_rows <= limit:
-            return [self._write_file(tbl, dir_path, file_cols)]
+            return [self._write_file(tbl, dir_path, file_cols, partition)]
         tbl = self._sorted(tbl)
         out = []
         for lo in range(0, tbl.num_rows, limit):
             out.append(
                 self._write_file(
-                    tbl.slice(lo, limit), dir_path, file_cols, presorted=True
+                    tbl.slice(lo, limit), dir_path, file_cols, partition, True
                 )
             )
         return out
@@ -325,14 +329,22 @@ class EngineTableStreamWriter(DataSourceStreamArrowWriter):
         return tbl
 
     def _write_file(
-        self, tbl, dir_path: str, file_cols: list, presorted: bool = False
+        self,
+        tbl,
+        dir_path: str,
+        file_cols: list,
+        partition: Optional[dict] = None,
+        presorted: bool = False,
     ) -> dict:
         """Write one data file from an Arrow table (rows stay columnar
         end-to-end: Spark ships RecordBatches, sorting and stats run in
-        Arrow compute, parquet writes the same buffers)."""
+        Arrow compute, parquet writes the same buffers).  Its stats come
+        from the Arrow columns, not the footer: pyarrow's writer leaves
+        NaN out of a float column's bounds."""
         import pyarrow as pa
-        import pyarrow.compute as pc
         import pyarrow.parquet as pq
+
+        from iceberg_ruby_spark.manifests import arrow_stats, stat_entry
 
         n_rows = tbl.num_rows
         if not presorted:
@@ -344,36 +356,8 @@ class EngineTableStreamWriter(DataSourceStreamArrowWriter):
         os.makedirs(dir_path, exist_ok=True)
         path = os.path.join(dir_path, f"stream-{uuid.uuid4().hex}.parquet")
         pq.write_table(tbl, path)
-        lower, upper, nulls = {}, {}, {}
-        for c in self._stats_cols:
-            if c not in tbl.column_names:
-                continue
-            mode = self._metrics_modes.get(c, "truncate(16)")
-            if mode == "none":
-                continue
-            nulls[c] = int(tbl.column(c).null_count)
-            if mode == "counts":
-                continue
-            mm = pc.min_max(tbl.column(c))
-            lo, hi = mm["min"].as_py(), mm["max"].as_py()
-            if lo is not None:
-                if isinstance(lo, str) and c in self._str_bound_len:
-                    from iceberg_ruby_spark.table import Table as _T
-
-                    n = self._str_bound_len[c]
-                    lo = _T._truncate_lower(lo, n)
-                    hi = _T._truncate_upper(hi, n)
-                lower[c] = lo
-                if hi is not None:
-                    upper[c] = hi
-        return {
-            "path": path,
-            "count": n_rows,
-            "size": os.path.getsize(path),
-            "lower": lower,
-            "upper": upper,
-            "nulls": nulls,
-        }
+        stats = arrow_stats(tbl, self._modes, partition)
+        return stat_entry(path, n_rows, os.path.getsize(path), stats)
 
     def write(self, iterator: Iterator) -> _FileMsg:
         """Arrow-native executor write (DataSourceStreamArrowWriter):
@@ -442,16 +426,19 @@ class EngineTableStreamWriter(DataSourceStreamArrowWriter):
                     for (_src, name, _tr, _st), v in zip(self._part_fields, key)
                 ]
             )
-            recs = self._write_files(
-                tbl.take(pa.array(idxs)), os.path.join(data_dir, seg), file_cols
+            identity = {
+                src: v
+                for (src, _name, _tr, _st), v in zip(self._part_fields, key)
+                if src in self._part_cols
+            }
+            out.extend(
+                self._write_files(
+                    tbl.take(pa.array(idxs)),
+                    os.path.join(data_dir, seg),
+                    file_cols,
+                    identity,
+                )
             )
-            # identity partition columns: min = max = the group value
-            for rec in recs:
-                for (src, _name, tr, _st), v in zip(self._part_fields, key):
-                    if src in self._part_cols and src in self._stats_cols:
-                        rec["lower"][src] = v
-                        rec["upper"][src] = v
-            out.extend(recs)
         return _FileMsg(out, delete_files)
 
     def _upsert_prepare(self, tbl, data_dir: str):
@@ -459,13 +446,15 @@ class EngineTableStreamWriter(DataSourceStreamArrowWriter):
         tuple within this task (batch order), write the distinct key
         tuples as ONE equality-delete parquet file (field ids stamped,
         same as the batch ``delete_by_keys`` key files), and record the
-        keys' per-column [min, max] + null presence: the delete entry's
-        ``key-bounds`` hint, which lets planners skip data files whose
-        bounds cannot hold a deleted key."""
+        keys' exact stats: the delete entry's ``key-bounds`` hint, which
+        lets planners skip data files whose bounds cannot hold a deleted
+        key."""
         import numpy as np
         import pyarrow as pa
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
+
+        from iceberg_ruby_spark.manifests import arrow_stats, stat_entry
 
         # keep-last per key, vectorized: max row index per key group
         # (Arrow group_by keys null-safely, matching eqNullSafe) — no
@@ -493,23 +482,8 @@ class EngineTableStreamWriter(DataSourceStreamArrowWriter):
         os.makedirs(del_dir, exist_ok=True)
         path = os.path.join(del_dir, f"eq-{uuid.uuid4().hex}.parquet")
         pq.write_table(keys, path)
-        lo, hi, has_null = {}, {}, False
-        for c in self._eq_cols:
-            col = keys.column(c)
-            if col.null_count:
-                has_null = True
-                continue
-            mm = pc.min_max(col)
-            lo[c], hi[c] = mm["min"].as_py(), mm["max"].as_py()
-        return tbl, [
-            {
-                "path": path,
-                "count": keys.num_rows,
-                "key_lower": lo,
-                "key_upper": hi,
-                "key_has_null": has_null,
-            }
-        ]
+        stats = arrow_stats(keys, {c: "full" for c in self._eq_cols})
+        return tbl, [stat_entry(path, keys.num_rows, os.path.getsize(path), stats)]
 
     # -- driver side -------------------------------------------------------
     def _last_committed_batch(self, table) -> int:
@@ -518,18 +492,11 @@ class EngineTableStreamWriter(DataSourceStreamArrowWriter):
         # long-running stream's replay check is O(1) per micro-batch, not
         # O(snapshot history)
         cached = getattr(self, "_last_batch_cache", None)
-        if cached is not None:
-            return cached
-        last = -1
-        for s in table.snapshots:
-            summ = s.summary or {}
-            if summ.get(SINK_ID_KEY) == self.sink_id:
-                try:
-                    last = max(last, int(summ.get(BATCH_ID_KEY, -1)))
-                except (TypeError, ValueError):
-                    pass
-        self._last_batch_cache = last
-        return last
+        if cached is None:
+            cached = self._last_batch_cache = last_committed_batch(
+                table, self.sink_id
+            )
+        return cached
 
     def commit(self, messages: List[Optional[_FileMsg]], batchId: int) -> None:
         # session-less driver worker: the commit is pure metadata — build
@@ -555,20 +522,7 @@ class EngineTableStreamWriter(DataSourceStreamArrowWriter):
         if not files and not dels:
             return  # empty batch: nothing to commit, nothing to track
         entries = [
-            {
-                "path": f["path"],
-                "record-count": f["count"],
-                "schema-id": self._schema_id,
-                "spec-id": self._spec_id,
-                "file-size-bytes": f["size"],
-                "lower-bounds": {
-                    c: Table._json_stat(v) for c, v in (f["lower"] or {}).items()
-                },
-                "upper-bounds": {
-                    c: Table._json_stat(v) for c, v in (f["upper"] or {}).items()
-                },
-                "null-counts": dict(f.get("nulls") or {}),
-            }
+            {**f, "schema-id": self._schema_id, "spec-id": self._spec_id}
             for f in files
         ]
         entries.sort(key=lambda e: e["path"])
@@ -580,7 +534,7 @@ class EngineTableStreamWriter(DataSourceStreamArrowWriter):
             "append",
             entries,
             {
-                "added-records": sum(f["count"] for f in files),
+                "added-records": sum(f["record-count"] for f in files),
                 "added-data-files": len(entries),
                 SINK_ID_KEY: self.sink_id,
                 BATCH_ID_KEY: str(batchId),
@@ -629,13 +583,7 @@ class EngineTableStreamWriter(DataSourceStreamArrowWriter):
         else:
             delete_entries = [
                 _equality_delete_entry(
-                    d["path"],
-                    d["count"],
-                    self._eq_ids,
-                    self._eq_cols,
-                    self._spec_id,
-                    d.get("key_lower"),
-                    d.get("key_upper"),
+                    d["path"], d["record-count"], self._eq_fields, self._spec_id, d
                 )
                 for d in dels
             ]

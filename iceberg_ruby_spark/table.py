@@ -72,10 +72,16 @@ from iceberg_ruby_spark import types as ice_t
 from iceberg_ruby_spark.avro_file import read_ocf
 from iceberg_ruby_spark.manifests import (
     MANIFEST_FORMAT_PROPERTY,
+    STATS_TYPES,
     ManifestContext,
+    finish_stats,
+    footer_stats,
     manifest_paths,
+    metrics_truncate_len,
     read_avro_manifest_delta,
     read_avro_manifest_list,
+    stat_entry,
+    stat_modes,
     write_avro_manifests,
 )
 from iceberg_ruby_spark.transforms import (
@@ -677,22 +683,6 @@ def _as_epoch_ms(v: Any) -> int:
             v = v.replace(tzinfo=_dt.timezone.utc)
         return int(v.timestamp() * 1000)
     raise InvalidDataError(f"not a timestamp: {v!r}")
-
-
-def metrics_mode(props: dict, col: str) -> str:
-    """Iceberg ``write.metadata.metrics.column.X`` / ``.default`` lookup —
-    ONE parser for the batch stat collector and the streaming sink."""
-    return str(
-        props.get(
-            f"write.metadata.metrics.column.{col}",
-            props.get("write.metadata.metrics.default", "truncate(16)"),
-        )
-    ).strip()
-
-
-def metrics_truncate_len(mode: str) -> Optional[int]:
-    m = re.match(r"truncate\((\d+)\)$", mode)
-    return int(m.group(1)) if m else None
 
 
 def _now_ms() -> int:
@@ -2490,25 +2480,18 @@ class Table:
 
     # -- file-level manifest entries with column stats -----------------------
 
-    _STATS_TYPES = (
-        ice_t.BooleanType,
-        ice_t.IntType,
-        ice_t.LongType,
-        ice_t.FloatType,
-        ice_t.DoubleType,
-        ice_t.DecimalType,
-        ice_t.DateType,
-        ice_t.TimestampType,
-        ice_t.TimestampTzType,
-        ice_t.StringType,
-    )
-
-    def _stats_columns(self) -> list[str]:
-        return [
-            f.name
-            for f in self.current_schema().fields
-            if isinstance(f.field_type, self._STATS_TYPES)
-        ]
+    def _stat_modes(self) -> dict[str, str]:
+        """Metrics mode of every column whose files record stats: the
+        schema's stats-typed columns and the shredded variant columns."""
+        return stat_modes(
+            self.current_schema(),
+            self.metadata.raw.get("properties", {}),
+            tuple(
+                s_name
+                for s_items in self.variant_shred_specs().values()
+                for (_p, _t, s_name) in s_items
+            ),
+        )
 
     def variant_shred_specs(self) -> dict[str, list[tuple]]:
         """Shredded-variant extraction specs from table properties:
@@ -2548,7 +2531,7 @@ class Table:
                     )
                 path, typ = path.strip(), typ.strip().lower()
                 t = parse_type(typ)  # raises on unknown type names
-                if not isinstance(t, self._STATS_TYPES):
+                if not isinstance(t, STATS_TYPES):
                     raise InvalidDataError(
                         f"{k}: shred type {typ!r} records no bounds — use "
                         "a stats-bearing primitive"
@@ -2557,69 +2540,6 @@ class Table:
             if items:
                 out[col] = items
         return out
-
-    def _metrics_mode(self, col: str) -> str:
-        """Iceberg's ``write.metadata.metrics.column.X`` / ``.default``
-        metrics mode for a column: ``none`` (no stats), ``counts`` (null
-        counts only), ``truncate(N)`` (the default, N=16), ``full``."""
-        return metrics_mode(self.metadata.raw.get("properties", {}), col)
-
-    def _string_bound_len(self, col: str) -> Optional[int]:
-        """Truncation length for STRING column bounds.  A full min/max of
-        a long text column would store entire documents in every manifest
-        entry — at 100 TB that bloats metadata by orders of magnitude and
-        every planning read pays it.  ``full`` returns None (exact);
-        truncated bounds stay VALID bounds (prefix ≤ value for lower;
-        incremented prefix ≥ value for upper), so pruning is merely less
-        precise, never wrong."""
-        return metrics_truncate_len(self._metrics_mode(col))
-
-    @staticmethod
-    def _truncate_lower(v: str, n: int) -> str:
-        return v[:n]
-
-    @staticmethod
-    def _truncate_upper(v: str, n: int) -> Optional[str]:
-        """Iceberg UnicodeUtil.truncateStringMax: prefix of ``n`` chars
-        with the last incrementable code point bumped, so the result
-        still upper-bounds the original.  All-U+10FFFF prefixes can't be
-        incremented → None (no upper bound recorded)."""
-        if len(v) <= n:
-            return v
-        chars = list(v[:n])
-        for i in range(len(chars) - 1, -1, -1):
-            cp = ord(chars[i])
-            if cp >= 0x10FFFF:
-                continue
-            nxt = cp + 1
-            if 0xD800 <= nxt <= 0xDFFF:
-                # never bump into the surrogate range: a lone surrogate
-                # is unencodable (Avro manifest export UTF-8-encodes
-                # bounds); jump past it (0xE000 > every surrogate, so
-                # the result still upper-bounds the original)
-                nxt = 0xE000
-            chars[i] = chr(nxt)
-            return "".join(chars[: i + 1])
-        return None
-
-    def _bound_pair(self, col: str, lo: Any, hi: Any) -> tuple:
-        if not isinstance(lo, str) or not isinstance(hi, str):
-            return lo, hi
-        n = self._string_bound_len(col)
-        if n is None:
-            return lo, hi
-        return self._truncate_lower(lo, n), self._truncate_upper(hi, n)
-
-    @staticmethod
-    def _json_stat(v: Any) -> Any:
-        import datetime
-        import decimal
-
-        if isinstance(v, (datetime.datetime, datetime.date)):
-            return v.isoformat()
-        if isinstance(v, decimal.Decimal):
-            return str(v)
-        return v
 
     # v3 reserved field ids for the row-lineage columns a rewriting
     # operation materializes into data files (Iceberg spec "Row Lineage")
@@ -2691,9 +2611,9 @@ class Table:
         """Distributed write of one commit's data files.  Returns the new
         file-level manifest entries (path, record-count, per-column
         lower/upper bounds) from :meth:`_collect_file_stats`: the parquet
-        footers of an unpartitioned parquet write, else one aggregation
-        over ``_metadata.file_path`` on the freshly written files — the
-        write itself stays a single distributed job.
+        footers of the freshly written files, else one aggregation over
+        their ``_metadata.file_path`` — the write itself stays a single
+        distributed job.
 
         ``lineage_cols=True`` (compaction) carries ``_row_id`` /
         ``_last_updated_sequence_number`` through as physical columns with
@@ -2873,243 +2793,118 @@ class Table:
             writer.orc(out)
         else:
             writer.parquet(out)
-        return self._collect_file_stats(
-            out, df.schema.fields, fmt, partitioned=bool(part_cols)
-        )
+        return self._collect_file_stats(out, df.schema.fields, fmt)
 
     def _collect_file_stats(
-        self, out_dir: str, fields, fmt: str, partitioned: bool = False
+        self, out_dir: str, fields, fmt: str, modes: Optional[dict] = None
     ) -> list[dict[str, Any]]:
         """Per-file manifest entries (record counts, min/max bounds, null
         counts) for the files just written to ``out_dir`` from a frame
-        with ``fields``.
+        with ``fields``, under the metrics ``modes`` (the table's when
+        omitted).
 
-        Unpartitioned parquet writes take the bounds from the parquet
-        FOOTERS (:meth:`_footer_stat_entries`): they already carry these
-        statistics, so no second scan of the data runs.  ORC writes,
-        hive-partitioned layouts (bounds of the directory-derived
-        partition columns), non-local IO and any file whose footer lacks a
-        needed statistic (e.g. parquet-mr drops min/max for >4 KB values)
-        fall back to one Spark aggregation (:meth:`_file_stat_entries`)
-        over the files read under the writer frame's schema; the two
-        paths agree value for value
+        Parquet files take them from their FOOTERS, identity-partition
+        columns from their directories (:meth:`_footer_stat_entries`), so
+        no second scan of the data runs.  ORC, non-local IO and any footer
+        lacking a needed statistic fall back to one Spark aggregation
+        (:meth:`_file_stat_entries`) over the files read under
+        ``fields``.  Both finish through ``manifests.finish_stats`` and
+        agree value for value
         (``test_table.py::test_footer_stats_match_spark_aggregation``)."""
-        files = list(self.ops.io.list(out_dir))
-        if not any(f.endswith("." + fmt) for f in files):
+        modes = modes or self._stat_modes()
+        files = [f for f in self.ops.io.list(out_dir) if f.endswith("." + fmt)]
+        if not files:
             return []  # zero-row write (e.g. a delete emptied every hit file)
-        if fmt == "parquet" and not partitioned:
-            entries = self._footer_stat_entries(
-                [f for f in files if f.endswith(".parquet")]
-            )
+        if fmt == "parquet":
+            entries = self._footer_stat_entries(files, modes)
             if entries is not None:
                 return entries
         return self._file_stat_entries(
-            _read_files(self.spark, out_dir, fields, fmt, base_path=out_dir)
+            _read_files(self.spark, out_dir, fields, fmt, base_path=out_dir), modes
         )
 
-    # Spark-side float ordering for multi-row-group aggregation: NaN is
-    # GREATER than everything (so max picks it, min never does unless all
-    # values are NaN) — the same total order Spark SQL and parquet-mr use.
-    @staticmethod
-    def _stat_min(a, b):
-        if isinstance(a, float) and isinstance(b, float):
-            import math
-
-            if math.isnan(a):
-                return b
-            if math.isnan(b):
-                return a
-        return b if b < a else a
-
-    @staticmethod
-    def _stat_max(a, b):
-        if isinstance(a, float) and isinstance(b, float):
-            import math
-
-            if math.isnan(a):
-                return a
-            if math.isnan(b):
-                return b
-        return b if b > a else a
+    def _stat_entry(self, path: str, rows: int, stats: tuple) -> dict[str, Any]:
+        return {
+            **stat_entry(path, rows, self.ops.io.size(path), stats),
+            "schema-id": self.metadata.current_schema_id,
+            # the spec this file's directory layout was written under —
+            # Avro manifests group entries per spec so external readers
+            # parse partition tuples against the right field names after
+            # spec evolution
+            "spec-id": self.default_spec_id,
+        }
 
     def _footer_stat_entries(
-        self, paths: list[str]
+        self, paths: list[str], modes: Optional[dict] = None
     ) -> Optional[list[dict[str, Any]]]:
-        """Manifest entries from parquet footer statistics, or ``None``
-        when any needed statistic is unavailable (caller falls back to the
-        Spark aggregation).  Mirrors :meth:`_file_stat_entries` value for
-        value: same stats-column set and metrics modes, same string-prefix
-        truncation/bump, all-null columns record ``None`` bounds, files
-        with zero rows produce no entry (the aggregation path's groupBy
-        semantics), timestamps convert to naive UTC exactly like a
-        collected Spark row."""
-        import datetime as _dt
-        import decimal as _dec
-
-        try:
-            import pyarrow.parquet as _pq
-        except Exception:
-            return None
-        shred_types = {
-            s_name: s_typ
-            for s_items in self.variant_shred_specs().values()
-            for (_p, s_typ, s_name) in s_items
+        """Manifest entries of freshly written parquet files from their
+        footers (``manifests.footer_stats``), or ``None`` when one cannot
+        stand in for the Spark aggregation (non-local IO, a missing
+        statistic, an identity-partition directory value
+        :func:`_dir_stat_value` does not parse).  Files with zero rows
+        produce no entry, as the aggregation's groupBy emits none."""
+        modes = modes or self._stat_modes()
+        schema = self.current_schema()
+        identity = {
+            pf["source"]: schema.field_by_name(pf["source"]).field_type
+            for pf in (self.default_partition_spec() or {}).get("fields", [])
+            if pf.get("transform", "identity") == "identity"
+            and pf.get("name", pf["source"]) == pf["source"]
         }
-        schema_cols = self._stats_columns()
-        modes = {
-            c: self._metrics_mode(c) for c in schema_cols + list(shred_types)
-        }
-        str_cols = {
-            f.name
-            for f in self.current_schema().fields
-            if isinstance(f.field_type, ice_t.StringType)
-        } | {c for c, t in shred_types.items() if t in ("string", "text")}
-        prefix_len = {
-            c: n
-            for c, m in modes.items()
-            if c in str_cols and (n := metrics_truncate_len(m)) is not None
-        }
-
-        def _norm(v):
-            if isinstance(v, _dt.datetime) and v.tzinfo is not None:
-                # pyarrow returns tz-aware UTC for adjusted-to-UTC columns;
-                # a collected Spark row is naive (driver-local; UTC here)
-                return v.astimezone(_dt.timezone.utc).replace(tzinfo=None)
-            return v
-
         entries = []
         for path in sorted(paths):
             if not os.path.isfile(path):
                 return None  # non-local IO — let Spark read it
+            dirs = _parse_dir_partition_values(os.path.relpath(path, self.ops.data_dir))
             try:
-                md = _pq.ParquetFile(path).metadata
-            except Exception:
-                return None
-            if md.num_rows == 0:
-                continue  # the aggregation path emits no group for it
-            # per-column footer aggregation across row groups
-            mins: dict[str, Any] = {}
-            maxs: dict[str, Any] = {}
-            nulls: dict[str, int] = {}
-            present: set[str] = set()
-            ok = True
-            for rg_i in range(md.num_row_groups):
-                rg = md.row_group(rg_i)
-                for ci in range(rg.num_columns):
-                    col = rg.column(ci)
-                    name = col.path_in_schema
-                    if "." in name:
-                        continue  # nested leaf — never a stats column
-                    if name not in modes or modes[name] == "none":
-                        continue
-                    present.add(name)
-                    st = col.statistics
-                    if st is None or not st.has_null_count:
-                        ok = False
-                        break
-                    nulls[name] = nulls.get(name, 0) + st.null_count
-                    if modes[name] == "counts":
-                        continue
-                    if st.null_count == rg.num_rows:
-                        continue  # all-null row group: no bounds to add
-                    if not st.has_min_max:
-                        ok = False  # non-null values but no bounds (e.g.
-                        break  # parquet-mr's >4 KB stats drop)
-                    sc = md.schema.column(ci)
-                    if sc.logical_type.type == "DECIMAL" and sc.physical_type in (
-                        "INT32",
-                        "INT64",
-                    ):
-                        # pyarrow cannot decode the statistics of an
-                        # INT32/INT64-backed decimal (what Spark writes up
-                        # to precision 18); the raw unscaled ints are exact
-                        lo = _dec.Decimal(st.min_raw).scaleb(-sc.scale)
-                        hi = _dec.Decimal(st.max_raw).scaleb(-sc.scale)
-                    else:
-                        try:
-                            lo, hi = _norm(st.min), _norm(st.max)
-                        except Exception:
-                            # a type pyarrow cannot decode: same as absent
-                            ok = False
-                            break
-                    mins[name] = (
-                        self._stat_min(mins[name], lo) if name in mins else lo
-                    )
-                    maxs[name] = (
-                        self._stat_max(maxs[name], hi) if name in maxs else hi
-                    )
-                if not ok:
-                    break
-            if not ok:
-                return None
-            lowers, uppers, nullc = {}, {}, {}
-            for c in sorted(present):
-                mode = modes[c]
-                nullc[c] = int(nulls.get(c, 0))
-                if mode == "counts":
-                    continue
-                lo, hi = mins.get(c), maxs.get(c)
-                raw_max_none = c not in maxs
-                if c in prefix_len and isinstance(hi, str):
-                    n = prefix_len[c]
-                    lo = lo[:n]
-                    hi = hi[:n]
-                    if len(hi) >= n:
-                        hi = self._truncate_upper(hi + "\x00", n)
-                else:
-                    lo, hi = self._bound_pair(c, lo, hi)
-                lowers[c] = self._json_stat(lo)
-                if hi is not None or raw_max_none:
-                    uppers[c] = self._json_stat(hi)
-            entries.append(
-                {
-                    "path": path,
-                    "record-count": md.num_rows,
-                    "schema-id": self.metadata.current_schema_id,
-                    "spec-id": self.default_spec_id,
-                    "file-size-bytes": self.ops.io.size(path),
-                    "lower-bounds": lowers,
-                    "upper-bounds": uppers,
-                    "null-counts": nullc,
+                partition = {
+                    c: _dir_stat_value(v, identity[c])
+                    for c, v in dirs.items()
+                    if c in identity
                 }
-            )
+            except ValueError:
+                return None
+            stats = footer_stats(path, modes, partition)
+            if stats is None:
+                return None
+            if stats[0]:
+                entries.append(self._stat_entry(path, stats[0], stats[1:]))
         return entries
 
-    def _file_stat_entries(self, written: DataFrame) -> list[dict[str, Any]]:
-        shred_types = {
-            s_name: s_typ
-            for s_items in self.variant_shred_specs().values()
-            for (_p, s_typ, s_name) in s_items
+    def _file_stat_entries(
+        self, written: DataFrame, modes: Optional[dict] = None
+    ) -> list[dict[str, Any]]:
+        """Manifest entries of the files behind ``written`` from one Spark
+        aggregation grouped by file — the fallback where no engine-written
+        parquet footer can be read, and the one path for ``add_files``,
+        whose outside writers' footers may leave NaN out of a float
+        column's bounds."""
+        modes = {
+            c: m
+            for c, m in (modes or self._stat_modes()).items()
+            if c in written.columns
         }
-        stat_cols = [c for c in self._stats_columns() if c in written.columns]
-        stat_cols += [c for c in shred_types if c in written.columns]
-        modes = {c: self._metrics_mode(c) for c in stat_cols}
-        str_cols = {
-            f.name
-            for f in self.current_schema().fields
-            if isinstance(f.field_type, ice_t.StringType)
-        } | {c for c, t in shred_types.items() if t in ("string", "text")}
-        # prefix-aggregated string columns: min/max run over the N-char
-        # SUBSTRING so whole documents never cross to the driver (prefix
-        # min ≤ every value; the bumped prefix max ≥ every value — the
-        # bound validity argument is per-value, so it survives the agg)
+        # string columns aggregate over their N-char prefix, so whole
+        # documents never cross to the driver (prefix min ≤ every value,
+        # and finish_stats bumps the prefix max)
         prefix_len = {
             c: n
-            for c in stat_cols
-            if c in str_cols and (n := metrics_truncate_len(modes[c])) is not None
+            for c, m in modes.items()
+            if isinstance(written.schema[c].dataType, _T.StringType)
+            and (n := metrics_truncate_len(m)) is not None
         }
         aggs = [F.count(F.lit(1)).alias("__rc")]
-        for c in stat_cols:
-            if modes[c] == "none":
-                continue  # no stats at all for this column
+        for c, mode in modes.items():
+            if mode == "none":
+                continue
             # per-file null counts (spec null_value_counts, field 110):
             # IS NULL prunes files with zero nulls, IS NOT NULL prunes
             # all-null files — bounds can't see either
             aggs.append(
                 F.sum(F.when(F.col(c).isNull(), 1).otherwise(0)).alias(f"__nc_{c}")
             )
-            if modes[c] == "counts":
-                continue  # null counts only, no bounds
+            if mode == "counts":
+                continue
             expr = (
                 F.substring(F.col(c), 1, prefix_len[c])
                 if c in prefix_len
@@ -3125,45 +2920,15 @@ class Table:
         entries = []
         for r in rows:
             d = r.asDict()
+            parts = {}
+            for c in modes:
+                lo, nc = d.get(f"__min_{c}"), d.get(f"__nc_{c}") or 0
+                parts[c] = (
+                    ([lo], [d[f"__max_{c}"]], nc) if lo is not None else ([], [], nc)
+                )
             path = _spark_uri_path(d["__path"])
-            lowers, uppers, nulls = {}, {}, {}
-            for c in stat_cols:
-                mode = modes[c]
-                if mode == "none":
-                    continue
-                nulls[c] = int(d[f"__nc_{c}"] or 0)
-                if mode == "counts":
-                    continue
-                lo, hi = d[f"__min_{c}"], d[f"__max_{c}"]
-                if c in prefix_len and isinstance(hi, str):
-                    n = prefix_len[c]
-                    if len(hi) >= n:
-                        # an n-char prefix may have been truncated from a
-                        # longer value — force the bump (padding past n
-                        # routes _truncate_upper into its increment path;
-                        # bumping an exact-length value is merely looser)
-                        hi = self._truncate_upper(hi + "\x00", n)
-                else:
-                    lo, hi = self._bound_pair(c, lo, hi)
-                lowers[c] = self._json_stat(lo)
-                if hi is not None or d[f"__max_{c}"] is None:
-                    uppers[c] = self._json_stat(hi)
-            entries.append(
-                {
-                    "path": path,
-                    "record-count": d["__rc"],
-                    "schema-id": self.metadata.current_schema_id,
-                    # the spec this file's directory layout was written
-                    # under — Avro manifests group entries per spec so
-                    # external readers parse partition tuples against the
-                    # right field names after spec evolution
-                    "spec-id": self.default_spec_id,
-                    "file-size-bytes": self.ops.io.size(path),
-                    "lower-bounds": lowers,
-                    "upper-bounds": uppers,
-                    "null-counts": nulls,
-                }
-            )
+            stats = finish_stats(modes, parts)
+            entries.append(self._stat_entry(path, d["__rc"], stats))
         entries.sort(key=lambda e: e["path"])
         return entries
 
@@ -5147,15 +4912,17 @@ class Table:
         (a manifest entry names a file, not a directory), with
         ``deleted-records`` = key rows in THAT file — what the spec's
         delete-file ``record_count`` means for equality deletes — and the
-        file's key range as its ``key-bounds`` hint."""
+        file's key range as its ``key-bounds`` hint.  The stats come the
+        way a data file's do (:meth:`_collect_file_stats`), exact."""
         schema = self.current_schema()
-        field_ids = [schema.field_by_name(c).field_id for c in cols]
+        fields = [schema.field_by_name(c) for c in cols]
+        read = self._key_fields(cols, [f.field_id for f in fields])
         return [
             _equality_delete_entry(
-                part, n, field_ids, cols, self.default_spec_id, lo, hi
+                e["path"], e["record-count"], fields, self.default_spec_id, e
             )
-            for part, n, lo, hi in self._delete_part_stats(
-                del_dir, cols, field_ids
+            for e in self._collect_file_stats(
+                del_dir, read, "parquet", {c: "full" for c in cols}
             )
         ]
 
@@ -5173,53 +4940,6 @@ class Table:
         if not entries:
             self.ops.io.delete_prefix(del_dir)
         return entries
-
-    def _delete_part_stats(
-        self, del_dir: str, cols: list[str], ids: list[int]
-    ) -> list:
-        """``(path, rows, lower, upper)`` per non-empty parquet part file
-        of a freshly written key directory (key columns ``cols``, field
-        ids ``ids``), sorted by path; ``lower`` /
-        ``upper`` map each key column holding no null key to its min /
-        max.  Footer fast path (the same move as the manifest footer
-        stats): counts and ranges ARE the parquet footers' ``num_rows``
-        and column statistics, so local files need no Spark job at all;
-        non-local IO or any footer surprise falls back to one Spark
-        aggregation."""
-        paths = sorted(
-            p for p in self.ops.io.list(del_dir) if p.endswith(".parquet")
-        )
-        if all(os.path.isfile(p) for p in paths):
-            try:
-                stats = [_footer_key_stats(p, cols) for p in paths]
-                return [s for s in stats if s[1]]
-            except (OSError, ValueError, KeyError):
-                pass  # a footer Spark's min/max cannot trust: aggregate
-        aggs = [F.count(F.lit(1)).alias("__n")]
-        for j, c in enumerate(cols):
-            aggs += [
-                F.min(c).alias(f"__lo{j}"),
-                F.max(c).alias(f"__hi{j}"),
-                F.sum(F.col(c).isNull().cast("int")).alias(f"__nn{j}"),
-            ]
-        rows = (
-            _read_files(self.spark, del_dir, self._key_fields(cols, ids))
-            .groupBy(F.col("_metadata.file_path").alias("__part"))
-            .agg(*aggs)
-            .collect()
-        )
-        out = []
-        for r in rows:
-            ok = [(j, c) for j, c in enumerate(cols) if not r[f"__nn{j}"]]
-            out.append(
-                (
-                    _spark_uri_path(r["__part"]),
-                    r["__n"],
-                    {c: r[f"__lo{j}"] for j, c in ok},
-                    {c: r[f"__hi{j}"] for j, c in ok},
-                )
-            )
-        return sorted(out, key=lambda s: s[0])
 
     def _update_where_mor(
         self, assignments: dict[str, Any], cond, mode: str,
@@ -6724,6 +6444,28 @@ def _parse_dir_partition_values(path: str) -> dict[str, str]:
     return out
 
 
+def _dir_stat_value(raw: str, t: ice_t.Type) -> Any:
+    """An identity-partition directory value (Spark's spelling) as the
+    value a collected Spark row holds for the column; ValueError for a
+    type whose spelling this does not parse (timestamps, written in the
+    session time zone; floats, written at float precision; decimals)."""
+    import datetime as _dt
+
+    if raw == "__HIVE_DEFAULT_PARTITION__":
+        return None
+    if isinstance(t, (ice_t.IntType, ice_t.LongType)):
+        return int(raw)
+    if isinstance(t, ice_t.StringType):
+        return raw
+    if isinstance(t, ice_t.DateType):
+        return _dt.date.fromisoformat(raw)
+    if isinstance(t, ice_t.BooleanType) and raw in ("true", "false"):
+        return raw == "true"
+    if isinstance(t, ice_t.DoubleType):
+        return float(raw)
+    raise ValueError(f"no directory-value parse for {t!r}")
+
+
 def _coerce_partition_literal(val: Any, t: Optional[ice_t.Type]):
     """Predicate literal → the Python domain the transform's ``scalar``
     expects for this source type, or None when not provably convertible."""
@@ -6921,90 +6663,55 @@ def _seq_scope_touched(
     return [e for e in data_entries if _seq_scope_applies(scope, e)]
 
 
-def _plain_bound_literal(v: Any):
-    """A key-bounds value in plain-JSON literal form (the manifest stores
-    it verbatim; readers compare it via ``_bounds_may_match``'s
-    normalization): temporal → ISO string, int/float/str pass through,
-    anything else (bool, Decimal, bytes, None) drops the bound — prune
-    less, never wrong."""
-    import datetime as _dt
-
-    if isinstance(v, bool) or v is None:
-        return None
-    if isinstance(v, _dt.datetime):
-        return v.isoformat(sep=" ")
-    if isinstance(v, _dt.date):
-        return str(v)
-    if isinstance(v, (int, float, str)):
-        return v
-    return None
+# key types whose JSON stat form compares as a key-bounds literal
+# (decimals are strings there and would compare lexicographically)
+_KEY_BOUND_TYPES = (
+    ice_t.IntType,
+    ice_t.LongType,
+    ice_t.FloatType,
+    ice_t.DoubleType,
+    ice_t.DateType,
+    ice_t.TimestampType,
+    ice_t.TimestampTzType,
+    ice_t.StringType,
+)
 
 
 def _equality_delete_entry(
     path: str,
     n: int,
-    field_ids: list[int],
-    cols: list[str],
+    fields: list,
     spec_id: int,
-    lower: Optional[dict[str, Any]] = None,
-    upper: Optional[dict[str, Any]] = None,
+    stats: dict[str, Any],
 ) -> dict[str, Any]:
     """The spec entry of ONE equality-delete key file holding ``n`` key
-    rows.  Its scope is the spec's sequence rule (data files with a
-    strictly lower data sequence); ``lower``/``upper`` (key column → min /
-    max, columns holding a null key left out) become the ``key-bounds``
-    pruning hint — a column is bounded only when both ends have a plain
-    literal form."""
+    rows over the key ``fields``.  Its scope is the spec's sequence rule
+    (data files with a strictly lower data sequence); the file's
+    ``stats`` (lower-bounds / upper-bounds / null-counts, as a data
+    entry records them) become the ``key-bounds`` pruning hint for each
+    key column of a comparable type holding no null key."""
     entry = {
         "delete-file": path,
         "deleted-records": n,
         "content": "equality-deletes",
-        "equality-ids": list(field_ids),
-        "equality-cols": list(cols),
+        "equality-ids": [f.field_id for f in fields],
+        "equality-cols": [f.name for f in fields],
         "spec-id": spec_id,
     }
     lo, hi = {}, {}
-    for c in cols:
-        lv = _plain_bound_literal((lower or {}).get(c))
-        hv = _plain_bound_literal((upper or {}).get(c))
-        if lv is not None and hv is not None:
-            lo[c], hi[c] = lv, hv
+    for f in fields:
+        a = stats["lower-bounds"].get(f.name)
+        b = stats["upper-bounds"].get(f.name)
+        if (
+            isinstance(f.field_type, _KEY_BOUND_TYPES)
+            and stats["null-counts"].get(f.name) == 0
+            and a is not None
+            and b is not None
+        ):
+            lo[f.name], hi[f.name] = a, b
     if lo:
         entry["key-bounds"] = {"lower": lo, "upper": hi}
     return entry
-
-
-def _footer_key_stats(path: str, cols: list[str]) -> tuple:
-    """``(path, rows, lower, upper)`` of one key parquet file from its
-    footer statistics alone.  Raises ValueError when a key column's
-    footer cannot stand in for Spark's min/max (no statistic for non-null
-    values, e.g. INT96 or oversized strings; timestamps, whose footer
-    values are UTC while Spark's are session-local)."""
-    import datetime as _dt
-
-    import pyarrow.parquet as _pq
-
-    md = _pq.ParquetFile(path).metadata
-    idx = {md.schema.column(j).path: j for j in range(md.num_columns)}
-    lo, hi = {}, {}
-    for c in cols:
-        mins, maxs, nulls = [], [], 0
-        for g in range(md.num_row_groups):
-            rg = md.row_group(g)
-            st = rg.column(idx[c]).statistics
-            if st is None or not st.has_null_count:
-                raise ValueError(f"no null count for {c} in {path}")
-            nulls += st.null_count
-            if st.has_min_max:
-                mins.append(st.min)
-                maxs.append(st.max)
-            elif rg.num_rows > st.null_count:
-                raise ValueError(f"no min/max for {c} in {path}")
-        if any(isinstance(v, _dt.datetime) for v in mins + maxs):
-            raise ValueError(f"timestamp key column {c}")
-        if not nulls and mins:
-            lo[c], hi[c] = min(mins), max(maxs)
-    return path, md.num_rows, lo, hi
 
 
 def _compile_seq_scope(delete_entry: dict[str, Any]) -> tuple:

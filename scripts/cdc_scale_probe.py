@@ -299,20 +299,21 @@ def upsert_chain() -> None:
                         files=[
                             {
                                 "path": dpath,
-                                "count": len(chunk),
-                                "size": os.path.getsize(dpath),
-                                "lower": {"event_id": chunk[0]},
-                                "upper": {"event_id": chunk[-1]},
-                                "nulls": {},
+                                "record-count": len(chunk),
+                                "file-size-bytes": os.path.getsize(dpath),
+                                "lower-bounds": {"event_id": chunk[0]},
+                                "upper-bounds": {"event_id": chunk[-1]},
+                                "null-counts": {},
                             }
                         ],
                         delete_files=[
                             {
                                 "path": kpath,
-                                "count": len(chunk),
-                                "key_lower": {"event_id": chunk[0]},
-                                "key_upper": {"event_id": chunk[-1]},
-                                "key_has_null": False,
+                                "record-count": len(chunk),
+                                "file-size-bytes": os.path.getsize(kpath),
+                                "lower-bounds": {"event_id": chunk[0]},
+                                "upper-bounds": {"event_id": chunk[-1]},
+                                "null-counts": {"event_id": 0},
                             }
                         ],
                     )

@@ -183,17 +183,18 @@ def commit_flatness(spark, n_batches: int) -> None:
         pq.write_table(tbl.select(["k"]), kpath)
         msg = _FileMsg(
             files=[{
-                "path": dpath, "count": rows,
-                "size": os.path.getsize(dpath),
-                "lower": {"k": min(keys), "v": b * 1000},
-                "upper": {"k": max(keys), "v": b * 1000 + rows - 1},
-                "nulls": {},
+                "path": dpath, "record-count": rows,
+                "file-size-bytes": os.path.getsize(dpath),
+                "lower-bounds": {"k": min(keys), "v": b * 1000},
+                "upper-bounds": {"k": max(keys), "v": b * 1000 + rows - 1},
+                "null-counts": {},
             }],
             delete_files=[{
-                "path": kpath, "count": rows,
-                "key_lower": {"k": min(keys)},
-                "key_upper": {"k": max(keys)},
-                "key_has_null": False,
+                "path": kpath, "record-count": rows,
+                "file-size-bytes": os.path.getsize(kpath),
+                "lower-bounds": {"k": min(keys)},
+                "upper-bounds": {"k": max(keys)},
+                "null-counts": {"k": 0},
             }],
         )
         t0 = time.perf_counter()

@@ -704,20 +704,21 @@ def test_seq_scoped_equality_delete_roundtrips_avro(catalog, spark, tmp_path):
                     files=[
                         {
                             "path": dpath,
-                            "count": len(pairs),
-                            "size": os.path.getsize(dpath),
-                            "lower": {"k": min(ks)},
-                            "upper": {"k": max(ks)},
-                            "nulls": {},
+                            "record-count": len(pairs),
+                            "file-size-bytes": os.path.getsize(dpath),
+                            "lower-bounds": {"k": min(ks)},
+                            "upper-bounds": {"k": max(ks)},
+                            "null-counts": {},
                         }
                     ],
                     delete_files=[
                         {
                             "path": kpath,
-                            "count": len(pairs),
-                            "key_lower": {"k": min(ks)},
-                            "key_upper": {"k": max(ks)},
-                            "key_has_null": False,
+                            "record-count": len(pairs),
+                            "file-size-bytes": os.path.getsize(kpath),
+                            "lower-bounds": {"k": min(ks)},
+                            "upper-bounds": {"k": max(ks)},
+                            "null-counts": {"k": 0},
                         }
                     ],
                 )

@@ -308,6 +308,16 @@ def test_contract_tables(anycat, monkeypatch):
     assert cat.list_tables("b_ns") == [["b_ns", "ev"]]
     assert sorted(r["k"] for r in cat.load_table("b_ns.ev").to_a()) == [1, 2]
 
+    # a custom-location table leaves nothing at its warehouse path once
+    # dropped (only the FS store records it there)
+    elsewhere = os.path.join(cat.warehouse, "elsewhere")
+    custom = cat.create_table("custom", schema={"k": "int"}, location=elsewhere)
+    assert custom.location == elsewhere
+    assert cat.load_table("custom").location == elsewhere
+    cat.drop_table("custom")
+    assert not cat.table_exists("custom")
+    assert not os.path.exists(os.path.join(cat.warehouse, "default", "custom"))
+
 
 def test_contract_register_table(anycat, tmp_path):
     """register_table checks the namespace, then the name, then the

@@ -268,10 +268,70 @@ def test_numeric_literal_never_prunes_on_string_bounds(catalog):
 
 
 def test_truncate_upper_skips_surrogates():
-    from iceberg_ruby_spark.table import Table
+    from iceberg_ruby_spark.manifests import truncate_upper
 
     v = "ab" + chr(0xD7FF) + "tail-beyond"
-    hi = Table._truncate_upper(v, 3)
+    hi = truncate_upper(v, 3)
     assert hi == "ab" + chr(0xE000)  # never a lone surrogate
     hi.encode("utf-8")  # must stay encodable (Avro manifest export)
     assert hi >= v
+
+
+def test_nan_merge_is_order_free():
+    """One merge for every bound: NaN sorts greatest whatever the order
+    of the partial values, so an upper bound over a NaN is NaN and a lower
+    bound is NaN only when every value is."""
+    import math
+
+    from iceberg_ruby_spark.manifests import merge_bounds
+
+    nan = math.nan
+    for vals in ([1.0, nan], [nan, 1.0], [nan, 1.0, -2.0]):
+        lo, hi = merge_bounds(vals, vals)
+        assert lo == min(v for v in vals if v == v) and math.isnan(hi)
+    lo, hi = merge_bounds([nan], [nan])
+    assert math.isnan(lo) and math.isnan(hi)
+    assert merge_bounds([3, 1], [2, 5]) == (1, 5)
+
+
+def test_stream_sink_records_nan_upper_bound(catalog, spark, tmp_path):
+    """A streamed float column holding NaN records upper bound NaN, so
+    ``v > 2`` keeps the file and returns the NaN row, as Spark SQL does."""
+    import math
+
+    from iceberg_ruby_spark.streaming import register_stream_source
+
+    bronze = catalog.create_table("nan_bronze", schema={"k": "int", "v": "double"})
+    gold = catalog.create_table("nan_gold", schema={"k": "int", "v": "double"})
+    bronze.append([{"k": 1, "v": 1.0}, {"k": 2, "v": math.nan}])
+    register_stream_source(spark)
+    q = (
+        spark.readStream.format("iceberg_table")
+        .option("location", bronze.ops.location)
+        .load()
+        .writeStream.format("iceberg_table")
+        .option("location", gold.ops.location)
+        .option("checkpointLocation", str(tmp_path / "ck"))
+        .start()
+    )
+    q.processAllAvailable()
+    q.stop()
+    gold = gold.refresh()
+    assert any(math.isnan(e["upper-bounds"]["v"]) for e in gold._current_entries())
+    assert [r["k"] for r in gold.scan().filter("v > 2").to_a()] == [2]
+
+
+def test_manifest_summary_keeps_nan_upper_bound(catalog):
+    """A manifest whose files' upper bounds are 1.0 and NaN summarizes to
+    NaN, so the NaN file survives manifest pruning for ``v > 2``."""
+    import math
+
+    t = catalog.create_table(
+        "nan_summary",
+        schema={"k": "int", "v": "double"},
+        partition_spec=[("k", "identity")],
+    )
+    t.append([{"k": 1, "v": 1.0}, {"k": 2, "v": math.nan}])
+    files = t.scan().filter("v > 2").plan_files()
+    assert len(files) == 1 and "/k=2/" in files[0]["data_file_path"]
+    assert [r["k"] for r in t.scan().filter("v > 2").to_a()] == [2]

@@ -63,6 +63,22 @@ def test_stream_to_table_skips_replayed_batch(catalog, spark, tmp_path):
     assert len(t.to_a()) == expected
 
 
+def test_stream_to_table_guards_each_checkpoint(catalog, spark, tmp_path):
+    """Batch ids restart at 0 with each checkpoint: a second query into
+    the same table commits its batch 0 instead of dropping it as the
+    first query's replay."""
+    from iceberg_ruby_spark.streaming import stream_to_table
+
+    t = catalog.create_table("two_queries", schema={"k": "long"})
+    for n, keys in enumerate(([1, 2], [3, 4])):
+        src = tmp_path / f"src{n}"
+        spark.createDataFrame([(k,) for k in keys], "k long").write.parquet(str(src))
+        stream = spark.readStream.schema("k long").parquet(str(src))
+        q = stream_to_table(stream, t, checkpoint_dir=str(tmp_path / f"ck{n}"))
+        q.awaitTermination()
+    assert sorted(r["k"] for r in t.refresh().to_a()) == [1, 2, 3, 4]
+
+
 def test_stream_upsert_to_table(catalog, spark, tmp_path):
     """CDC upsert sink: per-batch merge-on-read MERGE — keyed rows update
     in place, new keys insert, and in-batch duplicate keys collapse to the
@@ -457,9 +473,11 @@ def test_sink_max_records_per_file(catalog, spark, tmp_path):
     tbl = tbl.cast(pa.schema([pa.field("k", pa.int32()), pa.field("v", pa.string())]))
     msg = w.write(iter(tbl.to_batches(max_chunksize=25)))
     assert len(msg.files) == 3  # ceil(100/40)
-    assert [f["count"] for f in msg.files] == [40, 40, 20]
+    assert [f["record-count"] for f in msg.files] == [40, 40, 20]
     # sorted split => disjoint tight bounds per file
-    bounds = sorted((f["lower"]["k"], f["upper"]["k"]) for f in msg.files)
+    bounds = sorted(
+        (f["lower-bounds"]["k"], f["upper-bounds"]["k"]) for f in msg.files
+    )
     assert bounds == [(0, 39), (40, 79), (80, 99)]
     w.commit([msg], 0)
     t = t.refresh()
@@ -860,20 +878,21 @@ def _direct_commit(t, writer, b, pairs):
                 files=[
                     {
                         "path": dpath,
-                        "count": len(pairs),
-                        "size": os.path.getsize(dpath),
-                        "lower": {"k": min(ks)},
-                        "upper": {"k": max(ks)},
-                        "nulls": {},
+                        "record-count": len(pairs),
+                        "file-size-bytes": os.path.getsize(dpath),
+                        "lower-bounds": {"k": min(ks)},
+                        "upper-bounds": {"k": max(ks)},
+                        "null-counts": {},
                     }
                 ],
                 delete_files=[
                     {
                         "path": kpath,
-                        "count": len(pairs),
-                        "key_lower": {"k": min(ks)},
-                        "key_upper": {"k": max(ks)},
-                        "key_has_null": False,
+                        "record-count": len(pairs),
+                        "file-size-bytes": os.path.getsize(kpath),
+                        "lower-bounds": {"k": min(ks)},
+                        "upper-bounds": {"k": max(ks)},
+                        "null-counts": {"k": 0},
                     }
                 ],
             )

@@ -5,8 +5,10 @@ backfill, extra-column rejection, metadata accessors, time travel)."""
 import datetime
 import decimal
 import json
+import os
 
 import pytest
+from pyspark.sql import types as _T
 
 from iceberg_ruby_spark.errors import InvalidDataError
 
@@ -1056,39 +1058,70 @@ def test_orc_native_writes(catalog, spark):
         ).append([{"a": 1}])
 
 
+def _stat_view(entries):
+    """The stats of entries, path-sorted, as JSON text (NaN bounds
+    compare by their text: nan != nan as a float)."""
+    keys = ("path", "record-count", "lower-bounds", "upper-bounds", "null-counts")
+    return json.dumps(
+        sorted(({k: e[k] for k in keys} for e in entries), key=lambda e: e["path"]),
+        sort_keys=True,
+    )
+
+
+def _sink_entries(t, rows):
+    """``rows`` written by the stream sink's executor path into ``t``:
+    the manifest entries its tasks ship to the commit."""
+    import pyarrow as pa
+
+    from iceberg_ruby_spark.streaming.sink import EngineTableStreamWriter
+
+    w = EngineTableStreamWriter({"location": t.ops.location}, t.spark_schema(), False)
+    tbl = pa.Table.from_pylist(rows, schema=w._arrow_schema)
+    return w.write(iter(tbl.to_batches(max_chunksize=1000))).files
+
+
 def test_footer_stats_match_spark_aggregation(catalog, spark):
-    """The two stats collectors agree value for value on the same freshly
-    written files: parquet footers (the write path's fast path) and the
-    Spark aggregation (its fallback) — every stats type, NaN floats, an
-    all-null column, strings past the truncate(16) prefix, counts and
-    none metrics modes, and several row groups per file — and decimals
-    of both integer widths Spark writes (INT64 for decimal(12, 3), INT32
-    for decimal(5, 2)), whose committed bounds are also checked."""
+    """Every stats producer agrees value for value with the Spark
+    aggregation (the writer's fallback) on the same files: parquet
+    footers of an unpartitioned and of an identity-partitioned write
+    (the null partition included), the stream sink's Arrow columns, and
+    the footers of equality-key files.  Covered: every stats type, NaN
+    floats, an all-null column, strings past the truncate(16) prefix,
+    counts and none metrics modes, several row groups per file, and
+    decimals of both integer widths Spark writes (INT64 for
+    decimal(12, 3), INT32 for decimal(5, 2)), whose committed bounds are
+    also checked."""
     import math
 
     import pyarrow.parquet as pq
 
-    t = catalog.create_table(
-        "stats_xcheck",
-        schema={
-            "b": "boolean",
-            "i": "int",
-            "l": "long",
-            "f": "float",
-            "d": "double",
-            "dt": "date",
-            "ts": "timestamp",
-            "tstz": "timestamptz",
-            "s": "string",
-            "nul": "int",
-            "cnt": "long",
-            "off": "string",
-        },
-        properties={
-            "write.metadata.metrics.column.cnt": "counts",
-            "write.metadata.metrics.column.off": "none",
-            "write.spark.max-records-per-file": "1500",
-        },
+    from iceberg_ruby_spark.table import _read_files
+
+    schema = {
+        "b": "boolean",
+        "i": "int",
+        "l": "long",
+        "f": "float",
+        "d": "double",
+        "dt": "date",
+        "ts": "timestamp",
+        "tstz": "timestamptz",
+        "s": "string",
+        "nul": "int",
+        "cnt": "long",
+        "off": "string",
+    }
+    props = {
+        "write.metadata.metrics.column.cnt": "counts",
+        "write.metadata.metrics.column.off": "none",
+        "write.spark.max-records-per-file": "1500",
+    }
+    t = catalog.create_table("stats_xcheck", schema=schema, properties=props)
+    part = catalog.create_table(
+        "stats_xcheck_part",
+        schema=schema,
+        properties=props,
+        partition_spec=[("b", "identity"), ("nul", "identity")],
     )
     utc = datetime.timezone.utc
     rows = []
@@ -1113,6 +1146,7 @@ def test_footer_stats_match_spark_aggregation(catalog, spark):
     spark.conf.set("parquet.block.size", "4096")
     try:
         t.append(rows)
+        part.append(rows)
     finally:
         spark.conf.unset("parquet.block.size")
     paths = sorted(t._entry_files(t._current_entries()))
@@ -1123,34 +1157,139 @@ def test_footer_stats_match_spark_aggregation(catalog, spark):
     agg = t._file_stat_entries(
         spark.read.schema(t.current_schema().to_spark()).parquet(*paths)
     )
-    # NaN bounds compare by their JSON text (nan != nan as a float)
-    assert json.dumps(footer, sort_keys=True) == json.dumps(agg, sort_keys=True)
+    assert _stat_view(footer) == _stat_view(agg)
     e = footer[0]
     assert "nul" in e["null-counts"] and e["lower-bounds"]["nul"] is None
     assert "cnt" in e["null-counts"] and "cnt" not in e["lower-bounds"]
     assert "off" not in e["null-counts"]
     assert len(e["lower-bounds"]["s"]) == 16
 
+    # identity partitions: the bounds of b and nul come from the paths
+    ppaths = sorted(part._entry_files(part._current_entries()))
+    assert all("/nul=__HIVE_DEFAULT_PARTITION__/" in p for p in ppaths)
+    footer = part._footer_stat_entries(ppaths)
+    assert footer is not None
+    base = os.path.commonpath(ppaths)
+    agg = part._file_stat_entries(
+        _read_files(
+            spark, base, part.current_schema().to_spark().fields, base_path=base
+        )
+    )
+    assert _stat_view(footer) == _stat_view(agg)
+    assert {e["lower-bounds"]["b"] for e in footer} == {True, False}
+
+    # the stream sink: the same rows, its Arrow columns' stats
+    sink = catalog.create_table("stats_xcheck_sink", schema=schema, properties=props)
+    streamed = _sink_entries(sink, rows)
+    assert len(streamed) == 2
+    agg = sink._file_stat_entries(
+        spark.read.schema(sink.current_schema().to_spark()).parquet(
+            *[e["path"] for e in streamed]
+        )
+    )
+    assert _stat_view(streamed) == _stat_view(agg)
+    assert all(math.isnan(e["upper-bounds"]["d"]) for e in streamed)
+
+    # equality-key files: the data-file reader under exact ("full") modes
+    keys = ["i", "d", "dt", "ts", "tstz", "s"]
+    full = {c: "full" for c in keys}
+    key_entries = t._write_equality_deletes(t.to_df(), keys)
+    kpaths = [e["delete-file"] for e in key_entries]
+    footer = t._footer_stat_entries(kpaths, full)
+    assert footer is not None
+    key_schema = t.current_schema().to_spark()
+    agg = t._file_stat_entries(
+        spark.read.schema(_T.StructType([key_schema[c] for c in keys])).parquet(
+            *kpaths
+        ),
+        full,
+    )
+    assert _stat_view(footer) == _stat_view(agg)
+    for ke, fe in zip(key_entries, footer):
+        # key-bounds: the exact bounds of each key column holding no null
+        bounded = [c for c in keys if fe["null-counts"][c] == 0]
+        assert ke["key-bounds"]["lower"] == {c: fe["lower-bounds"][c] for c in bounded}
+
     dec = catalog.create_table(
         "stats_xcheck_dec", schema={"dec": "decimal(12, 3)", "d5": "decimal(5, 2)"}
     )
     D = decimal.Decimal
-    dec.append(
-        [
-            {"dec": D("1.125"), "d5": D("-0.5")},
-            {"dec": D("-2.5"), "d5": D("999.99")},
-            {"dec": None, "d5": None},
-        ]
-    )
+    dec_rows = [
+        {"dec": D("1.125"), "d5": D("-0.5")},
+        {"dec": D("-2.5"), "d5": D("999.99")},
+        {"dec": None, "d5": None},
+    ]
+    dec.append(dec_rows)
     paths = sorted(dec._entry_files(dec._current_entries()))
     footer = dec._footer_stat_entries(paths)
     assert footer is not None
-    agg = dec._file_stat_entries(
-        spark.read.schema(dec.current_schema().to_spark()).parquet(*paths)
-    )
+    dec_schema = dec.current_schema().to_spark()
+    agg = dec._file_stat_entries(spark.read.schema(dec_schema).parquet(*paths))
     assert footer == agg
     ents = dec._current_entries()
     for col, bounds in (("dec", (D("-2.5"), D("1.125"))), ("d5", (D("-0.5"), D("999.99")))):
         lo = min(D(e["lower-bounds"][col]) for e in ents if e["lower-bounds"].get(col))
         hi = max(D(e["upper-bounds"][col]) for e in ents if e["upper-bounds"].get(col))
         assert (lo, hi) == bounds
+    streamed = _sink_entries(dec, dec_rows)
+    agg = dec._file_stat_entries(
+        spark.read.schema(dec_schema).parquet(*[e["path"] for e in streamed])
+    )
+    assert _stat_view(streamed) == _stat_view(agg)
+    full = {"dec": "full", "d5": "full"}
+    kpaths = [
+        e["delete-file"] for e in dec._write_equality_deletes(dec.to_df(), list(full))
+    ]
+    footer = dec._footer_stat_entries(kpaths, full)
+    assert footer is not None
+    agg = dec._file_stat_entries(spark.read.schema(dec_schema).parquet(*kpaths), full)
+    assert _stat_view(footer) == _stat_view(agg)
+
+
+def test_partitioned_append_reads_footers_only(catalog, spark, monkeypatch):
+    """A partitioned parquet append takes every bound from the files'
+    footers and directories: no Spark stats job runs, and the
+    identity-partition columns (an escaped string, a double and the null
+    partition among them) record their directory values,
+    as the Spark aggregation reads them back."""
+    from iceberg_ruby_spark.table import Table, _read_files
+
+    def no_spark_job(*_a, **_k):
+        raise AssertionError("stats collected by a Spark aggregation")
+
+    monkeypatch.setattr(Table, "_file_stat_entries", no_spark_job)
+    t = catalog.create_table(
+        "foot_part",
+        schema={
+            "k": "int",
+            "s": "string",
+            "dt": "date",
+            "x": "double",
+            "v": "double",
+        },
+        partition_spec=[(c, "identity") for c in ("k", "s", "dt", "x")],
+    )
+    day = datetime.date(2024, 2, 29)
+    t.append(
+        [
+            {"k": 1, "s": "a/b=c %d", "dt": day, "x": 0.1, "v": 1.5},
+            {"k": 1, "s": "a/b=c %d", "dt": day, "x": 0.1, "v": -1.0},
+            {"k": None, "s": "plain", "dt": None, "x": 1e20, "v": 2.0},
+        ]
+    )
+    by_k = {e["lower-bounds"].get("k"): e for e in t._current_entries()}
+    assert set(by_k) == {1, None}
+    e = by_k[1]
+    assert e["upper-bounds"]["s"] == e["lower-bounds"]["s"] == "a/b=c %d"
+    assert (e["lower-bounds"]["dt"], e["upper-bounds"]["x"]) == ("2024-02-29", 0.1)
+    assert (e["lower-bounds"]["v"], e["upper-bounds"]["v"]) == (-1.0, 1.5)
+    assert by_k[None]["null-counts"]["k"] == by_k[None]["record-count"] == 1
+    rows = t.scan().filter("s = 'a/b=c %d' AND v > 0").to_a()
+    assert [r["v"] for r in rows] == [1.5]
+    monkeypatch.undo()
+    paths = sorted(t._entry_files(t._current_entries()))
+    base = os.path.commonpath(paths)
+    agg = t._file_stat_entries(
+        _read_files(spark, base, t.current_schema().to_spark().fields, base_path=base)
+    )
+    assert _stat_view(t._footer_stat_entries(paths)) == _stat_view(agg)
