@@ -456,9 +456,9 @@ class Catalog:
         ops = self._table_ops(loc, parts)
         os.makedirs(ops.data_dir, exist_ok=True)
         ops.commit(0, meta)
-        if location is not None and not self.table_exists(parts):
-            # a store whose first commit does not register the table
-            # (this FS warehouse, for a custom location) records it now
+        if location is not None and not ops.registered_by_commit:
+            # this FS warehouse: the table's files live elsewhere, so its
+            # warehouse entry is the pointer file _attach writes
             self._attach(parts, loc, ops.load())
         return Table(self.spark, loc, identifier=parts, catalog=self, io=self.io, ops=ops)
 

@@ -387,6 +387,8 @@ class RestTableOps(FsTableOps):
     (so a table registered into a filesystem catalog later reads
     identically)."""
 
+    registered_by_commit = True  # the server holds the version pointer
+
     def __init__(self, client: RestClient, parts: list[str], location: str, io):
         super().__init__(location, io=io)
         self.client = client

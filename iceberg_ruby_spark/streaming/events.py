@@ -194,9 +194,16 @@ def user_activity_stateful(
 
 def _checkpoint_sink_id(checkpoint_dir: str) -> str:
     """The replay-guard scope of a foreachBatch sink: its checkpoint
-    location, whose batch ids it continues across restarts."""
+    location, whose batch ids it continues across restarts.  A local
+    checkpoint has one id however it is spelled (``ck``, ``/tmp/ck/``,
+    ``file:///tmp/ck``): its absolute path."""
     ckpt = str(checkpoint_dir)
-    return ckpt if urllib.parse.urlparse(ckpt).scheme else os.path.abspath(ckpt)
+    url = urllib.parse.urlparse(ckpt)
+    if url.scheme == "file":
+        ckpt = urllib.parse.unquote(url.path)
+    elif url.scheme:
+        return ckpt.rstrip("/")
+    return os.path.abspath(ckpt)
 
 
 def _batch_summary(sink_id: str, batch_id: int) -> dict:

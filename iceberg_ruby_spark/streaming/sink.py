@@ -54,20 +54,21 @@ BATCH_ID_KEY = "streaming-batch-id"
 
 
 def last_committed_batch(table, sink_id: str) -> int:
-    """The highest ``streaming-batch-id`` the sink ``sink_id`` committed
-    to ``table``, or -1 — the exactly-once replay guard every streaming
-    sink shares: a micro-batch whose id is not above it was committed
-    before.  Batch ids restart at 0 with each checkpoint, so only the
-    same sink's commits count."""
-    last = -1
-    for s in table.snapshots:
+    """The ``streaming-batch-id`` of the newest snapshot the sink
+    ``sink_id`` committed to ``table``, or -1 — the exactly-once replay
+    guard every streaming sink shares: a micro-batch whose id is not
+    above it was committed before.  Batch ids restart at 0 with each
+    checkpoint, so only the same sink's commits count; a sink commits
+    its batches in id order, so its newest snapshot holds its highest
+    id and the walk stops there."""
+    for s in reversed(table.snapshots):
         summ = s.summary or {}
         if summ.get(SINK_ID_KEY) == sink_id:
             try:
-                last = max(last, int(summ.get(BATCH_ID_KEY, -1)))
+                return int(summ.get(BATCH_ID_KEY, -1))
             except (TypeError, ValueError):
                 pass
-    return last
+    return -1
 
 
 @dataclass

@@ -417,6 +417,14 @@ class FsTableOps:
         self.pointer: Optional[Any] = None
         self._hint = os.path.join(self.metadata_dir, "version-hint.text")
 
+    @property
+    def registered_by_commit(self) -> bool:
+        """Whether the first commit registers the table in its catalog:
+        true where a catalog holds the version pointer.  The FS layout's
+        pointer is the table's own hint, which lies outside the
+        warehouse for a custom location."""
+        return self.pointer is not None
+
     def _version_file(self, v: int) -> str:
         return os.path.join(self.metadata_dir, f"v{v}.json")
 

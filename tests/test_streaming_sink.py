@@ -79,6 +79,26 @@ def test_stream_to_table_guards_each_checkpoint(catalog, spark, tmp_path):
     assert sorted(r["k"] for r in t.refresh().to_a()) == [1, 2, 3, 4]
 
 
+def test_stream_to_table_replay_guard_follows_checkpoint_spelling(
+    catalog, spark, tmp_path
+):
+    """A batch Spark replays after a crash (its commit-log entry lost) is
+    skipped when the query restarts from the same checkpoint spelled as
+    a ``file:`` URI."""
+    from iceberg_ruby_spark.streaming import stream_to_table
+
+    t = catalog.create_table("respelled", schema={"k": "long"})
+    src = tmp_path / "src"
+    spark.createDataFrame([(1,), (2,)], "k long").write.parquet(str(src))
+    ck = tmp_path / "ck"
+    for spelling in (str(ck), ck.as_uri()):
+        stream = spark.readStream.schema("k long").parquet(str(src))
+        stream_to_table(stream, t, checkpoint_dir=spelling).awaitTermination()
+        for f in ("0", ".0.crc"):  # the crash: batch 0 runs again
+            os.remove(ck / "commits" / f)
+    assert sorted(r["k"] for r in t.refresh().to_a()) == [1, 2]
+
+
 def test_stream_upsert_to_table(catalog, spark, tmp_path):
     """CDC upsert sink: per-batch merge-on-read MERGE — keyed rows update
     in place, new keys insert, and in-batch duplicate keys collapse to the
