@@ -148,42 +148,27 @@ class ManifestContext:
 
 
 def bound_to_bytes(value: Any, t: Optional[ice_t.Type]) -> Optional[bytes]:
+    """A value of column type ``t`` — typed, or its JSON stat form — in the
+    spec's single-value binary form."""
     if value is None or t is None:
         return None
+    if isinstance(value, str) and not isinstance(t, ice_t.StringType):
+        value = parse_value(value, t)
+    v = _spec_encode(value, t)
     if isinstance(t, ice_t.BooleanType):
-        return b"\x01" if value else b"\x00"
-    if isinstance(t, ice_t.IntType):
-        return struct.pack("<i", int(value))
-    if isinstance(t, ice_t.LongType):
-        return struct.pack("<q", int(value))
+        return b"\x01" if v else b"\x00"
+    if isinstance(t, (ice_t.IntType, ice_t.DateType)):
+        return struct.pack("<i", int(v))
+    if isinstance(t, (ice_t.LongType, ice_t.TimestampType, ice_t.TimestampTzType)):
+        return struct.pack("<q", int(v))
     if isinstance(t, ice_t.FloatType):
-        return struct.pack("<f", float(value))
+        return struct.pack("<f", float(v))
     if isinstance(t, ice_t.DoubleType):
-        return struct.pack("<d", float(value))
-    if isinstance(t, ice_t.DateType):
-        d = _dt.date.fromisoformat(value) if isinstance(value, str) else value
-        return struct.pack("<i", (d - _EPOCH_DATE).days)
-    if isinstance(t, (ice_t.TimestampNanoType, ice_t.TimestampTzNanoType)):
-        # nanos timestamps surface as raw int64 (session reads them
-        # nanosAsLong); the stat value is already the spec payload
-        return struct.pack("<q", int(value))
-    if isinstance(t, (ice_t.TimestampType, ice_t.TimestampTzType)):
-        if isinstance(value, str):
-            value = _dt.datetime.fromisoformat(value.replace("T", " ", 1))
-        if isinstance(value, _dt.datetime):
-            if value.tzinfo is not None:
-                value = value.astimezone(_dt.timezone.utc).replace(tzinfo=None)
-            micros = (value - _EPOCH_DT) // _dt.timedelta(microseconds=1)
-            return struct.pack("<q", micros)
-        return struct.pack("<q", int(value))
+        return struct.pack("<d", float(v))
     if isinstance(t, ice_t.DecimalType):
-        unscaled = int(
-            _decimal.Decimal(str(value)).scaleb(t.scale).to_integral_value()
-        )
-        length = max(1, (unscaled.bit_length() + 8) // 8)
-        return unscaled.to_bytes(length, "big", signed=True)
+        return v
     if isinstance(t, ice_t.StringType):
-        return str(value).encode("utf-8")
+        return str(v).encode("utf-8")
     raise InvalidDataError(f"no single-value serialization for {t!r}")
 
 
@@ -451,66 +436,143 @@ MANIFEST_LIST_SCHEMA: dict[str, Any] = {
 
 _HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
 
+_INT_SPELLING = re.compile(r"[+-]?\d+")
+_DECIMAL_SPELLING = re.compile(r"[+-]?(\d+\.?\d*|\.\d+)([eE][+-]?\d+)?")
+_FLOAT_SPELLING = re.compile(r"[+-]?(\d+\.?\d*|\.\d+)([eE][+-]?\d+)?|NaN|[+-]?Infinity")
+_DATE_SPELLING = re.compile(r"(\d{4})-(\d{2})-(\d{2})")
+_TS_SPELLING = re.compile(
+    r"(\d{4})-(\d{2})-(\d{2})(?:[ T](\d{2}):(\d{2})(?::(\d{2})(?:\.(\d{1,6}))?)?)?"
+    r"(Z|[+-]\d{2}:\d{2})?"
+)
+# exact for every decimal(38, s) value and its rescaling
+_DECIMAL_CTX = _decimal.Context(prec=80)
 
-def _parse_partition_value(raw: str, t: ice_t.Type) -> Any:
-    if isinstance(t, (ice_t.IntType, ice_t.LongType)):
-        return int(raw)
+
+def parse_value(raw: str, t: ice_t.Type) -> Any:
+    """``raw`` as a value of column type ``t`` — the one typed parser of
+    directory values, stored bound strings and quoted filter literals.
+
+    It reads a spelling only where Spark's ANSI-off cast of that string
+    to ``t`` certainly yields the value returned, and raises ValueError
+    for every other spelling (Spark's null, truncation and rounding
+    cases among them), so no caller guesses: ints and longs in range;
+    ``true``/``false``; decimal and float digits (floats rounded to
+    float precision); a decimal holding no more digits than ``t`` has,
+    at its scale; a date ``YYYY-MM-DD``, optionally followed by a space
+    or ``T`` and anything (Spark ignores the rest); a timestamp
+    ``YYYY-MM-DD[( |T)HH:MM[:SS[.ffffff]]]`` as a naive datetime — with
+    a ``Z`` / ``±HH:MM`` offset only for ``timestamptz``, normalized to
+    UTC, the session zone.  Nanosecond timestamps are longs; strings and
+    the types without a spelling rule come back unchanged."""
     if isinstance(t, ice_t.BooleanType):
-        return raw.lower() == "true"
-    if isinstance(t, (ice_t.FloatType, ice_t.DoubleType)):
-        return float(raw)
+        if raw in ("true", "false"):
+            return raw == "true"
+    elif isinstance(
+        t,
+        (ice_t.IntType, ice_t.LongType, ice_t.TimestampNanoType,
+         ice_t.TimestampTzNanoType),
+    ):
+        if _INT_SPELLING.fullmatch(raw):
+            v = int(raw)
+            lim = 2**31 if isinstance(t, ice_t.IntType) else 2**63
+            if -lim <= v < lim:
+                return v
+    elif isinstance(t, (ice_t.FloatType, ice_t.DoubleType)):
+        if _FLOAT_SPELLING.fullmatch(raw):
+            v = float(raw)
+            if isinstance(t, ice_t.FloatType):
+                v = struct.unpack("<f", struct.pack("<f", v))[0]
+            return v
+    elif isinstance(t, ice_t.DecimalType):
+        if _DECIMAL_SPELLING.fullmatch(raw):
+            unscaled = _decimal.Decimal(raw).scaleb(t.scale, _DECIMAL_CTX)
+            if unscaled == unscaled.to_integral_value() and (
+                abs(unscaled) < 10**t.precision
+            ):
+                return _decimal.Decimal(int(unscaled)).scaleb(-t.scale, _DECIMAL_CTX)
+    elif isinstance(t, ice_t.DateType):
+        m = _DATE_SPELLING.match(raw)
+        if m and (m.end() == len(raw) or raw[m.end()] in " T"):
+            return _dt.date(*map(int, m.groups()))
+    elif isinstance(t, (ice_t.TimestampType, ice_t.TimestampTzType)):
+        m = _TS_SPELLING.fullmatch(raw)
+        if m and (m[8] is None or isinstance(t, ice_t.TimestampTzType)):
+            y, mo, d, h, mi, s, frac = (int(x or 0) for x in m.groups()[:7])
+            v = _dt.datetime(y, mo, d, h, mi, s, int((m[7] or "0").ljust(6, "0")))
+            if m[8] not in (None, "Z"):
+                off = int(m[8][1:3]) * 60 + int(m[8][4:])
+                if off > 18 * 60:
+                    raise ValueError(f"offset out of range: {raw!r}")
+                v -= _dt.timedelta(minutes=off if m[8][0] == "+" else -off)
+            return v
+    else:
+        return raw
+    raise ValueError(f"not a {t!r} spelling: {raw!r}")
+
+
+def _spec_encode(v: Any, t: ice_t.Type) -> Any:
+    """A typed value of column type ``t`` (:func:`parse_value`) in the
+    form the spec stores it in a partition tuple, and the payload of its
+    single-value binary form: dates as days, timestamps as micros (an
+    aware one taken to UTC; nanosecond timestamps are longs already),
+    decimals as unscaled big-endian bytes."""
+    if v is None:
+        return None
     if isinstance(t, ice_t.DateType):
-        return (_dt.date.fromisoformat(raw) - _EPOCH_DATE).days
+        return (v - _EPOCH_DATE).days
     if isinstance(t, (ice_t.TimestampNanoType, ice_t.TimestampTzNanoType)):
-        return int(raw)
+        return v
     if isinstance(t, (ice_t.TimestampType, ice_t.TimestampTzType)):
-        d = _dt.datetime.fromisoformat(raw.replace("T", " ", 1))
-        if d.tzinfo is not None:
-            d = d.astimezone(_dt.timezone.utc).replace(tzinfo=None)
-        return (d - _EPOCH_DT) // _dt.timedelta(microseconds=1)
+        if not isinstance(v, _dt.datetime):
+            return v
+        if v.tzinfo is not None:
+            v = v.astimezone(_dt.timezone.utc).replace(tzinfo=None)
+        return (v - _EPOCH_DT) // _dt.timedelta(microseconds=1)
     if isinstance(t, ice_t.DecimalType):
-        unscaled = int(_decimal.Decimal(raw).scaleb(t.scale).to_integral_value())
+        unscaled = int(_decimal.Decimal(v).scaleb(t.scale, _DECIMAL_CTX).to_integral_value())
         length = max(1, (unscaled.bit_length() + 8) // 8)
         return unscaled.to_bytes(length, "big", signed=True)
-    return raw
+    return v
 
 
-def _spec_partition_value(raw: str, p: dict[str, Any]) -> Any:
-    """Directory value → Iceberg-SPEC partition value.  The engine's
-    temporal directories use calendar-friendly encodings (year=2020,
-    month=year*12+month-1, day=ISO date) that prune identically
-    internally; the spec defines year/month as offsets FROM 1970 and day
-    as a date — convert at this interop boundary so external engines
-    evaluating ``year(ts)=50``-style residuals prune correctly."""
-    tr = p.get("transform", "")
-    if tr == "year":
-        return int(raw) - 1970
-    if tr == "month":
-        return int(raw) - 1970 * 12
-    return _parse_partition_value(raw, p["type"])
+def dir_partition_values(path: str) -> dict[str, str]:
+    """``{name: value}`` from the ``name=value`` directory segments of a
+    data-file path (Spark's partitioned layout; values URL-unescaped)."""
+    out: dict[str, str] = {}
+    for seg in path.split("/")[:-1]:
+        if "=" in seg:
+            k, _, v = seg.partition("=")
+            out[k] = urllib.parse.unquote(v)
+    return out
 
 
-def partition_values_from_path(
+# the spec's year/month partition values count from 1970
+_SPEC_OFFSETS = {"year": 1970, "month": 1970 * 12}
+
+
+def typed_partition_values(
     path: str, pfields: list[dict[str, Any]]
 ) -> dict[str, Any]:
     """Spark writes hive-style ``name=value`` directories; the spec
-    manifest stores the typed partition tuple per file.  Unknown or
-    missing segments (and ``__HIVE_DEFAULT_PARTITION__``) become null."""
-    segs: dict[str, str] = {}
-    for part in path.split("/"):
-        if "=" in part:
-            k, _, v = part.partition("=")
-            segs[k] = urllib.parse.unquote(v)
+    manifest stores the typed partition tuple per file (here still as
+    Python values, :func:`_spec_encode` gives the stored form).  Unknown
+    or missing segments (and ``__HIVE_DEFAULT_PARTITION__``) become
+    null.  The engine's temporal directories use calendar-friendly
+    encodings (year=2020, month=year*12+month-1, day=ISO date) that prune
+    identically internally; the spec defines year/month as offsets FROM
+    1970 and day as a date — converted at this interop boundary so
+    external engines evaluating ``year(ts)=50``-style residuals prune
+    correctly."""
+    segs = dir_partition_values(path)
     out: dict[str, Any] = {}
     for p in pfields:
-        raw = segs.get(p["name"])
-        if raw is None or raw == _HIVE_NULL:
-            out[p["avro_name"]] = None
-        else:
-            try:
-                out[p["avro_name"]] = _spec_partition_value(raw, p)
-            except (ValueError, ArithmeticError):
-                out[p["avro_name"]] = None
+        raw = segs.get(p["name"], _HIVE_NULL)
+        try:
+            v = None if raw == _HIVE_NULL else parse_value(raw, p["type"])
+        except (ValueError, ArithmeticError):
+            v = None
+        off = _SPEC_OFFSETS.get(p["transform"])
+        out[p["avro_name"]] = v if v is None or off is None else v - off
     return out
 
 
@@ -598,18 +660,32 @@ def stat_value(v: Any) -> Any:
     return v
 
 
-def merge_bounds(los: list, his: list) -> tuple:
+def _nan_last(v: Any) -> tuple:
+    return (1, 0.0) if v != v else (0, v)  # NaN is the one value != itself
+
+
+def stat_order(t: Optional[ice_t.Type]):
+    """Sort key putting column type ``t``'s JSON stat forms (and the
+    values a bound filter literal compares as) in value order, or None
+    where they already sort that way — ints, booleans, strings and the
+    ISO forms of dates and timestamps.  Decimals (strings) compare as
+    Decimal; floats put NaN greatest, as Spark SQL and parquet-mr do."""
+    if isinstance(t, ice_t.DecimalType):
+        return _decimal.Decimal
+    if isinstance(t, (ice_t.FloatType, ice_t.DoubleType)):
+        return _nan_last
+    return None
+
+
+def merge_bounds(los: list, his: list, key=None) -> tuple:
     """(least of ``los``, greatest of ``his``) under the one order every
-    bound follows: NaN sorts greatest, as in Spark SQL and parquet-mr.  A
-    NaN anywhere makes the upper bound NaN; the lower bound is NaN only
-    when every value is.  A column's values share one type, so only float
-    columns pay for the NaN pass; the rest take builtin min and max."""
-    if type(his[0]) is not float:
-        return min(los), max(his)
-    finite = [v for v in los if v == v]  # NaN is the one value != itself
-    lo = min(finite) if finite else math.nan
-    hi = math.nan if any(v != v for v in his) else max(his)
-    return lo, hi
+    bound follows: ``key`` is the column type's :func:`stat_order` for
+    stat forms; values in their own Python types need none but floats,
+    whose NaN sorts greatest.  A NaN anywhere makes the upper bound NaN;
+    the lower bound is NaN only when every value is."""
+    if key is None and type(his[0]) is float:
+        key = _nan_last
+    return min(los, key=key), max(his, key=key)
 
 
 def finish_stats(modes: dict[str, str], parts: dict[str, tuple]) -> tuple:
@@ -943,7 +1019,9 @@ def write_avro_manifests(
 
     seq = ctx.sequence_number
 
-    def _list_entry(path: str, length: int, content: int, records, dseqs, spec_id):
+    def _list_entry(
+        path: str, length: int, content: int, records, dseqs, spec_id, parts
+    ):
         """Manifest-file record with spec status-split counters:
         added_* counts status=ADDED entries (this commit's sequence),
         existing_* the carried ones keeping their original data sequence
@@ -951,10 +1029,14 @@ def write_avro_manifests(
         seq N applies only to data files with data seq < N).
 
         ``partitions`` carries the spec's per-partition-field summaries
-        (field_summary: contains_null + binary lower/upper bounds over
-        the manifest's files, r13) — what an EXTERNAL Iceberg reader
-        uses to skip whole manifests during scan planning, the spec twin
-        of the engine's richer per-column extras summaries."""
+        (field_summary: contains_null, contains_nan and binary
+        lower/upper bounds over the manifest's files) — what an EXTERNAL
+        Iceberg reader uses to skip whole manifests during scan planning,
+        the spec twin of the engine's richer per-column extras summaries.
+        ``parts`` holds each record's typed partition values
+        (:func:`typed_partition_values`); they merge in their own type
+        and are encoded once.  As the spec asks, NaN sets contains_nan
+        and stays out of the bounds."""
         added = [r for r in records if r["status"] == 1]
         existing = [r for r in records if r["status"] == 0]
         summaries = None
@@ -962,28 +1044,19 @@ def write_avro_manifests(
         if pfields_s and records:
             summaries = []
             for p in pfields_s:
-                vals = [
-                    r["data_file"]["partition"].get(p["avro_name"])
-                    for r in records
-                ]
+                vals = [pt.get(p["avro_name"]) for pt in parts]
                 non_null = [v for v in vals if v is not None]
-                fs = {
-                    "contains_null": any(v is None for v in vals),
-                    "contains_nan": None,
-                    "lower_bound": None,
-                    "upper_bound": None,
-                }
-                if non_null:
-                    try:
-                        fs["lower_bound"] = bound_to_bytes(
-                            min(non_null), p["type"]
-                        )
-                        fs["upper_bound"] = bound_to_bytes(
-                            max(non_null), p["type"]
-                        )
-                    except TypeError:
-                        pass  # mixed/unorderable values: bounds omitted
-                summaries.append(fs)
+                floats = isinstance(p["type"], (ice_t.FloatType, ice_t.DoubleType))
+                values = [v for v in non_null if v == v]  # NaN != itself
+                lo, hi = merge_bounds(values, values) if values else (None, None)
+                summaries.append(
+                    {
+                        "contains_null": len(non_null) < len(vals),
+                        "contains_nan": len(values) < len(non_null) if floats else None,
+                        "lower_bound": bound_to_bytes(lo, p["type"]),
+                        "upper_bound": bound_to_bytes(hi, p["type"]),
+                    }
+                )
         return {
             "manifest_path": path,
             "manifest_length": length,
@@ -1033,7 +1106,7 @@ def write_avro_manifests(
     m_idx = 0
     for spec_id, group in _groups("path"):
         pfields = _partition_fields(ctx, spec_id)
-        records, extras = [], []
+        records, extras, parts = [], [], []
         dseqs = []
         for e in group:
             sid = e.get("schema-id", ctx.current_schema_id)
@@ -1041,11 +1114,15 @@ def write_avro_manifests(
             abs_path = ops._abs(e["path"])
             dseq, status, seq_field = _entry_seq(e)
             dseqs.append(dseq)
+            parts.append(typed_partition_values(abs_path, pfields))
             data_file = {
                 "content": 0,
                 "file_path": abs_path,
                 "file_format": "PARQUET",
-                "partition": partition_values_from_path(abs_path, pfields),
+                "partition": {
+                    p["avro_name"]: _spec_encode(parts[-1][p["avro_name"]], p["type"])
+                    for p in pfields
+                },
                 "record_count": e.get("record-count") or 0,
                 "file_size_in_bytes": e.get("file-size-bytes")
                 or ops.io.size(abs_path)
@@ -1093,11 +1170,14 @@ def write_avro_manifests(
         m_idx += 1
         length = _write_manifest_file(mpath, records, extras, "data", spec_id, pfields)
         list_records.append(
-            _list_entry(ops._abs(mpath), length, 0, records, dseqs, spec_id)
+            _list_entry(ops._abs(mpath), length, 0, records, dseqs, spec_id, parts)
         )
         rel_m = ops._rel(ops._abs(mpath))
         list_rels.append(rel_m)
-        summaries[rel_m] = _manifest_summary(group)
+        summaries[rel_m] = _manifest_summary(
+            group,
+            ctx.schemas_by_id.get(group[0].get("schema-id", ctx.current_schema_id)),
+        )
 
     for spec_id, group in _groups("delete-file"):
         pfields = _partition_fields(ctx, spec_id)
@@ -1179,7 +1259,10 @@ def write_avro_manifests(
         m_idx += 1
         length = _write_manifest_file(mpath, records, extras, "deletes", spec_id, pfields)
         list_records.append(
-            _list_entry(ops._abs(mpath), length, 1, records, dseqs, spec_id)
+            _list_entry(
+                ops._abs(mpath), length, 1, records, dseqs, spec_id,
+                [{}] * len(records),
+            )
         )
         list_rels.append(ops._rel(ops._abs(mpath)))
 
@@ -1221,7 +1304,9 @@ def _bounds_from_spec(
     return out
 
 
-def _manifest_summary(data: list[dict[str, Any]]) -> dict[str, Any]:
+def _manifest_summary(
+    data: list[dict[str, Any]], schema: Optional[ice_t.Schema]
+) -> dict[str, Any]:
     """Conservative COLUMN summary of one data manifest's (non-empty)
     entries for manifest pruning (the engine twin of the Iceberg
     manifest-list rows' partition field summaries, generalized to column
@@ -1231,12 +1316,15 @@ def _manifest_summary(data: list[dict[str, Any]]) -> dict[str, Any]:
 
     Soundness: a column appears ONLY when every data entry in the manifest
     records both bounds for it (a bound-less file could hold anything);
-    ``lo``/``hi`` merge the files' conservative bounds (:func:`merge_bounds`:
+    ``lo``/``hi`` merge the files' conservative bounds in the column's
+    type from ``schema`` (:func:`merge_bounds` under :func:`stat_order`:
     a file's NaN upper bound makes the manifest's NaN), so the manifest
     range is conservative too; ``nulls`` (summed) appears only when every
     file records a null count; ``rows`` only when every file records a
     row count.  Values are the entries' stored JSON-stat forms — mixed
-    non-comparable types drop the column."""
+    non-comparable types drop the column.  ``typed`` marks a summary
+    merged this way: earlier ones merged decimal strings as text, so
+    :func:`_summary_excludes` never prunes a decimal on them."""
     rows: Optional[int] = 0
     for e in data:
         rc = e.get("record-count")
@@ -1267,26 +1355,35 @@ def _manifest_summary(data: list[dict[str, Any]]) -> dict[str, Any]:
                 nulls += nc
         if not ok:
             continue
+        f = schema.field_by_name(c) if schema is not None else None
         try:
-            lo, hi = merge_bounds(los, his)
-        except TypeError:
+            lo, hi = merge_bounds(los, his, stat_order(f and f.field_type))
+        except (TypeError, ArithmeticError):
             continue  # mixed bound types: not comparable, skip the column
         entry = {"lo": lo, "hi": hi}
         if have_nulls:
             entry["nulls"] = nulls
         cols[c] = entry
-    return {"rows": rows, "cols": cols}
+    return {"rows": rows, "cols": cols, "typed": True}
 
 
 def _summary_excludes(summary: Optional[dict[str, Any]], trees) -> bool:
     """True when a manifest summary PROVES no file in the manifest can
-    contain a row matching every filter tree — the manifest is then
-    full-miss and need not be opened."""
-    from iceberg_ruby_spark.table import _bounds_may_match
+    contain a row matching every bound filter tree — the manifest is
+    then full-miss and need not be opened."""
+    from iceberg_ruby_spark.table import _bounds_may_match, _leaves
 
     if not summary:
         return False
     cols = summary.get("cols") or {}
+    if not summary.get("typed"):
+        text_merged = {
+            leaf[1]
+            for t in trees
+            for leaf in _leaves(t)
+            if leaf[4] is _decimal.Decimal
+        }
+        cols = {c: v for c, v in cols.items() if c not in text_merged}
     pseudo = {
         "lower-bounds": {c: v["lo"] for c, v in cols.items()},
         "upper-bounds": {c: v["hi"] for c, v in cols.items()},

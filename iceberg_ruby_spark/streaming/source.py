@@ -117,16 +117,17 @@ def _is_delete_entry(e: dict[str, Any]) -> bool:
 
 
 def _overlap_groups(
-    entry_for: dict[str, dict], paths: list[str], col: str
+    entry_for: dict[str, dict], paths: list[str], col: str, key=None
 ) -> Optional[list[list[str]]]:
     """Group files by interval overlap of their manifest [lower, upper]
-    bounds on ``col`` — the planning primitive behind distributed content
-    diffs.  Soundness: bounds are CONSERVATIVE (string truncation only
-    widens them), so two files holding an equal row always land in one
-    group; files that may hold NULLs (positive or unrecorded null-count)
-    all merge together, since bounds never witness NULLs.  Returns None
-    when the column can't split (missing stats on any file, or
-    non-comparable bound types) — the caller tries the next column."""
+    bounds on ``col``, compared under ``key`` (the column type's
+    ``manifests.stat_order``) — the planning primitive behind distributed
+    content diffs.  Soundness: bounds are CONSERVATIVE (string truncation
+    only widens them), so two files holding an equal row always land in
+    one group; files that may hold NULLs (positive or unrecorded
+    null-count) all merge together, since bounds never witness NULLs.
+    Returns None when the column can't split (missing stats on any file,
+    or non-comparable bound types) — the caller tries the next column."""
     ivs = []
     for p in paths:
         e = entry_for.get(p) or {}
@@ -137,6 +138,8 @@ def _overlap_groups(
         nc = (e.get("null-counts") or {}).get(col)
         ivs.append((lo, hi, nc is None or nc > 0, p))
     try:
+        if key is not None:
+            ivs = [(key(lo), key(hi), hn, p) for lo, hi, hn, p in ivs]
         ivs.sort(key=lambda t: (t[0], t[1]))
         # sweep-merge: sorted by lower bound, a file joins the open group
         # while its lower bound sits at-or-under the group's running max
@@ -151,7 +154,7 @@ def _overlap_groups(
                 g[2] = g[2] or hn
             else:
                 groups.append([[p], hi, hn])
-    except TypeError:
+    except (TypeError, ArithmeticError):
         return None  # mixed bound types — not provably comparable
     out = [sorted(g[0]) for g in groups if not g[2]]
     nullers = sorted(x for g in groups if g[2] for x in g[0])
@@ -338,7 +341,8 @@ class EngineTableStreamReader(DataSourceStreamReader):
             # first one at-or-after ts (ts before table creation => full
             # history; ts in the future => only new commits)
             self._starting = prior
-        self._columns = [f.name for f in _current_schema(meta).fields]
+        self._schema = _current_schema(meta)
+        self._columns = [f.name for f in self._schema.fields]
         # Arrow target schemas for executor emission: read() yields
         # ``pyarrow.RecordBatch`` (the Python DataSource runtime forwards
         # them through the worker boundary verbatim — no per-row pickle),
@@ -927,7 +931,7 @@ class EngineTableStreamReader(DataSourceStreamReader):
         pre: list[tuple[str, dict, Any]] = []
         for pe in prior_del_entries:
             if pe.get("content") == "equality-deletes":
-                pre.append(("seq", pe, _compile_seq_scope(pe)))
+                pre.append(("seq", pe, _compile_seq_scope(pe, self._schema)))
             else:
                 pre.append(
                     ("plain", pe, {ops._abs(p) for p in _touched_files(pe)})
@@ -1006,7 +1010,7 @@ class EngineTableStreamReader(DataSourceStreamReader):
                 touched = [
                     ops._abs(de["path"])
                     for de in _seq_scope_touched(
-                        e, [d for d in prior_data if "path" in d]
+                        e, [d for d in prior_data if "path" in d], self._schema
                     )
                 ]
             else:
@@ -1088,7 +1092,7 @@ class EngineTableStreamReader(DataSourceStreamReader):
                 continue
             if e.get("content") == "equality-deletes":
                 # ONE compile per delete, not per (delete, file) pair
-                scope = _compile_seq_scope(e)
+                scope = _compile_seq_scope(e, self._schema)
                 touched |= {
                     p for p, de in cand.items()
                     if _seq_scope_applies(scope, de)
@@ -1116,7 +1120,7 @@ class EngineTableStreamReader(DataSourceStreamReader):
             # (path, entry) pair
             compiled = {
                 id(e): (
-                    _compile_seq_scope(e)
+                    _compile_seq_scope(e, self._schema)
                     if e.get("content") == "equality-deletes"
                     else None if e.get("applies-to") is None
                     else {ops._abs(p) for p in e["applies-to"]}
@@ -1197,8 +1201,12 @@ class EngineTableStreamReader(DataSourceStreamReader):
         if len(paths) <= 1:
             return [list(paths)]
         best: Optional[list[list[str]]] = None
-        for col in self._columns:
-            groups = _overlap_groups(entry_for, paths, col)
+        from iceberg_ruby_spark.manifests import stat_order
+
+        for f in self._schema.fields:
+            groups = _overlap_groups(
+                entry_for, paths, f.name, stat_order(f.field_type)
+            )
             if groups is not None and (best is None or len(groups) > len(best)):
                 best = groups
         if best is None or len(best) <= 1:

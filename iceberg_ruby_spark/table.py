@@ -55,6 +55,7 @@ import os
 import time
 import uuid as uuid_mod
 from dataclasses import dataclass
+from decimal import Decimal
 from typing import Any, Iterable, Iterator, Optional, Sequence, Union
 
 from pyspark.sql import DataFrame, SparkSession
@@ -71,17 +72,23 @@ from iceberg_ruby_spark._localdf import small_local_df
 from iceberg_ruby_spark import types as ice_t
 from iceberg_ruby_spark.avro_file import read_ocf
 from iceberg_ruby_spark.manifests import (
+    _HIVE_NULL,
     MANIFEST_FORMAT_PROPERTY,
     STATS_TYPES,
     ManifestContext,
+    _result_type,
+    dir_partition_values,
     finish_stats,
     footer_stats,
     manifest_paths,
     metrics_truncate_len,
+    parse_value,
     read_avro_manifest_delta,
     read_avro_manifest_list,
     stat_entry,
     stat_modes,
+    stat_order,
+    stat_value,
     write_avro_manifests,
 )
 from iceberg_ruby_spark.transforms import (
@@ -801,7 +808,7 @@ def _absent_defaults(path: str, fmt: str, written: ice_t.Schema) -> tuple:
         import pyarrow.parquet as _pq
 
         names = set(_pq.read_schema(local).names)
-    names |= set(_parse_dir_partition_values(local))
+    names |= set(dir_partition_values(local))
     return tuple(f.field_id for f in defaulted if f.name not in names)
 
 
@@ -2863,7 +2870,7 @@ class Table:
         for path in sorted(paths):
             if not os.path.isfile(path):
                 return None  # non-local IO — let Spark read it
-            dirs = _parse_dir_partition_values(os.path.relpath(path, self.ops.data_dir))
+            dirs = dir_partition_values(os.path.relpath(path, self.ops.data_dir))
             try:
                 partition = {
                     c: _dir_stat_value(v, identity[c])
@@ -3294,9 +3301,8 @@ class Table:
         mor = [e for e in entries if "delete-file" in e]
         return data, mor
 
-    @staticmethod
     def _live_deletes(
-        dels: list[dict[str, Any]], kept_entries: list[dict[str, Any]]
+        self, dels: list[dict[str, Any]], kept_entries: list[dict[str, Any]]
     ) -> list[dict[str, Any]]:
         """Delete entries still needed after a rewrite that keeps
         ``kept_entries``.  A positional or DV entry is scoped to the files
@@ -3310,7 +3316,7 @@ class Table:
         out = []
         for e in dels:
             if e.get("content") == "equality-deletes":
-                if _seq_scope_touched(e, kept_data):
+                if _seq_scope_touched(e, kept_data, self.current_schema()):
                     out.append(e)
                 continue
             ap = e.get("applies-to")
@@ -3357,7 +3363,7 @@ class Table:
             if not _bounds_may_match(e, tree):
                 continue
             if pfields:
-                pvals = _parse_dir_partition_values(e["path"])
+                pvals = dir_partition_values(e["path"])
                 if pvals and not _partition_may_match(pvals, tree, pfields, schema):
                     continue
             out.append(e)
@@ -3523,7 +3529,9 @@ class Table:
                         # sequence the delete no longer covers); likewise
                         # a positional / DV delete naming such a file
                         if (
-                            _seq_scope_touched(e, removed_base_entries)
+                            _seq_scope_touched(
+                                e, removed_base_entries, self.current_schema()
+                            )
                             if e.get("content") == "equality-deletes"
                             else set(e.get("applies-to") or ()) & removed_here
                         ):
@@ -3540,7 +3548,9 @@ class Table:
                         if (
                             e.get("content") == "equality-deletes"
                             and _entry_key(e) not in base_keys
-                            and _seq_scope_touched(e, concurrent_added)
+                            and _seq_scope_touched(
+                                e, concurrent_added, self.current_schema()
+                            )
                         ):
                             raise InvalidDataError(
                                 "commit conflict: a concurrent append added "
@@ -4008,8 +4018,26 @@ class Table:
         hold no row matching ``cond_str`` (kept whole when the condition is
         not a string :func:`_parse_predicate` can parse).  Delete entries
         always pass through."""
-        tree = _parse_predicate(cond_str) if cond_str is not None else None
+        tree = self._bound_predicate(cond_str)
         return entries if tree is None else self._prune_by_stats(entries, tree)
+
+    def _column_types(self) -> dict[str, ice_t.Type]:
+        """Column name → type, what filter literals bind to
+        (:func:`_bind`): the current schema's columns and the shredded
+        variant columns, typed by their shred spec."""
+        from iceberg_ruby_spark.table_definition import parse_type
+
+        types = {f.name: f.field_type for f in self.current_schema().fields}
+        for items in self.variant_shred_specs().values():
+            for _path, typ, name in items:
+                types[name] = parse_type(typ)
+        return types
+
+    def _bound_predicate(self, s: Optional[str]):
+        """``s`` parsed and bound to this table's columns (:func:`_bind`),
+        or None when it is not a string :func:`_parse_predicate` reads."""
+        tree = _parse_predicate(s) if s is not None else None
+        return None if tree is None else _bind(tree, self._column_types())
 
     def _positional_delete_build(
         self, cur_entries: list[dict[str, Any]], cond, cond_str: Optional[str] = None
@@ -4790,7 +4818,7 @@ class Table:
             return n_keys
         tree = None
         if scope is not None:
-            tree = _parse_predicate(scope)
+            tree = self._bound_predicate(scope)
             if tree is None:
                 raise InvalidDataError(
                     "delete_by_keys(scope=...) needs a parseable predicate "
@@ -4831,7 +4859,9 @@ class Table:
                         {
                             d["path"]
                             for e in delete_entries
-                            for d in _seq_scope_touched(e, excluded)
+                            for d in _seq_scope_touched(
+                                e, excluded, self.current_schema()
+                            )
                         }
                     )
                     if suspect:
@@ -5545,7 +5575,7 @@ class Table:
         dels: list[dict[str, Any]] = []
         if where is not None:
             data, dels = self._split_entries(entries)
-            tree = _parse_predicate(where)
+            tree = self._bound_predicate(where)
             if tree is None:
                 raise InvalidDataError(
                     "compact(where=...) needs a parseable predicate "
@@ -6278,7 +6308,11 @@ def _shred_col_name(col: str, path: str, typ: str) -> str:
 
 def _parse_predicate(s: str, shred_map: Optional[dict] = None):
     """Parse ``col op literal`` / AND / OR / parens into a tree, or None if
-    the expression is outside the supported shape.
+    the expression is outside the supported shape.  Leaves are
+    ``("cmp", col, op, literal)`` and ``("in", col, negated, literals)``,
+    a quoted literal as its str and a number token exactly (int, or
+    Decimal with a point); consumers read the tree only once
+    :func:`_bind` has typed it to the table's columns.
 
     ``shred_map`` maps ``(col, path, type)`` → shredded physical column
     name: with it, a ``[try_]variant_get(col, '$.p', 'type')``
@@ -6364,9 +6398,9 @@ def _parse_predicate(s: str, shred_map: Optional[dict] = None):
                 return None
         op = take()
         if op is not None and op.upper() in ("IN", "NOT"):
-            # col IN (a, b, …)  →  OR of equalities (bounds prune per
-            # disjunct; the bloom prunes files rejecting EVERY value);
-            # col NOT IN (…)    →  AND of inequalities
+            # col [NOT] IN (a, b, …) stays one node: Spark types its
+            # literals together with the column, so :func:`_bind`
+            # expands it into OR of equalities (AND of inequalities)
             neg = op.upper() == "NOT"
             if neg and (peek() is None or take().upper() != "IN"):
                 return None
@@ -6374,26 +6408,16 @@ def _parse_predicate(s: str, shred_map: Optional[dict] = None):
                 return None
             vals = []
             while True:
-                lit = take()
-                if lit is None or lit in (",", "(", ")"):
+                val = literal(take())
+                if val is None:
                     return None
-                if lit.startswith("'"):
-                    vals.append(lit[1:-1].replace("''", "'"))
-                else:
-                    try:
-                        vals.append(float(lit) if "." in lit else int(lit))
-                    except ValueError:
-                        return None
+                vals.append(val)
                 nxt = take()
                 if nxt == ")":
                     break
                 if nxt != ",":
                     return None
-            node = ("cmp", col, "!=" if neg else "=", vals[0])
-            for v in vals[1:]:
-                leaf = ("cmp", col, "!=" if neg else "=", v)
-                node = ("and", node, leaf) if neg else ("or", node, leaf)
-            return node
+            return ("in", col, neg, vals)
         if op is not None and op.upper() == "IS":
             neg = peek() is not None and peek().upper() == "NOT"
             if neg:
@@ -6403,124 +6427,56 @@ def _parse_predicate(s: str, shred_map: Optional[dict] = None):
             return ("cmp", col, "notnull" if neg else "isnull", None)
         if op not in ("=", "<", "<=", ">", ">=", "!=", "<>"):
             return None
-        lit = take()
-        if lit is None:
+        val = literal(take())
+        if val is None:
             return None
-        if lit.startswith("'"):
-            val: Any = lit[1:-1].replace("''", "'")
-        else:
-            try:
-                val = float(lit) if "." in lit else int(lit)
-            except ValueError:
-                return None
         return ("cmp", col, "!=" if op == "<>" else op, val)
+
+    def literal(tok):
+        """A quoted literal as its str, a number token exactly (int, or
+        Decimal when it has a point), anything else None."""
+        if tok is None:
+            return None
+        if tok.startswith("'"):
+            return tok[1:-1].replace("''", "'")
+        if re.fullmatch(r"-?\d+", tok):
+            return int(tok)
+        if re.fullmatch(r"-?\d+\.\d*", tok):
+            return Decimal(tok)
+        return None
 
     node = parse_or()
     return node if node is not None and pos[0] == len(toks) else None
 
 
-_ISO_TEMPORAL = re.compile(r"^\d{4}-\d{2}-\d{2}([T ].+)?$")
-
-
-def _parse_temporal(s: Any):
-    """datetime for an ISO date/timestamp string, else None.  Bounds are
-    stored via isoformat() ('2024-01-01T05:00:00'); SQL literals usually
-    use a space separator — both parse here."""
-    import datetime as _dt
-
-    if not isinstance(s, str) or not _ISO_TEMPORAL.match(s):
-        return None
-    txt = s.replace("T", " ", 1)
-    try:
-        if len(txt) == 10:
-            return _dt.datetime.fromisoformat(txt + " 00:00:00")
-        return _dt.datetime.fromisoformat(txt)
-    except ValueError:
-        return None
-
-
-def _parse_dir_partition_values(path: str) -> dict[str, str]:
-    """``{name: value}`` from the ``name=value`` directory segments of a
-    data-file path (Spark's partitioned layout; values URL-unescaped)."""
-    import urllib.parse
-
-    out: dict[str, str] = {}
-    for seg in path.split(os.sep)[:-1]:
-        if "=" in seg:
-            k, _, v = seg.partition("=")
-            out[k] = urllib.parse.unquote(v)
-    return out
+# identity-partition types whose directory spelling reads back as the
+# collected value (timestamps are written in the session time zone,
+# floats at float precision; decimals are left to the aggregation)
+_DIR_STAT_TYPES = (ice_t.IntType, ice_t.LongType, ice_t.StringType, ice_t.DateType,
+                   ice_t.BooleanType, ice_t.DoubleType)
 
 
 def _dir_stat_value(raw: str, t: ice_t.Type) -> Any:
     """An identity-partition directory value (Spark's spelling) as the
     value a collected Spark row holds for the column; ValueError for a
-    type whose spelling this does not parse (timestamps, written in the
-    session time zone; floats, written at float precision; decimals)."""
-    import datetime as _dt
-
-    if raw == "__HIVE_DEFAULT_PARTITION__":
+    type outside ``_DIR_STAT_TYPES`` or a spelling
+    :func:`manifests.parse_value` does not read."""
+    if raw == _HIVE_NULL:
         return None
-    if isinstance(t, (ice_t.IntType, ice_t.LongType)):
-        return int(raw)
-    if isinstance(t, ice_t.StringType):
-        return raw
-    if isinstance(t, ice_t.DateType):
-        return _dt.date.fromisoformat(raw)
-    if isinstance(t, ice_t.BooleanType) and raw in ("true", "false"):
-        return raw == "true"
-    if isinstance(t, ice_t.DoubleType):
-        return float(raw)
-    raise ValueError(f"no directory-value parse for {t!r}")
-
-
-def _coerce_partition_literal(val: Any, t: Optional[ice_t.Type]):
-    """Predicate literal → the Python domain the transform's ``scalar``
-    expects for this source type, or None when not provably convertible."""
-    if isinstance(t, (ice_t.TimestampType, ice_t.TimestampTzType)):
-        return _parse_temporal(val) if isinstance(val, str) else None
-    if isinstance(t, ice_t.DateType):
-        d = _parse_temporal(val) if isinstance(val, str) else None
-        return d.date() if d is not None else None
-    if isinstance(t, (ice_t.IntType, ice_t.LongType)):
-        return val if isinstance(val, int) and not isinstance(val, bool) else None
-    if isinstance(t, ice_t.StringType):
-        return val if isinstance(val, str) else None
-    return None
-
-
-def _parse_dir_value(seg: str, exemplar: Any):
-    """Directory-value string → the exemplar's domain (int / date / str),
-    or None when unparseable (caller keeps the file)."""
-    import datetime as _dt
-
-    if seg == "__HIVE_DEFAULT_PARTITION__":
-        return None
-    if isinstance(exemplar, bool):
-        return None
-    if isinstance(exemplar, int):
-        try:
-            return int(seg)
-        except ValueError:
-            return None
-    if isinstance(exemplar, _dt.date):
-        try:
-            return _dt.date.fromisoformat(seg)
-        except ValueError:
-            return None
-    if isinstance(exemplar, str):
-        return seg
-    return None
+    if not isinstance(t, _DIR_STAT_TYPES):
+        raise ValueError(f"no directory-value parse for {t!r}")
+    return parse_value(raw, t)
 
 
 def _partition_may_match(
     pvals: dict[str, str], node, pfields: dict[str, tuple], schema
 ) -> bool:
     """True unless the file's partition-directory values prove no row can
-    satisfy ``node``.  This is what makes hidden partitioning *hidden*: a
-    predicate on the SOURCE column prunes bucket/truncate/temporal
-    partition dirs the column bounds can't (a bucket file's source bounds
-    span the whole domain).  ``pfields``: name → (transform, source)."""
+    satisfy the bound tree ``node``.  This is what makes hidden
+    partitioning *hidden*: a predicate on the SOURCE column prunes
+    bucket/truncate/temporal partition dirs the column bounds can't (a
+    bucket file's source bounds span the whole domain).  ``pfields``:
+    name → (transform, source)."""
     kind = node[0]
     if kind == "and":
         return _partition_may_match(pvals, node[1], pfields, schema) and (
@@ -6530,21 +6486,19 @@ def _partition_may_match(
         return _partition_may_match(pvals, node[1], pfields, schema) or (
             _partition_may_match(pvals, node[2], pfields, schema)
         )
-    _, col, op, val = node
-    if op in ("isnull", "notnull"):
-        return True  # identity-null layouts aside, dirs can't prove this
+    _, col, op, _lit, _key, value = node
+    f = schema.field_by_name(col) if schema else None
+    if value is None or f is None:
+        return True  # IS [NOT] NULL, or no value of the column's type
     for name, (tr, src) in pfields.items():
-        if src != col or name not in pvals:
+        if src != col or pvals.get(name, _HIVE_NULL) == _HIVE_NULL:
             continue
-        f = schema.field_by_name(col) if schema else None
-        lit = _coerce_partition_literal(val, f.field_type if f else None)
-        if lit is None:
-            continue
-        exp = tr.scalar(lit, f.field_type if f else None)
+        exp = tr.scalar(value, f.field_type)
         if exp is None:
             continue
-        actual = _parse_dir_value(pvals[name], exp)
-        if actual is None:
+        try:
+            actual = parse_value(pvals[name], _result_type(tr, f.field_type))
+        except ValueError:
             continue
         try:
             if op == "=" and actual != exp:
@@ -6561,102 +6515,99 @@ def _partition_may_match(
     return True
 
 
-def _normalize_bounds_literal(lo: Any, hi: Any, val: Any):
-    """Coerce (lower bound, upper bound, predicate literal) into one
-    comparable domain, or None when they are not *provably* comparable
-    (caller must then keep the file).  Round-2 advisory: naive str()/
-    lexicographic coercion pruned files that contained matching rows —
-    'T'-separated timestamp bounds vs space-separated literals, and
-    stringified numeric bounds vs quoted numeric literals."""
-    from decimal import Decimal, InvalidOperation
-
-    sides = (lo, hi, val)
-    if any(isinstance(x, bool) for x in sides):
-        return (lo, hi, val) if all(isinstance(x, bool) for x in sides) else None
-    # all-int fast path: python int comparison is exact at any width —
-    # skipping the Decimal round-trip cuts per-entry classification cost
-    # ~1.7× on the common int/long predicate (r12: 17 → 10 µs)
-    if all(type(x) is int for x in sides):
-        return sides
-    # numeric domain: if ANY side is a real number, every side must coerce
-    # (SQL compares an int column to '9' numerically — so must pruning).
-    # Decimal keeps >2^53 integers exact where float would misprune.
-    if any(isinstance(x, (int, float)) for x in sides):
-        if isinstance(lo, str) or isinstance(hi, str):
-            # STRING-typed bounds are LEXICOGRAPHIC extrema ("10" < "9"),
-            # and may be prefix-truncated besides — numeric comparison
-            # against them is unsound in both directions; keep the file
-            # and let Spark's cast do the comparison
-            return None
-        try:
-            ds = tuple(Decimal(str(x).strip()) for x in sides)
-        except (InvalidOperation, ValueError, TypeError):
-            return None
-        if any(d.is_nan() for d in ds):
-            # a NaN bound (float column whose extreme row is NaN) proves
-            # nothing either direction — and Decimal('NaN') comparisons
-            # RAISE InvalidOperation rather than returning False (r11:
-            # surfaced by the filtered-count soundness tests)
-            return None
-        return ds
-    if not all(isinstance(x, str) for x in sides):
-        return None
-    # temporal domain: all three parse as ISO date/timestamp → compare as
-    # datetimes (date-only promotes to midnight, matching Spark's cast)
-    dts = tuple(_parse_temporal(x) for x in sides)
-    if all(d is not None for d in dts):
-        return dts
-    if any(d is not None for d in dts):
-        return None  # mixed temporal/plain-string — not provably comparable
-    return lo, hi, val  # plain strings: lexicographic is the SQL semantic
+def _leaves(node) -> Iterator[tuple]:
+    """The comparison leaves of a predicate tree."""
+    if node[0] in ("and", "or"):
+        yield from _leaves(node[1])
+        yield from _leaves(node[2])
+    else:
+        yield node
 
 
-def _typed_bound(v: Any, t: ice_t.Type) -> Any:
-    """A stored manifest bound as the Python value the executed scan would
-    return for that column — ints pass through, temporal/decimal bounds
-    parse back from their serialized string form.  None = not parseable
-    (caller falls back to executing)."""
-    import datetime
-    import decimal
+def _bind(node, types: dict[str, ice_t.Type]):
+    """A parsed tree bound to the table's column ``types`` — once per
+    scan or mutation, as Iceberg binds a predicate to its schema.  Every
+    leaf becomes ``("cmp", col, op, lit, key, value)``:
 
-    try:
-        if isinstance(t, (ice_t.IntType, ice_t.LongType)):
-            return int(v)
-        if isinstance(t, ice_t.DateType):
-            return v if isinstance(v, datetime.date) and not isinstance(
-                v, datetime.datetime
-            ) else datetime.date.fromisoformat(str(v))
-        if isinstance(t, ice_t.TimestampType):
-            return v if isinstance(v, datetime.datetime) else (
-                datetime.datetime.fromisoformat(str(v))
+    - ``value``: the literal as a value of the column's type, read as
+      Spark reads it with ANSI off — a quoted string is cast to the
+      column's type (:func:`manifests.parse_value`), an unquoted number
+      converts only for a numeric column — or None when it is no such
+      value (``a = 9.5`` on an int column);
+    - ``lit``: what the stored stat forms compare against, both under
+      ``key``, the column type's :func:`manifests.stat_order` (None: as
+      stored).  An unquoted number keeps its exact value, so ``a < 9.5``
+      compares int bounds against ``Decimal('9.5')``;
+    - ``op`` None: a literal Spark reads some way this does not (``'9.5'``
+      against an int, which Spark truncates to 9): nothing about the leaf
+      is provable and files stay.
+
+    ``col [NOT] IN (…)`` becomes OR of equalities (AND of inequalities);
+    Spark compares a quoted literal there to the column's STRING form,
+    so on any other column it binds to nothing."""
+    kind = node[0]
+    if kind in ("and", "or"):
+        return (kind, _bind(node[1], types), _bind(node[2], types))
+    if kind == "in":
+        _, col, neg, vals = node
+        t = types.get(col)
+        out = None
+        for v in vals:
+            leaf = (
+                ("cmp", col, None, None, None, None)
+                if isinstance(v, str) and not isinstance(t, ice_t.StringType)
+                else _bind_leaf(col, "!=" if neg else "=", v, t)
             )
-        if isinstance(t, ice_t.DecimalType):
-            return decimal.Decimal(str(v))
-    except (ValueError, TypeError):
-        return None
-    return None
+            out = leaf if out is None else ("and" if neg else "or", out, leaf)
+        return out
+    _, col, op, val = node
+    return _bind_leaf(col, op, val, types.get(col))
 
 
-def _key_bounds_tree(delete_entry: dict[str, Any]):
-    """Predicate tree from an equality delete's optional per-entry
-    ``key-bounds`` hint ({"lower": {col: v}, "upper": {col: v}}, values in
-    plain-literal form): a data file whose column bounds provably can't
-    contain ANY key in the delete's range can be skipped by changelog /
-    rewrite planning.  Columns without both bounds contribute nothing
-    (prune less, never wrong); no bounded column ⇒ None (no pruning)."""
-    kb = delete_entry.get("key-bounds") or {}
-    lo, hi = kb.get("lower") or {}, kb.get("upper") or {}
-    tree = None
-    for c in delete_entry.get("equality-cols") or []:
-        if c not in lo or c not in hi:
-            continue
-        leaf = ("and", ("cmp", c, ">=", lo[c]), ("cmp", c, "<=", hi[c]))
-        tree = leaf if tree is None else ("and", tree, leaf)
-    return tree
+def _bind_leaf(col: str, op: str, val: Any, t: Optional[ice_t.Type]) -> tuple:
+    if op in ("isnull", "notnull"):
+        return ("cmp", col, op, None, None, None)
+    key = stat_order(t)
+    try:
+        value, lit = _bind_literal(val, t, key)
+    except (ValueError, ArithmeticError):
+        return ("cmp", col, None, None, None, None)
+    return ("cmp", col, op, lit, key, value)
+
+
+def _bind_literal(val: Any, t: Optional[ice_t.Type], key) -> tuple:
+    """(value, lit) of one literal against a column of type ``t`` (see
+    :func:`_bind`); ValueError where Spark's comparison is not one the
+    stored bounds can decide."""
+    if not isinstance(t, STATS_TYPES) or isinstance(
+        t, (ice_t.TimestampNanoType, ice_t.TimestampTzNanoType)
+    ):
+        raise ValueError(f"no literal binding for {t!r}")
+    if isinstance(val, str):
+        if isinstance(t, ice_t.DecimalType) and t.scale and t.precision > 15:
+            # Spark compares such a decimal to a string as DOUBLE, which
+            # conflates values an exact comparison keeps apart
+            raise ValueError("compared as double")
+        value = parse_value(val, t)
+        lit = stat_value(value)
+        return value, lit if key is None else key(lit)
+    if isinstance(t, (ice_t.IntType, ice_t.LongType, ice_t.DecimalType)):
+        try:
+            value = parse_value(str(val), t)
+        except ValueError:
+            value = None
+        return value, val
+    if isinstance(t, (ice_t.FloatType, ice_t.DoubleType)):
+        if isinstance(t, ice_t.FloatType) and isinstance(val, int) and abs(val) > 2**24:
+            raise ValueError("Spark rounds an int literal to float")
+        return float(val), key(float(val))
+    raise ValueError(f"Spark casts the {t!r} column to the number's type")
 
 
 def _seq_scope_touched(
-    delete_entry: dict[str, Any], data_entries: list[dict[str, Any]]
+    delete_entry: dict[str, Any],
+    data_entries: list[dict[str, Any]],
+    schema: ice_t.Schema,
 ) -> list[dict[str, Any]]:
     """Data entries an equality delete may apply to — the Iceberg spec's
     scan-planning rule (an equality delete applies to data
@@ -6667,22 +6618,8 @@ def _seq_scope_touched(
     metadata: a file without a recorded sequence predates seq stamping,
     so the delete applies; a delete not yet committed (no sequence) applies
     to every file its key-bounds allow."""
-    scope = _compile_seq_scope(delete_entry)
+    scope = _compile_seq_scope(delete_entry, schema)
     return [e for e in data_entries if _seq_scope_applies(scope, e)]
-
-
-# key types whose JSON stat form compares as a key-bounds literal
-# (decimals are strings there and would compare lexicographically)
-_KEY_BOUND_TYPES = (
-    ice_t.IntType,
-    ice_t.LongType,
-    ice_t.FloatType,
-    ice_t.DoubleType,
-    ice_t.DateType,
-    ice_t.TimestampType,
-    ice_t.TimestampTzType,
-    ice_t.StringType,
-)
 
 
 def _equality_delete_entry(
@@ -6697,7 +6634,7 @@ def _equality_delete_entry(
     (data files with a strictly lower data sequence); the file's
     ``stats`` (lower-bounds / upper-bounds / null-counts, as a data
     entry records them) become the ``key-bounds`` pruning hint for each
-    key column of a comparable type holding no null key."""
+    key column with both bounds and no null key."""
     entry = {
         "delete-file": path,
         "deleted-records": n,
@@ -6710,74 +6647,73 @@ def _equality_delete_entry(
     for f in fields:
         a = stats["lower-bounds"].get(f.name)
         b = stats["upper-bounds"].get(f.name)
-        if (
-            isinstance(f.field_type, _KEY_BOUND_TYPES)
-            and stats["null-counts"].get(f.name) == 0
-            and a is not None
-            and b is not None
-        ):
+        if stats["null-counts"].get(f.name) == 0 and a is not None and b is not None:
             lo[f.name], hi[f.name] = a, b
     if lo:
         entry["key-bounds"] = {"lower": lo, "upper": hi}
     return entry
 
 
-def _compile_seq_scope(delete_entry: dict[str, Any]) -> tuple:
-    """Precompiled (own-seq, bounded cols, lower, upper, tree) for
-    repeated :func:`_seq_scope_applies` checks — planners run one check
-    per (delete, file) pair, and recompiling the key-bounds tree per pair
-    made a long unsettled chain's planning quadratic."""
+def _compile_seq_scope(delete_entry: dict[str, Any], schema: ice_t.Schema) -> tuple:
+    """Precompiled (own-seq, [(col, key, lower, upper)]) for repeated
+    :func:`_seq_scope_applies` checks — planners run one check per
+    (delete, file) pair.  The delete's ``key-bounds`` hint ({"lower":
+    {col: v}, "upper": {col: v}}, stat forms) is put once in each key
+    column's order (:func:`manifests.stat_order`, the column's type from
+    ``schema``); a column missing there contributes nothing."""
     own = delete_entry.get("data-sequence-number")
     kb = delete_entry.get("key-bounds") or {}
     klo, khi = kb.get("lower") or {}, kb.get("upper") or {}
-    cols = [
-        c
-        for c in delete_entry.get("equality-cols") or []
-        if c in klo and c in khi
-    ]
-    tree = _key_bounds_tree(delete_entry) if cols else None
-    return (own, cols, klo, khi, tree)
+    cols = []
+    for c in delete_entry.get("equality-cols") or []:
+        f = schema.field_by_name(c)
+        if f is None or c not in klo or c not in khi:
+            continue
+        key = stat_order(f.field_type)
+        try:
+            a, b = (klo[c], khi[c]) if key is None else (key(klo[c]), key(khi[c]))
+        except (TypeError, ArithmeticError):
+            continue
+        cols.append((c, key, a, b))
+    return (own, cols)
 
 
 def _seq_scope_applies(scope: tuple, e: dict[str, Any]) -> bool:
     """One (delete, data file) applicability check under a compiled
-    scope: strictly-lower sequence, then key-bounds overlap — all-int
-    bounds compare directly against the entry dicts (the generic tree
-    walk costs ~5 µs/pair in interpreter overhead alone), everything
-    else falls back to the conservative :func:`_bounds_may_match`."""
-    own, cols, klo, khi, tree = scope
+    scope: strictly-lower sequence, then key-bounds overlap per bounded
+    key column (unknown or incomparable bounds may match)."""
+    own, cols = scope
     seqv = e.get("data-sequence-number")
     if own is not None and seqv is not None and int(seqv) >= int(own):
         return False
     if cols:
         flo = e.get("lower-bounds") or {}
         fhi = e.get("upper-bounds") or {}
-        for c in cols:
+        for c, key, a, b in cols:
             lo, hi = flo.get(c), fhi.get(c)
             if lo is None or hi is None:
                 continue  # unknown bounds: may match on this column
-            a, b = klo[c], khi[c]
-            if (
-                type(lo) is int
-                and type(hi) is int
-                and type(a) is int
-                and type(b) is int
-            ):
+            try:
+                if key is not None:
+                    lo, hi = key(lo), key(hi)
                 if hi < a or lo > b:
                     return False
-            else:
-                return _bounds_may_match(e, tree)
+            except (TypeError, ArithmeticError):
+                continue
     return True
 
 
 def _bounds_may_match(entry: dict[str, Any], node) -> bool:
-    """True unless the bounds prove no row of the file can satisfy node."""
+    """True unless the bounds prove no row of the file can satisfy the
+    bound tree ``node`` (:func:`_bind`)."""
     kind = node[0]
     if kind == "and":
         return _bounds_may_match(entry, node[1]) and _bounds_may_match(entry, node[2])
     if kind == "or":
         return _bounds_may_match(entry, node[1]) or _bounds_may_match(entry, node[2])
-    _, col, op, val = node
+    _, col, op, lit, key, _value = node
+    if op is None:
+        return True  # the literal is not provably comparable — keep
     if op in ("isnull", "notnull"):
         nc = (entry.get("null-counts") or {}).get(col)
         rc = entry.get("record-count")
@@ -6790,24 +6726,22 @@ def _bounds_may_match(entry: dict[str, Any], node) -> bool:
     hi = (entry.get("upper-bounds") or {}).get(col)
     if lo is None or hi is None:
         return True
-    norm = _normalize_bounds_literal(lo, hi, val)
-    if norm is None:
-        return True  # not provably comparable — keep the file
-    lo, hi, val = norm
     try:
+        if key is not None:
+            lo, hi = key(lo), key(hi)
         if op == "=":
-            return lo <= val <= hi
+            return lo <= lit <= hi
         if op == "<":
-            return lo < val
+            return lo < lit
         if op == "<=":
-            return lo <= val
+            return lo <= lit
         if op == ">":
-            return hi > val
+            return hi > lit
         if op == ">=":
-            return hi >= val
+            return hi >= lit
         if op == "!=":
-            return not (lo == hi == val)
-    except TypeError:
+            return not (lo == hi == lit)
+    except (TypeError, ArithmeticError):
         return True
     return True
 
@@ -6830,7 +6764,9 @@ def _bounds_all_match(entry: dict[str, Any], node) -> bool:
         return _bounds_all_match(entry, node[1]) or _bounds_all_match(
             entry, node[2]
         )
-    _, col, op, val = node
+    _, col, op, lit, key, _value = node
+    if op is None:
+        return False
     nc = (entry.get("null-counts") or {}).get(col)
     rc = entry.get("record-count")
     if nc is None or rc is None:
@@ -6845,24 +6781,22 @@ def _bounds_all_match(entry: dict[str, Any], node) -> bool:
     hi = (entry.get("upper-bounds") or {}).get(col)
     if lo is None or hi is None:
         return False
-    norm = _normalize_bounds_literal(lo, hi, val)
-    if norm is None:
-        return False
-    lo, hi, val = norm
     try:
+        if key is not None:
+            lo, hi = key(lo), key(hi)
         if op == "=":
-            return lo == val and hi == val
+            return lo == lit and hi == lit
         if op == "<":
-            return hi < val
+            return hi < lit
         if op == "<=":
-            return hi <= val
+            return hi <= lit
         if op == ">":
-            return lo > val
+            return lo > lit
         if op == ">=":
-            return lo >= val
+            return lo >= lit
         if op == "!=":
-            return val < lo or hi < val
-    except TypeError:
+            return lit < lo or hi < lit
+    except (TypeError, ArithmeticError):
         return False
     return False
 
@@ -6888,19 +6822,12 @@ def _null_leaf_count(entry: dict[str, Any], trees) -> Optional[int]:
     None for any other filter or a file without those stats."""
     if len(trees) != 1 or trees[0][0] in ("and", "or"):
         return None
-    _, col, op, _ = trees[0]
+    col, op = trees[0][1], trees[0][2]
     nc = (entry.get("null-counts") or {}).get(col)
     rc = entry.get("record-count")
     if op not in ("isnull", "notnull") or nc is None or rc is None:
         return None
     return nc if op == "isnull" else rc - nc
-
-
-def _tree_columns(node) -> set:
-    """Column names referenced by a parsed predicate tree."""
-    if node[0] in ("and", "or"):
-        return _tree_columns(node[1]) | _tree_columns(node[2])
-    return {node[1]}
 
 
 # --------------------------------------------------------------------------
@@ -7072,7 +6999,7 @@ class TableInspect:
         for e in self.table._current_entries():
             if "path" not in e:
                 continue
-            pvals = _parse_dir_partition_values(e["path"])
+            pvals = dir_partition_values(e["path"])
             key = tuple(sorted(pvals.items()))
             a = agg.setdefault(key, [0, 0])
             a[0] += e.get("record-count") or 0
@@ -7702,26 +7629,44 @@ class TableScan:
         )
         return min(n, self._limit) if self._limit is not None else n
 
-    def _provable_filter_trees(self) -> Optional[list]:
-        """The scan's filters as parsed predicate trees, or None when any
-        filter is outside the provable shape (unparseable expression, or
-        a float/double column compared — NaN breaks bound reasoning in
-        both directions)."""
+    def _filter_trees(self) -> tuple[list, bool]:
+        """The scan's filters parsed and bound to the table's columns
+        (:func:`_bind`) — the one parse every planner reads: (the bound
+        trees of the filters that parse, whether every filter did).  A
+        filter outside the parser's shape prunes nothing."""
+        if not self._filters:
+            return [], True
+        types = self.table._column_types()
+        # (col, path, type) → shredded column, for the variant_get spelling
+        shred = {
+            (col, path, typ): name
+            for col, items in self.table.variant_shred_specs().items()
+            for path, typ, name in items
+        }
         trees = []
         for f in self._filters:
             src = f
             if not isinstance(src, str):
-                try:
+                try:  # Column → its SQL-ish string
                     src = f._jc.toString()
                 except Exception:
-                    return None
-            tree = _parse_predicate(src)
-            if tree is None:
-                return None
-            trees.append(tree)
+                    continue
+            tree = _parse_predicate(src, shred_map=shred)
+            if tree is not None:
+                trees.append(_bind(tree, types))
+        return trees, len(trees) == len(self._filters)
+
+    def _provable_filter_trees(self) -> Optional[list]:
+        """The scan's bound filter trees, or None when a filter is outside
+        the provable shape (unparseable, on a shredded variant path, or
+        comparing a float/double column — bounds from outside writers
+        leave NaN out, so they prove nothing in either direction)."""
+        trees, every = self._filter_trees()
+        if not every:
+            return None
         schema = self.table.current_schema()
-        for c in set().union(set(), *(_tree_columns(t) for t in trees)):
-            field = schema.field_by_name(c)
+        for leaf in (x for t in trees for x in _leaves(t)):
+            field = schema.field_by_name(leaf[1])
             if field is None or isinstance(
                 field.field_type, (ice_t.FloatType, ice_t.DoubleType)
             ):
@@ -7850,11 +7795,13 @@ class TableScan:
             )
         return total
 
-    # bound-exact types for metadata min/max: float/double excluded (NaN
-    # sorts above +inf in Iceberg bounds but is MAX in SQL — and bounds
-    # never witness NaN), strings excluded (truncate(16) metrics make the
-    # upper bound a bumped prefix, not a value from the file)
-    _BOUND_EXACT_TYPES = ("int", "long", "date", "timestamp", "decimal")
+    # bound-exact types for metadata min/max (exactly these classes, not
+    # the nanosecond subclasses): float/double excluded (NaN sorts above
+    # +inf in Iceberg bounds but is MAX in SQL — and bounds never witness
+    # NaN), strings excluded (truncate(16) metrics make the upper bound a
+    # bumped prefix, not a value from the file)
+    _BOUND_EXACT_TYPES = (ice_t.IntType, ice_t.LongType, ice_t.DateType,
+                          ice_t.TimestampType, ice_t.DecimalType)
 
     def _meta_bound(self, data, mor, trees, col, lo):
         """MIN/MAX from pre-read manifest entries, or ``_UNPROVABLE``.
@@ -7866,10 +7813,7 @@ class TableScan:
         full-miss file contributes nothing, one split file demotes."""
         U = TableScan._UNPROVABLE
         field = self.table.current_schema().field_by_name(col)
-        if field is None or (
-            type(field.field_type).__name__.lower().replace("type", "")
-            not in self._BOUND_EXACT_TYPES
-        ):
+        if field is None or type(field.field_type) not in self._BOUND_EXACT_TYPES:
             return U
         if mor:
             return U
@@ -7890,10 +7834,13 @@ class TableScan:
                 return U
         if not vals:
             return None  # every eligible row NULL (SQL: aggregate is NULL)
-        typed = [_typed_bound(v, field.field_type) for v in vals]
-        if any(t is None for t in typed):
+        t = field.field_type
+        key = stat_order(t)
+        try:
+            b = min(vals, key=key) if lo else max(vals, key=key)
+            return parse_value(b, t) if isinstance(b, str) else b
+        except (TypeError, ValueError, ArithmeticError):
             return U
-        return min(typed) if lo else max(typed)
 
     def min(self, col: str) -> Any:
         """MIN(col), from manifest bounds when that is provably exact
@@ -7923,7 +7870,7 @@ class TableScan:
     # lo == hi under truncate(N) metrics PROVES min == max (the upper
     # bound of a longer-than-N max is prefix-BUMPED, so it can only equal
     # the lower bound when the value is its own untruncated form)
-    _GROUP_EXACT_TYPES = ("int", "long", "date", "timestamp", "decimal", "string")
+    _GROUP_EXACT_TYPES = (*_BOUND_EXACT_TYPES, ice_t.StringType)
 
     def metadata_group_counts(
         self, col: str
@@ -7967,10 +7914,7 @@ class TableScan:
             return None
         schema = self.table.current_schema()
         field = schema.field_by_name(col)
-        if field is None or (
-            type(field.field_type).__name__.lower().replace("type", "")
-            not in self._GROUP_EXACT_TYPES
-        ):
+        if field is None or type(field.field_type) not in self._GROUP_EXACT_TYPES:
             return None
         agg_fields = {}
         for fn, c in specs:
@@ -7979,10 +7923,7 @@ class TableScan:
                     return None
             elif fn in ("MIN", "MAX"):
                 f2 = schema.field_by_name(c) if c is not None else None
-                if f2 is None or (
-                    type(f2.field_type).__name__.lower().replace("type", "")
-                    not in self._BOUND_EXACT_TYPES
-                ):
+                if f2 is None or type(f2.field_type) not in self._BOUND_EXACT_TYPES:
                     return None
                 agg_fields[c] = f2
             else:
@@ -8003,10 +7944,12 @@ class TableScan:
         if mor and needs_single_group:
             return None
 
-        def _decode(raw):
-            if isinstance(field.field_type, ice_t.StringType):
-                return raw if isinstance(raw, str) else None
-            return _typed_bound(raw, field.field_type)
+        def _decode(raw, t):
+            """A stored bound as the value a collected row holds, or None."""
+            try:
+                return parse_value(raw, t) if isinstance(raw, str) else raw
+            except ValueError:
+                return None
 
         counts: dict = {}          # group key → COUNT(*) census
         accs: dict = {}            # group key → per-spec accumulator list
@@ -8042,7 +7985,7 @@ class TableScan:
                 hi = (e.get("upper-bounds") or {}).get(col)
                 if lo is None or hi is None or lo != hi:
                     return None
-                key = _decode(lo)
+                key = _decode(lo, field.field_type)
                 if key is None:
                     return None
             file_group[self.table.ops._abs(e["path"])] = (key, nc, rc, True)
@@ -8072,7 +8015,7 @@ class TableScan:
                     if nc_c is None or nc_c != rc:
                         return None
                     continue
-                typed = _typed_bound(b, agg_fields[c].field_type)
+                typed = _decode(b, agg_fields[c].field_type)
                 if typed is None:
                     return None
                 cur = acc[i]
@@ -8110,56 +8053,17 @@ class TableScan:
         out.sort(key=lambda kv: (kv[0] is not None, kv[0]))
         return out
 
-    def _shred_map(self) -> Optional[dict]:
-        """(col, path, type) → shredded physical column name, for the
-        variant_get spelling of the pruning parser (None when the table
-        declares no shred specs — the overwhelmingly common case pays
-        one dict check)."""
-        out = {}
-        for s_col, s_items in self.table.variant_shred_specs().items():
-            for s_path, s_typ, s_name in s_items:
-                out[(s_col, s_path, s_typ)] = s_name
-        return out or None
-
-    def _parsed_filter_trees(self) -> Optional[list]:
-        """The PARSEABLE subset of the scan's filters as predicate trees
-        (unparseable filters prune nothing anyway), or None when none
-        parse — the segment-pruning twin of :meth:`_prune_entries`'s
-        per-file loop, safe for any column type because
-        ``_bounds_may_match`` is conservative."""
-        trees = []
-        shred = self._shred_map()
-        for f in self._filters:
-            src = f
-            if not isinstance(src, str):
-                try:
-                    src = f._jc.toString()
-                except Exception:
-                    continue
-            tree = _parse_predicate(src, shred_map=shred)
-            if tree is not None:
-                trees.append(tree)
-        return trees or None
-
-    def _prune_entries(self, entries: list[dict[str, Any]]) -> list[dict[str, Any]]:
-        """Drop files whose commit-time column bounds prove the scan's
-        string filters match nothing there (manifest-level pruning; Column
-        filters and unparseable expressions conservatively keep the file).
+    def _prune_entries(
+        self, entries: list[dict[str, Any]], trees: list
+    ) -> list[dict[str, Any]]:
+        """Drop files whose commit-time column bounds prove a bound filter
+        tree of the scan (:meth:`_filter_trees`) matches nothing there.
         Top-level equality conjuncts additionally consult the column's
         Bloom key index when one is registered (:meth:`Table.
         build_key_bloom`) — the point-lookup pruning bounds can't do."""
-        shred = self._shred_map()
-        for f in self._filters:
-            src = f
-            if not isinstance(src, str):
-                try:  # Column → its SQL-ish string, e.g. "(a > 90)"
-                    src = f._jc.toString()
-                except Exception:
-                    continue
-            tree = _parse_predicate(src, shred_map=shred)
-            if tree is not None:
-                entries = self.table._prune_by_stats(entries, tree)
-                entries = self._prune_by_bloom(entries, tree)
+        for tree in trees:
+            entries = self.table._prune_by_stats(entries, tree)
+            entries = self._prune_by_bloom(entries, tree)
         return entries
 
     def _prune_by_bloom(
@@ -8186,8 +8090,8 @@ class TableScan:
             """(col, values) when the node is equalities on ONE column
             joined by OR (or a single equality); None otherwise."""
             if node[0] == "cmp":
-                _, col, op, val = node
-                return (col, [val]) if op == "=" else None
+                _, col, op, _lit, _key, value = node
+                return (col, [value]) if op == "=" and value is not None else None
             if node[0] == "or":
                 l, r = eq_set(node[1]), eq_set(node[2])
                 if l and r and l[0] == r[0]:
@@ -8199,18 +8103,12 @@ class TableScan:
             if es is None:
                 continue
             col, vals = es
-            if any(isinstance(v, float) for v in vals):
-                continue
             field = self.table.current_schema().field_by_name(col)
-            if field is None:
-                continue
-            # the literals' type family must match the column's: an int
-            # literal against a STRING column coerces SQL-side ('05' = 5
-            # is true) but '5' != '05' in the bloom — never prune there
-            if any(
-                isinstance(v, int)
-                != isinstance(field.field_type, (ice_t.IntType, ice_t.LongType))
-                for v in vals
+            # the bloom holds str() of each key; only for these types is
+            # that the spelling of the bound value (a timestamp's, say,
+            # differs from Spark's string cast of it)
+            if field is None or not isinstance(
+                field.field_type, (ice_t.IntType, ice_t.LongType, ice_t.StringType)
             ):
                 continue
             idx = self.table._bloom_index(col)
@@ -8238,10 +8136,11 @@ class TableScan:
         snap = self.snapshot()
         if snap is None:
             return []
+        trees, _ = self._filter_trees()
         entries, _ = self.table.ops.read_manifest_filtered(
-            snap.manifest_list, self._parsed_filter_trees(), allow_mor=True
+            snap.manifest_list, trees or None, allow_mor=True
         )
-        entries = self._prune_entries(entries)
+        entries = self._prune_entries(entries, trees)
         dfile_entries = [e for e in entries if "delete-file" in e]
         io = self.table.ops.io
         # expand each delete entry to its files once, not per task
@@ -8254,8 +8153,9 @@ class TableScan:
             ]
             for e in dfile_entries
         }
+        schema = self.table.current_schema()
         dfile_scopes = {
-            id(e): _compile_seq_scope(e)
+            id(e): _compile_seq_scope(e, schema)
             if e.get("content") == "equality-deletes"
             else None
             for e in dfile_entries
@@ -8319,10 +8219,11 @@ class TableScan:
                 st = _T.StructType(list(st.fields) + extra_fields)
             df = spark.createDataFrame([], st)
         else:
+            trees, _ = self._filter_trees()
             entries, _ = self.table.ops.read_manifest_filtered(
-                snap.manifest_list, self._parsed_filter_trees(), allow_mor=True
+                snap.manifest_list, trees or None, allow_mor=True
             )
-            entries = self._prune_entries(entries)
+            entries = self._prune_entries(entries, trees)
             # _read_entries reads each file under its written schema and
             # projects it onto ``schema``'s column order and types
             if self._row_lineage:

@@ -77,7 +77,10 @@ def drain_waves(spark, sf_dir: str, n_waves: int) -> None:
         if not eqs:
             return 0, len(live)
         newest = max(eqs, key=lambda e: e.get("data-sequence-number") or 0)
-        return len(_seq_scope_touched(newest, live)), len(live)
+        return (
+            len(_seq_scope_touched(newest, live, g.current_schema())),
+            len(live),
+        )
 
     # wave 0 = full corpus; later waves update a shrinking KEY-RANGE
     # slice (doc_id < n/2^w) — the range-aligned shape whose planner
