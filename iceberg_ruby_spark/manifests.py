@@ -664,17 +664,43 @@ def _nan_last(v: Any) -> tuple:
     return (1, 0.0) if v != v else (0, v)  # NaN is the one value != itself
 
 
+def _timestamp_order(t: ice_t.Type):
+    def key(v: str) -> str:
+        # stat_value's form ('T'-separated naive ISO, 19 or 26 chars)
+        # sorts in value order as is; older writers stored a space
+        # separator (equality-key bounds) or a UTC offset (the stream
+        # sink's timestamptz bounds), read here into that form
+        if v[10:11] == "T" and (len(v) == 19 or (len(v) == 26 and v[19] == ".")):
+            return v
+        return stat_value(parse_value(v, t))
+
+    return key
+
+
+_TIMESTAMP_ORDERS = {
+    ice_t.TimestampType: _timestamp_order(ice_t.TimestampType()),
+    ice_t.TimestampTzType: _timestamp_order(ice_t.TimestampTzType()),
+}
+
+# what comparing stored bounds under a stat_order may raise (a bound of
+# another type, a spelling parse_value does not read): the comparison
+# then proves nothing
+BOUND_ERRORS = (TypeError, ValueError, ArithmeticError)
+
+
 def stat_order(t: Optional[ice_t.Type]):
     """Sort key putting column type ``t``'s JSON stat forms (and the
     values a bound filter literal compares as) in value order, or None
     where they already sort that way — ints, booleans, strings and the
-    ISO forms of dates and timestamps.  Decimals (strings) compare as
-    Decimal; floats put NaN greatest, as Spark SQL and parquet-mr do."""
+    ISO forms of dates.  Decimals (strings) compare as Decimal; floats
+    put NaN greatest, as Spark SQL and parquet-mr do; timestamps compare
+    in :func:`stat_value`'s form, which older spellings are read into.
+    A key raises one of ``BOUND_ERRORS`` for a form it cannot order."""
     if isinstance(t, ice_t.DecimalType):
         return _decimal.Decimal
     if isinstance(t, (ice_t.FloatType, ice_t.DoubleType)):
         return _nan_last
-    return None
+    return _TIMESTAMP_ORDERS.get(type(t))
 
 
 def merge_bounds(los: list, his: list, key=None) -> tuple:
@@ -1358,7 +1384,7 @@ def _manifest_summary(
         f = schema.field_by_name(c) if schema is not None else None
         try:
             lo, hi = merge_bounds(los, his, stat_order(f and f.field_type))
-        except (TypeError, ArithmeticError):
+        except BOUND_ERRORS:
             continue  # mixed bound types: not comparable, skip the column
         entry = {"lo": lo, "hi": hi}
         if have_nulls:

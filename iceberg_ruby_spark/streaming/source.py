@@ -128,6 +128,8 @@ def _overlap_groups(
     null-count) all merge together, since bounds never witness NULLs.
     Returns None when the column can't split (missing stats on any file,
     or non-comparable bound types) — the caller tries the next column."""
+    from iceberg_ruby_spark.manifests import BOUND_ERRORS
+
     ivs = []
     for p in paths:
         e = entry_for.get(p) or {}
@@ -154,7 +156,7 @@ def _overlap_groups(
                 g[2] = g[2] or hn
             else:
                 groups.append([[p], hi, hn])
-    except (TypeError, ArithmeticError):
+    except BOUND_ERRORS:
         return None  # mixed bound types — not provably comparable
     out = [sorted(g[0]) for g in groups if not g[2]]
     nullers = sorted(x for g in groups if g[2] for x in g[0])

@@ -73,9 +73,11 @@ from iceberg_ruby_spark import types as ice_t
 from iceberg_ruby_spark.avro_file import read_ocf
 from iceberg_ruby_spark.manifests import (
     _HIVE_NULL,
+    BOUND_ERRORS,
     MANIFEST_FORMAT_PROPERTY,
     STATS_TYPES,
     ManifestContext,
+    _nan_last,
     _result_type,
     dir_partition_values,
     finish_stats,
@@ -4021,23 +4023,37 @@ class Table:
         tree = self._bound_predicate(cond_str)
         return entries if tree is None else self._prune_by_stats(entries, tree)
 
-    def _column_types(self) -> dict[str, ice_t.Type]:
-        """Column name → type, what filter literals bind to
-        (:func:`_bind`): the current schema's columns and the shredded
-        variant columns, typed by their shred spec."""
+    def _bind_filters(self, filters: list) -> list:
+        """Each of ``filters`` parsed and bound to this table's columns
+        (:func:`_bind`) — the one parse-and-bind of scans and mutations —
+        or None for one :func:`_parse_predicate` does not read.  A filter
+        is a string or a Column (read through its SQL-ish string); the
+        shredded variant columns bind by their shred spec's type, and a
+        ``[try_]variant_get(col, path, type)`` spelling of one reads as
+        that column."""
         from iceberg_ruby_spark.table_definition import parse_type
 
         types = {f.name: f.field_type for f in self.current_schema().fields}
-        for items in self.variant_shred_specs().values():
-            for _path, typ, name in items:
+        shred = {}  # (col, path, type) → shredded column
+        for col, items in self.variant_shred_specs().items():
+            for path, typ, name in items:
                 types[name] = parse_type(typ)
-        return types
+                shred[(col, path, typ)] = name
+        out = []
+        for f in filters:
+            src = f
+            if f is not None and not isinstance(f, str):
+                try:
+                    src = f._jc.toString()
+                except Exception:
+                    src = None
+            tree = _parse_predicate(src, shred_map=shred) if src is not None else None
+            out.append(None if tree is None else _bind(tree, types))
+        return out
 
     def _bound_predicate(self, s: Optional[str]):
-        """``s`` parsed and bound to this table's columns (:func:`_bind`),
-        or None when it is not a string :func:`_parse_predicate` reads."""
-        tree = _parse_predicate(s) if s is not None else None
-        return None if tree is None else _bind(tree, self._column_types())
+        """``s`` parsed and bound (:meth:`_bind_filters`), or None."""
+        return self._bind_filters([s])[0]
 
     def _positional_delete_build(
         self, cur_entries: list[dict[str, Any]], cond, cond_str: Optional[str] = None
@@ -6500,6 +6516,9 @@ def _partition_may_match(
             actual = parse_value(pvals[name], _result_type(tr, f.field_type))
         except ValueError:
             continue
+        if type(actual) is float:
+            # NaN equals NaN and sorts greatest, as Spark SQL compares
+            actual, exp = _nan_last(actual), _nan_last(exp)
         try:
             if op == "=" and actual != exp:
                 return False
@@ -6672,7 +6691,7 @@ def _compile_seq_scope(delete_entry: dict[str, Any], schema: ice_t.Schema) -> tu
         key = stat_order(f.field_type)
         try:
             a, b = (klo[c], khi[c]) if key is None else (key(klo[c]), key(khi[c]))
-        except (TypeError, ArithmeticError):
+        except BOUND_ERRORS:
             continue
         cols.append((c, key, a, b))
     return (own, cols)
@@ -6698,7 +6717,7 @@ def _seq_scope_applies(scope: tuple, e: dict[str, Any]) -> bool:
                     lo, hi = key(lo), key(hi)
                 if hi < a or lo > b:
                     return False
-            except (TypeError, ArithmeticError):
+            except BOUND_ERRORS:
                 continue
     return True
 
@@ -6741,7 +6760,7 @@ def _bounds_may_match(entry: dict[str, Any], node) -> bool:
             return hi >= lit
         if op == "!=":
             return not (lo == hi == lit)
-    except (TypeError, ArithmeticError):
+    except BOUND_ERRORS:
         return True
     return True
 
@@ -6796,7 +6815,7 @@ def _bounds_all_match(entry: dict[str, Any], node) -> bool:
             return lo >= lit
         if op == "!=":
             return lit < lo or hi < lit
-    except (TypeError, ArithmeticError):
+    except BOUND_ERRORS:
         return False
     return False
 
@@ -7636,24 +7655,7 @@ class TableScan:
         filter outside the parser's shape prunes nothing."""
         if not self._filters:
             return [], True
-        types = self.table._column_types()
-        # (col, path, type) → shredded column, for the variant_get spelling
-        shred = {
-            (col, path, typ): name
-            for col, items in self.table.variant_shred_specs().items()
-            for path, typ, name in items
-        }
-        trees = []
-        for f in self._filters:
-            src = f
-            if not isinstance(src, str):
-                try:  # Column → its SQL-ish string
-                    src = f._jc.toString()
-                except Exception:
-                    continue
-            tree = _parse_predicate(src, shred_map=shred)
-            if tree is not None:
-                trees.append(_bind(tree, types))
+        trees = [t for t in self.table._bind_filters(self._filters) if t is not None]
         return trees, len(trees) == len(self._filters)
 
     def _provable_filter_trees(self) -> Optional[list]:
@@ -7839,7 +7841,7 @@ class TableScan:
         try:
             b = min(vals, key=key) if lo else max(vals, key=key)
             return parse_value(b, t) if isinstance(b, str) else b
-        except (TypeError, ValueError, ArithmeticError):
+        except BOUND_ERRORS:
             return U
 
     def min(self, col: str) -> Any:

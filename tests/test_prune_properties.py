@@ -641,3 +641,89 @@ def test_decimal_key_bounds_compare_as_decimals():
 
     assert _seq_scope_applies(scope, data("10.00"))
     assert not _seq_scope_applies(scope, data("11.00"))
+
+
+def test_nan_identity_partition_matches_as_spark(catalog):
+    """Spark sorts NaN greatest and holds NaN = NaN: a ``v=NaN``
+    partition directory matches ``v > 2`` and ``v = 'NaN'``."""
+    import math
+
+    t = catalog.create_table(
+        "nan_part",
+        schema={"v": "double", "k": "int"},
+        partition_spec=[("v", "identity")],
+    )
+    t.append([{"v": math.nan, "k": 1}, {"v": 1.5, "k": 2}])
+    assert [r["k"] for r in t.scan().filter("v > 2").to_a()] == [1]
+    assert [r["k"] for r in t.scan().filter("v = 'NaN'").to_a()] == [1]
+    assert [r["k"] for r in t.scan().filter("v >= 1.5").to_a()] in ([1, 2], [2, 1])
+    assert [r["k"] for r in t.scan().filter("v < 2").to_a()] == [2]
+
+
+def test_nan_partition_directory_compares_as_spark():
+    """Directory pruning reads a ``NaN`` value as Spark orders it —
+    greatest, and equal to itself — for any field it is handed (the
+    planner skips identity fields, whose column bounds prune already)."""
+    from iceberg_ruby_spark.table import _partition_may_match
+    from iceberg_ruby_spark.transforms import IdentityTransform
+
+    dbl = ice_t.DoubleType()
+    schema = ice_t.Schema([ice_t.NestedField(1, "v", dbl)])
+    pfields = {"v": (IdentityTransform(), "v")}
+
+    def may(dir_value, pred):
+        return _partition_may_match({"v": dir_value}, bound(pred, v=dbl), pfields, schema)
+
+    assert may("NaN", "v > 2") and may("NaN", "v = 'NaN'") and may("NaN", "v >= 'NaN'")
+    assert not may("NaN", "v < 2") and not may("NaN", "v = 1.5")
+    assert may("1.5", "v = 1.5") and not may("1.5", "v > 2") and not may("1.5", "v = 'NaN'")
+
+
+def test_legacy_timestamp_bound_forms_compare_as_values():
+    """Bounds written before the one stat form — a timestamptz with a
+    UTC offset (stream sink), a space-separated timestamp (equality-key
+    bounds) — compare as the values they spell."""
+    from iceberg_ruby_spark.manifests import _manifest_summary
+    from iceberg_ruby_spark.table import (
+        _compile_seq_scope,
+        _equality_delete_entry,
+        _seq_scope_applies,
+    )
+
+    tz = ice_t.TimestampTzType()
+    aware = {
+        "lower-bounds": {"tz": "2024-01-02T12:00:00+00:00"},
+        "upper-bounds": {"tz": "2024-01-02T13:30:00+01:00"},
+        "null-counts": {"tz": 0},
+        "record-count": 2,
+    }
+    assert _bounds_may_match(aware, bound("tz = '2024-01-02 12:00:00'", tz=tz))
+    assert _bounds_may_match(aware, bound("tz = '2024-01-02 12:30:00'", tz=tz))
+    assert not _bounds_may_match(aware, bound("tz > '2024-01-02 12:30:00'", tz=tz))
+    assert _bounds_all_match(aware, bound("tz >= '2024-01-02 12:00:00'", tz=tz))
+
+    f = ice_t.NestedField(1, "ts", ice_t.TimestampType())
+    stats = {
+        "lower-bounds": {"ts": "2024-01-02 05:00:00"},
+        "upper-bounds": {"ts": "2024-01-02 06:00:00"},
+        "null-counts": {"ts": 0},
+    }
+    scope = _compile_seq_scope(
+        _equality_delete_entry("del", 2, [f], 0, stats), ice_t.Schema([f])
+    )
+
+    def data(lo, hi):
+        return {"lower-bounds": {"ts": lo}, "upper-bounds": {"ts": hi}}
+
+    assert _seq_scope_applies(scope, data("2024-01-02T05:30:00", "2024-01-02T05:30:00"))
+    assert _seq_scope_applies(scope, data("2024-01-02T06:00:00", "2024-01-02T09:00:00"))
+    assert not _seq_scope_applies(scope, data("2024-01-02T06:00:01", "2024-01-02T09:00:00"))
+
+    summary = _manifest_summary(
+        [
+            {**data("2024-01-02 05:00:00", "2024-01-02 05:00:00"), "record-count": 1},
+            {**data("2024-01-02T04:00:00", "2024-01-02T04:30:00"), "record-count": 1},
+        ],
+        ice_t.Schema([f]),
+    )
+    assert summary["cols"]["ts"] == {"lo": "2024-01-02T04:00:00", "hi": "2024-01-02 05:00:00"}

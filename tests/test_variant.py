@@ -536,6 +536,29 @@ def test_variant_shred_prunes_files(catalog, spark):
     assert set(t.to_a()[0].keys()) == {"id", "m"}
 
 
+def test_variant_shred_prunes_mutations_like_scans(catalog, spark):
+    """A mutation binds its condition as a scan binds a filter: the
+    variant_get spelling of a shredded path prunes the files it reads."""
+    t = catalog.create_table(
+        "var_shred_mut",
+        schema={"id": "long", "m": "variant"},
+        properties={"format-version": "3", "write.variant.shred.m": "$.k:long"},
+    )
+    t.append([{"id": i, "m": f'{{"k": {i}}}'} for i in range(5)])
+    t = t.refresh()
+    t.append([{"id": i, "m": f'{{"k": {i}}}'} for i in range(100, 105)])
+    t = t.refresh()
+    cond = "variant_get(m, '$.k', 'long') >= 100"
+    (tree,), every = t.scan().filter(cond)._filter_trees()
+    assert every and t._bound_predicate(cond) == tree
+    data = [e for e in t._current_entries() if "path" in e]
+    kept = t._prune_by_condition(data, cond)
+    assert 0 < len(kept) < len(data)
+    assert all(e["lower-bounds"]["id"] >= 100 for e in kept)
+    t.delete_where(cond)
+    assert sorted(r["id"] for r in t.refresh().to_a()) == list(range(5))
+
+
 def test_variant_shred_declines_are_conservative(catalog, spark):
     t = catalog.create_table(
         "var_shred2",
