@@ -44,6 +44,7 @@ from iceberg_ruby_spark._localdf import small_local_df
 from iceberg_ruby_spark import types as ice_t
 from iceberg_ruby_spark.session import get_spark
 from iceberg_ruby_spark.table import (
+    ALL,
     Table,
     TableMetadata,
     _now_ms,
@@ -584,7 +585,7 @@ class Catalog:
 
         t._check_writable()
         t._commit_snapshot(
-            "overwrite", [], {"added-records": 0}, mode="replace", raw_extra=mutate
+            "overwrite", [], ALL, {"added-records": 0}, raw_extra=mutate
         )
         self._invalidate_views()
         return self.load_table(parts)

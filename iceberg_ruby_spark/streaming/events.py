@@ -218,8 +218,7 @@ def _append_with_batch_id(table, df: DataFrame, sink_id: str, batch_id: int) -> 
     table._commit_snapshot(
         "append",
         new_entries,
-        {"added-records": n, **_batch_summary(sink_id, batch_id)},
-        mode="append",
+        summary_extra={"added-records": n, **_batch_summary(sink_id, batch_id)},
     )
 
 

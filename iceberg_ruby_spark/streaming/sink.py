@@ -534,13 +534,12 @@ class EngineTableStreamWriter(DataSourceStreamArrowWriter):
         table._commit_snapshot(
             "append",
             entries,
-            {
+            summary_extra={
                 "added-records": sum(f["record-count"] for f in files),
                 "added-data-files": len(entries),
                 SINK_ID_KEY: self.sink_id,
                 BATCH_ID_KEY: str(batchId),
             },
-            mode="append",
             branch=self.branch,
         )
         self._last_batch_cache = batchId
@@ -594,7 +593,7 @@ class EngineTableStreamWriter(DataSourceStreamArrowWriter):
         table._commit_snapshot(
             "overwrite",
             delete_entries + data_entries,
-            {
+            summary_extra={
                 "added-records": sum(e["record-count"] for e in data_entries),
                 "added-data-files": len(data_entries),
                 "added-delete-files": len(delete_entries),
@@ -602,7 +601,6 @@ class EngineTableStreamWriter(DataSourceStreamArrowWriter):
                 SINK_ID_KEY: self.sink_id,
                 BATCH_ID_KEY: str(batchId),
             },
-            mode="append",
             branch=branch,
         )
 

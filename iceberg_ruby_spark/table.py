@@ -532,7 +532,7 @@ class FsTableOps:
             "write.metadata.delete-after-commit.enabled", "false"
         ).lower() != "true":
             return
-        keep = int(props.get("write.metadata.previous-versions-max", 100))
+        keep = _previous_versions_max(props)
         cutoff = new_version - 1 - keep  # newest retained old version
         v = cutoff
         while v >= 1:
@@ -717,6 +717,17 @@ def _commit_backoff(attempt: int) -> None:
 
 def _new_snapshot_id() -> int:
     return uuid_mod.uuid4().int >> 65  # 63-bit positive
+
+
+def _previous_versions_max(props: Optional[dict]) -> int:
+    """``write.metadata.previous-versions-max``: the spec default 100 when
+    unset or malformed, and at least 1 (a non-positive cap would invert
+    the ``[-n:]`` slices it feeds)."""
+    try:
+        n = int((props or {}).get("write.metadata.previous-versions-max", 100))
+    except (TypeError, ValueError):
+        n = 100
+    return max(1, n)
 
 
 # -- per-file Bloom key index (standing index state, like IVF/PQ) ---------
@@ -918,9 +929,31 @@ def _theta_hash_udf(ice_type: ice_t.Type):
 
 
 def _entry_key(e: dict[str, Any]) -> str:
-    """Stable identity for pathless manifest entries (delete files) so
-    replace-mode rebases can diff them by value."""
+    """Stable identity of a manifest entry: its path for a data entry,
+    its whole value for a pathless one (a delete file)."""
+    if "path" in e:
+        return e["path"]
     return json.dumps(e, sort_keys=True, default=str)
+
+
+# ``removed=ALL``: a commit that replaces every entry live at the head it
+# lands on (overwrite, create-or-replace)
+ALL: Any = object()
+
+
+def _entry_totals(entries: Iterable[dict[str, Any]]) -> tuple[int, int, int]:
+    """(data files, records, delete entries) of ``entries``."""
+    files = records = deletes = 0
+    for e in entries:
+        if "path" in e:
+            files += 1
+            records += e.get("record-count") or 0
+        else:
+            deletes += 1
+    return files, records, deletes
+
+
+_TOTAL_KEYS = ("total-data-files", "total-records", "total-delete-entries")
 
 
 # --------------------------------------------------------------------------
@@ -2166,11 +2199,10 @@ class Table:
         self._commit_snapshot(
             "append",
             added,
-            {
+            summary_extra={
                 "added-records": self._entries_rowcount(added),
                 "cherry-picked-snapshot-id": str(snapshot_id),
             },
-            mode="append",
         )
         return self.refresh()
 
@@ -3303,32 +3335,34 @@ class Table:
         mor = [e for e in entries if "delete-file" in e]
         return data, mor
 
-    def _live_deletes(
-        self, dels: list[dict[str, Any]], kept_entries: list[dict[str, Any]]
-    ) -> list[dict[str, Any]]:
-        """Delete entries still needed after a rewrite that keeps
-        ``kept_entries``.  A positional or DV entry is scoped to the files
-        that remain and dropped once none survives.  An equality delete
-        survives as long as any kept data file's sequence is still below
-        its own (rewritten files take the rewrite commit's HIGHER
+    def _retired_deletes(
+        self, dels: list[dict[str, Any]], kept_data: list[dict[str, Any]]
+    ) -> tuple[list[dict[str, Any]], list[dict[str, Any]]]:
+        """The delete side of a rewrite that keeps the data entries
+        ``kept_data``: ``(retired, narrowed)``, the entries of ``dels`` the
+        commit removes and the copies it adds in their place.  A
+        positional or DV entry is scoped to the files that remain: retired
+        once none survives, replaced by a narrowed copy while some do.  An
+        equality delete is retired once no kept data file's sequence is
+        below its own (rewritten files take the rewrite commit's HIGHER
         sequence, so the delete never replays onto them — the rewrite
         already materialized it)."""
-        kept_data = [e for e in kept_entries if "path" in e]
         kept_paths = {e["path"] for e in kept_data}
-        out = []
+        retired, narrowed = [], []
         for e in dels:
             if e.get("content") == "equality-deletes":
-                if _seq_scope_touched(e, kept_data, self.current_schema()):
-                    out.append(e)
+                if not _seq_scope_touched(e, kept_data, self.current_schema()):
+                    retired.append(e)
                 continue
             ap = e.get("applies-to")
             if ap is None:
-                out.append(e)  # no recorded file scope: keep it whole
-                continue
+                continue  # no recorded file scope: keep it whole
             ap2 = [p for p in ap if p in kept_paths]
-            if ap2:
-                out.append({**e, "applies-to": ap2})
-        return out
+            if len(ap2) < len(ap):
+                retired.append(e)
+                if ap2:
+                    narrowed.append({**e, "applies-to": ap2})
+        return retired, narrowed
 
     def _partition_fields(self) -> dict[str, tuple]:
         """name → (transform, source) across ALL partition specs, for
@@ -3392,23 +3426,31 @@ class Table:
     def _commit_snapshot(
         self,
         operation: str,
-        entries: list[dict[str, Any]],
+        added: list[dict[str, Any]],
+        removed: Sequence[dict[str, Any]] = (),
         summary_extra: Optional[dict] = None,
-        mode: str = "replace",
         base_snapshot_id: Optional[int] = None,
         branch: str = MAIN_BRANCH,
         raw_extra=None,
     ) -> None:
-        """Optimistic commit.  ``mode='append'`` treats ``entries`` as a
-        *delta* merged with the live manifest **re-read on every retry** —
-        a concurrent committer's files are never dropped (round-1 advisory:
-        stale entry list on retry = lost update).  ``mode='replace'`` commits
-        ``entries`` as the full new manifest, **rebased** against commits
-        that landed since ``base_snapshot_id`` (the snapshot the mutation
-        planned against): files a concurrent APPEND added are carried into
-        the new manifest; a concurrent commit that removed files this
-        mutation depends on aborts with a conflict error instead of
-        silently resurrecting or dropping rows.
+        """Optimistic commit of one delta.  Every attempt loads the fresh
+        head H of ``branch`` and commits ``H − removed + added``: data
+        entries match by path, delete entries by value (:func:`_entry_key`),
+        and ``removed=ALL`` drops whatever is live at H.  A caller passes
+        only the entries it changed, so a concurrent committer's entries
+        are neither lost nor resurrected.
+
+        A commit that removes nothing chains ``added`` onto H's manifest
+        list and reads no manifest — O(new files) commit metadata however
+        large the table (Iceberg's fast append); one that removes entries
+        rewrites the set.  Totals roll forward from H's summary (counted
+        from H's entries only when the summary lacks them), and
+        ``added-*`` and the v3 row-id range come from ``added``.
+
+        ``base_snapshot_id`` names the snapshot the operation planned
+        against; when the head moved since, :meth:`_validate_delta` refuses
+        a delta that no longer applies.  An entry of ``removed`` that is
+        no longer live at H is a conflict too.
 
         ``raw_extra(raw)`` applies a metadata-definition mutation (schema /
         spec / sort-order / properties swap) inside the SAME commit as the
@@ -3416,6 +3458,14 @@ class Table:
         reader never observes the truncated table still carrying the old
         definition.  Re-applied on every optimistic retry against fresh
         metadata."""
+        replace_all = removed is ALL
+        removed = [] if replace_all else list(removed)
+        removed_keys = {_entry_key(e) for e in removed}
+        # a data entry removed and added under one path moves between
+        # manifests (rewrite_manifests); only the others are new
+        fresh = [e for e in added if "path" in e and e["path"] not in removed_keys]
+        added_rows = self._entries_rowcount(fresh)
+        delta = [a - r for a, r in zip(_entry_totals(added), _entry_totals(removed))]
         for attempt in range(self._commit_retries() + 1):
             meta = self.ops.load()
             if branch == MAIN_BRANCH:
@@ -3427,160 +3477,34 @@ class Table:
                 if r is not None and r.get("type") != "branch":
                     raise InvalidDataError(f"not a branch: {branch}")
                 head = r["snapshot-id"] if r else meta.current_snapshot_id
-            fast_append = False
-            parent_snap = None
-            parent_entries: list[dict[str, Any]] = []
-            parent_list: Optional[str] = None
-            if mode == "append":
-                cur = head
-                if cur is not None:
-                    for s in meta.snapshots:
-                        if s.snapshot_id == cur:
-                            parent_snap = s
-                            break
-                added_rows = self._entries_rowcount(entries)  # delta only
-                # FAST APPEND: when the parent snapshot carries the running
-                # totals (every engine-written snapshot does), the commit
-                # never reads or rewrites the table's existing manifests —
-                # entries stays the delta, write_manifest chains it onto
-                # the parent's manifest list, and totals roll forward
-                # arithmetically.  O(new files) commit metadata at 100 TB;
-                # the legacy read-back path survives only as a fallback
-                # for snapshots without totals (externally-authored or
-                # hand-edited metadata).
-                fast_append = parent_snap is not None and all(
-                    k in parent_snap.summary
-                    for k in (
-                        "total-data-files",
-                        "total-records",
-                        "total-delete-entries",
-                    )
-                )
-                if fast_append or cur is None:
-                    all_entries = entries
-                else:
-                    base_entries = (
-                        self.ops.read_manifest(parent_snap.manifest_list)
-                        if parent_snap is not None
-                        else []
-                    )
-                    all_entries = base_entries + entries
+            head_snap = next(
+                (s for s in meta.snapshots if s.snapshot_id == head), None
+            )
+            psum = head_snap.summary if head_snap is not None else {}
+            has_totals = all(k in psum for k in _TOTAL_KEYS)
+            moved = base_snapshot_id is not None and head != base_snapshot_id
+            live: list[dict[str, Any]] = []
+            if head_snap is not None and (
+                moved or (not replace_all and (removed or not has_totals))
+            ):
+                live = self.ops.read_manifest(head_snap.manifest_list)
+            if moved:
+                self._validate_delta(base_snapshot_id, live, added, removed)
+            if replace_all or head_snap is None:
+                base_totals: Sequence[int] = (0, 0, 0)
+            elif has_totals:
+                base_totals = [int(psum[k]) for k in _TOTAL_KEYS]
             else:
-                all_entries = entries
-                cur = head
-                # next-row-id advances by rows in files ADDED relative to the
-                # parent snapshot (Iceberg v3 row-lineage accounting) — not
-                # by the whole replacement manifest, which double-counts
-                # carried-forward files
-                for s in meta.snapshots:
-                    if s.snapshot_id == cur:
-                        parent_entries = self.ops.read_manifest(s.manifest_list)
-                        parent_list = s.manifest_list
-                        break
-                parent_paths = {e["path"] for e in parent_entries if "path" in e}
-                added_rows = self._entries_rowcount(
-                    [e for e in entries if "path" in e and e["path"] not in parent_paths]
-                )
-                if base_snapshot_id is not None and cur != base_snapshot_id:
-                    base_snap = self.snapshot_by_id(base_snapshot_id)
-                    cur_entries = parent_entries
-                    base_entries = (
-                        self.ops.read_manifest(base_snap.manifest_list)
-                        if base_snap is not None
-                        else []
+                base_totals = _entry_totals(live)
+            entries = list(added)
+            if removed:
+                if not removed_keys <= {_entry_key(e) for e in live}:
+                    raise InvalidDataError(
+                        "commit conflict: an entry this operation removes "
+                        "is no longer live; retry the operation on fresh "
+                        "state"
                     )
-                    base_paths = {e["path"] for e in base_entries if "path" in e}
-                    cur_paths = {e["path"] for e in cur_entries if "path" in e}
-                    if base_paths - cur_paths:
-                        raise InvalidDataError(
-                            "commit conflict: a concurrent commit removed "
-                            "files this operation planned against; retry the "
-                            "operation on fresh state"
-                        )
-                    concurrent_added = [
-                        e
-                        for e in cur_entries
-                        if "path" in e and e["path"] not in base_paths
-                    ]
-                    # Pathless entries (merge-on-read delete files) rebase
-                    # by value: one committed since the base snapshot must
-                    # be carried into the new manifest, and if its file
-                    # scope intersects files this mutation rewrote the
-                    # delete cannot be replayed onto the rewritten files —
-                    # that's a validation failure, like Iceberg's
-                    # conflicting-delete check (round-2 advisory: racing
-                    # replace commits silently dropped concurrent MoR
-                    # deletes).
-                    base_keys = {_entry_key(e) for e in base_entries if "path" not in e}
-                    concurrent_pathless = [
-                        e
-                        for e in cur_entries
-                        if "path" not in e and _entry_key(e) not in base_keys
-                    ]
-                    new_paths = {e["path"] for e in entries if "path" in e}
-                    removed_here = base_paths - new_paths
-                    removed_base_entries = [
-                        b
-                        for b in base_entries
-                        if "path" in b and b["path"] in removed_here
-                    ]
-                    for e in concurrent_pathless:
-                        # a concurrent equality delete that applies to a
-                        # file this rewrite removed would resurrect its
-                        # dead rows (our rewritten files take a HIGHER
-                        # sequence the delete no longer covers); likewise
-                        # a positional / DV delete naming such a file
-                        if (
-                            _seq_scope_touched(
-                                e, removed_base_entries, self.current_schema()
-                            )
-                            if e.get("content") == "equality-deletes"
-                            else set(e.get("applies-to") or ()) & removed_here
-                        ):
-                            raise InvalidDataError(
-                                "commit conflict: a concurrent merge-on-read "
-                                "delete applies to files this operation "
-                                "rewrote; retry the operation on fresh state"
-                            )
-                    # a NEW equality delete of this commit would also kill
-                    # rows a concurrent append added (they carry a lower
-                    # sequence than this commit) that its hit count never
-                    # saw — Iceberg's RowDelta.validateNoConflictingDataFiles
-                    for e in entries:
-                        if (
-                            e.get("content") == "equality-deletes"
-                            and _entry_key(e) not in base_keys
-                            and _seq_scope_touched(
-                                e, concurrent_added, self.current_schema()
-                            )
-                        ):
-                            raise InvalidDataError(
-                                "commit conflict: a concurrent append added "
-                                "files this operation's equality delete "
-                                "applies to; retry the operation on fresh "
-                                "state"
-                            )
-                    # v3 invariant guard: carrying a concurrent DELETION
-                    # VECTOR for a data file THIS commit also wrote a
-                    # vector for would leave two DVs on one file — the
-                    # racing vectors must be re-merged from fresh state
-                    # (the DV writer retries the whole operation on this)
-                    my_dv_refs = {
-                        e.get("referenced-data-file")
-                        for e in entries
-                        if e.get("content") == "deletion-vector"
-                    }
-                    if my_dv_refs and any(
-                        e.get("content") == "deletion-vector"
-                        and e.get("referenced-data-file") in my_dv_refs
-                        for e in concurrent_pathless
-                    ):
-                        raise InvalidDataError(
-                            "commit conflict: a concurrent deletion vector "
-                            "references the same data file; retry the "
-                            "operation on fresh state"
-                        )
-                    all_entries = entries + concurrent_added + concurrent_pathless
+                entries = [e for e in live if _entry_key(e) not in removed_keys] + entries
             snapshot_id = _new_snapshot_id()
             # v3 row lineage: every data entry that doesn't already carry a
             # first-row-id (new files, or files from pre-lineage commits)
@@ -3589,10 +3513,10 @@ class Table:
             # derives _row_id = first-row-id + row position from these.
             # Copies, not in-place: a retry recomputes against fresh
             # metadata, so the caller's entry dicts must stay untouched.
-            all_entries = [dict(e) for e in all_entries]
+            entries = [dict(e) for e in entries]
             commit_seq = meta.last_sequence_number + 1
             next_rid = meta.next_row_id
-            for e in all_entries:
+            for e in entries:
                 # every entry — data AND delete (positional/equality/DV)
                 # — gets its committing sequence; the entries
                 # metadata table reconstructs adder snapshots from it
@@ -3610,103 +3534,27 @@ class Table:
                     # preserved rows' non-null cells win via coalesce
                     e["first-row-id"] = next_rid
                     next_rid += e["record-count"]
-            # SUPERSET CHAINING: a replace-mode commit whose entry multiset
-            # CONTAINS the parent's (merge-on-read deletes/merges: nothing
-            # removed, only delete/data entries added) writes just the
-            # delta chained onto the parent's manifests — the same
-            # O(changed) commit metadata as fast append, instead of
-            # rewriting the table's full entry set.  This is also what
-            # makes the commit structurally delta-derivable for streaming/
-            # incremental planning (the r9 delete-commit planning term that
-            # grew with live file count).  Value-level containment is the
-            # guard: any carried entry the operation MUTATED (a replaced
-            # DV, rebased stats) breaks containment and the commit falls
-            # back to the full rewrite — chaining can narrow a manifest,
-            # never corrupt one.  ``replace`` operations (rewrite_manifests
-            # / compaction) are excluded: consolidation is their purpose.
-            chain_delta: Optional[list[dict[str, Any]]] = None
-            if (
-                mode != "append"
-                and operation != "replace"
-                and parent_list is not None
-                and parent_entries
-            ):
-                from collections import Counter as _Ctr
-
-                def _canon_entry(e: dict[str, Any]) -> str:
-                    return json.dumps(e, sort_keys=True, default=str)
-
-                parent_counts = _Ctr(_canon_entry(e) for e in parent_entries)
-                seen_counts: dict[str, int] = {}
-                delta_entries = []
-                for e in all_entries:
-                    k = _canon_entry(e)
-                    seen_counts[k] = seen_counts.get(k, 0) + 1
-                    if seen_counts[k] > parent_counts.get(k, 0):
-                        delta_entries.append(e)
-                if delta_entries and all(
-                    seen_counts.get(k, 0) >= n
-                    for k, n in parent_counts.items()
-                ):
-                    chain_delta = delta_entries
+            chain = head_snap is not None and not removed and not replace_all
             manifest = self.ops.write_manifest(
                 snapshot_id,
-                chain_delta if chain_delta is not None else all_entries,
+                entries,
                 ctx=self._manifest_ctx(meta, head),
-                base_list=(
-                    parent_snap.manifest_list
-                    if fast_append
-                    else (parent_list if chain_delta is not None else None)
-                ),
+                base_list=head_snap.manifest_list if chain else None,
             )
             now = _now_ms()
-            parent = head
-            data_entries = [e for e in all_entries if "path" in e]
-            if mode == "append":
-                added_files = len([e for e in entries if "path" in e])
-            else:
-                # only files NEW relative to the parent count as added —
-                # carried-forward files in a file-pruned CoW rewrite don't
-                # (same delta set next-row-id uses; Iceberg summary semantics)
-                added_files = len(
-                    [
-                        e
-                        for e in entries
-                        if "path" in e and e["path"] not in parent_paths
-                    ]
-                )
-            if fast_append:
-                # totals roll forward from the parent summary — the whole
-                # point of fast append is never enumerating the full table
-                psum = parent_snap.summary
-                counters = {
-                    "added-data-files": str(added_files),
-                    "added-rows": str(added_rows),
-                    "total-data-files": str(
-                        int(psum["total-data-files"]) + len(data_entries)
-                    ),
-                    "total-records": str(
-                        int(psum["total-records"])
-                        + self._entries_rowcount(data_entries)
-                    ),
-                    "total-delete-entries": str(
-                        int(psum["total-delete-entries"])
-                        + (len(all_entries) - len(data_entries))
-                    ),
-                }
-            else:
-                counters = {
-                    # Iceberg snapshot-summary counters (metadata-only totals)
-                    "added-data-files": str(added_files),
-                    "added-rows": str(added_rows),
-                    "total-data-files": str(len(data_entries)),
-                    "total-records": str(self._entries_rowcount(data_entries)),
-                    "total-delete-entries": str(len(all_entries) - len(data_entries)),
-                }
+            files, records, deletes = (b + d for b, d in zip(base_totals, delta))
+            counters = {
+                # Iceberg snapshot-summary counters (metadata-only totals)
+                "added-data-files": str(len(fresh)),
+                "added-rows": str(added_rows),
+                "total-data-files": str(files),
+                "total-records": str(records),
+                "total-delete-entries": str(deletes),
+            }
             snap = Snapshot(
                 snapshot_id=snapshot_id,
-                parent_snapshot_id=parent,
-                sequence_number=meta.last_sequence_number + 1,
+                parent_snapshot_id=head,
+                sequence_number=commit_seq,
                 timestamp_ms=now,
                 manifest_list=manifest,
                 schema_id=meta.current_schema_id,
@@ -3728,22 +3576,10 @@ class Table:
             raw["last-sequence-number"] = snap.sequence_number
             raw["last-updated-ms"] = now
             # the spec caps the previous-metadata list at
-            # write.metadata.previous-versions-max (default 100) — without
-            # it a streaming sink's metadata document grows one log row
-            # per commit forever, an O(history) tax on EVERY subsequent
+            # write.metadata.previous-versions-max — without it a
+            # streaming sink's metadata document grows one log row per
+            # commit forever, an O(history) tax on EVERY subsequent
             # commit's serialize+write
-            try:
-                log_max = int(
-                    (raw.get("properties") or {}).get(
-                        "write.metadata.previous-versions-max", 100
-                    )
-                )
-            except (TypeError, ValueError):
-                log_max = 100  # malformed property: the spec default wins
-            # a non-positive cap would INVERT the slice ([-0:] keeps the
-            # whole list; negative drops the NEWEST) — clamp like the spec
-            # impls do (previous-versions-max minimum is 1)
-            log_max = max(1, log_max)
             raw["metadata-log"] = (
                 meta.metadata_log
                 + [
@@ -3752,7 +3588,7 @@ class Table:
                         "timestamp-ms": meta.last_updated_ms,
                     }
                 ]
-            )[-log_max:]
+            )[-_previous_versions_max(raw.get("properties")):]
             refs = dict(meta.refs)
             refs[branch] = {"snapshot-id": snapshot_id, "type": "branch"}
             raw["refs"] = refs
@@ -3776,6 +3612,86 @@ class Table:
                 _commit_backoff(attempt)
                 continue  # lost the optimistic race; retry on fresh metadata
         raise InvalidDataError("commit conflict: too many retries")
+
+    def _validate_delta(
+        self,
+        base_snapshot_id: int,
+        live: list[dict[str, Any]],
+        added: list[dict[str, Any]],
+        removed: list[dict[str, Any]],
+    ) -> None:
+        """Refuse a delta planned against ``base_snapshot_id`` that no
+        longer applies to ``live``, the entries of the head that moved
+        since (Iceberg's commit validations):
+
+        - a data file live at the base is gone — the operation read rows
+          a concurrent commit rewrote or removed;
+        - a concurrent equality, positional or DV delete applies to a file
+          this delta removes — the rewrite would resurrect its dead rows
+          (the rewritten files take a HIGHER sequence the delete no longer
+          covers);
+        - an equality delete this delta adds applies to a concurrently
+          added file — it would kill rows its hit count never saw
+          (``RowDelta.validateNoConflictingDataFiles``);
+        - a deletion vector this delta adds targets a file a concurrent
+          vector also targets — two vectors on one file break the v3
+          invariant, and the racing vectors must be re-merged from fresh
+          state (the DV writers retry the whole operation on this)."""
+
+        def conflict(why: str) -> InvalidDataError:
+            return InvalidDataError(
+                f"commit conflict: {why}; retry the operation on fresh state"
+            )
+
+        base = self.snapshot_by_id(base_snapshot_id)
+        base_entries = (
+            self.ops.read_manifest(base.manifest_list) if base is not None else []
+        )
+        live_paths = {e["path"] for e in live if "path" in e}
+        if any("path" in e and e["path"] not in live_paths for e in base_entries):
+            raise conflict(
+                "a concurrent commit removed files this operation planned against"
+            )
+        base_keys = {_entry_key(e) for e in base_entries}
+        concurrent = [e for e in live if _entry_key(e) not in base_keys]
+        schema = self.current_schema()
+        removed_data = [e for e in removed if "path" in e]
+        removed_paths = {e["path"] for e in removed_data}
+        for e in concurrent:
+            if "path" in e:
+                continue
+            if (
+                _seq_scope_touched(e, removed_data, schema)
+                if e.get("content") == "equality-deletes"
+                else set(e.get("applies-to") or ()) & removed_paths
+            ):
+                raise conflict(
+                    "a concurrent merge-on-read delete applies to files this "
+                    "operation rewrote"
+                )
+        concurrent_data = [e for e in concurrent if "path" in e]
+        if any(
+            e.get("content") == "equality-deletes"
+            and _seq_scope_touched(e, concurrent_data, schema)
+            for e in added
+        ):
+            raise conflict(
+                "a concurrent append added files this operation's equality "
+                "delete applies to"
+            )
+        dv_refs = {
+            e.get("referenced-data-file")
+            for e in added
+            if e.get("content") == "deletion-vector"
+        }
+        if any(
+            e.get("content") == "deletion-vector"
+            and e.get("referenced-data-file") in dv_refs
+            for e in concurrent
+        ):
+            raise conflict(
+                "a concurrent deletion vector references the same data file"
+            )
 
     def _auto_refresh_blooms(self, branch: str = MAIN_BRANCH) -> None:
         """``write.bloom.auto-refresh=true``: fold bloom-index maintenance
@@ -3874,8 +3790,7 @@ class Table:
         self._commit_snapshot(
             "append",
             new_entries,
-            {"added-records": n},
-            mode="append",
+            summary_extra={"added-records": n},
             branch=branch or MAIN_BRANCH,
         )
         return self
@@ -3936,12 +3851,11 @@ class Table:
         self._commit_snapshot(
             "append",
             new_entries,
-            {
+            summary_extra={
                 "added-records": n,
                 "added-files-by-reference": len(new_entries),
                 **(summary_extra or {}),
             },
-            mode="append",
         )
         return len(new_entries)
 
@@ -3972,6 +3886,7 @@ class Table:
         self._commit_snapshot(
             "overwrite",
             new_entries,
+            ALL,
             {"added-records": n, **(summary_extra or {})},
             raw_extra=raw_extra,
         )
@@ -4030,7 +3945,8 @@ class Table:
         is a string or a Column (read through its SQL-ish string); the
         shredded variant columns bind by their shred spec's type, and a
         ``[try_]variant_get(col, path, type)`` spelling of one reads as
-        that column."""
+        that column.  Spark 4 spells a Column in prefix form (``=(a, 9)``),
+        which :func:`_prefix_to_infix` rewrites for the one parser."""
         from iceberg_ruby_spark.table_definition import parse_type
 
         types = {f.name: f.field_type for f in self.current_schema().fields}
@@ -4047,6 +3963,8 @@ class Table:
                     src = f._jc.toString()
                 except Exception:
                     src = None
+                else:
+                    src = _prefix_to_infix(src) or src
             tree = _parse_predicate(src, shred_map=shred) if src is not None else None
             out.append(None if tree is None else _bind(tree, types))
         return out
@@ -4168,13 +4086,14 @@ class Table:
         data file, all vectors in one Puffin file, one manifest entry per
         vector recording the blob's offset/length (deletion_vectors.py
         implements the portable roaring + blob formats, JVM-cross-
-        verified).  Returns ``(carried_entries, delete_entries,
+        verified).  Returns ``(replaced_entries, delete_entries,
         deleted_count, puffin_path)`` WITHOUT committing — delete_where
         commits the vectors alone, MoR UPDATE commits them together with
         the new row versions; callers drop ``puffin_path`` and rebuild
         from fresh state if the optimistic commit loses a race.  A
         parseable ``cond_str`` pre-prunes the files read by manifest
-        bounds; every entry outside the replaced vectors is carried."""
+        bounds; ``replaced_entries`` are the prior vectors the new ones
+        supersede, for the commit to remove."""
         from iceberg_ruby_spark.deletion_vectors import (
             decode_dv_blob,
             encode_dv_blob,
@@ -4184,7 +4103,7 @@ class Table:
         self._refuse_positional_over_orc(cur_entries)
         read_entries = self._prune_by_condition(cur_entries, cond_str)
         if not self._entry_files(read_entries):
-            return cur_entries, [], 0, None
+            return [], [], 0, None
         live = self._read_entries(read_entries, file_col="__f", pos_col="__p")
         loc_prefixes = sorted(
             {
@@ -4270,11 +4189,10 @@ class Table:
         )
         deleted = sum(r["__hits"] for r in built)
         if not deleted:
-            return cur_entries, [], 0, None
+            return [], [], 0, None
         replaced = [
             prior_by_rf[r["__rf"]] for r in built if r["__rf"] in prior_by_rf
         ]
-        carried = [e for e in cur_entries if e not in replaced]
         blobs = []
         for r in built:
             blobs.append(
@@ -4316,7 +4234,7 @@ class Table:
                     "spec-id": self.default_spec_id,
                 }
             )
-        return carried, del_entries, deleted, dv_path
+        return replaced, del_entries, deleted, dv_path
 
     def delete_where(
         self,
@@ -4360,8 +4278,11 @@ class Table:
                 return 0
             self._commit_snapshot(
                 "delete",
-                entries + del_entries,
-                {"deleted-records": deleted, "mode": "merge-on-read-positional"},
+                del_entries,
+                summary_extra={
+                    "deleted-records": deleted,
+                    "mode": "merge-on-read-positional",
+                },
                 base_snapshot_id=self._branch_head_id(branch),
                 branch=target,
             )
@@ -4377,7 +4298,7 @@ class Table:
                 cur_entries = (
                     entries if attempt == 0 else self._current_entries(branch)
                 )
-                carried, del_entries, deleted, dv_path = self._dv_delete_build(
+                replaced, del_entries, deleted, dv_path = self._dv_delete_build(
                     cur_entries, cond, cond_str
                 )
                 if not deleted:
@@ -4385,7 +4306,8 @@ class Table:
                 try:
                     self._commit_snapshot(
                         "delete",
-                        carried + del_entries,
+                        del_entries,
+                        replaced,
                         {"deleted-records": deleted, "mode": "merge-on-read-dv"},
                         base_snapshot_id=self._branch_head_id(branch),
                         branch=target,
@@ -4425,9 +4347,11 @@ class Table:
         new_entries = self._write_data_dir(survivors, lineage_cols=True)
         for e in new_entries:
             e["materialized-lineage"] = True
+        retired, narrowed = self._retired_deletes(dels, keep_entries)
         self._commit_snapshot(
             "delete",
-            keep_entries + new_entries + self._live_deletes(dels, keep_entries),
+            new_entries + narrowed,
+            hit_entries + retired,
             {"deleted-records": deleted},
             base_snapshot_id=self._branch_head_id(branch),
             branch=target,
@@ -4823,12 +4747,11 @@ class Table:
             self._commit_snapshot(
                 "delete",
                 delete_entries,
-                {
+                summary_extra={
                     "deleted-records": n_keys,
                     "mode": "merge-on-read-equality",
                     "blind-delete": "true",
                 },
-                mode="append",
                 branch=branch or MAIN_BRANCH,
             )
             return n_keys
@@ -4921,8 +4844,11 @@ class Table:
             return 0
         self._commit_snapshot(
             "delete",
-            entries + delete_entries,
-            {"deleted-records": deleted, "mode": "merge-on-read-equality"},
+            delete_entries,
+            summary_extra={
+                "deleted-records": deleted,
+                "mode": "merge-on-read-equality",
+            },
             base_snapshot_id=self._branch_head_id(branch),
             branch=branch or MAIN_BRANCH,
         )
@@ -5011,15 +4937,14 @@ class Table:
         for attempt in range(self._commit_retries() + 1):
             cur_entries = self._current_entries(branch)
             if mode == "merge-on-read-dv":
-                carried, del_entries, deleted, dv_path = self._dv_delete_build(
+                replaced, del_entries, deleted, dv_path = self._dv_delete_build(
                     cur_entries, cond, cond_str
                 )
-                base_entries = carried
             else:
                 del_entries, deleted = self._positional_delete_build(
                     cur_entries, cond, cond_str
                 )
-                base_entries, dv_path = cur_entries, None
+                replaced, dv_path = [], None
             if not deleted:
                 return 0
             out = self._read_entries_with_lineage(cur_entries).filter(cond)
@@ -5042,7 +4967,8 @@ class Table:
             try:
                 self._commit_snapshot(
                     "overwrite",
-                    base_entries + del_entries + new_entries,
+                    del_entries + new_entries,
+                    replaced,
                     {"updated-records": deleted, "mode": mode},
                     base_snapshot_id=self._branch_head_id(branch),
                     branch=target,
@@ -5116,9 +5042,11 @@ class Table:
         )
         for e in new_entries:
             e["materialized-lineage"] = True
+        retired, narrowed = self._retired_deletes(dels, keep_entries)
         self._commit_snapshot(
             "overwrite",
-            keep_entries + new_entries + self._live_deletes(dels, keep_entries),
+            new_entries + narrowed,
+            hit_entries + retired,
             {"updated-records": updated},
             base_snapshot_id=self._branch_head_id(branch),
             branch=branch or MAIN_BRANCH,
@@ -5356,9 +5284,11 @@ class Table:
         new_entries = self._write_data_dir(merged, lineage_cols=True)
         for e in new_entries:
             e["materialized-lineage"] = True
+        retired, narrowed = self._retired_deletes(dels, keep_entries)
         self._commit_snapshot(
             "overwrite",
-            keep_entries + new_entries + self._live_deletes(dels, keep_entries),
+            new_entries + narrowed,
+            hit_entries + retired,
             {"operation-detail": "merge", **(summary_extra or {})},
             base_snapshot_id=self._branch_head_id(branch),
             branch=branch or MAIN_BRANCH,
@@ -5491,11 +5421,10 @@ class Table:
         new_entries = self._write_data_dir(merged) if merged is not None else []
         if not new_entries and not eq_entries:
             return self
-        all_new = entries + eq_entries + new_entries
         self._commit_snapshot(
             "overwrite",
-            all_new,
-            {
+            eq_entries + new_entries,
+            summary_extra={
                 "operation-detail": "merge",
                 "mode": "merge-on-read",
                 **(summary_extra or {}),
@@ -5587,7 +5516,7 @@ class Table:
         deletes materialize into the rewrite, the CoW-delete pattern)."""
         self._check_writable()
         entries = self._current_entries()
-        keep_entries: list[dict[str, Any]] = []
+        removed, narrowed = entries, []
         dels: list[dict[str, Any]] = []
         if where is not None:
             data, dels = self._split_entries(entries)
@@ -5599,10 +5528,12 @@ class Table:
                 )
             hit = self._prune_by_stats(data, tree)
             hit_paths = {e.get("path") for e in hit if "path" in e}
-            keep_entries = [e for e in data if e.get("path") not in hit_paths]
             if not hit:
                 return self
-            entries = hit
+            retired, narrowed = self._retired_deletes(
+                dels, [e for e in data if e.get("path") not in hit_paths]
+            )
+            entries, removed = hit, hit + retired
         n_rows = self._entries_rowcount(entries)
         n_files = max(1, n_rows // max(1, target_file_rows))
         # read WITH row lineage so the rewrite preserves every surviving
@@ -5642,14 +5573,10 @@ class Table:
             # lineage lives IN the file — the commit must not assign these
             # entries a fresh first-row-id range
             e["materialized-lineage"] = True
-        commit_entries = new_entries
-        if where is not None:
-                commit_entries = (
-                keep_entries + new_entries + self._live_deletes(dels, keep_entries)
-            )
         self._commit_snapshot(
             "replace",
-            commit_entries,
+            new_entries + narrowed,
+            removed,
             {
                 "compacted": True,
                 # iceberg-spark rewrite_data_files result vocabulary — CALL
@@ -5681,6 +5608,7 @@ class Table:
         self._commit_snapshot(
             "replace",
             entries,
+            entries,
             {"rewritten-manifests-count": str(before)},
             base_snapshot_id=self.current_snapshot_id,
         )
@@ -5711,7 +5639,6 @@ class Table:
                 "rewritten_delete_files_count": 0,
                 "added_delete_files_count": 0,
             }
-        others = [e for e in entries if e.get("content") != "position-deletes"]
         loc = self.ops.location
         base = (loc if "://" in loc else os.path.abspath(loc)).rstrip("/")
         # strip each entry's write-time base, union, dedup, re-absolutize
@@ -5741,7 +5668,8 @@ class Table:
         new_entries = self._write_position_deletes(merged, base)
         self._commit_snapshot(
             "replace",
-            others + new_entries,
+            new_entries,
+            pos,
             {
                 "rewritten-delete-files-count": len(pos),
                 "added-delete-files-count": len(new_entries),
@@ -6320,6 +6248,56 @@ def _shred_col_name(col: str, path: str, typ: str) -> str:
 
     h = hashlib.md5(f"{path}|{typ}".encode()).hexdigest()[:8]
     return f"_shred_{col}_{h}"
+
+
+_PREFIX_TOKEN = re.compile(r"\s*('[^'\\]*'|<=|>=|[=<>(),]|[A-Za-z_][A-Za-z_0-9.]*|-?\d+)")
+_PREFIX_FNS = ("=", "<", "<=", ">", ">=", "and", "or", "in", "isNull", "isNotNull")
+
+
+def _prefix_to_infix(s: str) -> Optional[str]:
+    """A Column predicate as Spark 4 renders it — ``=(a, 9)``,
+    ``and(>(a, 3), in(b, 'x', 'y'))``, ``isNull(a)`` — as the infix text
+    :func:`_parse_predicate` reads, or None for any other shape: another
+    function (``!``, ``<=>``), a literal first, or a literal other than an
+    integer or a quoted string without a backslash (Spark escapes a quote
+    with one).  ``NULL``, unquoted dates and timestamps and fractional
+    numbers yield None too: a fractional Column literal may be a double,
+    which Spark compares as double, not as the exact decimal the SQL
+    spelling means."""
+    toks, pos, s = [], 0, s.strip()
+    while pos < len(s):
+        m = _PREFIX_TOKEN.match(s, pos)
+        if m is None:
+            return None
+        toks.append(m.group(1))
+        pos = m.end()
+    it = iter(toks)
+
+    def node(fn: Optional[str]) -> Optional[str]:
+        if fn not in _PREFIX_FNS or next(it, None) != "(":
+            return None
+        if fn in ("and", "or"):
+            lhs = node(next(it, None))
+            rhs = node(next(it, None)) if next(it, None) == "," else None
+            ok = lhs and rhs and next(it, None) == ")"
+            return f"({lhs}) {fn.upper()} ({rhs})" if ok else None
+        col, vals = next(it, None), []
+        while (tok := next(it, None)) == ",":
+            vals.append(next(it, None))
+        if (
+            tok != ")"
+            or not re.match(r"[A-Za-z_]", col or "")
+            or not all(v and v[0] in "'-0123456789" for v in vals)
+        ):
+            return None
+        if fn in ("isNull", "isNotNull"):
+            return None if vals else f"{col} IS {'NOT ' * (fn == 'isNotNull')}NULL"
+        if fn == "in":
+            return f"{col} IN ({', '.join(vals)})" if vals else None
+        return f"{col} {fn} {vals[0]}" if len(vals) == 1 else None
+
+    out = node(next(it, None))
+    return out if next(it, None) is None else None
 
 
 def _parse_predicate(s: str, shred_map: Optional[dict] = None):

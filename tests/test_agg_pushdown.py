@@ -165,6 +165,39 @@ def test_filtered_count_metadata_when_partition_aligned(catalog):
     ).to_a() == [{"n": 0}]
 
 
+def test_column_filter_prunes_like_its_sql_string(catalog):
+    """A Column filter plans the same files as its SQL spelling and
+    answers COUNT from metadata: Spark 4 renders a Column in prefix form
+    (``=(id, 15)``), which the planner rewrites for its one parser.
+    Shapes outside that form keep every file."""
+    from pyspark.sql import functions as F
+
+    t = catalog.create_table("aggcol", schema={"id": "long", "v": "string"})
+    for lo in (0, 10, 20):
+        t.append([{"id": lo + i, "v": f"x{lo + i}"} for i in range(10)])
+    t = t.refresh()
+
+    def files(f):
+        return sorted(x["data_file_path"] for x in t.scan().filter(f).plan_files())
+
+    every = files("id >= 0")
+    for col, sql in [
+        (F.col("id") == 15, "id = 15"),
+        (F.col("id").isin(3, 27), "id IN (3, 27)"),
+        ((F.col("id") > 12) & (F.col("v") == "x13"), "id > 12 AND v = 'x13'"),
+        ((F.col("id") < 3) | (F.col("id") >= 25), "id < 3 OR id >= 25"),
+        (F.col("v").isNull(), "v IS NULL"),
+    ]:
+        assert files(col) == files(sql), sql
+        assert len(files(col)) < len(every), sql
+    for col in [~(F.col("id") == 15), F.col("id").eqNullSafe(15), F.col("id") > 1.5]:
+        assert files(col) == every
+    _drop_data_files(t)
+    assert t.scan().filter(F.col("id") < 10).count() == 10
+    assert t.scan().filter((F.col("id") >= 10) & (F.col("id") < 30)).count() == 20
+    assert t.scan().filter(F.col("id").isNotNull()).count() == 30
+
+
 def test_filtered_count_soundness_fallbacks(catalog, spark):
     """Float predicates, NULL-bearing compared columns, and outstanding
     deletes must NOT answer a filtered count from metadata."""

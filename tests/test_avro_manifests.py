@@ -231,8 +231,8 @@ def test_mor_deletes_under_avro(catalog, spark):
     latest_list = max(_list_files(t), key=os.path.getmtime)
     _, mfs = _jvm_read(spark, latest_list)
     assert {m["content"] for m in mfs} == {0, 1}
-    # each MoR delete commit CHAINS the parent's manifests and adds its
-    # own delete manifest (r10 superset chaining), so the delete entries
+    # each MoR delete commit removes nothing, so it CHAINS the parent's
+    # manifests and adds its own delete manifest: the delete entries
     # spread across the list's content=1 manifests — aggregate them
     del_records = [
         r
@@ -468,7 +468,7 @@ def test_carried_entries_keep_sequence_and_status(catalog, spark):
     list — equality deletes apply only to data files with data seq
     strictly below the delete's, so re-stamping carried files at the
     current sequence would disable every equality delete for external
-    readers.  Since r10 superset chaining, a MoR delete commit reuses
+    readers.  A MoR delete commit removes nothing, so it chains and reuses
     the parent's data manifests verbatim (their manifest-list rows keep
     their own sequence_number, which null-seq ADDED entries inherit)
     instead of rewriting carried entries as EXISTING — the same spec

@@ -64,8 +64,8 @@ def test_concurrent_ref_and_append(catalog):
 
 def test_concurrent_append_during_delete_not_lost(catalog):
     """A delete planned against snapshot A must not drop files a
-    concurrent append committed between planning and commit (replace-mode
-    rebase)."""
+    concurrent append committed between planning and commit: the commit
+    applies its delta to the head it lands on."""
     t = catalog.create_table("cd", schema={"a": "int"})
     t.append([{"a": i} for i in range(10)])
 
@@ -93,8 +93,8 @@ def test_concurrent_compact_and_append_not_lost(catalog):
 
 
 def test_concurrent_mor_delete_carried_by_replace(catalog):
-    """A merge-on-read delete file committed between a replace-mode
-    mutation's planning and its commit must ride the rebase into the new
+    """A merge-on-read delete file committed between a rewriting
+    mutation's planning and its commit must stay in the new
     manifest (round-2 advisory: it was silently dropped, resurrecting the
     deleted rows)."""
     t = catalog.create_table("cm", schema={"a": "int", "b": "string"})
@@ -105,7 +105,7 @@ def test_concurrent_mor_delete_carried_by_replace(catalog):
     h_del = catalog.load_table("cm")
     # interleave: MoR delete (file set 1) lands after h_upd loaded metadata
     assert h_del.delete_where("a = 2", mode="merge-on-read") == 1
-    # replace-mode update rewrites file set 2 only
+    # copy-on-write update rewrites file set 2 only
     assert h_upd.update_where({"b": "'y'"}, "a = 5") == 1
     t = t.refresh()
     rows = {(r["a"], r["b"]) for r in t.to_a()}
@@ -113,7 +113,7 @@ def test_concurrent_mor_delete_carried_by_replace(catalog):
 
 
 def test_concurrent_mor_delete_conflicts_with_overlapping_rewrite(catalog):
-    """If the concurrent MoR delete applies to a file the replace-mode
+    """If the concurrent MoR delete applies to a file the rewriting
     mutation rewrote, the delete cannot be replayed — the commit must fail
     with a conflict instead of resurrecting or double-applying rows."""
     import pytest
@@ -256,3 +256,59 @@ def test_mixed_append_dv_delete_mor_update_race(catalog):
     dv = [e for e in t._current_entries() if e.get("content") == "deletion-vector"]
     refs = [e["referenced-data-file"] for e in dv]
     assert len(refs) == len(set(refs)), refs
+
+
+def _two_file_table(catalog, name, version):
+    """A table of two data files, a in 1..5 and a in 11..15, and the
+    path of the first."""
+    t = catalog.create_table(
+        name, schema={"a": "int"}, properties={"format-version": version}
+    )
+    for lo in (1, 11):
+        t.append(
+            catalog.spark.createDataFrame(
+                [(lo + i,) for i in range(5)], "a int"
+            ).coalesce(1)
+        )
+        if lo == 1:
+            (file1,) = [e["path"] for e in t._current_entries()]
+    assert len(t.scan().plan_files()) == 2
+    return t, file1
+
+
+def test_stale_rewrite_keeps_concurrent_position_delete_rewrite(catalog):
+    """A copy-on-write delete planned before a concurrent
+    rewrite_position_deletes commits only its own delta: the delete
+    entries the rewrite retired stay retired."""
+    t, _ = _two_file_table(catalog, "crpd", "2")
+    t.delete_where("a = 1", mode="merge-on-read")
+    t.delete_where("a = 2", mode="merge-on-read")
+
+    h = catalog.load_table("crpd")  # plans against the two delete entries
+    res = catalog.load_table("crpd").rewrite_position_deletes()
+    assert res["rewritten_delete_files_count"] == 2
+    assert h.delete_where("a = 13") == 1  # rewrites the other file
+    t = t.refresh()
+    pos = [
+        e for e in t._current_entries() if e.get("content") == "position-deletes"
+    ]
+    assert len(pos) == 1, pos
+    assert sorted(r["a"] for r in t.to_a()) == [3, 4, 5, 11, 12, 14, 15]
+
+
+def test_stale_rewrite_ignores_concurrent_dv_replacement(catalog):
+    """A copy-on-write delete of a row in file 2, planned before another
+    writer replaced file 1's deletion vector, wrote no vector itself, so
+    the replacement is no conflict: the commit lands and file 1 keeps
+    the one, newer vector."""
+    t, file1 = _two_file_table(catalog, "crdv", "3")
+    t.delete_where("a = 1", mode="merge-on-read")
+
+    h = catalog.load_table("crdv")  # plans against the first vector
+    catalog.load_table("crdv").delete_where("a = 2", mode="merge-on-read")
+    assert h.delete_where("a = 13") == 1
+    t = t.refresh()
+    dv = [e for e in t._current_entries() if e.get("content") == "deletion-vector"]
+    assert [e["applies-to"] for e in dv] == [[file1]], dv
+    assert sorted(r["a"] for r in t.to_a()) == [3, 4, 5, 11, 12, 14, 15]
+    assert t.scan().count() == 7

@@ -78,6 +78,41 @@ def test_append_never_reads_parent_manifests(catalog, monkeypatch):
     assert _rows(t) == [1, 2, 3]
 
 
+def test_no_removal_commits_never_read_manifests(catalog, monkeypatch):
+    """Every commit that removes nothing chains its delta onto the head's
+    manifest list like an append: a verified delete_by_keys, a
+    merge-on-read upsert and a positional delete_where read no manifest
+    inside the commit when the head has not moved."""
+    from iceberg_ruby_spark.table import Table
+
+    t = _mk(catalog, "fa_noread", properties={"format-version": "2"})
+    t.append([{"k": i, "v": "a"} for i in range(10)])
+    t.append([{"k": i, "v": "b"} for i in range(10, 20)])
+    inside, calls = [False], []
+    read, commit = FsTableOps.read_manifest, Table._commit_snapshot
+
+    def read_spy(self, manifest_list):
+        if inside[0]:
+            calls.append(manifest_list)
+        return read(self, manifest_list)
+
+    def commit_spy(self, *args, **kwargs):
+        inside[0] = True
+        try:
+            return commit(self, *args, **kwargs)
+        finally:
+            inside[0] = False
+
+    monkeypatch.setattr(FsTableOps, "read_manifest", read_spy)
+    monkeypatch.setattr(Table, "_commit_snapshot", commit_spy)
+    assert t.delete_by_keys([(3,)], on="k") == 1
+    t.upsert([{"k": 12, "v": "u"}], on="k", mode="merge-on-read")
+    assert t.delete_where("k = 15", mode="merge-on-read") == 1
+    assert calls == [], f"commits read manifests: {calls}"
+    assert len(t.snapshots) == 5
+    assert _rows(t) == [k for k in range(20) if k not in (3, 15)]
+
+
 def test_read_manifest_delta_append_window(catalog):
     t = _mk(catalog, "fa_delta")
     for i in range(5):

@@ -445,8 +445,8 @@ def _external_equality_delete(t, cols, rows):
     entries = t._key_delete_entries(del_dir, cols)
     t._commit_snapshot(
         "delete",
-        t._current_entries() + entries,
-        {"mode": "merge-on-read-equality"},
+        entries,
+        summary_extra={"mode": "merge-on-read-equality"},
         base_snapshot_id=t.current_snapshot_id,
     )
     return t.refresh()

@@ -490,6 +490,33 @@ def test_metadata_delete_after_commit(catalog):
     assert len(versions2) == 5  # create + 4 appends
 
 
+def test_malformed_previous_versions_max_reads_as_default(catalog):
+    """A malformed write.metadata.previous-versions-max reads as the spec
+    default, 100, wherever a commit uses it (the snapshot commit's
+    metadata log, the version-file trim after publish), so a commit that
+    published never raises: a caller that retried would append twice."""
+    import os
+
+    t = catalog.create_table(
+        "trimbad",
+        schema={"a": "int"},
+        properties={"write.metadata.delete-after-commit.enabled": "true"},
+    )
+    t.update_properties({"write.metadata.previous-versions-max": "ten"})
+    for i in range(101):
+        t.update_properties({"n": str(i)})
+    t.append([{"a": 1}])
+    t = t.refresh()
+    assert t.to_a() == [{"a": 1}] and len(t.snapshots) == 1
+    versions = sorted(
+        int(f[1:-5])
+        for f in os.listdir(t.ops.metadata_dir)
+        if f.startswith("v") and f.endswith(".json")
+    )
+    cur = t.ops.current_version()
+    assert versions == list(range(cur - 100, cur + 1))  # window of 100
+
+
 def test_schema_evolution_interleaved_with_dv_mutations(catalog):
     """Schema evolution between MoR mutations: renamed columns drive DV
     deletes/updates by their NEW names, added-with-default columns update

@@ -918,8 +918,8 @@ def test_changelog_skip_keeps_structural_deletes_in_mixed_commit(catalog, spark)
 
 
 def test_changelog_delete_planning_is_delta_based(catalog, spark):
-    """r10: MoR delete commits chain their manifest segments (superset
-    commit) and plan from the structural delta + the incremental
+    """r10: MoR delete commits chain their manifest segments (they
+    remove nothing) and plan from the structural delta + the incremental
     delete-view cache — the whole multi-delete window costs ONE full
     manifest read (the window start), however many delete commits follow."""
     from iceberg_ruby_spark.streaming.source import EngineTableStreamReader
